@@ -1,6 +1,6 @@
 package graft.ingest
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** File discovery over any Hadoop-supported filesystem (file://, s3a://,
@@ -13,8 +13,36 @@ import org.apache.spark.sql.SparkSession
   * columns per file). At 100 TB / O(100k) files a driver listing is still
   * fine (strings only); the subsequent scan is one job per dialect
   * GROUP, not per file — see Normalize.
+  *
+  * Listing cost is per file, so it must stay metadata-only. Hadoop's
+  * recursive `FileSystem.listFiles` wraps every status in a
+  * `LocatedFileStatus`, whose constructor reads permission, owner and
+  * group; on the local filesystem without Hadoop's native IO library
+  * each of those reads forks a shell `stat` (measured on a 4-core Linux
+  * VM: 0.63 s for 202 files, vs 0.007 s for a plain `listStatus` walk).
+  * `leafFiles` is that walk; Spark's `HadoopFSUtils` builds its located
+  * statuses without permission fields for the same reason.
+  *
+  * On object stores the walk issues one LIST per directory where S3A's
+  * `listFiles` would page through one flat listing; Spark's scan already
+  * makes one metadata request per explicit file path, so this does not
+  * change the order of requests.
   */
 object Discovery {
+
+  /** Every non-directory status under `root`, depth-first in listing
+    * order — the statuses recursive `listFiles` yields, without
+    * reading permission or owner. A file `root` yields itself; a
+    * missing one throws `FileNotFoundException`.
+    */
+  def leafFiles(fs: FileSystem, root: Path): Seq[FileStatus] = {
+    val out = Seq.newBuilder[FileStatus]
+    def walk(p: Path): Unit = fs.listStatus(p).foreach { st =>
+      if (st.isFile) out += st else walk(st.getPath)
+    }
+    walk(root)
+    out.result()
+  }
 
   /** Recursive `*.parquet` listing, sorted for determinism
     * (pivot_utils.py:275,289,297). Single-file paths pass through.
@@ -27,14 +55,11 @@ object Discovery {
       return if (inputPath.toLowerCase.endsWith(".parquet")) Seq(fs.makeQualified(p).toString)
              else Seq.empty
     }
-    val it = fs.listFiles(p, true)
-    val out = Seq.newBuilder[String]
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile && st.getPath.getName.toLowerCase.endsWith(".parquet"))
-        out += st.getPath.toString
-    }
-    out.result().sorted
+    leafFiles(fs, p)
+      .map(_.getPath)
+      .filter(_.getName.toLowerCase.endsWith(".parquet"))
+      .map(_.toString)
+      .sorted
   }
 
   /** Trip-data filter + priority sort + head-N, mirroring

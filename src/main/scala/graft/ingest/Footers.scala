@@ -2,6 +2,7 @@ package graft.ingest
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
@@ -13,10 +14,18 @@ import org.apache.spark.sql.types.StructType
   * resolution + an inference pass per call (~1 s each cold); schema-only
   * detection over many files needs none of that. Reading the footer with
   * parquet-hadoop and converting with Spark's own
-  * ParquetToSparkSchemaConverter is ~10 ms per file and returns the
-  * identical StructType (same converter Spark's scan uses).
+  * ParquetToSparkSchemaConverter returns the identical StructType (same
+  * converter Spark's scan uses).
   * The reference's equivalent is `_read_schema_only`
   * (pivot_and_boostrap/pivot_all_files.py:87-97).
+  *
+  * The per-file cost is one status lookup, one open and the footer
+  * bytes, because the reader is built from the caller's `conf` and the
+  * status already in hand: `ParquetFileReader.open(InputFile)` alone
+  * builds its read options over a fresh `new Configuration()`, which
+  * finds and parses `core-default.xml`/`core-site.xml` on the classpath
+  * again for every file, and `HadoopInputFile.fromPath` repeats the
+  * status lookup.
   */
 object Footers {
 
@@ -42,7 +51,7 @@ object Footers {
     val fs = p.getFileSystem(conf)
     val st = fs.getFileStatus(p)
     val dataFile =
-      if (st.isFile) p
+      if (st.isFile) st
       else fs.listStatus(p)
         .filter { s =>
           val n = s.getPath.getName
@@ -50,10 +59,10 @@ object Footers {
         }
         .sortBy(_.getPath.getName)
         .headOption
-        .map(_.getPath)
         .getOrElse(throw new java.io.FileNotFoundException(
           s"no data files under $path"))
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(dataFile, conf))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(dataFile, conf),
+      HadoopReadOptions.builder(conf).build())
     try converter(nanosAsLong)
       .convert(reader.getFooter.getFileMetaData.getSchema)
     finally reader.close()

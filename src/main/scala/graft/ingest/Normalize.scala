@@ -131,18 +131,15 @@ object Normalize {
     df.select(base ++ src ++ consts: _*)
   }
 
-  /** Detect every file's dialect (driver-side footer reads), group by
-    * dialect, scan each group once, union by name.
-    */
   /** Detect every file's dialect. Footer reads are driver-side but
     * independent — run them on a bounded pool. They go through
-    * `Footers.schemaOf` (direct parquet-hadoop footer read, ~10 ms),
+    * `Footers.schemaOf` (direct parquet-hadoop footer read: one status
+    * lookup, one open, the footer bytes, over the session's Hadoop conf),
     * NOT `spark.read.parquet(f).schema` (FileIndex + datasource
     * resolution + inference, ~1 s cold, measured ~5 s of pure driver
-    * overhead on a 4-group input). Sequential reads at ~100 ms each
-    * would turn a 400-file input into 40 s of driver idle time
-    * (measured); parallel + direct they are seconds even at O(10k)
-    * files.
+    * overhead on a 4-group input). This is the per-file driver work
+    * that scales with the file count, so it stays metadata-only (see
+    * Footers for what that takes).
     */
   def detectDialects(spark: SparkSession, files: Seq[String]): (Seq[(Dialect, String)], Seq[Skipped]) = {
     import scala.concurrent.{Await, ExecutionContext, Future}
@@ -179,6 +176,9 @@ object Normalize {
       detected.collect { case Left(s) => s })
   }
 
+  /** Detect every file's dialect, group by dialect, scan each group
+    * once, union by name.
+    */
   def normalizedTrips(spark: SparkSession, files: Seq[String]): NormalizeResult = {
     val (ok, skipped) = detectDialects(spark, files)
     val groups = ok.groupBy(_._1).view.mapValues(_.map(_._2)).toSeq

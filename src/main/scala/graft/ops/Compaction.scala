@@ -26,14 +26,10 @@ object Compaction {
   def datasetBytes(spark: SparkSession, dir: String): Long = {
     val p = new Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(p, true)
-    var total = 0L
-    while (it.hasNext) {
-      val s = it.next()
+    graft.ingest.Discovery.leafFiles(fs, p).filter { s =>
       val n = s.getPath.getName
-      if (s.isFile && !n.startsWith("_") && !n.startsWith(".")) total += s.getLen
-    }
-    total
+      !n.startsWith("_") && !n.startsWith(".")
+    }.map(_.getLen).sum
   }
 
   /** Rewrite `inDir` (parquet) into `outDir` as ~targetFileBytes files.

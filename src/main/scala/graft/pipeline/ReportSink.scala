@@ -32,6 +32,9 @@ object ReportSink {
     val skipped = r.skippedFiles
       .map { case (f, why) => s"""{"file": "${esc(f)}", "reason": "${esc(why)}"}""" }
       .mkString("[", ", ", "]")
+    val phases = r.phaseSeconds
+      .map { case (name, secs) => s""""${esc(name)}": $secs""" }
+      .mkString("{", ", ", "}")
     s"""{
   "input_row_count": ${r.inputRowCount},
   "output_row_count": ${r.outputRowCount},
@@ -40,11 +43,15 @@ object ReportSink {
   "low_count_dropped": ${r.lowCountDropped},
   "skipped_files": $skipped,
   "run_time_seconds": ${r.runTimeSeconds},
-  "peak_memory_mb": ${r.peakMemoryMb}
+  "peak_memory_mb": ${r.peakMemoryMb},
+  "phase_seconds": $phases
 }"""
   }
 
-  def toLatex(r: WideTablePipeline.Report): String =
+  def toLatex(r: WideTablePipeline.Report): String = {
+    val phases = r.phaseSeconds
+      .map { case (name, secs) => s"\n\\item Phase $name (seconds): $secs" }
+      .mkString
     s"""\\documentclass{article}
 \\begin{document}
 \\section{Pipeline Report}
@@ -55,9 +62,10 @@ object ReportSink {
 \\item Month mismatch rows: ${r.monthMismatchRows}
 \\item Low count dropped: ${r.lowCountDropped}
 \\item Run time (seconds): ${r.runTimeSeconds}
-\\item Peak memory (MB): ${r.peakMemoryMb}
+\\item Peak memory (MB): ${r.peakMemoryMb}$phases
 \\end{itemize}
 \\end{document}"""
+  }
 
   def write(r: WideTablePipeline.Report, path: String): Unit = {
     val content = if (path.endsWith(".tex")) toLatex(r) else toJson(r)

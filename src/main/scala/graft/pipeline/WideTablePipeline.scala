@@ -51,7 +51,10 @@ object WideTablePipeline {
       badRowsIgnored: Long,
       skippedFiles: Seq[(String, String)],
       runTimeSeconds: Double,
-      peakMemoryMb: Double = 0.0)
+      peakMemoryMb: Double = 0.0,
+      // `run` fills discover (listing), detect (footer dialects), plan
+      // and write (the one job: scan, pivot, Parquet write), in order
+      phaseSeconds: Seq[(String, Double)] = Nil)
 
   /** Composable core (no I/O): files → (wide table plan, observations,
     * skipped). The caller triggers an action, then reads the metrics.
@@ -89,15 +92,17 @@ object WideTablePipeline {
     }
 
   def plan(spark: SparkSession, files: Seq[String], minRides: Long,
-      maxConstGroups: Int = maxConstantScanGroups): Option[Planned] = {
+      maxConstGroups: Int = maxConstantScanGroups): Option[Planned] =
+    planDetected(spark, files, Normalize.detectDialects(spark, files),
+      minRides, maxConstGroups)
+
+  /** `plan` over dialects `Normalize.detectDialects` already found. */
+  private def planDetected(spark: SparkSession, files: Seq[String],
+      detected: (Seq[(Normalize.Dialect, String)], Seq[Normalize.Skipped]),
+      minRides: Long, maxConstGroups: Int): Option[Planned] = {
     import spark.implicits._
 
-    val t0 = System.nanoTime()
-    def mark(name: String): Unit =
-      if (sys.env.contains("GRAFT_PIPELINE_DEBUG"))
-        System.err.println(f"[plan] $name at ${(System.nanoTime() - t0) / 1e9}%.2f s")
-    val (ok, skippedDet) = Normalize.detectDialects(spark, files)
-    mark("detected")
+    val (ok, skippedDet) = detected
     val metaOf = files.map(f => f -> PathMeta.fileMeta(f)).toMap
     val combos = ok
       .groupBy { case (dia, f) =>
@@ -156,7 +161,6 @@ object WideTablePipeline {
         Some(trips.join(broadcast(meta), Seq("src_path")))
       }
 
-    mark("scans built")
     val result = Normalize.NormalizeResult(tripsOpt, skippedDet)
     result.trips.map { trips =>
       val coerced = trips
@@ -255,11 +259,22 @@ object WideTablePipeline {
 
   def run(spark: SparkSession, cfg: Config): Report = {
     val t0 = System.nanoTime()
-    val all = Discovery.discoverParquet(spark, cfg.inputDir)
-    val files = Discovery.selectTripFiles(all, cfg.maxFiles)
+    val phases = Seq.newBuilder[(String, Double)]
+    def phase[T](name: String)(body: => T): T = {
+      val start = System.nanoTime()
+      try body finally phases += name -> (System.nanoTime() - start) / 1e9
+    }
+    val files = phase("discover") {
+      Discovery.selectTripFiles(
+        Discovery.discoverParquet(spark, cfg.inputDir), cfg.maxFiles)
+    }
+    val detected = phase("detect")(Normalize.detectDialects(spark, files))
+    val planned = phase("plan") {
+      planDetected(spark, files, detected, cfg.minRides, maxConstantScanGroups)
+    }
     val outPath = s"${cfg.outputDir}/wide_table.parquet"
 
-    val report = plan(spark, files, cfg.minRides) match {
+    val report = planned match {
       case None =>
         // No usable files: write the canonical empty 27-col table
         // (pivot_all_files.py:317-321).
@@ -269,18 +284,15 @@ object WideTablePipeline {
           StructField("date", DateType) ::
           StructField("pickup_place", StringType) ::
           HourPivot.hourCols.map(h => StructField(h, LongType)).toList)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-          .write.mode("overwrite").parquet(outPath)
+        phase("write") {
+          spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+            .write.mode("overwrite").parquet(outPath)
+        }
         val skipped = files.map(f => (f, "undetectable or unreadable"))
         Report(0L, 0L, 0L, 0L, 0L, skipped, 0.0)
       case Some(p) =>
-        def mark(name: String): Unit =
-          if (sys.env.contains("GRAFT_PIPELINE_DEBUG"))
-            System.err.println(f"[pipeline] $name at ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        mark("planned")
         val out = if (cfg.singleFileOutput) p.wide.coalesce(1) else p.wide
-        out.write.mode("overwrite").parquet(outPath)
-        mark("written")
+        phase("write")(out.write.mode("overwrite").parquet(outPath))
         val outputRows = p.survivors.get("n_out").asInstanceOf[Long]
         val q = p.quality.get
         val inputRows = q("input_rows").asInstanceOf[Long]
@@ -295,7 +307,7 @@ object WideTablePipeline {
     }
     val elapsed = (System.nanoTime() - t0) / 1e9
     val finalReport = report.copy(runTimeSeconds = elapsed,
-      peakMemoryMb = ReportSink.peakHeapMb())
+      peakMemoryMb = ReportSink.peakHeapMb(), phaseSeconds = phases.result())
     ReportSink.write(finalReport, s"${cfg.outputDir}/${cfg.reportName}")
     finalReport
   }

@@ -19,13 +19,10 @@ object DataFingerprint {
   def of(spark: SparkSession, path: String): String = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var acc = 0L
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val st = it.next()
-      acc += scala.util.hashing.MurmurHash3.stringHash(
+    val acc = graft.ingest.Discovery.leafFiles(fs, p).map { st =>
+      scala.util.hashing.MurmurHash3.stringHash(
         s"${st.getPath.getName}|${st.getLen}|${st.getModificationTime}").toLong
-    }
+    }.sum
     java.lang.Long.toHexString(acc)
   }
 }

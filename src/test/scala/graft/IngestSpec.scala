@@ -1,8 +1,13 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.hadoop.fs.{FileStatus, LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ingest.{PathMeta, SchemaDetector}
+import graft.ingest.{Discovery, Normalize, PathMeta, SchemaDetector}
 import graft.ingest.SchemaDetector.{LatLon, LocId}
 import graft.util.SizeParser
 
@@ -11,6 +16,81 @@ import graft.util.SizeParser
   * against our detectors/parsers.
   */
 class IngestSpec extends AnyFunSuite {
+  lazy val spark: SparkSession = Session.builder("ingest-test", "4").getOrCreate()
+
+  // --- listing (pivot_utils.py:261-297) ---
+  test("discovery walk: same files as fs.listFiles, sorted, no permission reads") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("graft_listing").toString
+    // directory-style dataset: part file + _SUCCESS + .crc sidecars
+    val dataset = s"$root/green/2022/green_tripdata_2022-02.parquet"
+    Seq((java.sql.Timestamp.valueOf("2022-02-01 08:00:00"), 7))
+      .toDF("lpep_pickup_datetime", "PULocationID")
+      .coalesce(1).write.parquet(dataset)
+    val part = new java.io.File(dataset).listFiles
+      .filter(_.getName.startsWith("part-")).head.toPath
+    def place(rel: String): Unit = {
+      val to = Paths.get(root, rel)
+      Files.createDirectories(to.getParent)
+      Files.copy(part, to)
+    }
+    place("yellow/2023/yellow_tripdata_2023-01.parquet")
+    place("fhv/2021/FHV_TRIPDATA_2021-06.PARQUET")
+    Files.write(Paths.get(root, "yellow/2023/README.txt"), "notes".getBytes)
+
+    val conf = spark.sparkContext.hadoopConfiguration
+    val saved = Seq("fs.file.impl", "fs.file.impl.disable.cache")
+      .map(k => k -> Option(conf.get(k)))
+    conf.set("fs.file.impl", classOf[PermissionCountingFs].getName)
+    conf.set("fs.file.impl.disable.cache", "true")
+    try {
+      val rootPath = new Path(root)
+      val fs = rootPath.getFileSystem(conf)
+      assert(fs.isInstanceOf[PermissionCountingFs])
+      PermissionCountingFs.reads.set(0)
+      val found = Discovery.discoverParquet(spark, root)
+      val (detected, skipped) = Normalize.detectDialects(spark, found)
+      val fingerprint = graft.util.DataFingerprint.of(spark, root)
+      val bytes = graft.ops.Compaction.datasetBytes(spark, root)
+      assert(PermissionCountingFs.reads.get == 0)
+      assert(detected.size == 3 && skipped.isEmpty)
+
+      // the recursive listFiles loop the walk replaced: same strings,
+      // same order, same fingerprint and byte total; its located
+      // statuses read permission, owner and group for every file
+      def listFiles(): Seq[FileStatus] = {
+        val it = fs.listFiles(rootPath, true)
+        val out = Seq.newBuilder[FileStatus]
+        while (it.hasNext) out += it.next()
+        out.result()
+      }
+      val viaListFiles = listFiles()
+      assert(PermissionCountingFs.reads.get > 0)
+      assert(found == viaListFiles.map(_.getPath)
+        .filter(_.getName.toLowerCase.endsWith(".parquet")).map(_.toString).sorted)
+      assert(found.map(_.stripPrefix(s"file:$root/")) == Seq(
+        "fhv/2021/FHV_TRIPDATA_2021-06.PARQUET",
+        s"green/2022/green_tripdata_2022-02.parquet/${part.getFileName}",
+        "yellow/2023/yellow_tripdata_2023-01.parquet"))
+      assert(Discovery.leafFiles(fs, rootPath).map(_.getPath) ==
+        viaListFiles.map(_.getPath))
+      assert(fingerprint == java.lang.Long.toHexString(viaListFiles.map { st =>
+        scala.util.hashing.MurmurHash3.stringHash(
+          s"${st.getPath.getName}|${st.getLen}|${st.getModificationTime}").toLong
+      }.sum))
+      assert(bytes == viaListFiles.filterNot { st =>
+        val n = st.getPath.getName
+        n.startsWith("_") || n.startsWith(".")
+      }.map(_.getLen).sum)
+      // a file root lists as itself; a missing root throws, as listFiles does
+      val single = new Path(s"$root/yellow/2023/yellow_tripdata_2023-01.parquet")
+      assert(Discovery.leafFiles(fs, single).map(_.getPath) == Seq(fs.makeQualified(single)))
+      intercept[java.io.FileNotFoundException](Discovery.leafFiles(fs, new Path(s"$root/missing")))
+    } finally saved.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
+  }
 
   // --- pickup datetime detection (test file :37-55) ---
   test("s3 path handling: key variants, trip filter, month regex on URIs") {
@@ -118,5 +198,33 @@ class IngestSpec extends AnyFunSuite {
     assert(SizeParser.parse("500K").contains(500L * 1024))
     assert(SizeParser.parse("12345").contains(12345L))
     assert(SizeParser.parse("nonsense").isEmpty)
+  }
+}
+
+/** Local filesystem whose statuses count permission, owner and group
+  * reads: without Hadoop's native IO library each such read on a local
+  * status forks a shell `stat`, so per-file listing code must not make
+  * them. Installed as `fs.file.impl` with the FileSystem cache off.
+  */
+class PermissionCountingFs extends LocalFileSystem(new PermissionCountingFs.Raw)
+
+object PermissionCountingFs {
+  val reads = new AtomicLong
+
+  final class Status(s: FileStatus) extends FileStatus(s.getLen, s.isDirectory,
+      s.getReplication, s.getBlockSize, s.getModificationTime, s.getPath) {
+    override def getPermission = { reads.incrementAndGet(); super.getPermission }
+    override def getOwner = { reads.incrementAndGet(); super.getOwner }
+    override def getGroup = { reads.incrementAndGet(); super.getGroup }
+  }
+
+  private def counted(s: FileStatus): FileStatus = s match {
+    case c: Status => c
+    case _ => new Status(s)
+  }
+
+  final class Raw extends RawLocalFileSystem {
+    override def getFileStatus(f: Path): FileStatus = counted(super.getFileStatus(f))
+    override def listStatus(f: Path): Array[FileStatus] = super.listStatus(f).map(counted)
   }
 }

@@ -68,6 +68,48 @@ class MultiFormatSpec extends AnyFunSuite {
     }
   }
 
+  test("detectDialects skip reasons: corrupt file, no pickup column, TIMESTAMP(NANOS)") {
+    import graft.ingest.Normalize
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_skips").toString
+    val corrupt = s"$dir/green_tripdata_2023-02.parquet"
+    Files.write(java.nio.file.Paths.get(corrupt), "not a parquet file at all".getBytes)
+    val noPickup = s"$dir/yellow_tripdata_2023-03.parquet"
+    Seq((1, "x")).toDF("a", "b").coalesce(1).write.parquet(noPickup)
+    // Spark writes no nanosecond timestamps; parquet-hadoop's example
+    // writer does, the way pyarrow-written TLC files carry them
+    val nanos = s"$dir/yellow_tripdata_2023-04.parquet"
+    val schema = MessageTypeParser.parseMessageType(
+      """message trip {
+        |  required int64 tpep_pickup_datetime (TIMESTAMP(NANOS,false));
+        |  required int32 PULocationID;
+        |}""".stripMargin)
+    val writer = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(nanos))
+      .withType(schema)
+      .withConf(spark.sessionState.newHadoopConf())
+      .build()
+    try writer.write(new SimpleGroupFactory(schema).newGroup()
+      .append("tpep_pickup_datetime", 1680307200000000000L)
+      .append("PULocationID", 132))
+    finally writer.close()
+
+    val (ok, skipped) = Normalize.detectDialects(spark, Seq(corrupt, noPickup, nanos))
+    assert(ok.isEmpty)
+    val why = skipped.map(s => s.path -> s.reason).toMap
+    assert(why.keySet == Set(corrupt, noPickup, nanos))
+    assert(why(corrupt).startsWith("unreadable: "), why(corrupt))
+    assert(why(noPickup) ==
+      "missing pickup datetime or location (PULocationID or Start_Lat/Start_Lon)")
+    // graftbench's correctness gate tolerates exactly this reason for
+    // nanosecond-pickup trip files; a changed footer path must keep it
+    assert(why(nanos).startsWith("unreadable: ") &&
+      why(nanos).contains("TIMESTAMP(NANOS"), why(nanos))
+  }
+
   test("partitioned write produces hive-style dirs readable with pruning") {
     val dir = Files.createTempDirectory("graft_fmt2").toString
     val orders = Tables.orders(spark, "/root/testdata/sf0.001")

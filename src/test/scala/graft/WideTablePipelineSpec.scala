@@ -92,6 +92,16 @@ class WideTablePipelineSpec extends AnyFunSuite {
     assert(y.getLong(y.fieldIndex("hour_8")) == 60L)
     assert(y.getLong(y.fieldIndex("hour_9")) == 3L)
     assert(y.getLong(y.fieldIndex("hour_0")) == 0L)
+
+    // per-phase seconds: every phase, in run order, disjoint parts of
+    // the run, and written into both report formats
+    assert(report.phaseSeconds.map(_._1) == Seq("discover", "detect", "plan", "write"))
+    assert(report.phaseSeconds.forall(_._2 >= 0.0))
+    assert(report.phaseSeconds.map(_._2).sum <= report.runTimeSeconds)
+    val json = new String(Files.readAllBytes(java.nio.file.Paths.get(s"$out/report.json")))
+    assert(json.contains(s""""phase_seconds": {"discover": ${report.phaseSeconds.head._2}, "detect": """))
+    assert(graft.pipeline.ReportSink.toLatex(report)
+      .contains(s"\\item Phase write (seconds): ${report.phaseSeconds.last._2}\n"))
   }
 
   test("metadata-join fallback path (combos > threshold) equals constant path") {
@@ -127,6 +137,8 @@ class WideTablePipelineSpec extends AnyFunSuite {
     assert(wide.columns.toSeq ==
       Seq("taxi_type", "date", "pickup_place") ++ graft.ops.HourPivot.hourCols)
     assert(wide.count() == 0)
+    assert(report.phaseSeconds.map(_._1) == Seq("discover", "detect", "plan", "write"))
+    assert(report.phaseSeconds.map(_._2).sum <= report.runTimeSeconds)
   }
 
   test("incremental per-month mode produces the same wide table as single-plan") {
