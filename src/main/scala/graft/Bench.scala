@@ -145,22 +145,32 @@ object Bench {
         attempts.map(a => f"$a%.2f").mkString("[", " ", "]"))
       (q.name, best)
     }
-    // The driver scrapes a bounded tail of stdout; a map with all ~55
-    // queries (~2900 chars) gets truncated mid-line and fails to parse
-    // (BENCH_r02.json parsed:null). Keep the JSON line short: headline
-    // queries only, 3-decimal times. Full per-query detail is on stderr.
+    println(recordLine(results, headline, sfDir.split('/').last, calibrationSec))
+    spark.stop()
+  }
+
+  /** The one stdout JSON line. Readers scrape a bounded tail of
+    * stdout; a map with all ~55 queries (~2900 chars) gets truncated
+    * mid-line and fails to parse (BENCH_r02.json parsed:null). Keep it
+    * short: headline queries only, 3-decimal times. Full per-query
+    * detail is on stderr.
+    *
+    * `results` holds (query, best seconds), -1.0 for a query whose every
+    * attempt failed. `headline_total` sums the headline queries that
+    * ran; a failed headline query cannot make it faster unnoticed — it
+    * counts in `n_failed` and marks the record `"valid":false`.
+    */
+  def recordLine(results: Seq[(String, Double)], headline: Set[String],
+      sf: String, calibrationSec: Double): String = {
     // Locale.ROOT: f"%.3f" under a comma-decimal default locale would
     // emit 10,974 and re-break the JSON parse this line exists to fix
     def f3(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    val qs = results.collect { case (k, v) if headline.contains(k) =>
-      "\"" + k + "\":" + f3(v)
-    }.mkString("{", ",", "}")
-    val total = results.collect {
-      case (name, t) if headline.contains(name) && t > 0 => t
-    }.sum
-    val sf = sfDir.split('/').last
-    println(s"""{"metric":"headline_total","value":${f3(total)},"unit":"sec","queries":$qs,"sf":"$sf","calibration_sec":${f3(calibrationSec)}}""")
-    spark.stop()
+    val head = results.filter { case (name, _) => headline.contains(name) }
+    val qs = head.map { case (k, v) => "\"" + k + "\":" + f3(v) }
+      .mkString("{", ",", "}")
+    val total = head.collect { case (_, t) if t > 0 => t }.sum
+    val nFailed = head.count { case (_, t) => t < 0 }
+    s"""{"metric":"headline_total","value":${f3(total)},"unit":"sec","n_failed":$nFailed,"valid":${nFailed == 0},"queries":$qs,"sf":"$sf","calibration_sec":${f3(calibrationSec)}}"""
   }
 }

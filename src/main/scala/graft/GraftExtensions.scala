@@ -11,7 +11,7 @@ import graft.functions.{FloatVecDot, QuantizedVecDot}
   *
   *   spark.sql.extensions=graft.GraftExtensions
   *
-  * (or `SparkSession.builder().withExtensions(new GraftExtensions)`).
+  * (or `Session.builder(...).withExtensions(new GraftExtensions)`).
   * The per-session `VectorFunctions.register(spark)` path does the same
   * through the function registry for sessions we don't construct.
   */

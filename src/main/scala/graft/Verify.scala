@@ -1,18 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.builder("graft-verify",
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // optional comma-separated subset for fast local iteration
@@ -45,7 +40,7 @@ object Verify {
                   s"minDistinct column '$c' absent from output schema " +
                     back.columns.mkString("[", ",", "]"))
               back.select(c).distinct().count()
-            } catch { case e: Throwable =>
+            } catch { case NonFatal(e) =>
               withdraw()
               throw new IllegalStateException(
                 s"minDistinct check unevaluable for $name: ${e.getMessage}",
@@ -58,7 +53,7 @@ object Verify {
                 s"values, floor is $floor")
           }
         }
-      } catch { case e: Throwable =>
+      } catch { case NonFatal(e) =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
       // queries persist intermediates (shingle frames, IVF cells);

@@ -353,29 +353,6 @@ object Graph {
       .withColumn("score", coalesce(col("score"), lit(0L)))
   }
 
-  /** Synchronous seeded label propagation — the semi-supervised
-    * labeling primitive a curation pipeline runs over a similarity or
-    * co-occurrence graph (propagate a small set of trusted labels —
-    * topic, quality tier, license class — to the unlabeled majority).
-    *
-    * Semantics, pinned for cross-engine replay:
-    *  - labels₀(n) = seed(n) where seeded, NULL elsewhere;
-    *  - each iteration, every node takes the MAJORITY label of its
-    *    currently-labeled in-neighbors (count DESC, tie → smallest
-    *    label — realized as one `min(struct(-count, label))`, no
-    *    per-node window);
-    *  - seeds are CLAMPED (a seed never changes); a node with no
-    *    labeled neighbor keeps its previous label;
-    *  - output after `iters` rounds: every node, label −1 where still
-    *    unlabeled (NULL-free output hashes identically everywhere).
-    *
-    * Scale shape per iteration (the pageRank discipline): one join of
-    * edges against the CURRENT labeled frame (shuffles (id, label)
-    * pairs — never adjacency), one (dst, label) count aggregate, one
-    * per-node argmax aggregate, lineage cut via localCheckpoint. With
-    * synchronous updates and integer tie-breaks the whole trajectory
-    * is deterministic — the oracle unrolls it round by round.
-    */
   /** r15 OPTIMIZATION (guide §2.4 — pay each pass once): iterative
     * operators reference their edge frame once or twice PER ROUND, and
     * the graph queries pass a raw co-occurrence PLAN (per-group
@@ -450,6 +427,29 @@ object Graph {
     spark.conf.getOption("spark.graft.graph.maxBroadcastClosureEdges")
       .map(_.toLong).getOrElse(0L)
 
+  /** Synchronous seeded label propagation — the semi-supervised
+    * labeling primitive a curation pipeline runs over a similarity or
+    * co-occurrence graph (propagate a small set of trusted labels —
+    * topic, quality tier, license class — to the unlabeled majority).
+    *
+    * Semantics, pinned for cross-engine replay:
+    *  - labels₀(n) = seed(n) where seeded, NULL elsewhere;
+    *  - each iteration, every node takes the MAJORITY label of its
+    *    currently-labeled in-neighbors (count DESC, tie → smallest
+    *    label — realized as one `min(struct(-count, label))`, no
+    *    per-node window);
+    *  - seeds are CLAMPED (a seed never changes); a node with no
+    *    labeled neighbor keeps its previous label;
+    *  - output after `iters` rounds: every node, label −1 where still
+    *    unlabeled (NULL-free output hashes identically everywhere).
+    *
+    * Scale shape per iteration (the pageRank discipline): one join of
+    * edges against the CURRENT labeled frame (shuffles (id, label)
+    * pairs — never adjacency), one (dst, label) count aggregate, one
+    * per-node argmax aggregate, lineage cut via localCheckpoint. With
+    * synchronous updates and integer tie-breaks the whole trajectory
+    * is deterministic — the oracle unrolls it round by round.
+    */
   def labelPropagation(edges: DataFrame, seeds: DataFrame,
       nodes: DataFrame, idCol: String, iters: Int): DataFrame = {
     require(iters >= 1, "labelPropagation needs iters >= 1")
@@ -654,21 +654,6 @@ object Graph {
     reached.select(col("id").as(idCol), col("hop"))
   }
 
-  /** Connected components by synchronous min-label propagation
-    * (HashMin): every node starts labeled with its own id; each round
-    * takes the min over itself and its neighbors' labels. After
-    * diameter rounds every node carries its component's minimum id —
-    * the canonical component label. `runToFixpoint` stops early when a
-    * round changes nothing (the convergence test is a bounded
-    * existence probe — limit 1 — not a full count), with `iters` as
-    * the hard cap.
-    *
-    * Shape at scale: one (dst ← min label) keyed shuffle per round
-    * over the edge list, the label frame is node-sized (two longs),
-    * lineage cut per round (localCheckpoint — the BFS/PageRank
-    * pattern). O(diameter) rounds; co-purchase-style graphs with a
-    * giant dense component have tiny diameters, the favorable case.
-    */
   /** k-core membership by bounded synchronous peeling: each round
     * drops every node whose degree among SURVIVORS is < k; nodes
     * remaining after `iters` rounds are (an over-approximation of) the
@@ -775,7 +760,22 @@ object Graph {
       round, converged)
   }
 
-  /** `runToFixpoint = true` PROMISES exact component semantics, so a
+  /** Connected components by synchronous min-label propagation
+    * (HashMin): every node starts labeled with its own id; each round
+    * takes the min over itself and its neighbors' labels. After
+    * diameter rounds every node carries its component's minimum id —
+    * the canonical component label. `runToFixpoint` stops early when a
+    * round changes nothing (the convergence test is a bounded
+    * existence probe — limit 1 — not a full count), with `iters` as
+    * the hard cap.
+    *
+    * Shape at scale: one (dst ← min label) keyed shuffle per round
+    * over the edge list, the label frame is node-sized (two longs),
+    * lineage cut per round (localCheckpoint — the BFS/PageRank
+    * pattern). O(diameter) rounds; co-purchase-style graphs with a
+    * giant dense component have tiny diameters, the favorable case.
+    *
+    * `runToFixpoint = true` PROMISES exact component semantics, so a
     * run that exhausts `iters` still unconverged throws instead of
     * silently returning split clusters (r13 ADVICE) — raise `iters`
     * past the graph's label-propagation diameter, or call

@@ -55,13 +55,9 @@ object Normalize {
     * may differ in their other columns) and as the grouping key (same
     * detection + same physical types ⇒ one multi-path scan).
     */
-  final case class Dialect(detection: Detection, required: StructType) {
-    def dtType: DataType = required(detection.dtCol).dataType
-  }
+  final case class Dialect(detection: Detection, required: StructType)
 
   final case class Skipped(path: String, reason: String)
-
-  final case class NormalizeResult(trips: Option[DataFrame], skipped: Seq[Skipped])
 
   /** Uniform path key used to join per-file metadata onto rows:
     * scheme + slash-run differences between Hadoop listings
@@ -174,17 +170,5 @@ object Normalize {
       finally pool.shutdown()
     (detected.collect { case Right(x) => x },
       detected.collect { case Left(s) => s })
-  }
-
-  /** Detect every file's dialect, group by dialect, scan each group
-    * once, union by name.
-    */
-  def normalizedTrips(spark: SparkSession, files: Seq[String]): NormalizeResult = {
-    val (ok, skipped) = detectDialects(spark, files)
-    val groups = ok.groupBy(_._1).view.mapValues(_.map(_._2)).toSeq
-      .sortBy(_._2.head) // deterministic group order
-    val dfs = groups.map { case (dialect, paths) => readDialect(spark, dialect, paths) }
-    val unioned = dfs.reduceOption(_.unionByName(_))
-    NormalizeResult(unioned, skipped)
   }
 }

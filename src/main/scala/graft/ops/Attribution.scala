@@ -69,8 +69,8 @@ object Attribution {
   /** The shared (conversion × in-window touch) frame — interval-grid
     * equi-key join + per-conversion recency windows — that every
     * attribution model aggregates differently.
-    */
-  /** `saltFactor` is the burst-bot rung: the grid spreads a bot whose
+    *
+    * `saltFactor` is the burst-bot rung: the grid spreads a bot whose
     * activity SPANS many lookback-width buckets, but a bot whose whole
     * burst sits INSIDE one bucket degenerates back to the user-only
     * hot-key regime — one (user, bucket) key carries that burst's

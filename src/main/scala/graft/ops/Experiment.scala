@@ -71,17 +71,6 @@ object Experiment {
         (mean("s_a", "n_a") - mean("s_b", "n_b")) / se).as("z"))
   }
 
-  /** Pearson χ² contingency cells between two categorical columns:
-    * per (a, b) cell the observed count, the independence-expected
-    * count (row·col/grand) and the χ² contribution (o−e)²/e. Observed
-    * counts and margins are exact BIGINTs; expected/contribution are
-    * one fixed double tree over them. Σ contribution = the χ²
-    * statistic at (|a|−1)(|b|−1) dof.
-    *
-    * Shape: one (a,b) aggregate collapses the corpus to the
-    * contingency table; margins re-aggregate THAT table (never the
-    * corpus) and join back broadcast.
-    */
   /** Difference-in-differences: the panel-structure estimate
     * (post_T − pre_T) − (post_C − pre_C) that removes level AND
     * shared-trend confounds a raw arm comparison keeps — the readout
@@ -183,6 +172,17 @@ object Experiment {
         col("mean_raw"), col("mean_adj"))
   }
 
+  /** Pearson χ² contingency cells between two categorical columns:
+    * per (a, b) cell the observed count, the independence-expected
+    * count (row·col/grand) and the χ² contribution (o−e)²/e. Observed
+    * counts and margins are exact BIGINTs; expected/contribution are
+    * one fixed double tree over them. Σ contribution = the χ²
+    * statistic at (|a|−1)(|b|−1) dof.
+    *
+    * Shape: one (a,b) aggregate collapses the corpus to the
+    * contingency table; margins re-aggregate THAT table (never the
+    * corpus) and join back broadcast.
+    */
   def chiSquareCells(df: DataFrame, aCol: String, bCol: String): DataFrame = {
     val cells = df.groupBy(col(aCol), col(bCol))
       .agg(count(lit(1)).as("observed"))

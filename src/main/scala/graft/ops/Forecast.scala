@@ -40,11 +40,6 @@ object Forecast {
         .agg(count(lit(1)).as("c")),
       keyCol, season)
 
-  /** The scoring fold over an ALREADY-aggregated (k, day, c) daily
-    * frame — the entry point for continuously-maintained counts (the
-    * streaming twin keeps day-grain counts as aggregation state, the
-    * bestSplitFromDaily pattern).
-    */
   /** Dense (k, day, c) grid over the GLOBAL day span — gap days exist
     * as zeros, so lag-k pairs never silently skip them. The spine is
     * a map-side sequence off a two-value aggregate (Resample shape).
@@ -59,6 +54,11 @@ object Forecast {
       .withColumn("c", coalesce(col("c"), lit(0L)))
   }
 
+  /** The scoring fold over an ALREADY-aggregated (k, day, c) daily
+    * frame — the entry point for continuously-maintained counts (the
+    * streaming twin keeps day-grain counts as aggregation state, the
+    * bestSplitFromDaily pattern).
+    */
   def maseFromDaily(daily: DataFrame, keyOut: String,
       season: Int = 7): DataFrame = {
     require(season >= 2, s"season must be >= 2, got $season")

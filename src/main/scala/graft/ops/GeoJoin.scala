@@ -28,10 +28,6 @@ import org.apache.spark.sql.functions._
   */
 object GeoJoin {
 
-  /** All unordered pairs (id_a < id_b) within `radius` (micro-units),
-    * with the exact squared distance. `df` must carry (idCol, xCol,
-    * yCol) with integer micro-coordinates ≥ 0.
-    */
   /** Grid-density clustering — the DBSCAN idea made relational by
     * clustering CELLS instead of points (the CLIQUE/grid family):
     * cells with ≥ minPts points are CORE; core cells that touch in

@@ -241,7 +241,7 @@ object Profiling {
     * the wall grows linearly in the domain as the single-task window
     * sort takes over, reaching 27× the floor at all-distinct on a
     * 20M-row group while ksDriftBucketed holds the floor on the same
-    * input (tools/KsDomainProbe; SCALE_NOTES "domain cap is now a
+    * input (KsDomainProbe (removed; see 7b19d2b); SCALE_NOTES "domain cap is now a
     * measured boundary").
     */
   val DefaultKsDomainCap: Long = 1L << 20

@@ -72,29 +72,6 @@ object Resample {
         col("v").as("v_obs"), ffill.as("v_ffill"))
   }
 
-  /** Windowed z-score anomaly flags over a regular per-key series —
-    * entirely in INTEGER arithmetic so the flags are engine-exact:
-    * values quantize to 1e-4 units (the vector-score trick), and the
-    * z-test |v−μ| > z·σ is evaluated cross-multiplied as
-    *
-    *   (n·v − S)² > z² · (n·Q − S²)
-    *
-    * with S = Σv, Q = Σv² over the trailing `window` rows — no
-    * division, no sqrt, no float accumulation anywhere. Warm-up rows
-    * (fewer than `window` trailing points) are never flagged. Expects
-    * resampleFfill's output shape; flags on v_ffill so gaps test
-    * against the carried value. Magnitude headroom: |v_q| ≤ ~10⁹
-    * keeps every term under 2⁶² for z ≤ 3, window ≤ 10⁴.
-    *
-    * Detectability bound: a lone outlier inside its own trailing
-    * window tops out at z = (n−1)/√n (the point lifts the window's
-    * mean and variance itself), so pick z < (window−1)/√window or the
-    * flag can NEVER fire — z = 3 needs window ≥ 11; at window = 10,
-    * z = 3 lands exactly on equality (hand-verified) and the strict
-    * inequality stays false.
-    *
-    * Output: (keyCol, bucket_us, v_ffill, n_win, anomaly).
-    */
   /** Rolling-window distinct actors (the WAU/rolling-reach metric):
     * for every calendar day, how many distinct `actorCol` values were
     * active in the trailing `windowDays` window, per key.
@@ -136,6 +113,29 @@ object Resample {
         coalesce(col("__du"), lit(0L)).as("distinct_actors"))
   }
 
+  /** Windowed z-score anomaly flags over a regular per-key series —
+    * entirely in INTEGER arithmetic so the flags are engine-exact:
+    * values quantize to 1e-4 units (the vector-score trick), and the
+    * z-test |v−μ| > z·σ is evaluated cross-multiplied as
+    *
+    *   (n·v − S)² > z² · (n·Q − S²)
+    *
+    * with S = Σv, Q = Σv² over the trailing `window` rows — no
+    * division, no sqrt, no float accumulation anywhere. Warm-up rows
+    * (fewer than `window` trailing points) are never flagged. Expects
+    * resampleFfill's output shape; flags on v_ffill so gaps test
+    * against the carried value. Magnitude headroom: |v_q| ≤ ~10⁹
+    * keeps every term under 2⁶² for z ≤ 3, window ≤ 10⁴.
+    *
+    * Detectability bound: a lone outlier inside its own trailing
+    * window tops out at z = (n−1)/√n (the point lifts the window's
+    * mean and variance itself), so pick z < (window−1)/√window or the
+    * flag can NEVER fire — z = 3 needs window ≥ 11; at window = 10,
+    * z = 3 lands exactly on equality (hand-verified) and the strict
+    * inequality stays false.
+    *
+    * Output: (keyCol, bucket_us, v_ffill, n_win, anomaly).
+    */
   def anomalyFlags(series: DataFrame, keyCol: String, window: Int,
       z: Long = 3L): DataFrame = {
     require(window >= 2 && z >= 1)

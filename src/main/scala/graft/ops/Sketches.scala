@@ -20,8 +20,6 @@ import org.apache.spark.sql.functions._
   */
 object Sketches {
 
-  val Width = 256 // 2 hex chars; fixed so oracles stay textual
-
   private def bucket(key: Column, j: Int): Column =
     substring(md5(concat_ws(":", lit(j.toString), key)), 1, 2)
 

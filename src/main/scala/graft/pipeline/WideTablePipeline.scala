@@ -161,8 +161,7 @@ object WideTablePipeline {
         Some(trips.join(broadcast(meta), Seq("src_path")))
       }
 
-    val result = Normalize.NormalizeResult(tripsOpt, skippedDet)
-    result.trips.map { trips =>
+    tripsOpt.map { trips =>
       val coerced = trips
         .where(col("pickup_datetime").isNotNull) // errors="coerce" + dropna
 
@@ -193,7 +192,7 @@ object WideTablePipeline {
         .observe(survivors, count(lit(1)).as("n_out"))
 
       Planned(wide, quality, groups, survivors,
-        result.skipped.map(s => (s.path, s.reason)))
+        skippedDet.map(s => (s.path, s.reason)))
     }
   }
 

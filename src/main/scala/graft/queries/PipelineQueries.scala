@@ -67,7 +67,7 @@ object PipelineQueries {
     * Why the wm CTE is over NON-CLICKS ONLY (r13 ADVICE adjudicated by
     * measurement): batch 2's late filter is the watermark derived from
     * batch 0's data alone — batches 0..N−2, the two-batch lag — NOT
-    * the max over batches 0 and 1. tools/WatermarkLagProbe separates
+    * the max over batches 0 and 1. WatermarkLagProbe (removed; see 7b19d2b) separates
     * the two candidates by 4 days and the probe row is KEPT; the
     * "late filter ... batches 0..N-2" StreamingSpec fixture pins it.
     */
@@ -229,12 +229,6 @@ object PipelineQueries {
         CAST(COUNT(*) AS BIGINT) AS n
       FROM events GROUP BY 1, 2, 3"""))
 
-  /** Time-series resample + forward-fill (ops/Resample): every user's
-    * event values regularized to an hourly grid between their first
-    * and last observation, gaps carried forward — buckets as
-    * epoch-micros BIGINTs so both engines agree textually. Oracle:
-    * generate_series grid + IGNORE NULLS window.
-    */
   /** Shared oracle CTE block producing the regularized series — ONE
     * definition so the resample exhibit and the anomaly exhibit can
     * never drift (the sqlShingleCtes rule).
@@ -268,6 +262,12 @@ object PipelineQueries {
             ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS v_ffill
         FROM j)"""
 
+  /** Time-series resample + forward-fill (ops/Resample): every user's
+    * event values regularized to an hourly grid between their first
+    * and last observation, gaps carried forward — buckets as
+    * epoch-micros BIGINTs so both engines agree textually. Oracle:
+    * generate_series grid + IGNORE NULLS window.
+    */
   private val qResample = QueryDef(
     "q_resample_ffill",
     (s, d) => graft.ops.Resample.resampleFfill(
@@ -1101,11 +1101,6 @@ object PipelineQueries {
       FROM v JOIN thr t USING (event_type)
       GROUP BY 1, t.tlo, t.thi"""))
 
-  /** A/B experiment readout (ops/Experiment.twoSampleZ): users split
-    * into arms by user_id parity, Welch z per event_type on `value`.
-    * Moments are exact DECIMAL (order-independent); the z itself is one
-    * mirrored tree of IEEE double ops — hash-exact across engines.
-    */
   /** Difference-in-differences (Experiment.diffInDifferences): the
     * rollout readout — arm = user parity, post = the Jan-16 switch
     * point; (post−pre) in treatment minus (post−pre) in control
@@ -1213,6 +1208,11 @@ object PipelineQueries {
           AS mean_adj
       FROM arms, th"""))
 
+  /** A/B experiment readout (ops/Experiment.twoSampleZ): users split
+    * into arms by user_id parity, Welch z per event_type on `value`.
+    * Moments are exact DECIMAL (order-independent); the z itself is one
+    * mirrored tree of IEEE double ops — hash-exact across engines.
+    */
   private val qAbTest = QueryDef(
     "q_ab_test_z",
     (s, d) => graft.ops.Experiment.twoSampleZ(
@@ -2371,12 +2371,6 @@ object PipelineQueries {
       FROM cum GROUP BY 1"""),
     minDistinct = Some(("w1", 2L)))
 
-  /** Streaming twin of q_wasserstein_value: the distribution-count
-    * state is keyed on the integer-scaled value, the identical
-    * wassersteinFromCounts fold runs on the snapshot, shared oracle —
-    * the full drift quartet (KS / MWU / CvM / W1) now has its serving
-    * shape verified.
-    */
   /** Streaming twin of q_mannwhitney_value: identical mwuFromCounts
     * fold on the continuous count-state snapshot, shared oracle.
     */
@@ -2387,6 +2381,12 @@ object PipelineQueries {
     qMannWhitney.oracle,
     minDistinct = Some(("auc_ab", 2L)))
 
+  /** Streaming twin of q_wasserstein_value: the distribution-count
+    * state is keyed on the integer-scaled value, the identical
+    * wassersteinFromCounts fold runs on the snapshot, shared oracle —
+    * the full drift quartet (KS / MWU / CvM / W1) now has its serving
+    * shape verified.
+    */
   private val qStreamWasserstein = QueryDef(
     "q_stream_wasserstein",
     (s, d) => graft.streaming.StreamingForecast

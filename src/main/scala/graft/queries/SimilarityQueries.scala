@@ -267,16 +267,6 @@ object SimilarityQueries {
           END AS q
         FROM mv$k)"""
 
-  /** Top principal component of the embedding corpus (sim/Pca
-    * .topComponentQ): ONE order-independent integer moments aggregate
-    * over the data (long-buffer typed Aggregator, one buffer per
-    * partition), then a fixed 8-step driver power iteration on the
-    * exact scatter matrix — mean-centering and dominant-direction
-    * removal ("all but the top") compose map-side from this vector.
-    * The oracle replays the whole trajectory: moments, the
-    * deterministic decimal down-scale, every integer matvec, every
-    * requantization.
-    */
   /** The full PCA trajectory as a CTE prefix (moments → scaled scatter
     * matrix → 8 power iterates, `it8` = the quantized top component),
     * shared by the eigenvector exhibit and the ABTT readout.
@@ -310,6 +300,16 @@ object SimilarityQueries {
       $iters"""
   }
 
+  /** Top principal component of the embedding corpus (sim/Pca
+    * .topComponentQ): ONE order-independent integer moments aggregate
+    * over the data (long-buffer typed Aggregator, one buffer per
+    * partition), then a fixed 8-step driver power iteration on the
+    * exact scatter matrix — mean-centering and dominant-direction
+    * removal ("all but the top") compose map-side from this vector.
+    * The oracle replays the whole trajectory: moments, the
+    * deterministic decimal down-scale, every integer matvec, every
+    * requantization.
+    */
   private val qPcaTop1 = QueryDef(
     "q_embedding_pca_top1",
     (s, d) => graft.sim.Pca.topComponentQ(
@@ -463,14 +463,6 @@ object SimilarityQueries {
     },
     Some(sqlExactTop20))
 
-  /** Served-index IVF exhibit — the build-once/serve-many shape a real
-    * vector store runs: `buildAndWriteIvfIndex` materializes the corpus
-    * as parquet PARTITIONED BY cell with a `_centroids` sidecar, then
-    * `ivfSearchVec` probes the read-back layout, pruning whole cell
-    * directories (PartitionFilters — asserted in PlanSpec). Same
-    * nProbe = 13/16 operating point as q_ann_ivf_topk → shares the
-    * exact-top-20 oracle.
-    */
   /** Build-once memo for the served index: the QUERY is the serve path;
     * rebuilding (and rewriting) the parquet layout on every invocation
     * would make a min-of-N bench time the build N times and never
@@ -490,6 +482,14 @@ object SimilarityQueries {
       d.replaceAll("[^A-Za-z0-9]", "_") + "_" +
       graft.util.DataFingerprint.of(s, s"$d/$table.parquet")
 
+  /** Served-index IVF exhibit — the build-once/serve-many shape a real
+    * vector store runs: `buildAndWriteIvfIndex` materializes the corpus
+    * as parquet PARTITIONED BY cell with a `_centroids` sidecar, then
+    * `ivfSearchVec` probes the read-back layout, pruning whole cell
+    * directories (PartitionFilters — asserted in PlanSpec). Same
+    * nProbe = 13/16 operating point as q_ann_ivf_topk → shares the
+    * exact-top-20 oracle.
+    */
   private val qIvfServed = QueryDef(
     "q_ann_ivf_served",
     (s, d) => {

@@ -2073,12 +2073,6 @@ object TextQueries {
           CAST(p.tot_a * p.tot_b AS BIGINT) AS l1_drift
       FROM pairs p LEFT JOIN inner_agg i USING (source_a, source_b)"""))
 
-  /** BM25 keyword search (log-free odds idf — see graft.text.Bm25 for
-    * why: every step is IEEE-exact with a pinned evaluation order, so
-    * the double scores hash-match across engines; libm's ln would not).
-    * The oracle mirrors the weight formula TEXTUALLY — same operand
-    * order, same fixed-order 3-term sum.
-    */
   /** Bigram-LM fluency scoring (NgramLm): train an add-one-smoothed
     * bigram model on the trusted `lang = 'en'` slice, score every doc
     * by mean bigram conditional likelihood (integer ppm — the CCNet
@@ -2270,6 +2264,12 @@ object TextQueries {
         CAST(SUM(w_ppm) // COUNT(*) AS BIGINT) AS sb_score_ppm
       FROM wgt GROUP BY doc_id"""))
 
+  /** BM25 keyword search (log-free odds idf — see graft.text.Bm25 for
+    * why: every step is IEEE-exact with a pinned evaluation order, so
+    * the double scores hash-match across engines; libm's ln would not).
+    * The oracle mirrors the weight formula TEXTUALLY — same operand
+    * order, same fixed-order 3-term sum.
+    */
   private val qBm25 = QueryDef(
     "q_bm25_search",
     (s, d) =>

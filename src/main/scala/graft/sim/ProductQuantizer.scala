@@ -154,19 +154,6 @@ object ProductQuantizer {
       }.toSeq
     }
 
-  /** IVF+PQ composed — the full coarse-quantizer + fine-quantizer
-    * index shape: KMeans cells partition the corpus (coarse), PQ codes
-    * compress the vectors (fine), and a query probes only the nProbe
-    * nearest cells, paying m LUT lookups per SURVIVING candidate. The
-    * coarse quantizer here is the integer-exact `KMeans` (not the
-    * float IVF trainer), which keeps the ENTIRE composed pipeline —
-    * cell assignment, probe choice, codes, ADC ranking —
-    * deterministic and oracle-replayable.
-    *
-    * Plan shape: cell filter is a map-side IN over the assignment
-    * (combining with a cell-partitioned layout — `buildAndWriteIvfIndex`
-    * — would turn it into directory pruning), ADC as in `adcTopK`.
-    */
   /** Probe choice: nProbe nearest cell centroids by exact integer
     * squared-L2, ties to the smaller cell id — driver-side over the
     * bounded (k·dim) model. Shared by the one-shot and served paths.
@@ -180,6 +167,19 @@ object ProductQuantizer {
       (acc, id)
     }.sortBy(identity).take(nProbe).map(_._2)
 
+  /** IVF+PQ composed — the full coarse-quantizer + fine-quantizer
+    * index shape: KMeans cells partition the corpus (coarse), PQ codes
+    * compress the vectors (fine), and a query probes only the nProbe
+    * nearest cells, paying m LUT lookups per SURVIVING candidate. The
+    * coarse quantizer here is the integer-exact `KMeans` (not the
+    * float IVF trainer), which keeps the ENTIRE composed pipeline —
+    * cell assignment, probe choice, codes, ADC ranking —
+    * deterministic and oracle-replayable.
+    *
+    * Plan shape: cell filter is a map-side IN over the assignment
+    * (combining with a cell-partitioned layout — `buildAndWriteIvfIndex`
+    * — would turn it into directory pruning), ADC as in `adcTopK`.
+    */
   def ivfPqTopK(df: DataFrame, idCol: String, vecCol: String,
       query: Array[Long], cells: KMeans.Centroids, model: PqModel,
       nProbe: Int, k: Int, excludeId: Option[Long] = None): DataFrame = {

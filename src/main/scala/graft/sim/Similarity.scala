@@ -77,8 +77,8 @@ object Similarity {
     * literals scored through the codegen'd vec_dot (callers must
     * VectorFunctions.register the session) — the HOF dot here was
     * 32 interpreted array traversals per row.
-    */
-  /** Band buckets from per-plane sign bits, each plane scored by its
+    *
+    * Band buckets from per-plane sign bits, each plane scored by its
     * own small FloatVecDot.
     *
     * KEEP THIS SHAPE (measured, round 2): a "nicer" two-projection
@@ -441,14 +441,6 @@ object Similarity {
     IvfIndex(centroids, spark.read.parquet(path))
   }
 
-  /** IVF serve path for a query vector the caller holds (the vector-DB
-    * shape: the query arrives as a parameter, not a table row). Probe
-    * cells are ranked on the DRIVER against the index's centroids —
-    * both are O(nCells·dim) driver-resident — so the whole search is
-    * ONE job: filter the cell-clustered corpus to nProbe static cell
-    * ids (partition pruning on a cell-partitioned layout), score
-    * against the literal query vector, TakeOrdered k.
-    */
   /** Rank cells by closeness of centroid to qvec (driver-side; both are
     * O(nCells·dim) driver-resident). L2-nearest ⇔ max(v·c − ‖c‖²/2).
     */
@@ -477,6 +469,14 @@ object Similarity {
       minPerCell: Long = 64L): Int =
     if (corpusCount / nCells < minPerCell) nCells else base
 
+  /** IVF serve path for a query vector the caller holds (the vector-DB
+    * shape: the query arrives as a parameter, not a table row). Probe
+    * cells are ranked on the DRIVER against the index's centroids —
+    * both are O(nCells·dim) driver-resident — so the whole search is
+    * ONE job: filter the cell-clustered corpus to nProbe static cell
+    * ids (partition pruning on a cell-partitioned layout), score
+    * against the literal query vector, TakeOrdered k.
+    */
   def ivfSearchVec(index: IvfIndex, idCol: String, vecCol: String,
       qvec: Array[Float], k: Int, nProbe: Int = 4,
       excludeId: Option[Long] = None,
@@ -835,6 +835,18 @@ object Similarity {
     mipsTopKNormPrunedWithStats(df, idCol, vecCol, queryId, k,
       initialFactor, maxFactor, minSpread)._1
 
+  /** The (id, ‖x‖²) norm index [[mipsTopKNormPrunedWithStats]] scans —
+    * build once, store/persist, and pass back in for serve-path reads
+    * (otherwise every ladder rung recomputes norms corpus-wide: the
+    * build pass costs one full scan, same as brute, so in-query
+    * pruning only wins when the index already exists — MipsProbe
+    * measures both regimes).
+    */
+  def mipsNormIndex(df: DataFrame, idCol: String,
+      vecCol: String): DataFrame =
+    df.select(col(idCol).cast("long").as("__id"),
+      quantizedNormSq(col(vecCol)).as("__n2"))
+
   /** [[mipsTopKNormPruned]] plus the ladder's exit state for probes:
     * (result, final factor, candidates scanned, stop reason).
     *
@@ -849,18 +861,6 @@ object Similarity {
     * case) sail past the guard and prune: measured 0.64% of the
     * corpus scanned at the same size.
     */
-  /** The (id, ‖x‖²) norm index [[mipsTopKNormPrunedWithStats]] scans —
-    * build once, store/persist, and pass back in for serve-path reads
-    * (otherwise every ladder rung recomputes norms corpus-wide: the
-    * build pass costs one full scan, same as brute, so in-query
-    * pruning only wins when the index already exists — MipsProbe
-    * measures both regimes).
-    */
-  def mipsNormIndex(df: DataFrame, idCol: String,
-      vecCol: String): DataFrame =
-    df.select(col(idCol).cast("long").as("__id"),
-      quantizedNormSq(col(vecCol)).as("__n2"))
-
   def mipsTopKNormPrunedWithStats(df: DataFrame, idCol: String,
       vecCol: String, queryId: Long, k: Int, initialFactor: Int = 4,
       maxFactor: Int = 1 << 20, minSpread: Double = 4.0,

@@ -28,7 +28,7 @@ object Tables {
     * schema inference on the DRIVER for every call, and every declared
     * query calls it for every table it touches — measured 0.75 s per
     * 6-table query vs 0.075 s with the schema supplied
-    * (tools/ReadSetupProbe, median of 7). This memo is the
+    * (ReadSetupProbe (removed; see 7b19d2b), median of 7). This memo is the
     * catalog-table model (a metastore/manifest serves the schema; at
     * 100 TB you would never re-infer per query): schema resolved once
     * per file version per JVM, every read still scans the parquet

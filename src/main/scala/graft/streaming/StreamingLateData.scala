@@ -184,7 +184,7 @@ object StreamingLateData {
     * can vanish between its two waves. Clicks and sentinels replay
     * exactly as [[runLateHourPivotUpdate]] (the late filter for the
     * late-click batch is the wm over ALL non-clicks — the two-batch
-    * lag, measured by tools/WatermarkLagProbe — so the kept/dropped
+    * lag, measured by WatermarkLagProbe (removed; see 7b19d2b) — so the kept/dropped
     * split is byte-identical to the append exhibit's).
     */
   def runLateHourPivotUpdateSplit(spark: SparkSession,

@@ -180,34 +180,6 @@ object Dedup {
         min(xxhash64(lit(0), col("s"))).as("mh_0"),
         (1 until k).map(i => min(xxhash64(lit(i), col("s"))).as(s"mh_$i")): _*)
 
-  /** LSH candidate pairs from minhash signatures: b bands of r values;
-    * band hash = xxhash64 over the band's signature columns; explode →
-    * (band, hash) buckets → within-bucket pairs via self-join.
-    */
-  /** Band-bucket candidate pairs from a signature frame (id, mh_*). */
-  private def candidatesFromSignatures(sig: DataFrame, numHashes: Int,
-      bands: Int): DataFrame = {
-    require(numHashes % bands == 0, "numHashes must divide into bands")
-    val r = numHashes / bands
-    val bandCols = (0 until bands).map { b =>
-      xxhash64((b * r until (b + 1) * r).map(i => col(s"mh_$i")): _*)
-    }
-    val banded = sig.select(col("id"), posexplode(array(bandCols: _*)))
-      .withColumnsRenamed(Map("pos" -> "band", "col" -> "band_hash"))
-    banded.as("a").join(banded.as("b"),
-        col("a.band") === col("b.band") &&
-        col("a.band_hash") === col("b.band_hash") &&
-        col("a.id") < col("b.id"))
-      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-      .distinct()
-  }
-
-  def lshCandidatePairs(df: DataFrame, idCol: String, textCol: String,
-      shingleN: Int = 3, numHashes: Int = 32, bands: Int = 8): DataFrame =
-    candidatesFromSignatures(
-      minhashSignatures(df, idCol, textCol, shingleN, numHashes),
-      numHashes, bands)
-
   /** MinHash-LSH near-dup pairs: banding proposes candidates, the
     * signature-match fraction (the standard minhash Jaccard estimator)
     * PRE-FILTERS them, and true shingle Jaccard verifies the survivors.
@@ -218,8 +190,8 @@ object Dedup {
     * signature longs per candidate costs ~nothing and cuts the verify
     * join to pairs whose estimated Jaccard clears `estThreshold`
     * (default max(threshold, 2/k) — at least 2 matching components).
-    */
-  /** `bands = 0` (the default) auto-sizes from the threshold via
+    *
+    * `bands = 0` (the default) auto-sizes from the threshold via
     * [[autoMinhashBands]] — at the dedup-decision threshold 0.5 this
     * derives the same 16-band point the declared query pins explicitly.
     */
@@ -272,7 +244,7 @@ object Dedup {
       // recomputes the subplan" objection), the self-join moves 24 B
       // (id, band, hash) rows, and the signatures re-attach to the
       // DEDUPED pair set via two broadcast joins — map-side, no pair
-      // amplification. Measured (tools/MinhashBandProbe, interleaved
+      // amplification. Measured (MinhashBandProbe (removed; see 7b19d2b), interleaved
       // ×7, identity-asserted over 256 pairs at sf0.1):
       // wide 1.533 s → narrow 1.257 s median. Past the cap the wide
       // shape returns: a corpus-sized signature pin/broadcast is
@@ -475,32 +447,6 @@ object Dedup {
       shingleN: Int = 3): DataFrame =
     simhashSignaturesFrom(shingleHashFrame(df, idCol, textCol, shingleN))
 
-  /** Within-Hamming pairs from a signature frame (id, sh): band the
-    * 64-bit hash into `chunks` equal chunks; any exact chunk match →
-    * candidate; verify true Hamming ≤ maxHamming via bit_count(xor).
-    *
-    * PIGEONHOLE GUARANTEE: hamming ≤ h diffs touch at most h chunks,
-    * so with chunks > maxHamming every qualifying pair shares at least
-    * one untouched chunk — recall is exactly 1, not probabilistic.
-    * With chunks ≤ maxHamming the result may under-report (candidates
-    * need a lucky identical chunk). The cost side: expected bucket
-    * occupancy ≈ N/2^(64/chunks) — more chunks = complete but more
-    * candidate volume; grow chunk WIDTH with corpus size exactly like
-    * the minhash/LSH band sizing rule above.
-    *
-    * OR-AMPLIFICATION (`rotations`): each extra rotation re-chunks the
-    * signature with boundaries shifted by that many bits (rotate-left,
-    * so every bit stays in exactly one chunk per alignment) and unions
-    * the candidate bands. A pair is missed only if its diff bits cover
-    * ALL chunks in EVERY alignment — a half-chunk offset (e.g. 4 bits
-    * at 8×8) decorrelates the coverings, squaring the per-pair miss
-    * probability (≈1.1% → ≈1e-4 at Hamming 9) for 2× candidate volume
-    * with UNCHANGED per-band bucket space. The round-7 sf0.1 testdata
-    * regeneration produced exactly such a miss — one true pair at
-    * Hamming 9 whose diffs covered all 8 chunks of the single
-    * alignment; the second alignment catches it with ~6 bits of
-    * margin again.
-    */
   /** (id, sh) → (id, sh, band, chunk): the statically-unrolled
     * (rotations × chunks) banding explode shared by the within-set and
     * cross-set Hamming joins. Band id (pos) encodes (rotation, chunk
@@ -551,6 +497,32 @@ object Dedup {
       .distinct()
   }
 
+  /** Within-Hamming pairs from a signature frame (id, sh): band the
+    * 64-bit hash into `chunks` equal chunks; any exact chunk match →
+    * candidate; verify true Hamming ≤ maxHamming via bit_count(xor).
+    *
+    * PIGEONHOLE GUARANTEE: hamming ≤ h diffs touch at most h chunks,
+    * so with chunks > maxHamming every qualifying pair shares at least
+    * one untouched chunk — recall is exactly 1, not probabilistic.
+    * With chunks ≤ maxHamming the result may under-report (candidates
+    * need a lucky identical chunk). The cost side: expected bucket
+    * occupancy ≈ N/2^(64/chunks) — more chunks = complete but more
+    * candidate volume; grow chunk WIDTH with corpus size exactly like
+    * the minhash/LSH band sizing rule above.
+    *
+    * OR-AMPLIFICATION (`rotations`): each extra rotation re-chunks the
+    * signature with boundaries shifted by that many bits (rotate-left,
+    * so every bit stays in exactly one chunk per alignment) and unions
+    * the candidate bands. A pair is missed only if its diff bits cover
+    * ALL chunks in EVERY alignment — a half-chunk offset (e.g. 4 bits
+    * at 8×8) decorrelates the coverings, squaring the per-pair miss
+    * probability (≈1.1% → ≈1e-4 at Hamming 9) for 2× candidate volume
+    * with UNCHANGED per-band bucket space. The round-7 sf0.1 testdata
+    * regeneration produced exactly such a miss — one true pair at
+    * Hamming 9 whose diffs covered all 8 chunks of the single
+    * alignment; the second alignment catches it with ~6 bits of
+    * margin again.
+    */
   private def simhashPairsWithin(hashed: DataFrame, maxHamming: Int,
       chunks: Int, rotations: Seq[Int] = Seq(0)): DataFrame = {
     val banded = chunkBanded(hashed, chunks, rotations)

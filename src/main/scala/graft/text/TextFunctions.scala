@@ -91,15 +91,6 @@ object TextFunctions {
     (lenOk + avgLenOk + stopOk + punctOk) / 4.0
   }
 
-  /** Staged quality score: same formula as `qualityScore`, but the
-    * expensive shared subexpressions — the token split and the
-    * whitespace-stripped text — are hoisted into explicit projections
-    * so each evaluates ONCE per row. The scalar `qualityScore` leans on
-    * codegen subexpression elimination, which cannot dedupe across the
-    * interpreted HOF boundary (the stopword filter) — measured ~3× cost
-    * on long documents. Use this form in scans; the scalar form remains
-    * for composition inside other expressions.
-    */
   /** Flesch-style readability signals, integerized so any engine
     * replays them exactly: words (whitespace tokens), sentences
     * (runs of [.!?], clamped ≥ 1), syllable PROXY (vowel-group runs —
@@ -129,6 +120,15 @@ object TextFunctions {
           expr("(84600 * n_vowel_groups) div n_words"))
   }
 
+  /** Staged quality score: same formula as `qualityScore`, but the
+    * expensive shared subexpressions — the token split and the
+    * whitespace-stripped text — are hoisted into explicit projections
+    * so each evaluates ONCE per row. The scalar `qualityScore` leans on
+    * codegen subexpression elimination, which cannot dedupe across the
+    * interpreted HOF boundary (the stopword filter) — measured ~3× cost
+    * on long documents. Use this form in scans; the scalar form remains
+    * for composition inside other expressions.
+    */
   def withQualityScore(df: org.apache.spark.sql.DataFrame, textCol: String,
       outCol: String,
       stopwords: Seq[String] = Seq("the", "a", "of", "and")): org.apache.spark.sql.DataFrame = {
@@ -175,21 +175,6 @@ object TextFunctions {
         .otherwise(transform(
           sequence(lit(0), size(t) - n),
           i => concat_ws(" ", (0 until n).map(k => element_at(t, i + k + 1)): _*))))
-
-  /** Word n-gram shingles as 64-bit hashes (distinct): the unit for
-    * MinHash signatures, where the shingle string itself is never
-    * needed — skipping the concat + string comparisons roughly halves
-    * shingle-stage cost. Collision odds across 64 bits are negligible
-    * for any realistic shingle population.
-    */
-  def wordShingleHashes(text: Column, n: Int = 3): Column = {
-    val t = tokens(text)
-    array_distinct(
-      when(size(t) < n, array().cast("array<bigint>"))
-        .otherwise(transform(
-          sequence(lit(0), size(t) - n),
-          i => xxhash64((0 until n).map(k => element_at(t, i + k + 1)): _*))))
-  }
 
   /** Order-sensitive rolling fingerprint of the token stream: fold of
     * xxhash64(acc, token) — a chained hash rather than a polynomial, so
@@ -273,22 +258,6 @@ object TextFunctions {
           (col("tot3") - col("dist3")) / col("tot3") > 0.18).as("repetitive"))
   }
 
-  /** Corpus-level boilerplate detector: the k n-grams appearing in the
-    * most DISTINCT documents (document frequency, not raw count — a
-    * single spammy document must not promote its pet phrase). The
-    * classic first step of template/boilerplate removal: inspect the
-    * head of this list, then strip or down-weight matching spans.
-    *
-    * Distributed shape: per-document distinct grams are built map-side
-    * (`wordShingles` — sequence/transform HOFs, no UDF), exploded, and
-    * count(*) per gram IS the document frequency because grams are
-    * already distinct within each document — one partial-agg shuffle
-    * of (gram, partial count), then TakeOrdered for the top k. The
-    * corpus text never shuffles; no candidate blow-up exists (contrast
-    * the pair-joining dedup family). Gram cardinality is high but
-    * partial aggregation bounds every exchange row to one gram string
-    * + one long; hot grams are exactly the ones partials compress.
-    */
   /** Vocabulary coverage curve — the tokenizer-training statistic:
     * the top-k tokens by occurrence count, each with its rank and the
     * CUMULATIVE share of all corpus tokens the top-rank prefix covers
@@ -753,6 +722,22 @@ object TextFunctions {
           (col("tot_a") * col("tot_b")).cast("double")).as("l1_drift"))
   }
 
+  /** Corpus-level boilerplate detector: the k n-grams appearing in the
+    * most DISTINCT documents (document frequency, not raw count — a
+    * single spammy document must not promote its pet phrase). The
+    * classic first step of template/boilerplate removal: inspect the
+    * head of this list, then strip or down-weight matching spans.
+    *
+    * Distributed shape: per-document distinct grams are built map-side
+    * (`wordShingles` — sequence/transform HOFs, no UDF), exploded, and
+    * count(*) per gram IS the document frequency because grams are
+    * already distinct within each document — one partial-agg shuffle
+    * of (gram, partial count), then TakeOrdered for the top k. The
+    * corpus text never shuffles; no candidate blow-up exists (contrast
+    * the pair-joining dedup family). Gram cardinality is high but
+    * partial aggregation bounds every exchange row to one gram string
+    * + one long; hot grams are exactly the ones partials compress.
+    */
   def commonNgrams(df: org.apache.spark.sql.DataFrame, textCol: String,
       n: Int = 3, k: Int = 20): org.apache.spark.sql.DataFrame =
     df.select(tokens(col(textCol)).as("__tk"))

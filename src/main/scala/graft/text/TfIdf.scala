@@ -30,7 +30,6 @@ object TfIdf {
       .groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("tf"))
 
-  /** (term, df): number of documents containing each term. */
   /** Feature hashing (the "hashing trick" — Weinberger et al.,
     * ICML'09): fixed-`dim` signed token-count vectors with NO
     * vocabulary pass — the featurizer that keeps linear-model training
@@ -78,6 +77,7 @@ object TfIdf {
           .as("features"))
   }
 
+  /** (term, df): number of documents containing each term. */
   def docFreq(tf: DataFrame): DataFrame =
     tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
 

@@ -2,6 +2,12 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,6 +20,38 @@ import org.scalatest.funsuite.AnyFunSuite
 class LayoutSpec extends AnyFunSuite {
   lazy val spark: SparkSession = Session.builder("layout-test", "4").getOrCreate()
   import spark.implicits._
+
+  /** (rowGroupsTotal, rowGroupsOverlapping, rowsInOverlapping): footer
+    * audit over every part file — a stats-aware reader must read
+    * exactly the row groups whose `column` [min, max] intersects
+    * [lo, hi].
+    */
+  private def footerAudit(conf: Configuration, dir: String, column: String,
+      lo: Long, hi: Long): (Long, Long, Long) = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(conf)
+    var total = 0L; var overlap = 0L; var rows = 0L
+    fs.listStatus(p).filter { s =>
+      val n = s.getPath.getName
+      s.isFile && !n.startsWith("_") && !n.startsWith(".")
+    }.foreach { s =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(s.getPath, conf))
+      try r.getFooter.getBlocks.asScala.foreach { b =>
+        total += 1
+        b.getColumns.asScala.find(_.getPath.toDotString == column)
+          .foreach { c =>
+            val st = c.getStatistics
+            if (st == null || !st.hasNonNullValue) { overlap += 1; rows += b.getRowCount }
+            else {
+              val mn = st.genericGetMin.asInstanceOf[java.lang.Long].longValue
+              val mx = st.genericGetMax.asInstanceOf[java.lang.Long].longValue
+              if (mx >= lo && mn <= hi) { overlap += 1; rows += b.getRowCount }
+            }
+          }
+      } finally r.close()
+    }
+    (total, overlap, rows)
+  }
 
   test("partition pruning: date filter reaches PartitionFilters, files skipped") {
     val dir = Files.createTempDirectory("graft_part").toString
@@ -126,7 +164,8 @@ class LayoutSpec extends AnyFunSuite {
 
   test("mips sorted storage: rung point-read pushes In, prefix row groups only") {
     // The Similarity.scala In-literal rung claims "row-group-skippable
-    // on sorted parquet" (MipsStorageProbe measures it at 2M rows).
+    // on sorted parquet" (MipsStorageProbe, removed; see 7b19d2b,
+    // measured it at 2M rows).
     // Deterministic half here: on an id-sorted layout with small row
     // groups, the footer stats audit must show the rung range touches
     // only the prefix row groups, and the filter must reach the scan
@@ -140,7 +179,7 @@ class LayoutSpec extends AnyFunSuite {
       .write.option("parquet.block.size", 64 * 1024)
       .mode("overwrite").parquet(dir)
     val rung = 1000L
-    val (total, hit, rowsHit) = graft.tools.MipsStorageProbe.footerAudit(
+    val (total, hit, rowsHit) = footerAudit(
       spark.sparkContext.hadoopConfiguration, dir, "vec_id", 0L, rung - 1)
     assert(total >= 8, s"layout produced too few row groups to test: $total")
     assert(hit < total / 2,

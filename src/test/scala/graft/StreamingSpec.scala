@@ -176,7 +176,7 @@ class StreamingSpec extends AnyFunSuite {
     // max = day5 23:00, and the batch-2 late row's window end (day4
     // 00:00) falls strictly BETWEEN wm(after b0) = day1 09:00 and
     // wm(after b1) = day5 22:00 at 1 h delay. Measured verdict
-    // (tools/WatermarkLagProbe): the row is KEPT — batch 2's late
+    // (WatermarkLagProbe (removed; see 7b19d2b)): the row is KEPT — batch 2's late
     // filter is the watermark from batch 0's data only, so the
     // nc-only wm CTE in q_stream_late_pivot[_update]'s oracle is
     // schedule-exact, not dataset-lucky.
