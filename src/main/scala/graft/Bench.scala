@@ -128,7 +128,7 @@ object Bench {
         attempts += (if (ok) dt else -1.0)
         attempt += 1
       }
-      // localCheckpoint blocks (the pinned() frames in dedup/fuzzy/ANN
+      // Pinned blocks (graft.util.Pin frames in the dedup/fuzzy/ANN
       // pipelines) outlive clearCache(): they free only when the RDD is
       // GC'd AND the ContextCleaner runs, and on a fixed pre-touched
       // heap full GCs are rare — after ~60 queries the accumulated

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Pin
+
 /** Association statistics over (basket, item) data — support,
   * confidence, and lift for item pairs, the classic market-basket /
   * co-click signal a curation pipeline uses to find correlated
@@ -38,8 +40,7 @@ object Association {
     // item counts, BOTH pair-join sides, and the basket total — five
     // consumers; without the cut each would replay the distinct
     // (the coOccurrenceEdges rule)
-    val g = df.select(col(groupCol).as("g"), col(itemCol).as("i")).distinct()
-      .localCheckpoint(true)
+    val g = Pin(df.select(col(groupCol).as("g"), col(itemCol).as("i")).distinct())
     val worst = g.groupBy(col("g")).agg(count(lit(1)).as("n"))
       .agg(max(col("n")).as("mx")).head()
     if (!worst.isNullAt(0)) {
@@ -87,8 +88,7 @@ object Association {
   def frequentTriples(df: DataFrame, groupCol: String, itemCol: String,
       minSupport: Long = 2L, maxGroupSize: Long = 10000L): DataFrame = {
     require(minSupport >= 1)
-    val g = df.select(col(groupCol).as("g"), col(itemCol).as("i")).distinct()
-      .localCheckpoint(true)
+    val g = Pin(df.select(col(groupCol).as("g"), col(itemCol).as("i")).distinct())
     val worst = g.groupBy(col("g")).agg(count(lit(1)).as("n"))
       .agg(max(col("n")).as("mx")).head()
     if (!worst.isNullAt(0)) {
@@ -99,14 +99,13 @@ object Association {
     }
     val frequent = g.groupBy(col("i")).agg(count(lit(1)).as("c"))
       .where(col("c") >= minSupport)
-    val fg = g.join(frequent.select(col("i")), Seq("i"), "left_semi")
-      .localCheckpoint(true) // feeds the pair join twice + the c-probe
-    val freqPairs = fg.select(col("g"), col("i").as("a"))
+    // feeds the pair join twice + the c-probe
+    val fg = Pin(g.join(frequent.select(col("i")), Seq("i"), "left_semi"))
+    val freqPairs = Pin(fg.select(col("g"), col("i").as("a"))
       .join(fg.select(col("g"), col("i").as("b")), Seq("g"))
       .where(col("a") < col("b"))
       .groupBy(col("a"), col("b")).agg(count(lit(1)).as("n_ab"))
-      .where(col("n_ab") >= minSupport)
-      .localCheckpoint(true) // candidates read it 3x, supports 3x
+      .where(col("n_ab") >= minSupport)) // candidates read it 3x, supports 3x
     val cand = freqPairs.select(col("a"), col("b"))
       .join(freqPairs.select(col("a"), col("b").as("c")), Seq("a"))
       .where(col("b") < col("c"))
@@ -165,11 +164,10 @@ object Association {
     // pre-filter rows / 19.7 MB exchange read per branch at sf0.1,
     // StageBreakdown) to produce a few-thousand-row table twice; the
     // pin is minPairCount-filtered, so it is tiny by construction
-    val pairs = pairLift(df, groupCol, itemCol, minItemCount,
+    val pairs = Pin(pairLift(df, groupCol, itemCol, minItemCount,
       minPairCount, maxGroupSize)
       .select(col("item_a"), col("item_b"), col("n_ab"),
-        col("n_a"), col("n_b"))
-      .localCheckpoint(true)
+        col("n_a"), col("n_b")))
     val mirrored = pairs.unionByName(
       pairs.select(col("item_b").as("item_a"), col("item_a").as("item_b"),
         col("n_ab"), col("n_b").as("n_a"), col("n_a").as("n_b")))

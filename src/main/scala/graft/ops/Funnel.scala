@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.Pin
+
 /** Funnel and cohort analytics over an event stream — the two product-
   * analytics primitives every events warehouse runs (step conversion,
   * cohort retention), expressed in the repo's engine-portable integer
@@ -87,9 +89,8 @@ object Funnel {
     */
   def dailyGrowth(events: DataFrame, tsCol: String,
       userCol: String): DataFrame = {
-    val ud = events.select(to_date(col(tsCol)).as("day"),
-        col(userCol).as("u")).distinct()
-      .localCheckpoint(true) // feeds actives, first-days, and bounds
+    val ud = Pin(events.select(to_date(col(tsCol)).as("day"),
+        col(userCol).as("u")).distinct()) // feeds actives, first-days, and bounds
     val active = ud.groupBy(col("day"))
       .agg(count(lit(1)).as("active_users"))
     val firsts = ud.groupBy(col("u")).agg(min(col("day")).as("day"))
@@ -155,10 +156,9 @@ object Funnel {
       struct(lit(s"${pair.head}->${pair.last}").as("transition"),
         (col(s"t${i + 2}") - col(s"t${i + 1}")).as("dt"))
     }.toSeq
-    val dts = f.select(explode(array(trans: _*)).as("x"))
+    val dts = Pin(f.select(explode(array(trans: _*)).as("x"))
       .select(col("x.transition").as("transition"), col("x.dt").as("dt"))
-      .where(col("dt").isNotNull)
-      .localCheckpoint(true)
+      .where(col("dt").isNotNull))
     val med = Conformal.threshold(dts, Seq("transition"), "dt", 1, 2)
       .select(col("transition"), col("qhat").as("p50_s"))
     dts.groupBy(col("transition"))

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Pin
+
 /** Spatial neighbor join — all pairs of points within a radius,
   * without the all-pairs cross product. The grid-cell trick: bucket
   * points into radius-sized cells, explode ONE side over its 3×3 cell
@@ -76,7 +78,7 @@ object GeoJoin {
     // cluster labels (ADVICE r12). Enforce loudly at runtime on the
     // cell frame (cheap — occupied-cell-sized, never per point);
     // raise_error fires the moment an out-of-range core cell exists.
-    val core = cellCounts.where(col("__n") >= minPts)
+    val core = Pin(cellCounts.where(col("__n") >= minPts)
       .withColumn("cell",
         when(col("cx") < 0 || col("cx") >= 1048576L ||
              col("cy") < 0 || col("cy") >= 1048576L,
@@ -85,8 +87,7 @@ object GeoJoin {
             col("cx"), lit(", "), col("cy"),
             lit(") — micro-coordinates must be >= 0 and < cellSize*2^20")))
             .cast("long"))
-        .otherwise(expr("cx * 1048576 + cy"))) // cx·2^20 + cy
-      .localCheckpoint(true) // feeds probe, build, nodes
+        .otherwise(expr("cx * 1048576 + cy")))) // cx·2^20 + cy; feeds probe, build, nodes
     val probe = core
       .withColumn("dx", explode(array(lit(-1L), lit(0L), lit(1L))))
       .withColumn("dy", explode(array(lit(-1L), lit(0L), lit(1L))))

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.Pin
+
 /** Column-level data profiling and snapshot-over-snapshot drift — the
   * DQ companion to SnapshotDiff (which diffs ROWS) and Expectations
   * (which gates CHECKS): per column, row/null/distinct counts, and the
@@ -441,8 +443,7 @@ object Profiling {
       valueCol: Column, popCol: Column, cap: Long,
       caller: String): DataFrame =
     if (cap > 0) {
-      val counts = driftCounts(df, groupCols, valueCol, popCol)
-        .localCheckpoint(true)
+      val counts = Pin(driftCounts(df, groupCols, valueCol, popCol))
       guardKsDomain(counts, cap, caller)
       counts
     } else driftCounts(df, groupCols, valueCol, popCol)
@@ -645,7 +646,7 @@ object Profiling {
         sum(when(col("__day") <= date_sub(col("eval_day"), curDays),
           lit(0L)).otherwise(col("__n"))).as("__nb"))
     val counts =
-      if (domainCap > 0) countsPlan.localCheckpoint(true) else countsPlan
+      if (domainCap > 0) Pin(countsPlan) else countsPlan
     guardKsDomain(counts, domainCap, "ksDriftTimeseries")
     // an empty reference or current window has no verdict (and its
     // 0/0 division is engine-divergent: Spark NaN, DuckDB NULL) —

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Pin
+
 /** Time-series regularization — resample irregular observations onto a
   * fixed-step grid with forward-fill, the transform that turns event
   * streams into the aligned per-entity series every downstream
@@ -94,9 +96,8 @@ object Resample {
   def rollingDistinct(df: DataFrame, keyCol: String, tsCol: String,
       actorCol: String, windowDays: Int = 7): DataFrame = {
     require(windowDays >= 1 && windowDays <= 366)
-    val ud = df.select(col(keyCol).as("k"), to_date(col(tsCol)).as("day"),
-        col(actorCol).as("u")).distinct()
-      .localCheckpoint(true) // feeds bounds, keys, and the explode
+    val ud = Pin(df.select(col(keyCol).as("k"), to_date(col(tsCol)).as("day"),
+        col(actorCol).as("u")).distinct()) // feeds bounds, keys, and the explode
     val bounds = ud.agg(min(col("day")).as("lo"), max(col("day")).as("hi"))
     val spine = bounds.select(
       explode(sequence(col("lo"), col("hi"), expr("INTERVAL 1 DAY")))

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.Pin
+
 /** Deterministic, engine-portable sampling — the reproducibility
   * primitive for corpus curation: the same keys are selected on every
   * run, on every engine, at any parallelism (unlike `df.sample`, whose
@@ -394,12 +396,11 @@ object Sampling {
     // cut the caller's weight plan (for DSIR: tokenize + score the
     // corpus) executes twice. The pin is weight-filtered (id, w, b) —
     // pool-sized by construction.
-    val pool = df.select(col(idCol).cast("long").as("id"),
+    val pool = Pin(df.select(col(idCol).cast("long").as("id"),
         col(weightCol).cast("long").as("__w"))
       .where(col("__w") > 0L)
       .withColumn("__b",
-        pmod(col("id"), lit(indexBuckets.toLong)).cast("int"))
-      .localCheckpoint(true)
+        pmod(col("id"), lit(indexBuckets.toLong)).cast("int")))
     val bTotals = pool.groupBy(col("__b"))
       .agg(sum(col("__w")).as("__bw"), count(lit(1)).as("__n"))
     val offsets = bTotals.withColumn("__off",

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.util.Pin
+
 /** RFM (recency / frequency / monetary) segmentation — the classic
   * behavioral-segmentation primitive: every user scored 1..buckets on
   * each axis by equi-depth rank, then labeled with the composite
@@ -29,11 +31,10 @@ object Segmentation {
     // r16: pinned — feeds the user-count frame and three independent
     // rank passes (each previously re-shuffled the ACCUMULATING frame
     // through its range exchange; now each ranges a 2-column slice)
-    val m = events.groupBy(col(userCol)).agg(
+    val m = Pin(events.groupBy(col(userCol)).agg(
       count(lit(1)).as("freq"),
       max(unix_micros(col(tsCol))).as("last_us"),
-      sum(col(valCol).cast(DecimalType(12, 2))).as("__mon"))
-      .localCheckpoint(true)
+      sum(col(valCol).cast(DecimalType(12, 2))).as("__mon")))
     val n = m.agg(count(lit(1)).as("__nu"))
     // r16 (guide §2.6 — overlap independent jobs): the three axis ranks
     // are independent pure functions of one metric's total order each,

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Pin
+
 /** Pareto frontier (2-D skyline): the rows not dominated on a
   * (minimize cost, maximize benefit) pair — the "best trade-off"
   * query a curation pipeline asks of any price/quality,
@@ -131,9 +133,8 @@ object Skyline {
       benefitCol: String, levelCol: String,
       buckets: Int = 64): DataFrame = {
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
-    val g = df.groupBy(col(levelCol).as("__lvl"), col(costCol).as("__cost"))
-      .agg(max(col(benefitCol)).as("__bmax"))
-      .localCheckpoint(true) // feeds levels, contributors, subjects
+    val g = Pin(df.groupBy(col(levelCol).as("__lvl"), col(costCol).as("__cost"))
+      .agg(max(col(benefitCol)).as("__bmax"))) // feeds levels, contributors, subjects
     val levels = g.select(col("__lvl").as("__tgt")).distinct()
     // bounded × bounded broadcast inequality join: |levels|² pairs
     val contribs = g.join(broadcast(levels), col("__tgt") > col("__lvl"))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Pin
+
 /** Decision-stump split finding: the best threshold t on an integral
   * feature, minimizing the weighted Gini impurity of the two sides
   * `f <= t` / `f > t` against a categorical label — the inner loop of
@@ -35,9 +37,8 @@ object SplitFinder {
   def bestGiniSplits(df: DataFrame, featureCol: String, labelCol: String,
       k: Int = 3, maxThresholds: Long = 100000L): DataFrame = {
     require(k >= 1)
-    val cnt = df.groupBy(col(featureCol).as("__v"), col(labelCol).as("__c"))
-      .agg(count(lit(1)).as("__n"))
-      .localCheckpoint(true) // feeds the guard, the grid, and totals
+    val cnt = Pin(df.groupBy(col(featureCol).as("__v"), col(labelCol).as("__c"))
+      .agg(count(lit(1)).as("__n"))) // feeds the guard, the grid, and totals
     val nVals = cnt.select(col("__v")).distinct().count()
     require(nVals <= maxThresholds,
       s"bestGiniSplits: $nVals distinct $featureCol values exceed the " +

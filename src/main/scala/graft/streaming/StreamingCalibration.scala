@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
 import graft.text.QualityClassifier
+import graft.util.Pin
 
 /** Continuously-maintained isotonic recalibration: the quality model
   * trains ONCE on the trusted slice of the accumulated corpus (table,
@@ -23,9 +24,9 @@ object StreamingCalibration {
   def runIsotonicBatchEquivalent(spark: SparkSession,
       sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
-    val weights = QualityClassifier.trainTokenWeights(
-      docs.where(col("doc_id") % 3 === 0), "text", col("lang") === "en")
-      .localCheckpoint(true) // frozen model: never recomputed per batch
+    // frozen model: never recomputed per batch
+    val weights = Pin(QualityClassifier.trainTokenWeights(
+      docs.where(col("doc_id") % 3 === 0), "text", col("lang") === "en"))
     val buf = java.util.Collections.synchronizedList(
       new java.util.ArrayList[org.apache.spark.sql.Row]())
     def binPartials(batch: DataFrame): DataFrame =

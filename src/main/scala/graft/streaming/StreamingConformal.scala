@@ -8,6 +8,7 @@ import org.apache.spark.sql.types.DecimalType
 
 import graft.ops.Conformal
 import graft.sources.Tables
+import graft.util.Pin
 
 /** Continuous conformal-coverage monitoring — the streaming face of
   * `ops/Conformal`: thresholds are frozen ONCE from the batch
@@ -32,10 +33,10 @@ object StreamingConformal {
   def runBatchEquivalent(spark: SparkSession, sfDir: String): DataFrame = {
     val eb = Tables.events(spark, sfDir).select(col("event_type"),
       col("user_id"), col("value").cast(DecimalType(12, 2)).as("score"))
-    val thr = Conformal.threshold(
+    // frozen model frame: |groups| rows
+    val thr = Pin(Conformal.threshold(
       eb.where(pmod(col("user_id"), lit(5)) === 0),
-      Seq("event_type"), "score", covNum = 9, covDen = 10)
-      .localCheckpoint(true) // frozen model frame: |groups| rows
+      Seq("event_type"), "score", covNum = 9, covDen = 10))
     val name = s"stream_conformal_${nameCounter.incrementAndGet()}"
     StreamingRun.withStatePartitions(spark, 4) { s =>
       val tallies = StreamingHourPivot.eventsStream(s, sfDir)

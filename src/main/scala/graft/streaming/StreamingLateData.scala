@@ -8,6 +8,7 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType,
   TimestampType}
 
 import graft.sources.Tables
+import graft.util.Pin
 
 /** Watermarked LATE-DATA semantics, exercised for real (SURVEY §7.4
   * risk 5). The 31 streaming twins prove arrival-order independence by
@@ -99,7 +100,7 @@ object StreamingLateData {
         try q.processAllAvailable()
         finally q.stop()
         // materialize before the fixture directory is deleted
-        s.table(name).localCheckpoint(true)
+        Pin(s.table(name))
       }
     }
   }

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.multimodal.Multimodal
 import graft.sources.Tables
 import graft.text.Dedup
+import graft.util.Pin
 
 /** Media near-duplicate screening at INGEST time — the streaming twin
   * of q_media_neardup, one tier down the cost ladder from
@@ -52,11 +53,10 @@ object StreamingMediaNearDup {
     * row-identical to the one-shot cross join.
     */
   def runBatchEquivalent(spark: SparkSession, sfDir: String): DataFrame = {
-    val corpusPhash = Multimodal.perceptualHashTable(
+    val corpusPhash = Pin(Multimodal.perceptualHashTable(
       Multimodal.mediaTable(
         mediaOf(Tables.documents(spark, sfDir))
-          .where(pmod(col("media_id"), lit(5)) =!= 0)))
-      .localCheckpoint(true)
+          .where(pmod(col("media_id"), lit(5)) =!= 0))))
     val buf = java.util.Collections.synchronizedList(
       new java.util.ArrayList[org.apache.spark.sql.Row]())
     def screened(batchDocs: DataFrame): DataFrame =

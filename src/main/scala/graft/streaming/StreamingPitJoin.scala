@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.util.Pin
+
 /** Stream-STATIC point-in-time enrichment — the ingest-time face of
   * `ops/Scd2.pointInTimeJoin`, and the one join rung the streaming
   * registry lacked: facts arrive as an unbounded stream and pick up
@@ -24,10 +26,9 @@ object StreamingPitJoin {
     val changelog = graft.sources.Tables.events(spark, sfDir)
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_id"), col("event_type"))
-    val history = graft.ops.Scd2.historyFromChangeLog(
-      changelog, Seq("user_id"), "ts_us", "event_id", Seq("event_type"))
-      .localCheckpoint(true) // static side: materialized once, the
-                             // nightly-snapshot contract
+    // static side: materialized once, the nightly-snapshot contract
+    val history = Pin(graft.ops.Scd2.historyFromChangeLog(
+      changelog, Seq("user_id"), "ts_us", "event_id", Seq("event_type")))
     StreamingRun.withStatePartitions(spark, 4) { s =>
       val facts = StreamingHourPivot.eventsStream(s, sfDir)
         .select(col("user_id").cast("long").as("user_id"),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
 import graft.text.{TextFunctions => TF}
+import graft.util.Pin
 
 /** Streaming twins for the ranking-agreement and containment
   * exhibits — both built on the same bounded-partials argument:
@@ -56,7 +57,7 @@ object StreamingRankings {
       val q = stream.writeStream
         .outputMode("append")
         .foreachBatch { (batch: DataFrame, _: Long) =>
-          val sc = scored(batch).localCheckpoint(true)
+          val sc = Pin(scored(batch))
           bufA.addAll(topPartial(sc, "flesch_milli").collectAsList())
           bufB.addAll(topPartial(sc, "n_chars").collectAsList())
           (): Unit
@@ -117,8 +118,8 @@ object StreamingRankings {
   def runContainmentBatchEquivalent(spark: SparkSession,
       sfDir: String): DataFrame = {
     val docs = Tables.documents(spark, sfDir)
-    val probes = docs.where(col("doc_id") % 11 === 0)
-      .select(col("doc_id"), col("text")).localCheckpoint(true)
+    val probes = Pin(docs.where(col("doc_id") % 11 === 0)
+      .select(col("doc_id"), col("text")))
     val buf = java.util.Collections.synchronizedList(
       new java.util.ArrayList[org.apache.spark.sql.Row]())
     def score(batch: DataFrame): DataFrame =

@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.util.Pin
+
 /** Collocation mining: which adjacent word pairs co-occur far more
   * than their marginals predict — "New York", "machine learning" —
   * the phrase-detection pass (word2vec's phrase step, Gensim Phrases)
@@ -57,11 +59,10 @@ object Collocations {
         !col("b").isin(stopwords: _*) && col("a") =!= col("b"))
     // checkpoint BEFORE the symmetric union: it references `adj`
     // twice, and nodes + every PageRank round re-read the edge set
-    val edges = adj.select(col("a").as("src"), col("b").as("dst"))
+    val edges = Pin(adj.select(col("a").as("src"), col("b").as("dst"))
       .union(adj.select(col("b").as("a"), col("a").as("b"))
         .select(col("a").as("src"), col("b").as("dst")))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct())
     val nodes = edges.select(col("src").as("token")).distinct()
     graft.graph.Graph.pageRank(edges, nodes, "token", iters = iters)
       .orderBy(col("rank").desc, col("token"))
@@ -77,7 +78,7 @@ object Collocations {
     // tokens(...) expression inside the lambda re-runs the regex
     // split for every element_at (2 per pair; measured 14x: 6.1 s →
     // 0.43 s for the explode at sf0.1)
-    val big = df
+    val big = Pin(df
       .select(TextFunctions.tokens(col(textCol)).as("__toks"))
       .where(size(col("__toks")) >= 2)
       .select(explode(transform(sequence(lit(1), size(col("__toks")) - 1),
@@ -85,8 +86,7 @@ object Collocations {
           element_at(col("__toks"), i + 1).as("w2")))).as("p"))
       .select(col("p.w1").as("w1"), col("p.w2").as("w2"))
       .groupBy(col("w1"), col("w2"))
-      .agg(count(lit(1)).as("n_xy"))
-      .localCheckpoint(true) // feeds marginals + total + final join
+      .agg(count(lit(1)).as("n_xy"))) // feeds marginals + total + final join
     val nx = big.groupBy(col("w1")).agg(sum(col("n_xy")).as("n_x"))
     val ny = big.groupBy(col("w2")).agg(sum(col("n_xy")).as("n_y"))
     val bRow = big.agg(sum(col("n_xy"))).head()

@@ -3,6 +3,9 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
+
+import graft.util.Pin
 
 /** Deduplication operators for web-scale corpora. Four families:
   *
@@ -46,46 +49,10 @@ object Dedup {
 
   import graft.ops.Partitioning.fanOut
 
-  /** Pin an intermediate frame that feeds several plan branches.
-    *
-    * `localCheckpoint(eager)` instead of `persist`: it materializes the
-    * frame once (the persist would too, at first action) AND its blocks
-    * are released by the ContextCleaner as soon as the returned frame is
-    * garbage-collected — `persist` pins blocks until someone calls
-    * `unpersist`, which a function returning a lazy DataFrame can never
-    * do safely (the round-3 build leaked every shingle frame and relied
-    * on the bench harness's session-wide clearCache). Cluster caveat
-    * (same as nearDupClusters): local checkpoints tie recovery to
-    * executor lifetimes; a long-lived production job would use
-    * `checkpoint()` with a reliable checkpoint dir.
-    */
-  private def pinned(df: DataFrame): DataFrame = df.localCheckpoint(true)
-
-  /** The pinning pattern for sibling text operators (FuzzyJoin). */
-  private[text] def pinnedFrame(df: DataFrame): DataFrame = pinned(df)
-
-  /** Pinning for frames that can outgrow deserialized storage: same
-    * eager localCheckpoint, but blocks stored SERIALIZED (UnsafeRow
-    * bytes, no per-row JVM objects — ~3× smaller, GC-invisible, and
-    * disk-evictable under execution pressure). Costs one deserialize
-    * per re-read; worth it for 10⁸-row gram/shingle frames (measured:
-    * 2×75M-row gram frames pinned deserialized OOM an 8 g heap that
-    * the serialized form fits with room to spare). Round-13: EVERY
-    * shingle-frame pin in this file now uses this level — the 10M-doc
-    * composed curation run (10⁹ shingle rows) OOM'd a 48 g heap on
-    * the deserialized pin at two different partition counts, exactly
-    * the failure mode this level exists for; the deserialize-per-
-    * re-read tax is noise next to the bands+verify joins that consume
-    * the frame.
-    */
-  private[text] def pinnedSerFrame(df: DataFrame): DataFrame =
-    df.localCheckpoint(true,
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-
   /** r16 (guide §2.6 — overlap independent jobs): two eager pin
     * materializations with no dependency between them were running
     * SEQUENTIALLY because the driver thread blocks on each
-    * localCheckpoint; Spark's scheduler happily runs both jobs at once
+    * [[graft.util.Pin]]; Spark's scheduler happily runs both jobs at once
     * and the second job's tasks back-fill the first's tail. Used for
     * the two-catalog pins in fuzzyJoinTop1/containmentJoin (measured
     * there: each pin is a ~0.25 s barrier, overlap hides one).
@@ -202,25 +169,26 @@ object Dedup {
     require(numHashes % b == 0, "numHashes must divide into bands")
     // one pinned shingle frame feeds signatures AND verification;
     // collect_set dedups for the verify arrays, min-aggs don't care
-    val ex = pinnedSerFrame(shingleHashFrame(df, idCol, textCol, shingleN,
-      distinctShingles = false))
-    // narrow-banding rung (r16): decided from the DOC TABLE's optimizer
-    // size estimate — driver-side metadata, no job. The signature frame
-    // (id + numHashes longs ≈ 264 B/doc at k=32) is far narrower than
-    // any real document row, so a corpus whose TABLE estimate fits the
-    // cap has a signature frame comfortably inside checkpoint storage
-    // and broadcast reach; a 100 TB corpus reports ~100 TB and takes
-    // the wide shape. Default cap 1 GiB → sig pin ≲ a few hundred MB
-    // worst-case, broadcast ≪ the 8 GB hard cap.
-    val narrowCap = df.sparkSession.conf
-      .getOption("spark.graft.text.maxNarrowBandingInputBytes")
-      .map(_.toLong).getOrElse(1L << 30)
+    val ex = Pin(shingleHashFrame(df, idCol, textCol, shingleN,
+      distinctShingles = false), MEMORY_AND_DISK_SER)
     val narrow = df.queryExecution.optimizedPlan.stats.sizeInBytes <=
-      BigInt(narrowCap)
+      BigInt(NarrowBandingMaxInputBytes)
     minhashNearDupsFromFrame(ex, threshold, numHashes, b,
       estThresholdOpt.getOrElse(math.max(threshold, 2.0 / numHashes)),
       narrowBanding = narrow)
   }
+
+  /** Largest document table, by its optimizer size estimate, that
+    * minhashNearDups bands with the narrow shape (see
+    * [[minhashNearDupsFromFrame]]). The estimate is driver-side
+    * metadata, no job. The signature frame (id + numHashes longs ≈
+    * 264 B/doc at k=32) is far narrower than any real document row, so
+    * a corpus whose TABLE estimate fits 1 GiB has a signature pin of a
+    * few hundred MB at worst, well inside broadcast reach (≪ the 8 GB
+    * hard cap); a 100 TB corpus reports ~100 TB and takes the wide
+    * shape.
+    */
+  private val NarrowBandingMaxInputBytes: Long = 1L << 30
 
   /** The minhash pipeline over a caller-supplied (persisted) shingle
     * frame (id, s) — signatures, banded candidates, estimate pre-filter,
@@ -234,7 +202,7 @@ object Dedup {
     val r = numHashes / bands
 
     val prefiltered = if (narrowBanding) {
-      // r16 NARROW rung (guide §2.3 — shuffle keys, not payloads): the
+      // r16 NARROW shape (guide §2.3 — shuffle keys, not payloads): the
       // wide shape below pushes 8·(numHashes+3) ≈ 280 B/row through the
       // banding self-join's exchange just so the est prefilter can see
       // both sides' signatures. Under the caller's size cap the
@@ -250,7 +218,7 @@ object Dedup {
       // shape returns: a corpus-sized signature pin/broadcast is
       // exactly what the serve-path index (buildAndWriteNearDupIndex)
       // exists to avoid recomputing.
-      val sigCk = minhashSignaturesFrom(ex, numHashes).localCheckpoint(true)
+      val sigCk = Pin(minhashSignaturesFrom(ex, numHashes))
       val bandCols = (0 until bands).map { b =>
         xxhash64((b * r until (b + 1) * r).map(i => col(s"mh_$i")): _*)
       }
@@ -361,8 +329,8 @@ object Dedup {
     val estThreshold =
       estThresholdOpt.getOrElse(math.max(threshold, 2.0 / numHashes))
     val idx = spark.read.parquet(indexDir)
-    val exB = pinnedSerFrame(shingleHashFrame(batch, idCol, textCol, shingleN,
-      distinctShingles = false))
+    val exB = Pin(shingleHashFrame(batch, idCol, textCol, shingleN,
+      distinctShingles = false), MEMORY_AND_DISK_SER)
     val bandCols = (0 until b).map { bi =>
       xxhash64((bi * r until (bi + 1) * r).map(i => col(s"mh_$i")): _*)
     }
@@ -594,7 +562,8 @@ object Dedup {
     // (the 16×4 pigeonhole exhibit) keep the single alignment.
     val rotations = if (chunks == 0) Seq(0, 64 / c / 2) else Seq(0)
     // one pinned shingle frame feeds signatures AND verification
-    val ex = pinnedSerFrame(shingleHashFrame(df, idCol, textCol, shingleN))
+    val ex = Pin(shingleHashFrame(df, idCol, textCol, shingleN),
+      MEMORY_AND_DISK_SER)
     val pairs = simhashPairsWithin(simhashSignaturesFrom(ex), maxHamming, c,
       rotations).select(col("id_a"), col("id_b"))
     verifiedJaccard(pairs, ex, threshold)
@@ -667,8 +636,8 @@ object Dedup {
       tNum: Int, tDen: Int, shingleN: Int = 3): DataFrame = {
     require(tNum > 0 && tDen > 0 && tNum <= tDen,
       s"threshold must be in (0,1]: $tNum/$tDen")
-    val ex = pinnedSerFrame(shingleHashFrame(df, idCol, textCol, shingleN,
-      distinctShingles = true))
+    val ex = Pin(shingleHashFrame(df, idCol, textCol, shingleN,
+      distinctShingles = true), MEMORY_AND_DISK_SER)
     val dfreq = ex.groupBy(col("s")).agg(count(lit(1)).as("__df"))
     val wId = Window.partitionBy(col("id"))
     // r16: width pins on the ranked window and the candidate-join probe
@@ -726,10 +695,10 @@ object Dedup {
       s"threshold must be in (0,1]: $tNum/$tDen")
     // corpus and probe pins are independent — materialize concurrently
     val (exC, exQ) = inParallel(
-      pinnedSerFrame(shingleHashFrame(corpus, idCol, textCol, shingleN,
-        distinctShingles = true)),
-      pinnedSerFrame(shingleHashFrame(probes, idCol, textCol, shingleN,
-        distinctShingles = true)))
+      Pin(shingleHashFrame(corpus, idCol, textCol, shingleN,
+        distinctShingles = true), MEMORY_AND_DISK_SER),
+      Pin(shingleHashFrame(probes, idCol, textCol, shingleN,
+        distinctShingles = true), MEMORY_AND_DISK_SER))
     val dfreq = exC.groupBy(col("s")).agg(count(lit(1)).as("__df"))
     val wId = Window.partitionBy(col("id"))
     val ranked = exQ.join(dfreq, Seq("s"), "left")
@@ -786,44 +755,34 @@ object Dedup {
     // Iterative algorithms MUST truncate lineage each round: `labels`
     // appears twice per iteration, so the logical plan doubles per
     // round (2^iters nodes — analyzer OOM long before any data is
-    // big). localCheckpoint(eager) materializes AND cuts the plan.
-    // On a cluster prefer reliable checkpoint() with a checkpoint dir
-    // (localCheckpoint ties recovery to executor lifetimes).
+    // big). A Pin materializes AND cuts the plan, and its measured
+    // size lets the planner broadcast the node-sized label frames into
+    // the per-round edge joins while they fit (the graph-family
+    // discipline, graph.Graph). Pins tie recovery to executor
+    // lifetimes; see graft.util.Pin.
     //
     // Checkpoint the pair computation BEFORE the bidirectional union:
     // the union references `pairs` twice, and a near-dup pair plan
     // (LSH/jaccard) is far too expensive to evaluate per direction.
-    val undirected = pairs
-      .select(col("id_a").as("src"), col("id_b").as("dst"))
-      .localCheckpoint(true)
+    val undirected = Pin(pairs
+      .select(col("id_a").as("src"), col("id_b").as("dst")))
     // r15: the pre-repartition on the join key was dead weight — under
     // AQE, localCheckpoint captures UnknownPartitioning(0), so the
     // partitioning never satisfied the per-round join anyway (measured,
-    // graph/Graph.pinEdges); dropping it removes one full exchange of
-    // the edge frame from the build
-    val edges = undirected
+    // see graph.Graph); dropping it removes one full exchange of the
+    // edge frame from the build
+    val edges = Pin(undirected
       .unionByName(undirected
-        .select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(true)
-    var labels = ids.select(col(idCol).as("id"), col(idCol).as("rep"))
-      .localCheckpoint(true)
-    // node-frame broadcast rung (graph.Graph.maxBroadcastNodes — the
-    // r16 family-wide fix): per-round label frames are checkpoint
-    // LogicalRDDs with no size stats, so the static planner shuffled
-    // the edge side every round; broadcast the node-sized side while
-    // it fits, fall back to the shuffled join past the threshold
-    val nb: DataFrame => DataFrame =
-      if (labels.count() <=
-          graft.graph.Graph.maxBroadcastNodes(ids.sparkSession)) broadcast
-      else identity
+        .select(col("dst").as("src"), col("src").as("dst"))))
+    var labels = Pin(ids.select(col(idCol).as("id"), col(idCol).as("rep")))
     var converged = false
     var i = 0
     while (!converged && i < maxIters) {
       val neighborMin = edges
-        .join(nb(labels.toDF("dst", "dst_rep")), Seq("dst"))
+        .join(labels.toDF("dst", "dst_rep"), Seq("dst"))
         .groupBy(col("src").as("id"))
         .agg(min(col("dst_rep")).as("nbr_rep"))
-      val propagated = labels.join(nb(neighborMin), Seq("id"), "left")
+      val propagated = labels.join(neighborMin, Seq("id"), "left")
         .select(col("id"), col("rep").as("old_rep"),
           least(col("rep"), coalesce(col("nbr_rep"), col("rep"))).as("rep"))
       // pointer jumping (path compression): rep := rep's rep. Neighbor
@@ -833,14 +792,13 @@ object Dedup {
       // convergence count rides the checkpoint materialization as an
       // observe() — no separate diff-join job per round
       val obs = org.apache.spark.sql.Observation(s"cc_iter_$i")
-      val next = propagated.join(nb(jumpLookup), Seq("rep"), "left")
+      val next = Pin(propagated.join(jumpLookup, Seq("rep"), "left")
         .select(col("id"), col("old_rep"),
           least(col("rep"), coalesce(col("rep2"), col("rep"))).as("rep"))
         .observe(obs,
           sum(when(col("rep") =!= col("old_rep"), 1L).otherwise(0L))
             .as("changed"))
-        .select(col("id"), col("rep"))
-        .localCheckpoint(true)
+        .select(col("id"), col("rep")))
       val changed = obs.get("changed") match {
         case null => 0L
         case x => x.asInstanceOf[Long]
@@ -1000,8 +958,8 @@ object Dedup {
     // Probe side is bounded by contract (benchmarks/blocklists) and
     // feeds three consumers (count, sketch build, exact verify) →
     // pinned, the no-unpersist-hook pattern.
-    val probeSh = pinnedSerFrame(shingleHashFrame(probes, idCol, textCol, shingleN)
-      .select(col("s")).distinct())
+    val probeSh = Pin(shingleHashFrame(probes, idCol, textCol, shingleN)
+      .select(col("s")).distinct(), MEMORY_AND_DISK_SER)
     val nProbe = math.max(probeSh.count(), 1L)
     val bf = probeSh.stat.bloomFilter("s", nProbe, fpp)
     val sketch = {
@@ -1024,7 +982,8 @@ object Dedup {
     graft.functions.VectorFunctions.register(corpus.sparkSession)
     val mightHit = org.apache.spark.sql.functions
       .call_function("bloom_might_contain", lit(sketch), col("s"))
-    val corpusSh = pinnedSerFrame(shingleHashFrame(corpus, idCol, textCol, shingleN))
+    val corpusSh = Pin(shingleHashFrame(corpus, idCol, textCol, shingleN),
+      MEMORY_AND_DISK_SER)
     val totals = corpusSh.groupBy(col("id"))
       .agg(count(lit(1)).as("n_shingles"))
     val overlap = corpusSh.where(mightHit)
@@ -1144,15 +1103,17 @@ object Dedup {
     */
   private def spanWins(df: DataFrame, idCol: String, textCol: String,
       k: Int): (DataFrame, DataFrame) = {
-    val toks = pinnedSerFrame(fanOut(df.where(length(trim(col(textCol))) > 0))
-      .select(col(idCol).as("id"), TextFunctions.tokens(col(textCol)).as("t")))
+    val toks = Pin(fanOut(df.where(length(trim(col(textCol))) > 0))
+      .select(col(idCol).as("id"), TextFunctions.tokens(col(textCol)).as("t")),
+      MEMORY_AND_DISK_SER)
     val tcol = col("t")
     val wlen = greatest(size(tcol) - (k - 1), lit(0))
     val zipped = arrays_zip((1 to k).map(i => slice(tcol, lit(i), wlen)): _*)
-    val wins = pinnedSerFrame(toks
+    val wins = Pin(toks
       .select(col("id"), posexplode(zipped).as(Seq("p0", "z")))
       .select(col("id"), (col("p0") + 1).as("i"),
-        xxhash64((0 until k).map(j => col(s"z.$j")): _*).as("s")))
+        xxhash64((0 until k).map(j => col(s"z.$j")): _*).as("s")),
+      MEMORY_AND_DISK_SER)
     (toks, wins)
   }
 
@@ -1203,10 +1164,11 @@ object Dedup {
     // Exploded, hash-keyed inverted index, pinned: it feeds three plan
     // branches (sizes, both self-join sides) and the shingle build is
     // the expensive part — without materialization it would evaluate
-    // 3×. pinned() (eager localCheckpoint) rather than persist: a
-    // function returning a lazy DataFrame has no unpersist hook, and
-    // checkpoint blocks free with the frame's GC (see pinned's doc).
-    val ex = pinnedSerFrame(shingleHashFrame(df, idCol, textCol, shingleN))
+    // 3×. A Pin rather than persist: a function returning a lazy
+    // DataFrame has no unpersist hook, and pinned blocks free with the
+    // frame's GC (see graft.util.Pin).
+    val ex = Pin(shingleHashFrame(df, idCol, textCol, shingleN),
+      MEMORY_AND_DISK_SER)
     val sizes = ex.groupBy(col("id")).agg(count(lit(1)).as("n"))
     val common = ex.as("a").join(ex.as("b"),
         col("a.s") === col("b.s") && col("a.id") < col("b.id"))

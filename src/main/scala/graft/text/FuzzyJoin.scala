@@ -3,6 +3,9 @@ package graft.text
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
+
+import graft.util.Pin
 
 /** Fuzzy entity-resolution join: match records across two catalogs by
   * character-q-gram Jaccard similarity, EXACTLY — prefix filtering
@@ -72,10 +75,10 @@ object FuzzyJoin {
       threshold: Double, q: Int = 5, prefixLen: Int = 1): DataFrame = {
     require(window >= 2 && threshold > 0 && threshold <= 1)
     val w = window
-    val base = df.select(col(idCol).as("id"), col(sortKeyCol).as("key"),
+    // feeds the metadata count + both frame legs
+    val base = Pin(df.select(col(idCol).as("id"), col(sortKeyCol).as("key"),
         col(textCol).as("__txt"))
-      .withColumn("__bkt", substring(col("key"), 1, prefixLen))
-      .localCheckpoint(true) // feeds the metadata count + both frame legs
+      .withColumn("__bkt", substring(col("key"), 1, prefixLen)))
     // bounded metadata: per-prefix counts, coalesced so every
     // super-bucket holds >= w-1 rows (one boundary hop suffices)
     val counts = base.groupBy(col("__bkt")).agg(count(lit(1)).as("n"))
@@ -290,8 +293,8 @@ object FuzzyJoin {
     // r16: the two pins are independent — materialize concurrently
     // (guide §2.6; Dedup.inParallel)
     val (exL, exR) = Dedup.inParallel(
-      Dedup.pinnedSerFrame(charGramFrame(left, idCol, textCol, q)),
-      Dedup.pinnedSerFrame(charGramFrame(right, idCol, textCol, q)))
+      Pin(charGramFrame(left, idCol, textCol, q), MEMORY_AND_DISK_SER),
+      Pin(charGramFrame(right, idCol, textCol, q), MEMORY_AND_DISK_SER))
 
     // Global rarity order: combined doc-frequency over both catalogs.
     // Any consistent order is CORRECT; rarity-first is what makes
@@ -412,7 +415,7 @@ object FuzzyJoin {
         .where(col("jaccard") >= threshold)
     } else {
       def sets(ex: DataFrame, idName: String, shName: String) =
-        Dedup.pinnedFrame(ex.groupBy(col("id").as(idName))
+        Pin(ex.groupBy(col("id").as(idName))
           .agg(collect_set(col("s")).as(shName)))
       // r16: the two set-table pins are independent — overlap them
       val (setsL, setsR) = Dedup.inParallel(

@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.util.Pin
+
 /** N-gram language-model scoring — the KenLM-shaped fluency filter of
   * a curation pipeline (CCNet trains a 5-gram LM on Wikipedia and
   * buckets CommonCrawl by perplexity; the reference pipeline has no
@@ -58,22 +60,19 @@ object NgramLm {
     // broadcast-reach count job + the join) — without pinning, every
     // consumer would replay the training aggregates from the corpus.
     // All three frames are vocabulary-sized, the pinning contract.
-    val uni = tok.select(explode(col("t")).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("c1"))
-      .localCheckpoint(true)
-    val vocab = uni.agg(count(lit(1)).as("v")).localCheckpoint(true)
+    val uni = Pin(tok.select(explode(col("t")).as("w"))
+      .groupBy(col("w")).agg(count(lit(1)).as("c1")))
+    val vocab = Pin(uni.agg(count(lit(1)).as("v")))
     val big = tok.where(size(col("t")) >= 2)
       .select(explode(wordBigrams(col("t"))).as("pair"))
       .groupBy(col("pair")).agg(count(lit(1)).as("c12"))
-    val bigram = big
+    val bigram = Pin(big
       .join(uni, substring_index(col("pair"), " ", 1) === col("w"))
       .crossJoin(broadcast(vocab))
       .select(col("pair"),
-        expr(s"$Scale * (c12 + 1) div (c1 + v)").as("cond_ppm"))
-      .localCheckpoint(true)
-    val backoff = uni.crossJoin(broadcast(vocab))
-      .select(col("w"), expr(s"$Scale div (c1 + v)").as("bo_ppm"))
-      .localCheckpoint(true)
+        expr(s"$Scale * (c12 + 1) div (c1 + v)").as("cond_ppm")))
+    val backoff = Pin(uni.crossJoin(broadcast(vocab))
+      .select(col("w"), expr(s"$Scale div (c1 + v)").as("bo_ppm")))
     Model(bigram, backoff, vocab)
   }
 
@@ -161,35 +160,29 @@ object NgramLm {
   def trainStupidBackoff(trusted: DataFrame, textCol: String): SbModel = {
     val tok = trusted.where(length(trim(col(textCol))) > 0)
       .select(TextFunctions.tokens(col(textCol)).as("t"))
-    val uni = tok.select(explode(col("t")).as("w"))
-      .groupBy(col("w")).agg(count(lit(1)).as("c1"))
-      .localCheckpoint(true)
-    val totals = uni.agg(count(lit(1)).as("v"), sum(col("c1")).as("n"))
-      .localCheckpoint(true)
-    val big = tok.where(size(col("t")) >= 2)
+    val uni = Pin(tok.select(explode(col("t")).as("w"))
+      .groupBy(col("w")).agg(count(lit(1)).as("c1")))
+    val totals = Pin(uni.agg(count(lit(1)).as("v"), sum(col("c1")).as("n")))
+    val big = Pin(tok.where(size(col("t")) >= 2)
       .select(explode(wordBigrams(col("t"))).as("pair"))
-      .groupBy(col("pair")).agg(count(lit(1)).as("c12"))
-      .localCheckpoint(true)
+      .groupBy(col("pair")).agg(count(lit(1)).as("c12")))
     val tri = tok.where(size(col("t")) >= 3)
       .select(explode(wordTrigrams(col("t"))).as("tri"))
       .groupBy(col("tri")).agg(count(lit(1)).as("c123"))
     // L1: trigram cond against its HISTORY bigram "w1 w2"
-    val trigram = tri
+    val trigram = Pin(tri
       .withColumn("pair", substring_index(col("tri"), " ", 2))
       .join(big, Seq("pair"))
-      .select(col("tri"), expr(s"$Scale * c123 div c12").as("l1_ppm"))
-      .localCheckpoint(true)
+      .select(col("tri"), expr(s"$Scale * c123 div c12").as("l1_ppm")))
     // L2: α-scaled bigram cond of the SUFFIX "w2 w3" against c(w2)
-    val bigramCond = big
+    val bigramCond = Pin(big
       .withColumn("w", substring_index(col("pair"), " ", 1))
       .join(uni, Seq("w"))
       .select(col("pair"),
-        expr(s"2 * $Scale * c12 div (5 * c1)").as("l2_ppm"))
-      .localCheckpoint(true)
+        expr(s"2 * $Scale * c12 div (5 * c1)").as("l2_ppm")))
     // L3: α²-scaled unigram relative frequency
-    val unigramCond = uni.crossJoin(broadcast(totals))
-      .select(col("w"), expr(s"4 * $Scale * c1 div (25 * n)").as("l3_ppm"))
-      .localCheckpoint(true)
+    val unigramCond = Pin(uni.crossJoin(broadcast(totals))
+      .select(col("w"), expr(s"4 * $Scale * c1 div (25 * n)").as("l3_ppm")))
     SbModel(trigram, bigramCond, unigramCond, totals)
   }
 

@@ -3,6 +3,8 @@ package graft.text
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import graft.util.Pin
+
 /** Text-analysis column functions for large-scale training-data
   * pipelines: tokenization, token counting, language-ID heuristics,
   * quality scoring. All pure Catalyst expressions (builtin functions +
@@ -428,20 +430,18 @@ object TextFunctions {
     // chars upstream; silently dropping tokens would skew pair counts).
     // fanOut BEFORE the aggregate: a single-file source arrives as one
     // partition and the tokenize+explode map side would be one task.
-    var words = graft.ops.Partitioning.fanOut(
+    var words = Pin(graft.ops.Partitioning.fanOut(
       df.select(explode(tokens(col(textCol))).as("tok"))
         .where(length(col("tok")) >= 1))
       .select(when(col("tok").contains(F), raise_error(concat(
           lit("bpeTrainMerges: token contains the U+0001 fence char: "),
           col("tok")))).otherwise(col("tok")).as("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("w"))
-      .select(concat(lit(F), array_join(chars, FF), lit(F)).as("s"), col("w"))
-      .localCheckpoint(true)
-    var pairCounts = words
+      .select(concat(lit(F), array_join(chars, FF), lit(F)).as("s"), col("w")))
+    var pairCounts = Pin(words
       .select(explode(pairArr(col("s"))).as("p"), col("w"))
       .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-      .agg(sum(col("w")).as("n"))
-      .localCheckpoint(true)
+      .agg(sum(col("w")).as("n")))
     // unsigned UTF-8 byte order — what both Spark (UTF8String) and
     // DuckDB use for string ORDER BY; Java's String.compareTo (UTF-16
     // code units) disagrees on supplementary characters
@@ -535,12 +535,11 @@ object TextFunctions {
         transform(pairArr(element_at(col("sts"), i)), x =>
           struct(lit(i).as("i"), x.getField("l").as("l"),
             x.getField("r").as("r"), (-col("w")).as("d")))) }
-      val deltas = staged
+      val deltas = Pin(staged
         .select(explode(concat(deltaParts: _*)).as("e"))
         .groupBy(col("e.i").as("i"), col("e.l").as("l"), col("e.r").as("r"))
         .agg(sum(col("e.d")).as("d"))
-        .where(col("d") =!= 0L)
-        .localCheckpoint(true)
+        .where(col("d") =!= 0L))
       // exact trajectory verification: replay steps 2..k over the
       // changed-pair set PLUS the skipped candidates (an unchanged,
       // unskipped pair outside `cands` cannot outrank an accepted pair:
@@ -604,15 +603,14 @@ object TextFunctions {
       val foldCol = aggregate(typedLit(keptPats), col("s"),
         (acc, p) => call_function("replace",
           acc, p.getField("_1"), p.getField("_2")))
-      words = words.select(foldCol.as("s"), col("w")).localCheckpoint(true)
-      pairCounts = pairCounts
+      words = Pin(words.select(foldCol.as("s"), col("w")))
+      pairCounts = Pin(pairCounts
         .join(deltas.where(col("i") <= kEff)
             .groupBy(col("l"), col("r")).agg(sum(col("d")).as("d")),
           Seq("l", "r"), "full_outer")
         .select(col("l"), col("r"),
           (coalesce(col("n"), lit(0L)) + coalesce(col("d"), lit(0L))).as("n"))
-        .where(col("n") > 0L)
-        .localCheckpoint(true)
+        .where(col("n") > 0L))
       kept.zip(stepCounts).foreach { case ((l, r, _), nStep) =>
         merges += ((merges.size + 1, l, r, nStep)) }
       if (merges.size >= nextWaypoint) {

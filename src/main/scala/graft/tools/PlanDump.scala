@@ -18,9 +18,9 @@ object PlanDump {
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
     val spark = Session.builder("plan-dump", "4").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // optional conf overrides (e.g. force a rung's other leg so a
-    // "before" plan can be reproduced after the code landed):
-    // GRAFT_PLANDUMP_CONF="spark.graft.graph.maxBroadcastNodes=0,..."
+    // optional conf overrides (e.g. turn off size-based broadcast so a
+    // join's shuffled shape can be dumped next to the default one):
+    // GRAFT_PLANDUMP_CONF="spark.sql.autoBroadcastJoinThreshold=-1,..."
     sys.env.get("GRAFT_PLANDUMP_CONF").foreach(_.split(',').foreach { kv =>
       val Array(k, v) = kv.split("=", 2)
       spark.conf.set(k.trim, v.trim)

@@ -1,13 +1,25 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike,
+  ShuffleExchangeLike}
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.graph.Graph
 
-class GraphSpec extends AnyFunSuite {
+class GraphSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark: SparkSession = Session.builder("graph-test", "4").getOrCreate()
   import spark.implicits._
+
+  /** Runs `body` with Spark's size-based broadcast off (static and
+    * adaptive), so every planner-chosen broadcast join shuffles. */
+  private def withoutBroadcast[A](body: => A): A = {
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try body finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+  }
 
   test("clustering coefficient: triangle 1.0, junction diluted, pendant null") {
     // triangle a-b-c plus pendant d on a: b,c fully clustered (1e6),
@@ -134,20 +146,11 @@ class GraphSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert((1L to 4L).forall(out(_) == 3L))
     assert((5L to 9L).forall(out(_) == 0L))
-    // broadcast rung (cluster knob): identical counts
-    val outB = Graph.triangleCounts(edges, nodes, "id",
-        maxBroadcastEdges = 1000000L)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(outB == out)
-    // r16 closure-broadcast rung (cluster knob, default 0 = shuffled —
-    // measured faster locally, TriangleClosureProbe): identical counts
-    spark.conf.set("spark.graft.graph.maxBroadcastClosureEdges", "1000000")
-    try {
-      val outC = Graph.triangleCounts(edges, nodes, "id")
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(outC == out)
-    } finally
-      spark.conf.unset("spark.graft.graph.maxBroadcastClosureEdges")
+    // the degree joins broadcast by the pins' measured size; with
+    // size-based broadcast off they shuffle — identical counts
+    val outS = withoutBroadcast(Graph.triangleCounts(edges, nodes, "id")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    assert(outS == out)
   }
 
   test("label propagation: hand-checked spread, tie to smallest, clamp, isolate -1") {
@@ -230,10 +233,10 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("node-frame broadcast rung: both rungs produce identical output") {
-    // r16: per-round node frames broadcast while they fit
-    // (spark.graft.graph.maxBroadcastNodes); 0 forces the shuffled
-    // join. The rung must be invisible in the results — same contract
-    // as triangleCounts' maxBroadcastEdges rung.
+    // per-round node frames are pins with measured sizes, so the
+    // planner broadcasts them while they fit its threshold; with
+    // size-based broadcast off every such join shuffles. The choice
+    // must be invisible in the results.
     import org.apache.spark.sql.functions.col
     val und = Seq((1L, 2L), (2L, 3L), (3L, 4L), (5L, 6L), (6L, 7L),
       (5L, 7L), (1L, 4L))
@@ -251,12 +254,33 @@ class GraphSpec extends AnyFunSuite {
       Graph.hits(edges, iters = 2)
     ).map(_.collect().map(_.toString).toSet)
     val broadcastRung = runAll() // default threshold: node side broadcasts
-    spark.conf.set("spark.graft.graph.maxBroadcastNodes", "0")
-    try {
-      val shuffleRung = runAll()
-      broadcastRung.zip(shuffleRung).zipWithIndex.foreach {
-        case ((b, s), i) => assert(b == s, s"operator $i diverged")
-      }
-    } finally spark.conf.unset("spark.graft.graph.maxBroadcastNodes")
+    val shuffleRung = withoutBroadcast(runAll())
+    broadcastRung.zip(shuffleRung).zipWithIndex.foreach {
+      case ((b, s), i) => assert(b == s, s"operator $i diverged")
+    }
+  }
+
+  test("pagerank: the rank side broadcasts into each round's edge join, the edge side never shuffles") {
+    val und = Seq((1L, 2L), (2L, 3L), (3L, 4L), (5L, 6L), (6L, 7L),
+      (5L, 7L), (1L, 4L))
+    val edges = (und ++ und.map(_.swap)).toDF("src", "dst")
+    val nodes = (1L to 8L).toDF("id")
+    // the rounds run inside the pins' own executions
+    val ran = PlanCapture(spark)(
+      Graph.pageRank(edges, nodes, "id", iters = 3).collect())
+    // the per-round edge join is the one that emits the contribution `c`
+    val edgeJoins = ran.plans.flatMap(p => collect(p) {
+      case j: BroadcastHashJoinExec
+          if j.output.exists(_.name == "c") &&
+            j.leftKeys.exists(_.references.exists(_.name == "src")) => j
+    })
+    assert(edgeJoins.size >= 3, ran.planText)
+    edgeJoins.foreach { j =>
+      val (build, streamed) =
+        if (j.buildSide == BuildRight) (j.right, j.left) else (j.left, j.right)
+      assert(find(build)(_.isInstanceOf[BroadcastExchangeLike]).isDefined &&
+        build.output.exists(_.name == "c"), j)
+      assert(find(streamed)(_.isInstanceOf[ShuffleExchangeLike]).isEmpty, j)
+    }
   }
 }

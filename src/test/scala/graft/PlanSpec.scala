@@ -829,7 +829,12 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("drift timeseries: eval-day range join broadcasts the tiny frame") {
-    val p = planString("q_ks_drift_timeseries")
+    // the theta join runs inside the pin of the guarded counts frame,
+    // so assert over the plans of every execution the query runs
+    val p = PlanCapture(spark) {
+      SparkEntry.queries("q_ks_drift_timeseries")(spark, sf)
+        .write.format("noop").mode("overwrite").save()
+    }.planText
     // the day-range theta join must put the ~days-sized eval frame on
     // a broadcast build side; a shuffle or cartesian here would move
     // the corpus-sized distribution frame for a <100-row dimension

@@ -44,21 +44,20 @@ class TextDedupSpec extends AnyFunSuite {
     // 13 tokens → 11 shingles each; the changed word sits in 3 windows,
     // so 8 shingles are shared: jaccard = 8 / (11 + 11 - 8)
     assert(j === 8.0 / 14.0)
-    // r16: the narrow-banding rung (signature pin + broadcast
-    // re-attach under spark.graft.text.maxNarrowBandingInputBytes)
-    // must be invisible in the results — force the wide shape and
+    // r16: the narrow banding shape (signature pin + broadcast
+    // re-attach, taken for any table under 1 GiB) must be invisible in
+    // the results — run the wide shape over the same shingle frame and
     // compare the full output including est_jaccard
     val narrow = Dedup.minhashNearDups(df, "doc_id", "text",
       threshold = 0.3, numHashes = 32, bands = 16)
       .collect().map(_.toString).toSet
-    spark.conf.set("spark.graft.text.maxNarrowBandingInputBytes", "0")
-    try {
-      val wide = Dedup.minhashNearDups(df, "doc_id", "text",
-        threshold = 0.3, numHashes = 32, bands = 16)
-        .collect().map(_.toString).toSet
-      assert(wide == narrow, "narrow vs wide banding rung diverged")
-    } finally
-      spark.conf.unset("spark.graft.text.maxNarrowBandingInputBytes")
+    val ex = Dedup.shingleHashFrame(df, "doc_id", "text", 3,
+      distinctShingles = false)
+    val wide = Dedup.minhashNearDupsFromFrame(ex, threshold = 0.3,
+        numHashes = 32, bands = 16, estThreshold = math.max(0.3, 2.0 / 32),
+        narrowBanding = false)
+      .collect().map(_.toString).toSet
+    assert(wide == narrow, "narrow vs wide banding shape diverged")
   }
 
   test("prefix-filtered exact join equals brute-force jaccard, no misses") {
@@ -223,16 +222,16 @@ class TextDedupSpec extends AnyFunSuite {
     assert(out(4L) == (4L, true))
     assert(out(5L) == (4L, false))
     assert(out(9L) == (9L, true))
-    // r16: the node-frame broadcast rung (shared conf with the graph
-    // family) must be invisible in the labels — force the shuffle rung
-    // and compare
-    spark.conf.set("spark.graft.graph.maxBroadcastNodes", "0")
+    // the planner broadcasts the pinned label frames while they fit;
+    // that choice must be invisible in the labels — turn size-based
+    // broadcast off and compare
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val shuffled = graft.text.Dedup.nearDupClusters(ids, "doc_id", pairs)
         .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2)))
         .toMap
-      assert(shuffled == out, "broadcast vs shuffle rung diverged")
-    } finally spark.conf.unset("spark.graft.graph.maxBroadcastNodes")
+      assert(shuffled == out, "broadcast vs shuffled label joins diverged")
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
   test("priority keepers: highest priority wins, ties to smaller id, one per cluster") {

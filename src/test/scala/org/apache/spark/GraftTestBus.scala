@@ -1,0 +1,9 @@
+package org.apache.spark
+
+/** The listener bus is asynchronous and draining it is only reachable
+  * from Spark's own package. Specs that count jobs or capture plans
+  * drain it before reading what their listeners saw.
+  */
+object GraftTestBus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
