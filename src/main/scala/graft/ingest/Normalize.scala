@@ -10,7 +10,8 @@ import SchemaDetector.{Detection, LatLon, LocId}
 
 /** Schema-drift-tolerant ingestion: heterogeneous per-file schemas →
   * one DataFrame with the canonical columns
-  * `(pickup_datetime TIMESTAMP, pickup_location STRING, src_path STRING)`.
+  * `(pickup_datetime TIMESTAMP, place_num LONG, place_str STRING,
+  * src_path STRING)`.
   *
   * Reference behavior: per-file rename + projection + timestamp coercion
   * (/root/reference/pivot_and_boostrap/pivot_all_files.py:100-123,
@@ -32,20 +33,33 @@ import SchemaDetector.{Detection, LatLon, LocId}
   * Timestamp coercion ladder (reference :139-149, `errors="coerce"`):
   * dispatch on the DETECTED column's physical type —
   *  - timestamp → pass through
-  *  - date → cast to timestamp
+  *  - date → midnight UTC of that date (integer days × micros per day,
+  *    independent of the session time zone)
   *  - numeric (FHV epoch) → per-row magnitude heuristic: |v| < 1e11 is
   *    epoch SECONDS, else epoch MILLIS. (The reference tries ms first
   *    per column and only falls back on overflow, which silently turns
   *    epoch-seconds into 1970 dates; our spec pins the magnitude rule —
   *    documented divergence. 1e11 s ≈ year 5138, 1e11 ms ≈ 1973.)
-  *  - string → `try_to_timestamp` (invalid → NULL, dropped downstream)
+  *  - string → `try_to_timestamp` (invalid → NULL, dropped downstream).
+  *    A zone-less string is read in the session time zone, which
+  *    `Session.builder` sets to UTC.
   *
-  * Location canonicalization (our pinned formatting spec — SURVEY §7.4):
-  *  - integer/decimal location IDs cast via LONG then STRING ("132",
-  *    never pandas' "132.0"); strings pass through.
-  *  - lat/lon pairs → `round(lat,3) <"_"> round(lon,3)` with
-  *    format_number-free plain casts, e.g. "40.721_-74.005".
-  *  - no location column → empty string (pivot_all_files.py:120-122).
+  * Pickup place, as a group key pair (place_num LONG, place_str STRING):
+  *  - integer/decimal location IDs → (id, "") via a LONG cast (so the
+  *    place string is "132", never pandas' "132.0");
+  *  - a string ID that is the canonical decimal of a long (`try_cast` to
+  *    long and back gives the same string) → (id, ""), so "132" from a
+  *    string file and 132 from an int file are the same key; any other
+  *    string s ("0132", " 132", "Z001") → (0, s), the empty string →
+  *    (null, "");
+  *  - lat/lon pairs → a string place `round(lat,3) <"_"> round(lon,3)`
+  *    with format_number-free plain casts, e.g. "40.721_-74.005";
+  *  - a null place → (null, null).
+  * `placeString` maps a key pair back to its place string one-to-one,
+  * so grouping on the pair groups exactly as grouping on the string
+  * would, without a string hash and compare per row for numeric IDs.
+  * Neither side is null for a non-empty place: the hash aggregate's
+  * fast map takes only rows whose group keys are all non-null.
   */
 object Normalize {
 
@@ -82,7 +96,8 @@ object Normalize {
 
   private def coerceTimestamp(name: String, t: DataType): Column = t match {
     case _: TimestampType => col(name)
-    case _: DateType => col(name).cast(TimestampType)
+    case _: DateType =>
+      timestamp_micros(unix_date(col(name)).cast(LongType) * 86400000000L)
     case _: ByteType | _: ShortType | _: IntegerType | _: LongType |
          _: FloatType | _: DoubleType | _: DecimalType =>
       val v = col(name).cast(LongType)
@@ -91,18 +106,36 @@ object Normalize {
     case _ => expr(s"try_to_timestamp(`$name`)")
   }
 
-  private def locationCol(det: Detection, schema: StructType): Column =
+  private def placeKey(det: Detection, schema: StructType): (Column, Column) = {
+    // a string place s keys as (0, s); the empty string as (null, ""),
+    // since (0, "") is the numeric place 0
+    def stringKey(s: Column): (Column, Column) = (when(s =!= "", lit(0L)), s)
     det.location match {
       case LocId(name) =>
         schema(name).dataType match {
-          case _: NumericType => col(name).cast(LongType).cast(StringType)
-          case _ => col(name).cast(StringType)
+          case _: NumericType =>
+            val n = col(name).cast(LongType)
+            (n, when(n.isNotNull, lit("")))
+          case _ =>
+            val s = col(name).cast(StringType)
+            val n = s.try_cast(LongType)
+            val canonical = coalesce(n.cast(StringType) === s, lit(false))
+            val (sNum, sStr) = stringKey(s)
+            (when(canonical, n).otherwise(sNum),
+              when(canonical, lit("")).otherwise(sStr))
         }
       case LatLon(lat, lon) =>
-        concat_ws("_",
+        stringKey(concat_ws("_",
           round(col(lat).cast(DoubleType), 3).cast(StringType),
-          round(col(lon).cast(DoubleType), 3).cast(StringType))
+          round(col(lon).cast(DoubleType), 3).cast(StringType)))
     }
+  }
+
+  /** The place string of a (place_num, place_str) key pair. */
+  val placeString: Column =
+    when(col("place_str") === "",
+      coalesce(col("place_num").cast(StringType), lit("")))
+      .otherwise(col("place_str"))
 
   /** Read one dialect group (all files share detected columns + types)
     * as a single multi-path scan, normalized to the canonical schema.
@@ -119,9 +152,10 @@ object Normalize {
     val df = spark.read.schema(dialect.required).parquet(paths: _*)
     val schema = dialect.required
     val dtName = dialect.detection.dtCol
+    val (placeNum, placeStr) = placeKey(dialect.detection, schema)
     val base = Seq(
       coerceTimestamp(dtName, schema(dtName).dataType).as("pickup_datetime"),
-      locationCol(dialect.detection, schema).as("pickup_location"))
+      placeNum.as("place_num"), placeStr.as("place_str"))
     val src = if (withSrcPath) Seq(input_file_name().as("src_path")) else Nil
     val consts = constants.map { case (n, c) => c.as(n) }
     df.select(base ++ src ++ consts: _*)

@@ -14,12 +14,19 @@ import org.apache.spark.sql.functions._
   *
   *  - Instead of pandas `pivot_table` (or Spark's `pivot()`, which either
   *    needs a distinct-scan or an explicit value list and is unsupported
-  *    on streams), we emit 24 `sum(when(hour === h, 1))` aggregate
+  *    on streams), we emit 24 `count(when(hour === h, 1))` aggregate
   *    expressions in ONE hash aggregate. Spark runs it as partial
   *    (map-side) + final aggregation — one shuffle keyed on the group
   *    columns, network ∝ groups × 24 longs, never rows. The reference's
   *    three-level agg (per-batch groupby → per-file merge → global merge)
-  *    collapses into this single operator.
+  *    collapses into this single operator. Count buffers are never
+  *    null, so the per-row update is 24 compare-and-increments with no
+  *    buffer null checks.
+  *  - Date and hour come from the timestamp's epoch micros by integer
+  *    arithmetic (`pmod`/`div`), not `to_date`/`hour`: no per-row
+  *    calendar conversion, and the frame is the stored instant's UTC
+  *    wall clock whatever `spark.sql.session.timeZone` says — the frame
+  *    the DuckDB oracles use.
   *  - All 24 columns always exist (the reference pads missing hours,
   *    pivot_utils.py:204-206) and empty input yields the canonical empty
   *    schema for free.
@@ -35,15 +42,42 @@ import org.apache.spark.sql.functions._
 object HourPivot {
   val hourCols: Seq[String] = (0 until 24).map(h => s"hour_$h")
 
+  private val HourUs = 3600000000L
+  private val DayUs = 86400000000L
+
+  // SQL `div`: exact LONG division (a Double `/` is inexact at bucket
+  // edges for |us| beyond 2^53)
+  private def div(a: Column, b: Long): Column = call_function("div", a, lit(b))
+
+  // in [0, DayUs) for pre-1970 instants too (`%` would go negative)
+  private def microsOfDay(ts: Column): Column = pmod(unix_micros(ts), lit(DayUs))
+
+  /** UTC hour of day (0–23, LONG) of a TIMESTAMP column. */
+  def hourOfDay(ts: Column): Column = div(microsOfDay(ts), HourUs)
+
+  /** UTC calendar date of a TIMESTAMP column. `div` truncates toward
+    * zero, so the day floor subtracts the in-day remainder first — a
+    * pre-1970 instant lands on its own day, not the next one.
+    */
+  def utcDate(ts: Column): Column =
+    date_from_unix_date(div(unix_micros(ts) - microsOfDay(ts), DayUs).cast("int"))
+
+  /** The 24 per-hour counts over an hour-of-day column. */
+  def hourCounts(hour: Column): Seq[Column] =
+    (0 until 24).map(h => count(when(hour === h, 1)).as(s"hour_$h"))
+
+  /** Group `df` on (date, keys…) with the 24 hour counts. `extraAggs`
+    * are evaluated in the same aggregate (same rows, same shuffle) and
+    * appended after the hour columns — side counters ride the pivot
+    * instead of a per-row `observe`.
+    */
   def pivot(df: DataFrame, tsCol: Column, keys: Seq[String],
       minTotal: Option[Long] = None,
-      dateColName: String = "event_date"): DataFrame = {
-    val base = df.select(
-      (to_date(tsCol).as(dateColName) +: hour(tsCol).as("__hour") +:
-        keys.map(col)): _*)
-    val aggs = (0 until 24).map(h =>
-      sum(when(col("__hour") === h, 1L).otherwise(0L)).as(s"hour_$h"))
-    val grouped = base
+      dateColName: String = "event_date",
+      extraAggs: Seq[Column] = Nil): DataFrame = {
+    val aggs = hourCounts(col("__hour")) ++ extraAggs
+    val grouped = df
+      .withColumns(Map(dateColName -> utcDate(tsCol), "__hour" -> hourOfDay(tsCol)))
       .groupBy((col(dateColName) +: keys.map(col)): _*)
       .agg(aggs.head, aggs.tail: _*)
     minTotal match {

@@ -11,16 +11,23 @@ import graft.ops.HourPivot
   * SINGLE lazy Spark plan:
   *
   *   discover → detect dialects (driver) → per-dialect scans → union
-  *   → broadcast-join path metadata → coerce/drop bad timestamps
-  *   → observe(quality) → hour pivot (one hash agg) → observe(groups)
-  *   → min-rides filter → write
+  *   → path metadata (literals per scan group, or a broadcast join)
+  *   → drop bad timestamps → hour pivot + month-mismatch count (one
+  *   hash agg) → observe(quality, groups) → min-rides filter
+  *   → place/type strings → observe(survivors) → write
   *
   * What the reference does with two materialization passes (per-file
   * intermediate parquet + pandas merge, :279-283 / :307-340) and a
   * process pool collapses into one shuffle keyed on
-  * (taxi_type, date, pickup_place); the quality counters the reference
-  * accumulates across worker result dicts (:448-482) ride the same plan
-  * as `observe()` CollectMetrics — zero extra scans.
+  * (type_code, place_num, place_str, date) — no string work per row for
+  * numeric places: the taxi type is an INT code into the sorted list of
+  * taxi types and the place is Normalize's (LONG, STRING) key pair, whose
+  * string side is empty for numeric IDs. The output strings are rebuilt
+  * after the filter, for surviving groups only. The quality counters the reference
+  * accumulates across worker result dicts (:448-482) are sums over the
+  * pre-filter groups: input rows = Σ hour counts, month mismatches = an
+  * extra count in the pivot's own aggregate — no per-row CollectMetrics,
+  * zero extra scans.
   *
   * Per-file metadata (taxi type, expected year/month) is computed on the
   * driver from the path list and joined in via a BROADCAST join on the
@@ -75,8 +82,8 @@ object WideTablePipeline {
   val maxConstantScanGroups = 64
 
   /** Expected-month window as [start, end) epoch-MICROS bounds (UTC,
-    * matching the session timezone). The mismatch check is then two
-    * long comparisons per row instead of two calendar decompositions
+    * the frame of the pivot's date and hour). The mismatch check is then
+    * two long comparisons per row instead of two calendar decompositions
     * (`year(ts)`/`month(ts)` each re-derive the civil date per row).
     * (0,0) — month not inferrable from the path — yields the empty
     * window, so every row counts as a mismatch, the reference's
@@ -104,6 +111,8 @@ object WideTablePipeline {
 
     val (ok, skippedDet) = detected
     val metaOf = files.map(f => f -> PathMeta.fileMeta(f)).toMap
+    val types = metaOf.values.map(_.taxiType).toSeq.distinct.sorted
+    val typeCode = types.zipWithIndex.toMap
     val combos = ok
       .groupBy { case (dia, f) =>
         val m = metaOf(f)
@@ -133,7 +142,7 @@ object WideTablePipeline {
               val (lo, hi) = monthBoundsUs(y, m)
               Normalize.readDialect(spark, dia, paths,
                 constants = Seq(
-                  "taxi_type" -> lit(t),
+                  "type_code" -> lit(typeCode(t)),
                   "exp_start_us" -> lit(lo),
                   "exp_end_us" -> lit(hi)),
                 withSrcPath = false)
@@ -155,38 +164,37 @@ object WideTablePipeline {
           .flatMap { m =>
             val (lo, hi) = monthBoundsUs(m.expectedYear, m.expectedMonth)
             Normalize.pathKeyVariants(m.path)
-              .map(k => (k, m.taxiType, lo, hi))
+              .map(k => (k, typeCode(m.taxiType), lo, hi))
           }
-          .toDF("src_path", "taxi_type", "exp_start_us", "exp_end_us")
+          .toDF("src_path", "type_code", "exp_start_us", "exp_end_us")
         Some(trips.join(broadcast(meta), Seq("src_path")))
       }
 
     tripsOpt.map { trips =>
-      val coerced = trips
-        .where(col("pickup_datetime").isNotNull) // errors="coerce" + dropna
+      val us = unix_micros(col("pickup_datetime"))
+      val pivoted = HourPivot.pivot(
+        trips.where(col("pickup_datetime").isNotNull), // errors="coerce" + dropna
+        col("pickup_datetime"), Seq("type_code", "place_num", "place_str"),
+        dateColName = "date",
+        extraAggs = Seq(count(when(
+          us < col("exp_start_us") || us >= col("exp_end_us"), 1)).as("__mm")))
 
       val quality = Observation("quality")
-      val us = unix_micros(col("pickup_datetime")) // identity: ts IS micros
-      val observed = coerced.observe(
-        quality,
-        count(lit(1)).as("input_rows"),
-        sum(when(us < col("exp_start_us") || us >= col("exp_end_us"), 1L)
-          .otherwise(0L)).as("month_mismatch"))
-        .withColumn("pickup_place", col("pickup_location"))
-
-      val pivoted = HourPivot.pivot(
-        observed, col("pickup_datetime"), Seq("taxi_type", "pickup_place"),
-        minTotal = None, dateColName = "date")
-        // canonical 27-column order (pivot_all_files.py:50-51, :334-339)
-        .select(("taxi_type" +: "date" +: "pickup_place" +:
-          HourPivot.hourCols).map(col): _*)
-
       val groups = Observation("groups")
-      val withGroupCount = pivoted.observe(groups, count(lit(1)).as("n_groups"))
+      val observed = pivoted
+        .withColumn("__total", HourPivot.hourCols.map(col).reduce(_ + _))
+        .observe(quality,
+          coalesce(sum(col("__total")), lit(0L)).as("input_rows"),
+          coalesce(sum(col("__mm")), lit(0L)).as("month_mismatch"))
+        .observe(groups, count(lit(1)).as("n_groups"))
 
       val survivors = Observation("survivors")
-      val wide = withGroupCount
-        .where(HourPivot.hourCols.map(col).reduce(_ + _) >= minRides)
+      val wide = observed
+        .where(col("__total") >= minRides)
+        // canonical 27-column order (pivot_all_files.py:50-51, :334-339)
+        .select((typedLit(types).apply(col("type_code")).as("taxi_type") +:
+          col("date") +: Normalize.placeString.as("pickup_place") +:
+          HourPivot.hourCols.map(col)): _*)
         // post-filter row count rides the write job — saves the
         // re-read-and-count pass over the output
         .observe(survivors, count(lit(1)).as("n_out"))
@@ -194,66 +202,6 @@ object WideTablePipeline {
       Planned(wide, quality, groups, survivors,
         skippedDet.map(s => (s.path, s.reason)))
     }
-  }
-
-  /** Incremental/per-month mode: process each (year, month) file group
-    * as its own plan writing `monthly/<yyyy>-<mm>`, then Combine the
-    * materialized monthly wide tables into the final output. This is
-    * the reference's month-ordered task layout (pivot_all_files.py:
-    * 437-446) kept for incremental refresh — a new month's arrival
-    * reprocesses ONE month + the cheap combine, not the whole corpus.
-    * The single-plan `run` remains the default for full rebuilds.
-    */
-  def runIncremental(spark: SparkSession, cfg: Config): Report = {
-    val t0 = System.nanoTime()
-    val all = Discovery.discoverParquet(spark, cfg.inputDir)
-    val files = Discovery.selectTripFiles(all, cfg.maxFiles)
-    val byMonth = files.groupBy(f =>
-      PathMeta.monthFromPath(f).getOrElse((0, 0))).toSeq.sortBy(_._1)
-
-    var inputRows = 0L; var mismatch = 0L; var groups = 0L
-    val skipped = Seq.newBuilder[(String, String)]
-    val monthDirs = byMonth.flatMap { case ((y, m), monthFiles) =>
-      plan(spark, monthFiles, minRides = 0L) match { // filter AFTER combine
-        case Some(p) =>
-          val dir = f"${cfg.outputDir}/monthly/$y%04d-$m%02d"
-          p.wide.write.mode("overwrite").parquet(dir)
-          val q = p.quality.get
-          inputRows += q("input_rows").asInstanceOf[Long]
-          mismatch += (q("month_mismatch") match {
-            case null => 0L; case x => x.asInstanceOf[Long]
-          })
-          groups += p.groups.get("n_groups").asInstanceOf[Long]
-          skipped ++= p.skipped
-          Some(dir)
-        case None =>
-          skipped ++= monthFiles.map(f => (f, "undetectable or unreadable"))
-          None
-      }
-    }
-
-    val outPath = s"${cfg.outputDir}/wide_table.parquet"
-    val monthly = monthDirs.map(spark.read.parquet(_))
-    val outputRows = graft.ops.Combine
-      .combineWideTables(monthly, minRides = Some(cfg.minRides)) match {
-      case Some(combined) =>
-        val out = if (cfg.singleFileOutput) combined.coalesce(1) else combined
-        out.write.mode("overwrite").parquet(outPath)
-        spark.read.parquet(outPath).count()
-      case None => 0L
-    }
-    // dropped = pre-filter groups minus survivors (group keys are
-    // disjoint across months only if months don't share dates; the
-    // combine may merge, so recount the combined pre-filter groups)
-    val preFilter = graft.ops.Combine
-      .combineWideTables(monthDirs.map(spark.read.parquet(_)))
-      .map(_.count()).getOrElse(0L)
-    val dropped = preFilter - outputRows
-    val report = Report(inputRows, outputRows, mismatch, dropped,
-      mismatch + dropped, skipped.result(), (System.nanoTime() - t0) / 1e9,
-      ReportSink.peakHeapMb())
-    ReportSink.write(report, s"${cfg.outputDir}/${cfg.reportName}")
-    report
   }
 
   def run(spark: SparkSession, cfg: Config): Report = {
@@ -282,7 +230,9 @@ object WideTablePipeline {
           StructField("taxi_type", StringType) ::
           StructField("date", DateType) ::
           StructField("pickup_place", StringType) ::
-          HourPivot.hourCols.map(h => StructField(h, LongType)).toList)
+          // hour counts are never null, as in the pivot's output
+          HourPivot.hourCols.map(h =>
+            StructField(h, LongType, nullable = false)).toList)
         phase("write") {
           spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
             .write.mode("overwrite").parquet(outPath)
@@ -295,10 +245,7 @@ object WideTablePipeline {
         val outputRows = p.survivors.get("n_out").asInstanceOf[Long]
         val q = p.quality.get
         val inputRows = q("input_rows").asInstanceOf[Long]
-        val mismatch = q("month_mismatch") match {
-          case null => 0L
-          case x => x.asInstanceOf[Long]
-        }
+        val mismatch = q("month_mismatch").asInstanceOf[Long]
         val nGroups = p.groups.get("n_groups").asInstanceOf[Long]
         val dropped = nGroups - outputRows
         Report(inputRows, outputRows, mismatch, dropped,

@@ -14,10 +14,11 @@ import graft.ops.HourPivot
   * per (taxi_type, date, place) with a minimum-total filter —
   * /root/reference/pivot_and_boostrap/pivot_utils.py:179-224). Here the
   * grouping key is (event_date, event_type). See graft.ops.HourPivot for
-  * the operator; it is implemented as 24 `sum(when(hour===h,1))` columns
-  * in ONE hash aggregate — a single shuffle on the group keys, no
-  * distinct-value scan (what `pivot()` without explicit values costs),
-  * and the same shape works under Structured Streaming.
+  * the operator; it is implemented as 24 `count(when(hour===h,1))`
+  * columns over an integer UTC hour of day in ONE hash aggregate — a
+  * single shuffle on the group keys, no distinct-value scan (what
+  * `pivot()` without explicit values costs), and the same shape works
+  * under Structured Streaming.
   */
 object PipelineQueries {
 

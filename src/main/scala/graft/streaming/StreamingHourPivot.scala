@@ -11,9 +11,11 @@ import graft.ops.HourPivot
   *
   * The reference has no streaming surface (its "streaming" is bounded
   * batch iteration — pivot_all_files.py:2); this is the extended
-  * engine's continuous variant (SURVEY §2.9/§7): same 24×sum(when)
-  * aggregate — `pivot()` is unsupported on streams, the sum(when) form
-  * works in both modes, which is exactly why HourPivot uses it.
+  * engine's continuous variant (SURVEY §2.9/§7): the same 24
+  * `count(when(hour === h, 1))` aggregates over HourPivot's UTC
+  * hour-of-day expression — `pivot()` is unsupported on streams, the
+  * count(when) form works in both modes, which is exactly why HourPivot
+  * uses it.
   *
   * Two shapes:
   *  - `pivotStream`: the unbounded transform (watermark + tumbling
@@ -73,20 +75,23 @@ object StreamingHourPivot {
     * `to_date` group key loses the metadata → unbounded state and no
     * append output. The window start is re-projected to a plain date
     * AFTER the aggregate, which preserves eviction (the predicate is
-    * bound at the aggregation node). Hour columns stay the 24
-    * `sum(when)` aggregates — `pivot()` is unsupported on streams.
+    * bound at the aggregation node). The window is epoch-aligned, so
+    * its start is a UTC midnight, read back with `HourPivot.utcDate` in
+    * the frame of `HourPivot.hourOfDay`. Hour
+    * columns are HourPivot's 24 `count(when)` aggregates — `pivot()` is
+    * unsupported on streams.
     */
   def pivotStream(events: DataFrame, tsCol: Column, keys: Seq[String],
       watermarkDelay: String = "1 hour",
       dateColName: String = "event_date"): DataFrame = {
     val withWm = events.withWatermark(tsCol.toString, watermarkDelay)
-    val aggs = (0 until 24).map(h =>
-      sum(when(col("__hour") === h, 1L).otherwise(0L)).as(s"hour_$h"))
+    val aggs = HourPivot.hourCounts(col("__hour"))
     withWm
-      .select((tsCol +: hour(tsCol).as("__hour") +: keys.map(col)): _*)
+      .select((tsCol +: HourPivot.hourOfDay(tsCol).as("__hour") +:
+        keys.map(col)): _*)
       .groupBy(window(tsCol, "1 day") +: keys.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
-      .select((to_date(col("window.start")).as(dateColName) +:
+      .select((HourPivot.utcDate(col("window.start")).as(dateColName) +:
         keys.map(col)) ++ HourPivot.hourCols.map(col): _*)
   }
 

@@ -56,6 +56,47 @@ class PlanSpec extends AnyFunSuite {
       s"hour pivot should shuffle exactly once:\n$p")
   }
 
+  test("wide table: one shuffle on fixed-width keys, no per-row metrics or calendar calls") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.CollectMetricsExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.aggregate.HashAggregateExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import graft.pipeline.WideTablePipeline
+    val in = java.nio.file.Files.createTempDirectory("graft_plan_wide").toString
+    val t0 = java.time.Instant.parse("2023-01-15T08:00:00Z").toEpochMilli
+    (1 to 10).map(i => (new java.sql.Timestamp(t0 + i * 1000L), 132))
+      .toDF("tpep_pickup_datetime", "PULocationID")
+      .coalesce(1).write.parquet(s"$in/yellow_tripdata_2023-01.parquet")
+    (1 to 10).map(i => (t0 + i * 1000L, "B00256"))
+      .toDF("request_datetime", "pickup_zone_id")
+      .coalesce(1).write.parquet(s"$in/fhv_tripdata_2023-01.parquet")
+    val files = graft.ingest.Discovery.selectTripFiles(
+      graft.ingest.Discovery.discoverParquet(spark, in))
+    // both legs: literal scan groups and the broadcast metadata join
+    for (maxConst <- Seq(WideTablePipeline.maxConstantScanGroups, 0)) {
+      val plan = WideTablePipeline.plan(spark, files, 50L, maxConst).get
+        .wide.queryExecution.executedPlan match {
+          case a: AdaptiveSparkPlanExec => a.executedPlan
+          case p => p
+        }
+      val s = plan.toString
+      assert("Exchange hashpartitioning".r.findAllIn(s).size == 1, s)
+      val aggs = plan.collect { case a: HashAggregateExec => a }
+      assert(aggs.size == 2, s)
+      aggs.foreach(a => assert(
+        a.collect { case m: CollectMetricsExec => m }.isEmpty,
+        s"CollectMetrics below a HashAggregate:\n$s"))
+      val partial = aggs.filter(
+        _.collect { case e: ShuffleExchangeExec => e }.isEmpty)
+      assert(partial.size == 1, s)
+      val mapSide = partial.head.treeString
+      assert(!mapSide.contains("hour(") && !mapSide.contains("to_date("), mapSide)
+      assert(partial.head.groupingExpressions.map(_.name).toSet ==
+        Set("type_code", "place_num", "place_str", "date"), mapSide)
+    }
+  }
+
   test("text-stats hot path: vectorized scan, no UDF nodes") {
     // Note: projections containing HOF lambdas (filter/transform) fall
     // out of WholeStageCodegen by design (interpreted eval) — see

@@ -141,24 +141,92 @@ class WideTablePipelineSpec extends AnyFunSuite {
     assert(report.phaseSeconds.map(_._2).sum <= report.runTimeSeconds)
   }
 
-  test("incremental per-month mode produces the same wide table as single-plan") {
-    val in = tmpDir(); val out1 = tmpDir(); val out2 = tmpDir()
-    writeFixtures(in)
-    val full = WideTablePipeline.run(spark,
-      WideTablePipeline.Config(in, out1, minRides = 50L))
-    val incr = WideTablePipeline.runIncremental(spark,
-      WideTablePipeline.Config(in, out2, minRides = 50L))
-    val a = spark.read.parquet(s"$out1/wide_table.parquet")
-      .collect().map(_.toSeq).toSet
-    val b = spark.read.parquet(s"$out2/wide_table.parquet")
-      .collect().map(_.toSeq).toSet
-    assert(a == b)
-    assert(incr.inputRowCount == full.inputRowCount)
-    assert(incr.monthMismatchRows == full.monthMismatchRows)
-    assert(incr.outputRowCount == full.outputRowCount)
-    // monthly intermediates exist per month key
-    assert(new java.io.File(s"$out2/monthly").list().toSeq.sorted ==
-      Seq("2009-03", "2021-06", "2023-01"))
+  test("place keys: numeric and canonical string IDs merge, other strings stay apart") {
+    import spark.implicits._
+    val in = tmpDir()
+    val day = java.time.Instant.parse("2021-06-10T00:00:00Z").toEpochMilli
+    def at(h: Int, i: Int) = day + h * 3600000L + i * 1000L
+    // one taxi type and month, three location dialects
+    ((1 to 5).map(i => (at(8, i), 132)) ++ Seq((at(8, 6), 0), (at(8, 7), 0)))
+      .toDF("request_datetime", "PULocationID")
+      .coalesce(1).write.parquet(s"$in/ids/fhv_tripdata_2021-06.parquet")
+    val strs = Seq("132", "132", "132", "0132", "0132", " 132", " 132",
+      "Z001", null, "", "0")
+    strs.zipWithIndex.map { case (z, i) => (at(9, i), z) }
+      .toDF("request_datetime", "pickup_zone_id")
+      .coalesce(1).write.parquet(s"$in/strs/fhv_tripdata_2021-06.parquet")
+    (1 to 4).map(i => (at(10, i), 40.75, -73.95))
+      .toDF("request_datetime", "Start_Lat", "Start_Lon")
+      .coalesce(1).write.parquet(s"$in/latlon/fhv_tripdata_2021-06.parquet")
+    val files = graft.ingest.Discovery.selectTripFiles(
+      graft.ingest.Discovery.discoverParquet(spark, in), None)
+    assert(files.size == 3)
+
+    // the table the string key gives: IDs as decimal strings, string
+    // IDs as written, lat/lon as the rounded pair; the empty string stays
+    // apart from the place 0
+    val expected = Set[(String, Map[Int, Long])](
+      ("132", Map(8 -> 5L, 9 -> 3L)), ("0132", Map(9 -> 2L)),
+      (" 132", Map(9 -> 2L)), ("Z001", Map(9 -> 1L)), (null, Map(9 -> 1L)),
+      ("", Map(9 -> 1L)), ("0", Map(8 -> 2L, 9 -> 1L)),
+      ("40.75_-73.95", Map(10 -> 4L)))
+    for (maxConst <- Seq(WideTablePipeline.maxConstantScanGroups, 0)) {
+      val p = WideTablePipeline.plan(spark, files, minRides = 1L,
+        maxConstGroups = maxConst).get
+      val got = p.wide.collect().map { r =>
+        assert(r.getString(0) == "fhv" && r.getDate(1).toString == "2021-06-10")
+        (r.getString(2), graft.ops.HourPivot.hourCols.indices
+          .map(h => h -> r.getLong(3 + h)).filter(_._2 > 0).toMap)
+      }.toSet
+      assert(got == expected, s"maxConstGroups=$maxConst")
+      assert(p.quality.get("input_rows") == 7L + strs.size + 4L)
+      assert(p.groups.get("n_groups") == 8L)
+    }
+  }
+
+  test("session time zone does not move the wide table or the counters") {
+    import spark.implicits._
+    val in = tmpDir()
+    // instant-typed dialects around UTC midnight and a month edge, plus
+    // a DATE column (midnight UTC of its day)
+    val ts = Seq("2023-01-31T23:30:00Z", "2023-02-01T00:10:00Z",
+      "2023-02-01T04:59:59Z", "2023-02-01T05:00:00Z", "2023-02-28T23:59:59Z")
+      .map(t => Timestamp.from(java.time.Instant.parse(t)))
+    ts.flatMap(t => Seq.fill(3)((t, 7)))
+      .toDF("tpep_pickup_datetime", "PULocationID")
+      .coalesce(1).write.parquet(s"$in/yellow_tripdata_2023-02.parquet")
+    ts.map(t => (t.getTime, "B1"))
+      .toDF("request_datetime", "pickup_zone_id")
+      .coalesce(1).write.parquet(s"$in/fhv_tripdata_2023-02.parquet")
+    ts.map(t => (t.getTime / 1000, 9L))
+      .toDF("pickup_datetime", "PULocationID")
+      .coalesce(1).write.parquet(s"$in/green_tripdata_2023-02.parquet")
+    Seq("2023-02-01", "2023-02-01", "2023-03-01").map(d =>
+        (java.sql.Date.valueOf(d), 4))
+      .toDF("pickup_date", "PULocationID")
+      .coalesce(1).write.parquet(s"$in/fhv/fhv_tripdata_2023-02.parquet")
+
+    def runIn(tz: String): (Set[Seq[Any]], WideTablePipeline.Report) = {
+      val prev = spark.conf.get("spark.sql.session.timeZone")
+      spark.conf.set("spark.sql.session.timeZone", tz)
+      try {
+        val out = tmpDir()
+        val r = WideTablePipeline.run(spark,
+          WideTablePipeline.Config(in, out, minRides = 1L))
+        (spark.read.parquet(s"$out/wide_table.parquet")
+          .withColumn("date", col("date").cast("string"))
+          .collect().map(_.toSeq).toSet, r)
+      } finally spark.conf.set("spark.sql.session.timeZone", prev)
+    }
+    val (utc, rUtc) = runIn("UTC")
+    val (ny, rNy) = runIn("America/New_York")
+    assert(utc.nonEmpty && ny == utc)
+    assert(rUtc.inputRowCount == 3 * 5 + 5 + 5 + 3)
+    // 2023-01-31 23:30 UTC in three files, and the March date
+    assert(rUtc.monthMismatchRows == 3 + 1 + 1 + 1)
+    assert((rNy.inputRowCount, rNy.monthMismatchRows, rNy.outputRowCount,
+      rNy.lowCountDropped) == (rUtc.inputRowCount, rUtc.monthMismatchRows,
+      rUtc.outputRowCount, rUtc.lowCountDropped))
   }
 
   test("corrupt parquet file is skipped with a reason, pipeline continues") {
