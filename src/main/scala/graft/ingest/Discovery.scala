@@ -11,8 +11,9 @@ import org.apache.spark.sql.SparkSession
   * The listing is driver-side and deliberate: per-file schema detection
   * needs explicit paths (a naive `spark.read.parquet(dir)` can't rename
   * columns per file). At 100 TB / O(100k) files a driver listing is still
-  * fine (strings only); the subsequent scan is one job per dialect
-  * GROUP, not per file — see Normalize.
+  * fine (strings only); the subsequent scan is ONE file scan over every
+  * detected file, planned from the footer reads' statuses without
+  * listing again — see DialectScan.
   *
   * Listing cost is per file, so it must stay metadata-only. Hadoop's
   * recursive `FileSystem.listFiles` wraps every status in a
@@ -24,9 +25,9 @@ import org.apache.spark.sql.SparkSession
   * statuses without permission fields for the same reason.
   *
   * On object stores the walk issues one LIST per directory where S3A's
-  * `listFiles` would page through one flat listing; Spark's scan already
-  * makes one metadata request per explicit file path, so this does not
-  * change the order of requests.
+  * `listFiles` would page through one flat listing; the footer reads
+  * already make one status request per file, so this does not change
+  * the order of requests.
   */
 object Discovery {
 

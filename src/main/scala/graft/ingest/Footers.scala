@@ -1,7 +1,7 @@
 package graft.ingest
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -46,25 +46,33 @@ object Footers {
     * determinism; `_SUCCESS`/hidden files skipped).
     */
   def schemaOf(conf: Configuration, path: String,
-      nanosAsLong: Boolean = false): StructType = {
+      nanosAsLong: Boolean = false): StructType =
+    dataFilesAndSchema(conf, path, nanosAsLong)._2
+
+  /** The data files `path` names — itself, or a directory dataset's
+    * part files in name order — with the schema of the first. The
+    * statuses are the ones the footer read already fetched, so a scan
+    * can be planned over them with no further filesystem call.
+    */
+  def dataFilesAndSchema(conf: Configuration, path: String,
+      nanosAsLong: Boolean = false): (Seq[FileStatus], StructType) = {
     val p = new Path(path)
     val fs = p.getFileSystem(conf)
     val st = fs.getFileStatus(p)
-    val dataFile =
-      if (st.isFile) st
-      else fs.listStatus(p)
+    val dataFiles =
+      if (st.isFile) Seq(st)
+      else fs.listStatus(p).toSeq
         .filter { s =>
           val n = s.getPath.getName
           s.isFile && !n.startsWith("_") && !n.startsWith(".")
         }
         .sortBy(_.getPath.getName)
-        .headOption
-        .getOrElse(throw new java.io.FileNotFoundException(
-          s"no data files under $path"))
-    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(dataFile, conf),
+    val first = dataFiles.headOption.getOrElse(
+      throw new java.io.FileNotFoundException(s"no data files under $path"))
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(first, conf),
       HadoopReadOptions.builder(conf).build())
-    try converter(nanosAsLong)
-      .convert(reader.getFooter.getFileMetaData.getSchema)
+    try (dataFiles, converter(nanosAsLong)
+      .convert(reader.getFooter.getFileMetaData.getSchema))
     finally reader.close()
   }
 }

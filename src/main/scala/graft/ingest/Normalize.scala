@@ -2,16 +2,17 @@ package graft.ingest
 
 import scala.util.Try
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.FileStatus
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import SchemaDetector.{Detection, LatLon, LocId}
 
 /** Schema-drift-tolerant ingestion: heterogeneous per-file schemas →
-  * one DataFrame with the canonical columns
-  * `(pickup_datetime TIMESTAMP, place_num LONG, place_str STRING,
-  * src_path STRING)`.
+  * the canonical columns
+  * `(pickup_datetime TIMESTAMP, place_num LONG, place_str STRING)`.
   *
   * Reference behavior: per-file rename + projection + timestamp coercion
   * (/root/reference/pivot_and_boostrap/pivot_all_files.py:100-123,
@@ -20,15 +21,14 @@ import SchemaDetector.{Detection, LatLon, LocId}
   *  - Footer-only schema reads on the driver (cheap) detect each file's
   *    dialect; undetectable files are skipped and reported, not fatal
   *    (error isolation, pivot_all_files.py:204-216).
-  *  - Files are GROUPED BY DIALECT (same detected columns + physical
-  *    types) and each group becomes ONE multi-path scan with an aliased
-  *    select — so the number of Spark jobs is O(dialects), not O(files).
-  *    At 100 TB / thousands of files this is what keeps scheduling and
-  *    scan planning sane; a per-file loop of plans would not scale.
-  *  - `unionByName` merges the groups; Catalyst pushes the 2-3 column
-  *    projection into every parquet scan (the reference reads ALL
-  *    columns of every file — pivot_all_files.py:232 — then projects in
-  *    pandas; we never deserialize the unused columns at all).
+  *  - A dialect is the detected columns with their exact footer types.
+  *    `canonical` gives its projection onto the canonical columns, and
+  *    [[DialectScan]] reads every detected file in ONE file scan that
+  *    applies each file's projection — one plan leaf and one set of
+  *    splits whatever the number of dialects, files or months. Each
+  *    file is read pruned to its 2-3 detected columns (the reference
+  *    reads ALL columns of every file — pivot_all_files.py:232 — then
+  *    projects in pandas; we never deserialize the unused columns).
   *
   * Timestamp coercion ladder (reference :139-149, `errors="coerce"`):
   * dispatch on the DETECTED column's physical type —
@@ -47,11 +47,14 @@ import SchemaDetector.{Detection, LatLon, LocId}
   * Pickup place, as a group key pair (place_num LONG, place_str STRING):
   *  - integer/decimal location IDs → (id, "") via a LONG cast (so the
   *    place string is "132", never pandas' "132.0");
-  *  - a string ID that is the canonical decimal of a long (`try_cast` to
-  *    long and back gives the same string) → (id, ""), so "132" from a
-  *    string file and 132 from an int file are the same key; any other
-  *    string s ("0132", " 132", "Z001") → (0, s), the empty string →
-  *    (null, "");
+  *  - a string ID that is the canonical decimal of a long (cast to long
+  *    and back gives the same string) → (id, ""), so "132" from a string
+  *    file and 132 from an int file are the same key; any other string
+  *    s ("0132", " 132", "-0", "Z001") → (0, s), the empty string →
+  *    (null, ""). Only strings matching `-?[0-9]{1,19}` reach the cast:
+  *    every `Long.toString` matches, so the guard never hides a
+  *    canonical ID, and a non-numeric place never takes the cast's
+  *    throw-and-catch path;
   *  - lat/lon pairs → a string place `round(lat,3) <"_"> round(lon,3)`
   *    with format_number-free plain casts, e.g. "40.721_-74.005";
   *  - a null place → (null, null).
@@ -64,35 +67,26 @@ import SchemaDetector.{Detection, LatLon, LocId}
 object Normalize {
 
   /** One detected schema dialect. `required` holds the EXACT footer
-    * types of just the detected columns — it doubles as the explicit
-    * read schema (parquet prunes to these columns; files in the group
-    * may differ in their other columns) and as the grouping key (same
-    * detection + same physical types ⇒ one multi-path scan).
+    * types of just the detected columns — it doubles as the read schema
+    * (parquet prunes to these columns; files of one dialect may differ
+    * in their other columns) and as the dialect's identity (same
+    * detection + same physical types ⇒ same projection).
     */
   final case class Dialect(detection: Detection, required: StructType)
 
+  /** A usable input: `path` as given, its dialect, and the statuses of
+    * the data files it names (the file itself, or a dataset directory's
+    * part files) — fetched by the footer read and reused by the scan.
+    */
+  final case class Detected(dialect: Dialect, path: String, files: Seq[FileStatus])
+
   final case class Skipped(path: String, reason: String)
 
-  /** Uniform path key used to join per-file metadata onto rows:
-    * scheme + slash-run differences between Hadoop listings
-    * ("file:/a/b") and `input_file_name()` ("file:///a/b") collapse to
-    * the same key.
-    */
-  def normPathKey(p: String): String =
-    p.replaceFirst("^[a-zA-Z][a-zA-Z0-9+.-]*:/*", "/")
-
-  /** All spellings of a listing path that `input_file_name()` might
-    * report for its rows. The per-row side joins on the RAW
-    * input_file_name value and the driver enumerates variants instead —
-    * a per-row regexp_replace over 50M rows measured ~30 s, pure
-    * overhead (SCALE_NOTES lesson: never spend per-row work to save
-    * per-FILE work).
-    */
-  def pathKeyVariants(p: String): Seq[String] = {
-    val noScheme = normPathKey(p)
-    Seq(p, noScheme, s"file:$noScheme", s"file://$noScheme",
-      s"file:///${noScheme.stripPrefix("/")}").distinct
-  }
+  /** The columns every dialect is projected onto. */
+  val canonicalSchema: StructType = StructType(Seq(
+    StructField("pickup_datetime", TimestampType),
+    StructField("place_num", LongType),
+    StructField("place_str", StringType)))
 
   private def coerceTimestamp(name: String, t: DataType): Column = t match {
     case _: TimestampType => col(name)
@@ -118,7 +112,7 @@ object Normalize {
             (n, when(n.isNotNull, lit("")))
           case _ =>
             val s = col(name).cast(StringType)
-            val n = s.try_cast(LongType)
+            val n = when(s.rlike("^-?[0-9]{1,19}$"), s.try_cast(LongType))
             val canonical = coalesce(n.cast(StringType) === s, lit(false))
             val (sNum, sStr) = stringKey(s)
             (when(canonical, n).otherwise(sNum),
@@ -137,41 +131,30 @@ object Normalize {
       coalesce(col("place_num").cast(StringType), lit("")))
       .otherwise(col("place_str"))
 
-  /** Read one dialect group (all files share detected columns + types)
-    * as a single multi-path scan, normalized to the canonical schema.
-    * `constants` lets the caller inline per-group metadata as literal
-    * columns — when a group's files share taxi_type/month, the rows
-    * need no `input_file_name()` and no metadata join at all.
+  /** The dialect's projection onto `canonicalSchema`, in its order,
+    * over columns named as in `dialect.required`.
     */
-  def readDialect(spark: SparkSession, dialect: Dialect, paths: Seq[String],
-      constants: Seq[(String, Column)] = Nil,
-      withSrcPath: Boolean = true): DataFrame = {
-    // explicit schema (the detected columns with their exact footer
-    // types): skips the reader's inference pass entirely AND prunes the
-    // scan to the needed columns at the source
-    val df = spark.read.schema(dialect.required).parquet(paths: _*)
+  def canonical(dialect: Dialect): Seq[Column] = {
     val schema = dialect.required
     val dtName = dialect.detection.dtCol
     val (placeNum, placeStr) = placeKey(dialect.detection, schema)
-    val base = Seq(
-      coerceTimestamp(dtName, schema(dtName).dataType).as("pickup_datetime"),
-      placeNum.as("place_num"), placeStr.as("place_str"))
-    val src = if (withSrcPath) Seq(input_file_name().as("src_path")) else Nil
-    val consts = constants.map { case (n, c) => c.as(n) }
-    df.select(base ++ src ++ consts: _*)
+    Seq(coerceTimestamp(dtName, schema(dtName).dataType), placeNum, placeStr)
+      .zip(canonicalSchema)
+      .map { case (c, f) => c.cast(f.dataType).as(f.name) }
   }
 
   /** Detect every file's dialect. Footer reads are driver-side but
     * independent — run them on a bounded pool. They go through
-    * `Footers.schemaOf` (direct parquet-hadoop footer read: one status
-    * lookup, one open, the footer bytes, over the session's Hadoop conf),
+    * `Footers.dataFilesAndSchema` (direct parquet-hadoop footer read: one
+    * status lookup, one open, the footer bytes, over the session's Hadoop
+    * conf; the statuses come back for the scan to plan over),
     * NOT `spark.read.parquet(f).schema` (FileIndex + datasource
     * resolution + inference, ~1 s cold, measured ~5 s of pure driver
     * overhead on a 4-group input). This is the per-file driver work
     * that scales with the file count, so it stays metadata-only (see
     * Footers for what that takes).
     */
-  def detectDialects(spark: SparkSession, files: Seq[String]): (Seq[(Dialect, String)], Seq[Skipped]) = {
+  def detectDialects(spark: SparkSession, files: Seq[String]): (Seq[Detected], Seq[Skipped]) = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
@@ -180,13 +163,13 @@ object Normalize {
     // one Configuration per detection task: Hadoop Configuration is not
     // safe for concurrent mutation, and FileSystem init can write to it
     val hadoopConfBase = spark.sessionState.newHadoopConf()
-    val detected: Seq[Either[Skipped, (Dialect, String)]] =
+    val detected: Seq[Either[Skipped, Detected]] =
       try Await.result(Future.sequence(files.map { f =>
         Future {
-          Try(Footers.schemaOf(new org.apache.hadoop.conf.Configuration(
-              hadoopConfBase), f)).toEither.left
+          Try(Footers.dataFilesAndSchema(new Configuration(hadoopConfBase), f))
+            .toEither.left
             .map(e => Skipped(f, s"unreadable: ${e.getMessage}"))
-            .flatMap { schema =>
+            .flatMap { case (dataFiles, schema) =>
               SchemaDetector.detect(schema) match {
                 case Right(det) =>
                   val requiredNames = det.dtCol +: (det.location match {
@@ -195,7 +178,7 @@ object Normalize {
                   })
                   val required = StructType(
                     requiredNames.map(n => schema(n).copy(nullable = true)))
-                  Right((Dialect(det, required), f))
+                  Right(Detected(Dialect(det, required), f, dataFiles))
                 case Left(reason) => Left(Skipped(f, reason))
               }
             }

@@ -8,10 +8,9 @@ package graft.ingest
   * :157-176 (month regex precedence: hive-style `year=YYYY/month=MM`,
   * then `YYYY-MM` anchored at `.parquet`/`/`/end, then loose `YYYY-MM`).
   *
-  * Driver-side pure functions. In-plan they ride along via a broadcast
-  * join against a tiny (path → meta) table built from the listing — see
-  * WideTablePipeline — rather than re-implementing this precedence as a
-  * Catalyst expression chain.
+  * Driver-side pure functions. In-plan they ride along as the partition
+  * values of each file's group in the one DialectScan — see
+  * WideTablePipeline — rather than as a per-row path function or a join.
   */
 object PathMeta {
 

@@ -3,18 +3,19 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.ingest.{Discovery, Normalize, PathMeta}
+import graft.ingest.{DialectScan, Discovery, Normalize, PathMeta}
 import graft.ops.HourPivot
 
 /** The reference's end-to-end pipeline
   * (/root/reference/pivot_and_boostrap/pivot_all_files.py:366-550) as a
   * SINGLE lazy Spark plan:
   *
-  *   discover → detect dialects (driver) → per-dialect scans → union
-  *   → path metadata (literals per scan group, or a broadcast join)
-  *   → drop bad timestamps → hour pivot + month-mismatch count (one
-  *   hash agg) → observe(quality, groups) → min-rides filter
-  *   → place/type strings → observe(survivors) → write
+  *   discover → detect dialects (driver footer reads) → one DialectScan
+  *   over every usable file (canonical columns + per-file metadata as
+  *   partition values) → drop bad timestamps → hour pivot +
+  *   month-mismatch count (one hash agg) → observe(quality, groups)
+  *   → min-rides filter → place/type strings → observe(survivors)
+  *   → write
   *
   * What the reference does with two materialization passes (per-file
   * intermediate parquet + pandas merge, :279-283 / :307-340) and a
@@ -29,10 +30,10 @@ import graft.ops.HourPivot
   * extra count in the pivot's own aggregate — no per-row CollectMetrics,
   * zero extra scans.
   *
-  * Per-file metadata (taxi type, expected year/month) is computed on the
-  * driver from the path list and joined in via a BROADCAST join on the
-  * normalized source path — arbitrary driver-side path logic, no UDF in
-  * the hot path, one tiny build side.
+  * Per-file metadata (taxi type, expected month window) is computed on
+  * the driver from each path (PathMeta) and rides the scan as partition
+  * values of the file's group — arbitrary driver-side path logic, no
+  * per-row path string, no join.
   *
   * 100 TB notes: the only shuffle is the pivot's group-by; its
   * cardinality is days × places × types (≈ millions), independent of
@@ -73,14 +74,6 @@ object WideTablePipeline {
       survivors: Observation,
       skipped: Seq[(String, String)])
 
-  /** Above this many (dialect × taxi_type × month) combinations, fall
-    * back from literal-constant scan groups to one scan per dialect +
-    * broadcast metadata join — scan-group count is a planner/driver
-    * cost, per-row join hashing is an executor cost; 64 groups is
-    * comfortably cheap to plan while covering years of monthly files.
-    */
-  val maxConstantScanGroups = 64
-
   /** Expected-month window as [start, end) epoch-MICROS bounds (UTC,
     * the frame of the pivot's date and hour). The mismatch check is then
     * two long comparisons per row instead of two calendar decompositions
@@ -98,79 +91,29 @@ object WideTablePipeline {
         start.plusMonths(1).toEpochDay * 86400000000L)
     }
 
-  def plan(spark: SparkSession, files: Seq[String], minRides: Long,
-      maxConstGroups: Int = maxConstantScanGroups): Option[Planned] =
-    planDetected(spark, files, Normalize.detectDialects(spark, files),
-      minRides, maxConstGroups)
+  def plan(spark: SparkSession, files: Seq[String], minRides: Long): Option[Planned] =
+    planDetected(spark, Normalize.detectDialects(spark, files), minRides)
 
-  /** `plan` over dialects `Normalize.detectDialects` already found. */
-  private def planDetected(spark: SparkSession, files: Seq[String],
-      detected: (Seq[(Normalize.Dialect, String)], Seq[Normalize.Skipped]),
-      minRides: Long, maxConstGroups: Int): Option[Planned] = {
-    import spark.implicits._
-
+  /** `plan` over files `Normalize.detectDialects` already detected. */
+  private def planDetected(spark: SparkSession,
+      detected: (Seq[Normalize.Detected], Seq[Normalize.Skipped]),
+      minRides: Long): Option[Planned] = {
     val (ok, skippedDet) = detected
-    val metaOf = files.map(f => f -> PathMeta.fileMeta(f)).toMap
+    val metaOf = ok.map(d => d.path -> PathMeta.fileMeta(d.path)).toMap
     val types = metaOf.values.map(_.taxiType).toSeq.distinct.sorted
     val typeCode = types.zipWithIndex.toMap
-    val combos = ok
-      .groupBy { case (dia, f) =>
-        val m = metaOf(f)
-        (dia, m.taxiType, m.expectedYear, m.expectedMonth)
+    val groups = ok
+      .groupBy { d =>
+        val m = metaOf(d.path)
+        (d.dialect, m.taxiType, m.expectedYear, m.expectedMonth)
       }
-      .view.mapValues(_.map(_._2)).toSeq
-      .sortBy(_._2.head)
-
-    val tripsOpt =
-      if (combos.isEmpty) None
-      else if (combos.size <= maxConstGroups) {
-        // constant metadata per scan group: no input_file_name(), no
-        // join — rows carry three literals. Fastest path; measured
-        // ~25% of pipeline time saved vs the join at 50M rows.
-        // Group DataFrame construction pays a per-group FileIndex
-        // listing (~0.25 s each) — driver-side and independent → build
-        // them on a pool like the footer reads.
-        val built = {
-          import scala.concurrent.{Await, ExecutionContext, Future}
-          import scala.concurrent.duration.Duration
-          val pool = java.util.concurrent.Executors.newFixedThreadPool(
-            math.min(16, combos.size))
-          implicit val ec: ExecutionContext =
-            ExecutionContext.fromExecutor(pool)
-          try Await.result(Future.sequence(combos.map {
-            case ((dia, t, y, m), paths) => Future {
-              val (lo, hi) = monthBoundsUs(y, m)
-              Normalize.readDialect(spark, dia, paths,
-                constants = Seq(
-                  "type_code" -> lit(typeCode(t)),
-                  "exp_start_us" -> lit(lo),
-                  "exp_end_us" -> lit(hi)),
-                withSrcPath = false)
-            }
-          }), Duration.Inf)
-          finally pool.shutdown()
-        }
-        Some(built.reduce(_.unionByName(_)))
-      } else {
-        // many combos: one scan per DIALECT + broadcast (path → meta)
-        // join on the raw input_file_name value (keys enumerate every
-        // spelling — no per-row path rewrite).
-        val byDialect = ok.groupBy(_._1).view.mapValues(_.map(_._2)).toSeq
-          .sortBy(_._2.head)
-        val trips = byDialect
-          .map { case (dia, paths) => Normalize.readDialect(spark, dia, paths) }
-          .reduce(_.unionByName(_))
-        val meta = files.map(PathMeta.fileMeta)
-          .flatMap { m =>
-            val (lo, hi) = monthBoundsUs(m.expectedYear, m.expectedMonth)
-            Normalize.pathKeyVariants(m.path)
-              .map(k => (k, typeCode(m.taxiType), lo, hi))
-          }
-          .toDF("src_path", "type_code", "exp_start_us", "exp_end_us")
-        Some(trips.join(broadcast(meta), Seq("src_path")))
+      .toSeq.sortBy(_._2.head.path)
+      .map { case ((dialect, t, y, m), members) =>
+        val (lo, hi) = monthBoundsUs(y, m)
+        DialectScan.Group(dialect, typeCode(t), lo, hi, members.flatMap(_.files))
       }
 
-    tripsOpt.map { trips =>
+    Option.when(groups.nonEmpty)(DialectScan(spark, groups)).map { trips =>
       val us = unix_micros(col("pickup_datetime"))
       val pivoted = HourPivot.pivot(
         trips.where(col("pickup_datetime").isNotNull), // errors="coerce" + dropna
@@ -216,9 +159,7 @@ object WideTablePipeline {
         Discovery.discoverParquet(spark, cfg.inputDir), cfg.maxFiles)
     }
     val detected = phase("detect")(Normalize.detectDialects(spark, files))
-    val planned = phase("plan") {
-      planDetected(spark, files, detected, cfg.minRides, maxConstantScanGroups)
-    }
+    val planned = phase("plan")(planDetected(spark, detected, cfg.minRides))
     val outPath = s"${cfg.outputDir}/wide_table.parquet"
 
     val report = planned match {

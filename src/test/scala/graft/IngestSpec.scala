@@ -92,20 +92,16 @@ class IngestSpec extends AnyFunSuite {
     }
   }
 
-  // --- pickup datetime detection (test file :37-55) ---
-  test("s3 path handling: key variants, trip filter, month regex on URIs") {
-    import graft.ingest.Normalize
+  test("s3 path handling: trip filter, month regex on URIs") {
     val p = "s3a://bucket/taxi/Dataset/yellow_tripdata_2023-01.parquet"
-    // scheme + slash-run collapse to one canonical key
-    assert(Normalize.normPathKey(p) == "/bucket/taxi/Dataset/yellow_tripdata_2023-01.parquet")
-    assert(Normalize.normPathKey("s3://b/x.parquet") == Normalize.normPathKey("s3a://b/x.parquet"))
-    val variants = Normalize.pathKeyVariants(p)
-    assert(variants.contains(p) && variants.distinct == variants)
     // the discovery trip filter + path metadata work on URIs unchanged
+    assert(graft.ingest.Discovery.selectTripFiles(
+      Seq(p, "s3a://bucket/taxi/zones.parquet")) == Seq(p))
     assert(PathMeta.monthFromPath(p).contains((2023, 1)))
     assert(PathMeta.taxiType(p) == "yellow")
   }
 
+  // --- pickup datetime detection (test file :37-55) ---
   test("detects exact datetime candidates") {
     assert(SchemaDetector.findPickupDatetime(
       Seq("tpep_pickup_datetime", "x")).contains("tpep_pickup_datetime"))

@@ -73,27 +73,82 @@ class PlanSpec extends AnyFunSuite {
       .coalesce(1).write.parquet(s"$in/fhv_tripdata_2023-01.parquet")
     val files = graft.ingest.Discovery.selectTripFiles(
       graft.ingest.Discovery.discoverParquet(spark, in))
-    // both legs: literal scan groups and the broadcast metadata join
-    for (maxConst <- Seq(WideTablePipeline.maxConstantScanGroups, 0)) {
-      val plan = WideTablePipeline.plan(spark, files, 50L, maxConst).get
-        .wide.queryExecution.executedPlan match {
-          case a: AdaptiveSparkPlanExec => a.executedPlan
-          case p => p
-        }
+    val plan = WideTablePipeline.plan(spark, files, 50L).get
+      .wide.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+    val s = plan.toString
+    assert("Exchange hashpartitioning".r.findAllIn(s).size == 1, s)
+    val aggs = plan.collect { case a: HashAggregateExec => a }
+    assert(aggs.size == 2, s)
+    aggs.foreach(a => assert(
+      a.collect { case m: CollectMetricsExec => m }.isEmpty,
+      s"CollectMetrics below a HashAggregate:\n$s"))
+    val partial = aggs.filter(
+      _.collect { case e: ShuffleExchangeExec => e }.isEmpty)
+    assert(partial.size == 1, s)
+    val mapSide = partial.head.treeString
+    assert(!mapSide.contains("hour(") && !mapSide.contains("to_date("), mapSide)
+    assert(partial.head.groupingExpressions.map(_.name).toSet ==
+      Set("type_code", "place_num", "place_str", "date"), mapSide)
+  }
+
+  test("wide table: one file scan for many small drifting files and for bulk files") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    import org.apache.spark.sql.execution.{FileSourceScanExec, UnionExec}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.functions.{col, sum}
+    import graft.pipeline.WideTablePipeline
+    val t0 = java.time.Instant.parse("2023-01-15T08:00:00Z").toEpochMilli
+    def ts(i: Int) = new java.sql.Timestamp(t0 + i * 1000L)
+    // the graftbench shapes in small: many files over three taxi types,
+    // several months and six dialects; a few files in two dialects
+    val many = java.nio.file.Files.createTempDirectory("graft_plan_many").toString
+    for (m <- 1 to 4) {
+      (1 to 5).map(i => (ts(i), 132)).toDF("tpep_pickup_datetime", "PULocationID")
+        .coalesce(1).write.parquet(s"$many/yellow_tripdata_2023-0$m.parquet")
+      (1 to 5).map(i => (ts(i), 7L)).toDF("tpep_pickup_datetime", "PULocationID")
+        .coalesce(1).write.parquet(s"$many/y64/yellow_tripdata_2023-0$m.parquet")
+      (1 to 5).map(i => (ts(i), 3.0)).toDF("lpep_pickup_datetime", "PULocationID")
+        .coalesce(1).write.parquet(s"$many/green_tripdata_2023-0$m.parquet")
+      (1 to 5).map(i => (t0 + i, "B1")).toDF("request_datetime", "pickup_zone_id")
+        .coalesce(1).write.parquet(s"$many/fhv_tripdata_2023-0$m.parquet")
+      (1 to 5).map(i => (ts(i).toString, 40.7, -74.0))
+        .toDF("Trip_Pickup_DateTime", "Start_Lat", "Start_Lon")
+        .coalesce(1).write.parquet(s"$many/ll/yellow_tripdata_2023-0$m.parquet")
+      (1 to 5).map(i => (t0 / 1000 + i, 9)).toDF("pickup_datetime", "PULocationID")
+        .coalesce(1).write.parquet(s"$many/fhv/fhv_tripdata_2023-0$m.parquet")
+    }
+    val bulk = java.nio.file.Files.createTempDirectory("graft_plan_bulk").toString
+    (1 to 50).map(i => (ts(i), 132)).toDF("tpep_pickup_datetime", "PULocationID")
+      .write.parquet(s"$bulk/yellow_tripdata_2023-01.parquet")
+    (1 to 50).map(i => (t0 + i, "B1")).toDF("request_datetime", "pickup_zone_id")
+      .write.parquet(s"$bulk/fhv_tripdata_2023-01.parquet")
+
+    for ((in, nFiles) <- Seq(many -> 24, bulk -> -1)) {
+      val files = graft.ingest.Discovery.selectTripFiles(
+        graft.ingest.Discovery.discoverParquet(spark, in))
+      if (nFiles > 0) assert(files.size == nFiles)
+      val wide = WideTablePipeline.plan(spark, files, 1L).get.wide
+      val leaves = wide.queryExecution.analyzed.collectLeaves()
+      assert(leaves.count(_.isInstanceOf[LogicalRelation]) == 1, leaves)
+      assert(!leaves.exists(_.isInstanceOf[LocalRelation]), leaves)
+      val plan = wide.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
       val s = plan.toString
-      assert("Exchange hashpartitioning".r.findAllIn(s).size == 1, s)
-      val aggs = plan.collect { case a: HashAggregateExec => a }
-      assert(aggs.size == 2, s)
-      aggs.foreach(a => assert(
-        a.collect { case m: CollectMetricsExec => m }.isEmpty,
-        s"CollectMetrics below a HashAggregate:\n$s"))
-      val partial = aggs.filter(
-        _.collect { case e: ShuffleExchangeExec => e }.isEmpty)
-      assert(partial.size == 1, s)
-      val mapSide = partial.head.treeString
-      assert(!mapSide.contains("hour(") && !mapSide.contains("to_date("), mapSide)
-      assert(partial.head.groupingExpressions.map(_.name).toSet ==
-        Set("type_code", "place_num", "place_str", "date"), mapSide)
+      assert(plan.collect { case f: FileSourceScanExec => f }.size == 1, s)
+      assert(plan.collect { case u: UnionExec => u }.isEmpty, s)
+      assert(plan.collect { case j: BroadcastHashJoinExec => j }.isEmpty, s)
+      assert(!s.contains("input_file_name"), s)
+      // and it reads every file
+      assert(wide.agg(sum(graft.ops.HourPivot.hourCols.map(col).reduce(_ + _)))
+        .first().getLong(0) == (if (in == many) 24 * 5 else 100), in)
     }
   }
 

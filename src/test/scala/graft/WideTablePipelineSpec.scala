@@ -104,26 +104,6 @@ class WideTablePipelineSpec extends AnyFunSuite {
       .contains(s"\\item Phase write (seconds): ${report.phaseSeconds.last._2}\n"))
   }
 
-  test("metadata-join fallback path (combos > threshold) equals constant path") {
-    // the join path is the 100 TB shape (years of monthly files exceed
-    // maxConstantScanGroups); force it with maxConstGroups = 0 and pin
-    // output equality against the constant-literal path
-    val in = tmpDir()
-    writeFixtures(in)
-    val all = graft.ingest.Discovery.discoverParquet(spark, in)
-    val files = graft.ingest.Discovery.selectTripFiles(all, None)
-    val viaConst = WideTablePipeline.plan(spark, files, minRides = 0L).get
-    val viaJoin = WideTablePipeline.plan(spark, files, minRides = 0L,
-      maxConstGroups = 0).get
-    val a = viaConst.wide.collect().map(_.toSeq).toSet
-    val b = viaJoin.wide.collect().map(_.toSeq).toSet
-    assert(a == b && a.nonEmpty)
-    // quality counters agree too (the mismatch bounds ride different
-    // carriers: literals vs broadcast-joined columns)
-    assert(viaConst.quality.get("input_rows") == viaJoin.quality.get("input_rows"))
-    assert(viaConst.quality.get("month_mismatch") == viaJoin.quality.get("month_mismatch"))
-  }
-
   test("min-rides filter honors threshold and empty input writes canonical schema") {
     val in = tmpDir(); val out = tmpDir()
     // only the undetectable file
@@ -147,11 +127,14 @@ class WideTablePipelineSpec extends AnyFunSuite {
     val day = java.time.Instant.parse("2021-06-10T00:00:00Z").toEpochMilli
     def at(h: Int, i: Int) = day + h * 3600000L + i * 1000L
     // one taxi type and month, three location dialects
-    ((1 to 5).map(i => (at(8, i), 132)) ++ Seq((at(8, 6), 0), (at(8, 7), 0)))
+    ((1 to 5).map(i => (at(8, i), 132)) ++
+        Seq((at(8, 6), 0), (at(8, 7), 0), (at(8, 8), -7)))
       .toDF("request_datetime", "PULocationID")
       .coalesce(1).write.parquet(s"$in/ids/fhv_tripdata_2021-06.parquet")
+    // only strings of optional "-" and 1-19 digits reach the long cast;
+    // the others must still key as themselves
     val strs = Seq("132", "132", "132", "0132", "0132", " 132", " 132",
-      "Z001", null, "", "0")
+      "Z001", null, "", "0", "-7", "+7", "-0", "9223372036854775808", "1e3")
     strs.zipWithIndex.map { case (z, i) => (at(9, i), z) }
       .toDF("request_datetime", "pickup_zone_id")
       .coalesce(1).write.parquet(s"$in/strs/fhv_tripdata_2021-06.parquet")
@@ -164,24 +147,23 @@ class WideTablePipelineSpec extends AnyFunSuite {
 
     // the table the string key gives: IDs as decimal strings, string
     // IDs as written, lat/lon as the rounded pair; the empty string stays
-    // apart from the place 0
+    // apart from the place 0, "-0" apart from 0, "+7" apart from -7
     val expected = Set[(String, Map[Int, Long])](
       ("132", Map(8 -> 5L, 9 -> 3L)), ("0132", Map(9 -> 2L)),
       (" 132", Map(9 -> 2L)), ("Z001", Map(9 -> 1L)), (null, Map(9 -> 1L)),
       ("", Map(9 -> 1L)), ("0", Map(8 -> 2L, 9 -> 1L)),
+      ("-7", Map(8 -> 1L, 9 -> 1L)), ("+7", Map(9 -> 1L)), ("-0", Map(9 -> 1L)),
+      ("9223372036854775808", Map(9 -> 1L)), ("1e3", Map(9 -> 1L)),
       ("40.75_-73.95", Map(10 -> 4L)))
-    for (maxConst <- Seq(WideTablePipeline.maxConstantScanGroups, 0)) {
-      val p = WideTablePipeline.plan(spark, files, minRides = 1L,
-        maxConstGroups = maxConst).get
-      val got = p.wide.collect().map { r =>
-        assert(r.getString(0) == "fhv" && r.getDate(1).toString == "2021-06-10")
-        (r.getString(2), graft.ops.HourPivot.hourCols.indices
-          .map(h => h -> r.getLong(3 + h)).filter(_._2 > 0).toMap)
-      }.toSet
-      assert(got == expected, s"maxConstGroups=$maxConst")
-      assert(p.quality.get("input_rows") == 7L + strs.size + 4L)
-      assert(p.groups.get("n_groups") == 8L)
-    }
+    val p = WideTablePipeline.plan(spark, files, minRides = 1L).get
+    val got = p.wide.collect().map { r =>
+      assert(r.getString(0) == "fhv" && r.getDate(1).toString == "2021-06-10")
+      (r.getString(2), graft.ops.HourPivot.hourCols.indices
+        .map(h => h -> r.getLong(3 + h)).filter(_._2 > 0).toMap)
+    }.toSet
+    assert(got == expected)
+    assert(p.quality.get("input_rows") == 8L + strs.size + 4L)
+    assert(p.groups.get("n_groups") == expected.size.toLong)
   }
 
   test("session time zone does not move the wide table or the counters") {
