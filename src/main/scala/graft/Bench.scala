@@ -3,7 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every declared query on
-  * `SPARK_GRAFT_SF_DIR` (default sf0.1) and prints ONE JSON line.
+  * `SPARK_GRAFT_SF_DIR` (default sf0.1), writes one JSON row per query
+  * to stderr ([[queryRow]]) and prints ONE JSON line to stdout
+  * ([[recordLine]]).
   *
   * Each query is forced through the `noop` sink — a plain `count()`
   * would let Catalyst prune the computed columns away and time a
@@ -11,8 +13,8 @@ import org.apache.spark.sql.SparkSession
   * tokenize anything). noop materializes every output row with zero
   * sink cost.
   *
-  * `value` is the total wall time of the headline set (the per-query
-  * map carries everything, headline and not).
+  * `value` is the total wall time of the headline set (the stderr rows
+  * carry every query, headline and not).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -25,8 +27,7 @@ object Bench {
     val benchStart = System.nanoTime()
     def elapsed: Double = (System.nanoTime() - benchStart) / 1e9
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Session.builder("graft-bench", cpus).getOrCreate()
+    val spark = Session.builder("graft-bench").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // Warm-up: JVM/codegen/scan-infrastructure costs must not land on
@@ -98,17 +99,23 @@ object Bench {
     val budgetSec = sys.env.get("SPARK_GRAFT_BENCH_BUDGET")
       .map(_.toDouble).getOrElse(300.0)
     import scala.util.control.NonFatal
+    val listener = graft.obs.ExecListener.attach(spark.sparkContext)
+    val sf = sfDir.split('/').last
+    val cpus = spark.sparkContext.defaultParallelism
     val results = toRun.map { q =>
-      val attempts = scala.collection.mutable.ArrayBuffer.empty[Double]
-      var attempt = 1
+      val attempts = scala.collection.mutable.ArrayBuffer.empty[Attempt]
       // first attempt always runs (every query gets at least one
       // record); retries only while the global budget holds
-      while (attempt <= runs && (attempt == 1 || elapsed < budgetSec)) {
-        val t0 = System.nanoTime()
-        val ok =
+      while (attempts.size < runs && (attempts.isEmpty || elapsed < budgetSec)) {
+        // the listener drains its bus outside this block, so the
+        // timer holds only the query
+        val (timed, exec) = listener.measure {
+          val t0 = System.nanoTime()
           try {
-            q.fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            true
+            val df = q.fn(spark, sfDir)
+            val t1 = System.nanoTime()
+            df.write.format("noop").mode("overwrite").save()
+            Some(((t1 - t0) / 1e9, (System.nanoTime() - t1) / 1e9))
           } catch {
             // NonFatal only: an OOM/fatal JVM error must kill the run
             // loudly, not silently become a -1.0 entry. Print the cause —
@@ -116,17 +123,18 @@ object Bench {
             case NonFatal(e) =>
               System.err.println(s"[bench] ${q.name} FAILED: " +
                 s"${e.getClass.getSimpleName}: ${e.getMessage}")
-              false
+              None
           }
-        val dt = (System.nanoTime() - t0) / 1e9
+        }
         // Queries persist intermediates (shingle frames, IVF cells) that
         // stay pinned after the run — by mid-bench the accumulated caches
         // thrash the storage pool and later dedup queries measured ~2×
         // slower than in isolation. Each attempt times a cold,
         // independent run.
         spark.sharedState.cacheManager.clearCache()
-        attempts += (if (ok) dt else -1.0)
-        attempt += 1
+        attempts += timed.fold(Attempt(-1.0, 0.0, 0.0, exec)) {
+          case (build, run) => Attempt(build + run, build, run, exec)
+        }
       }
       // Pinned blocks (graft.util.Pin frames in the dedup/fuzzy/ANN
       // pipelines) outlive clearCache(): they free only when the RDD is
@@ -139,21 +147,89 @@ object Bench {
       // Long-lived cluster sessions don't need this: regular young GCs
       // keep the ContextCleaner fed.
       System.gc()
-      val best =
-        if (attempts.exists(_ > 0)) attempts.filter(_ > 0).min else -1.0
-      System.err.println(f"[bench] ${q.name}%-30s $best%9.2f s  " +
-        attempts.map(a => f"$a%.2f").mkString("[", " ", "]"))
-      (q.name, best)
+      System.err.println(queryRow(q.name, headline.contains(q.name), sf,
+        cpus, calibrationSec, attempts.toSeq))
+      (q.name, bestOf(attempts.toSeq).fold(-1.0)(_.wallSec))
     }
-    println(recordLine(results, headline, sfDir.split('/').last, calibrationSec))
+    println(recordLine(results, headline, sf, calibrationSec))
     spark.stop()
+  }
+
+  /** One timed attempt of a query: `wallSec` is -1.0 when it failed.
+    * `buildSec` is the query function's call (eager pins included),
+    * `execSec` the noop write; `exec` is what Spark ran for both.
+    */
+  final case class Attempt(wallSec: Double, buildSec: Double,
+      execSec: Double, exec: graft.obs.ExecTotals)
+
+  /** The fastest successful attempt. */
+  private def bestOf(attempts: Seq[Attempt]): Option[Attempt] =
+    attempts.filter(_.wallSec >= 0).minByOption(_.wallSec)
+
+  // Locale.ROOT: f"%.3f" under a comma-decimal default locale would
+  // emit 10,974 and break every JSON parse of Bench's output
+  private def f3(v: Double): String =
+    String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
+
+  private def quoted(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => String.format("\\u%04x", Int.box(c.toInt))
+    case c => c.toString
+  } + "\""
+
+  /** One query's stderr row. It keeps the keys of the older median
+    * records (`query`, `median_sec`, `draws`, `sf`, `headline`), so they
+    * stay comparable. `draws` lists every attempt in run order, -1.0
+    * for a failed one; `median_sec` and `best_sec` are taken over the
+    * successful draws (-1.0 when none succeeded; an even count takes
+    * the upper median). The execution fields describe the best attempt
+    * and are null when none succeeded; `top_stages` are its 3 stages
+    * with the most task time.
+    */
+  def queryRow(query: String, headline: Boolean, sf: String, cpus: Int,
+      calibrationSec: Double, attempts: Seq[Attempt]): String = {
+    val ok = attempts.map(_.wallSec).filter(_ >= 0).sorted
+    val median = if (ok.isEmpty) -1.0 else ok(ok.size / 2)
+    val best = bestOf(attempts)
+    def field(k: String, v: Attempt => Any): String =
+      s""""$k":${best.fold("null")(a => v(a).toString)}"""
+    val stages = best.fold("null") { b =>
+      b.exec.topStages(3).map { st =>
+        s"""{"id":${st.id},"tasks":${st.tasks},"task_s":${f3(st.taskMs / 1e3)},""" +
+          s""""shuffle_read_bytes":${st.shuffleRead},"shuffle_write_bytes":${st.shuffleWrite},""" +
+          s""""name":${quoted(st.name)}}"""
+      }.mkString("[", ",", "]")
+    }
+    Seq(
+      s""""query":${quoted(query)}""",
+      s""""median_sec":${f3(median)}""",
+      s""""draws":${attempts.map(a => f3(a.wallSec)).mkString("[", ",", "]")}""",
+      s""""sf":${quoted(sf)}""",
+      s""""headline":$headline""",
+      s""""best_sec":${f3(best.fold(-1.0)(_.wallSec))}""",
+      s""""cpus":$cpus""",
+      s""""calibration_sec":${f3(calibrationSec)}""",
+      field("build_s", a => f3(a.buildSec)),
+      field("exec_s", a => f3(a.execSec)),
+      field("jobs", _.exec.jobs),
+      field("stages", _.exec.stages),
+      field("tasks", _.exec.tasks),
+      field("task_s", a => f3(a.exec.taskMs / 1e3)),
+      field("shuffle_read_bytes", _.exec.shuffleRead),
+      field("shuffle_write_bytes", _.exec.shuffleWrite),
+      field("spill_bytes", _.exec.spill),
+      field("peak_exec_mem_bytes", _.exec.peakExecMem),
+      field("pin_bytes", _.exec.pinBytes),
+      s""""top_stages":$stages"""
+    ).mkString("{", ",", "}")
   }
 
   /** The one stdout JSON line. Readers scrape a bounded tail of
     * stdout; a map with all ~55 queries (~2900 chars) gets truncated
     * mid-line and fails to parse (BENCH_r02.json parsed:null). Keep it
     * short: headline queries only, 3-decimal times. Full per-query
-    * detail is on stderr.
+    * detail is in the stderr rows.
     *
     * `results` holds (query, best seconds), -1.0 for a query whose every
     * attempt failed. `headline_total` sums the headline queries that
@@ -162,10 +238,6 @@ object Bench {
     */
   def recordLine(results: Seq[(String, Double)], headline: Set[String],
       sf: String, calibrationSec: Double): String = {
-    // Locale.ROOT: f"%.3f" under a comma-decimal default locale would
-    // emit 10,974 and re-break the JSON parse this line exists to fix
-    def f3(v: Double): String =
-      String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
     val head = results.filter { case (name, _) => headline.contains(name) }
     val qs = head.map { case (k, v) => "\"" + k + "\":" + f3(v) }
       .mkString("{", ",", "}")

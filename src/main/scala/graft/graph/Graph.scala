@@ -167,7 +167,7 @@ object Graph {
     // r16: pin the caller's edge PLAN once — the degree aggregate below
     // used to read the RAW plan and re-executed the full co-occurrence
     // self-join (the r15 double-execution pattern, still live here:
-    // StageBreakdown measured two extra stages, ~25 s task time at
+    // Bench's stage rows show two extra stages, ~25 s task time at
     // sf0.1, rebuilding+re-deduping the pair set just to count degrees)
     val ed = Pin(edges.select(col("src"), col("dst")))
     // r16: the degree frame is the SAME aggregate triangleCountsPinned

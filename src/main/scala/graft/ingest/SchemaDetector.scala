@@ -13,8 +13,8 @@ import org.apache.spark.sql.types.StructType
   *  - location candidates + fuzzy pickup/pu_ match: pivot_utils.py:65-105
   *  - lat/lon pair fallback: pivot_utils.py:108-138
   *
-  * Driver-side only: runs over a `StructType` from a footer read
-  * (`spark.read.parquet(path).schema`) — no data scan, no Catalyst
+  * Driver-side only: runs over the `StructType` of a file's own footer
+  * (`Footers.dataFilesAndSchema`) — no data scan, no Catalyst
   * extension. Matching is case-insensitive but returns the original
   * column name (needed for the aliased select).
   */

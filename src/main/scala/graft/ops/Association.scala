@@ -162,7 +162,7 @@ object Association {
     // r16: pin the pair table before mirroring — the union's two
     // branches otherwise re-run pairLift's FINAL aggregate (1.2M
     // pre-filter rows / 19.7 MB exchange read per branch at sf0.1,
-    // StageBreakdown) to produce a few-thousand-row table twice; the
+    // Bench's stage rows) to produce a few-thousand-row table twice; the
     // pin is minPairCount-filtered, so it is tiny by construction
     val pairs = Pin(pairLift(df, groupCol, itemCol, minItemCount,
       minPairCount, maxGroupSize)

@@ -178,8 +178,8 @@ object WideTablePipeline {
           spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
             .write.mode("overwrite").parquet(outPath)
         }
-        val skipped = files.map(f => (f, "undetectable or unreadable"))
-        Report(0L, 0L, 0L, 0L, 0L, skipped, 0.0)
+        Report(0L, 0L, 0L, 0L, 0L,
+          detected._2.map(s => (s.path, s.reason)), 0.0)
       case Some(p) =>
         val out = if (cfg.singleFileOutput) p.wide.coalesce(1) else p.wide
         phase("write")(out.write.mode("overwrite").parquet(outPath))

@@ -650,13 +650,11 @@ object Similarity {
     * operating-point contract (autoNProbe widens thin indexes to all
     * cells); at a complete-recall operating point the output is
     * bit-identical to [[knnJoin]] (same scores, same tie order).
-    * Queries are broadcast by default; for query sets past broadcast
-    * reach drop to a shuffled cell join (both sides partition by cell)
-    * by passing broadcastQueries = false.
+    * The probe-exploded queries are broadcast to the index cells.
     */
   def ivfKnnJoin(index: IvfIndex, idCol: String, vecCol: String,
       queries: DataFrame, qIdCol: String, qVecCol: String, k: Int,
-      nProbe: Int = 4, broadcastQueries: Boolean = true,
+      nProbe: Int = 4,
       scoreFn: (Column, Column) => Column =
         graft.functions.VectorFunctions.q_vec_cosine): DataFrame = {
     graft.functions.VectorFunctions.register(queries.sparkSession)
@@ -677,8 +675,7 @@ object Similarity {
           .otherwise(l("i") - r("i"))), 1, probe))
       .select(col("query_id"), col("__qv"),
         explode(col("__probe")("i")).as("__cell"))
-    val q = if (broadcastQueries) broadcast(probes) else probes
-    index.cells.join(q, col("cell") === col("__cell"))
+    index.cells.join(broadcast(probes), col("cell") === col("__cell"))
       .where(col(idCol) =!= col("query_id"))
       .select(col("query_id"),
         scoreFn(col(vecCol), col("__qv")).as("__s"),

@@ -171,114 +171,50 @@ object Dedup {
     // collect_set dedups for the verify arrays, min-aggs don't care
     val ex = Pin(shingleHashFrame(df, idCol, textCol, shingleN,
       distinctShingles = false), MEMORY_AND_DISK_SER)
-    val narrow = df.queryExecution.optimizedPlan.stats.sizeInBytes <=
-      BigInt(NarrowBandingMaxInputBytes)
     minhashNearDupsFromFrame(ex, threshold, numHashes, b,
-      estThresholdOpt.getOrElse(math.max(threshold, 2.0 / numHashes)),
-      narrowBanding = narrow)
+      estThresholdOpt.getOrElse(math.max(threshold, 2.0 / numHashes)))
   }
-
-  /** Largest document table, by its optimizer size estimate, that
-    * minhashNearDups bands with the narrow shape (see
-    * [[minhashNearDupsFromFrame]]). The estimate is driver-side
-    * metadata, no job. The signature frame (id + numHashes longs ≈
-    * 264 B/doc at k=32) is far narrower than any real document row, so
-    * a corpus whose TABLE estimate fits 1 GiB has a signature pin of a
-    * few hundred MB at worst, well inside broadcast reach (≪ the 8 GB
-    * hard cap); a 100 TB corpus reports ~100 TB and takes the wide
-    * shape.
-    */
-  private val NarrowBandingMaxInputBytes: Long = 1L << 30
 
   /** The minhash pipeline over a caller-supplied (persisted) shingle
     * frame (id, s) — signatures, banded candidates, estimate pre-filter,
     * exact verification. Lets callers that already hold a shingle frame
     * (or want a custom build) skip the rebuild.
+    *
+    * Guide §2.3 — shuffle keys, not payloads: the signature frame
+    * (ids × numHashes longs) is pinned ONCE, the banding self-join
+    * moves 24 B (id, band, hash) rows, and the signatures re-attach to
+    * the DEDUPED pair set by two joins. The pin's measured size lets
+    * the planner broadcast those joins while the signatures fit (a few
+    * hundred bytes per document) and shuffle them past that, so no
+    * pair-amplified exchange ever carries signatures. Measured
+    * (MinhashBandProbe (removed; see 7b19d2b), interleaved ×7,
+    * identity-asserted over 256 pairs at sf0.1) against carrying the
+    * signatures through the banding explode: 1.533 s → 1.257 s median.
     */
   def minhashNearDupsFromFrame(ex: DataFrame, threshold: Double,
-      numHashes: Int, bands: Int, estThreshold: Double,
-      narrowBanding: Boolean = false): DataFrame = {
+      numHashes: Int, bands: Int, estThreshold: Double): DataFrame = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
     val r = numHashes / bands
-
-    val prefiltered = if (narrowBanding) {
-      // r16 NARROW shape (guide §2.3 — shuffle keys, not payloads): the
-      // wide shape below pushes 8·(numHashes+3) ≈ 280 B/row through the
-      // banding self-join's exchange just so the est prefilter can see
-      // both sides' signatures. Under the caller's size cap the
-      // signature frame is pinned ONCE (ids × 33 longs — the same agg
-      // the wide shape computes inside its plan, now materialized so
-      // re-use costs block reads, which defeats the old "re-join
-      // recomputes the subplan" objection), the self-join moves 24 B
-      // (id, band, hash) rows, and the signatures re-attach to the
-      // DEDUPED pair set via two broadcast joins — map-side, no pair
-      // amplification. Measured (MinhashBandProbe (removed; see 7b19d2b), interleaved
-      // ×7, identity-asserted over 256 pairs at sf0.1):
-      // wide 1.533 s → narrow 1.257 s median. Past the cap the wide
-      // shape returns: a corpus-sized signature pin/broadcast is
-      // exactly what the serve-path index (buildAndWriteNearDupIndex)
-      // exists to avoid recomputing.
-      val sigCk = Pin(minhashSignaturesFrom(ex, numHashes))
-      val bandCols = (0 until bands).map { b =>
-        xxhash64((b * r until (b + 1) * r).map(i => col(s"mh_$i")): _*)
-      }
-      val banded = sigCk.select(col("id"), posexplode(array(bandCols: _*)))
-        .withColumnsRenamed(Map("pos" -> "band", "col" -> "band_hash"))
-      val rawPairs = banded.as("a").join(banded.as("b").hint("shuffle_hash"),
-          col("a.band") === col("b.band") &&
-          col("a.band_hash") === col("b.band_hash") &&
-          col("a.id") < col("b.id"))
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
-        .distinct()
-      val est = (0 until numHashes).map(i =>
-        when(col(s"a_mh_$i") === col(s"b_mh_$i"), 1).otherwise(0))
-        .reduce(_ + _) / numHashes.toDouble
-      val sigA = broadcast(sigCk.toDF(
-        "id_a" +: (0 until numHashes).map(i => s"a_mh_$i"): _*))
-      val sigB = broadcast(sigCk.toDF(
-        "id_b" +: (0 until numHashes).map(i => s"b_mh_$i"): _*))
-      rawPairs.join(sigA, Seq("id_a")).join(sigB, Seq("id_b"))
-        .select(col("id_a"), col("id_b"), est.as("est_jaccard"))
-        .where(col("est_jaccard") >= estThreshold)
-    } else {
-      val sig = minhashSignaturesFrom(ex, numHashes)
-      // WIDE shape (the 100 TB default past the narrow cap): carry the
-      // signature columns THROUGH the banding explode — the band
-      // self-join then yields both sides' signatures directly and the
-      // (expensive) signature subplan appears exactly once in the plan
-      // (an un-pinned re-join against `sig` would recompute it per
-      // side; column renames defeat ReusedExchange).
-      val bandCols = (0 until bands).map { b =>
-        xxhash64((b * r until (b + 1) * r).map(i => col(s"mh_$i")): _*)
-      }
-      val banded = sig.select(col("id") +:
-        (0 until numHashes).map(i => col(s"mh_$i")) :+
-        posexplode(array(bandCols: _*)): _*)
-        .withColumnsRenamed(Map("pos" -> "band", "col" -> "band_hash"))
-      val est = (0 until numHashes).map(i =>
-        when(col(s"a.mh_$i") === col(s"b.mh_$i"), 1).otherwise(0))
-        .reduce(_ + _) / numHashes.toDouble
-      // SHUFFLE_HASH build-memory sizing (r15 ADVICE — the
-      // triangleCounts convention): the build side is one partition of
-      // the banded signature frame — wide rows, id + numHashes longs +
-      // band/hash ≈ 8·(numHashes+3) B ≈ 280 B at k=32 — and a
-      // shuffled-hash build CANNOT spill. Per-partition build memory ≈
-      // bands·N·280 B / shuffle partitions; a skewed band_hash (one
-      // degenerate bucket) concentrates that in one task. The hint is
-      // right while per-partition build stays well under task memory
-      // (sf0.1: 80k rows × 280 B ≈ 22 MB TOTAL); past that — or on
-      // corpora where one band value captures a large corpus fraction —
-      // drop the hint and let sort-merge spill (the join itself is
-      // unchanged).
-      banded.as("a").join(banded.as("b").hint("shuffle_hash"),
-          col("a.band") === col("b.band") &&
-          col("a.band_hash") === col("b.band_hash") &&
-          col("a.id") < col("b.id"))
-        .select(col("a.id").as("id_a"), col("b.id").as("id_b"),
-          est.as("est_jaccard"))
-        .where(col("est_jaccard") >= estThreshold)
-        .distinct()
+    val sigCk = Pin(minhashSignaturesFrom(ex, numHashes))
+    val bandCols = (0 until bands).map { b =>
+      xxhash64((b * r until (b + 1) * r).map(i => col(s"mh_$i")): _*)
     }
+    val banded = sigCk.select(col("id"), posexplode(array(bandCols: _*)))
+      .withColumnsRenamed(Map("pos" -> "band", "col" -> "band_hash"))
+    val rawPairs = banded.as("a").join(banded.as("b").hint("shuffle_hash"),
+        col("a.band") === col("b.band") &&
+        col("a.band_hash") === col("b.band_hash") &&
+        col("a.id") < col("b.id"))
+      .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
+      .distinct()
+    val est = (0 until numHashes).map(i =>
+      when(col(s"a_mh_$i") === col(s"b_mh_$i"), 1).otherwise(0))
+      .reduce(_ + _) / numHashes.toDouble
+    val sigA = sigCk.toDF("id_a" +: (0 until numHashes).map(i => s"a_mh_$i"): _*)
+    val sigB = sigCk.toDF("id_b" +: (0 until numHashes).map(i => s"b_mh_$i"): _*)
+    val prefiltered = rawPairs.join(sigA, Seq("id_a")).join(sigB, Seq("id_b"))
+      .select(col("id_a"), col("id_b"), est.as("est_jaccard"))
+      .where(col("est_jaccard") >= estThreshold)
 
     // exact verification over hashed shingle sets (identical Jaccard,
     // collisions negligible) — arrays rebuilt from the persisted frame
@@ -579,7 +515,7 @@ object Dedup {
     * of id pairs, so AQE's byte-based coalescing ran the whole verify
     * (two set joins + array_intersect per pair) 3-wide — 3.7 s of task
     * time in one stage at sf0.1 on q_jaccard_prefix_join's ~130k
-    * candidates (StageBreakdown). The set tables broadcast (their
+    * candidates (Bench's stage rows). The set tables broadcast (their
     * builds are separate tiny stages), so a round-robin repartition at
     * the planner's width survives through both map-side joins and
     * restores full fan-out. Callers with FEW candidates (minhash's

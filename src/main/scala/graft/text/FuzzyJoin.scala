@@ -138,7 +138,7 @@ object FuzzyJoin {
     // few MB of id pairs, so AQE's byte-based coalescing collapsed the
     // whole verify (two set joins + array_intersect over n·(w−1) pairs)
     // to ONE task — 7.3 s of the adaptive query's 9.5 s wall was that
-    // single task (StageBreakdown). An explicit repartition at the
+    // single task (Bench's stage rows). An explicit repartition at the
     // planner's own partition count pins the verify at full width: the
     // count is what a planner exchange would use (scale knob unchanged),
     // but a user-pinned repartition is not AQE-coalescable, which here

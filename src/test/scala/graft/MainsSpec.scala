@@ -13,9 +13,7 @@ import org.scalatest.funsuite.AnyFunSuite
 class MainsSpec extends AnyFunSuite {
   private val allowed = Set(
     "graft.Bench", "graft.Verify", "graft.pipeline.Main",
-    "graft.tools.Inspect", "graft.tools.PlanDump",
-    "graft.tools.HeadlineProfile", "graft.tools.StageBreakdown",
-    "graft.tools.MedianBench")
+    "graft.tools.Inspect", "graft.tools.PlanDump")
 
   /** Fully qualified name of the object enclosing each `def main(`. */
   private def mainObjects(root: Path): Set[String] = {

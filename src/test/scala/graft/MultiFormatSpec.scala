@@ -70,32 +70,14 @@ class MultiFormatSpec extends AnyFunSuite {
 
   test("detectDialects skip reasons: corrupt file, no pickup column, TIMESTAMP(NANOS)") {
     import graft.ingest.Normalize
-    import org.apache.parquet.example.data.simple.SimpleGroupFactory
-    import org.apache.parquet.hadoop.example.ExampleParquetWriter
-    import org.apache.parquet.schema.MessageTypeParser
     import spark.implicits._
     val dir = Files.createTempDirectory("graft_skips").toString
     val corrupt = s"$dir/green_tripdata_2023-02.parquet"
-    Files.write(java.nio.file.Paths.get(corrupt), "not a parquet file at all".getBytes)
+    MultiFormatSpec.writeCorrupt(corrupt)
     val noPickup = s"$dir/yellow_tripdata_2023-03.parquet"
     Seq((1, "x")).toDF("a", "b").coalesce(1).write.parquet(noPickup)
-    // Spark writes no nanosecond timestamps; parquet-hadoop's example
-    // writer does, the way pyarrow-written TLC files carry them
     val nanos = s"$dir/yellow_tripdata_2023-04.parquet"
-    val schema = MessageTypeParser.parseMessageType(
-      """message trip {
-        |  required int64 tpep_pickup_datetime (TIMESTAMP(NANOS,false));
-        |  required int32 PULocationID;
-        |}""".stripMargin)
-    val writer = ExampleParquetWriter
-      .builder(new org.apache.hadoop.fs.Path(nanos))
-      .withType(schema)
-      .withConf(spark.sessionState.newHadoopConf())
-      .build()
-    try writer.write(new SimpleGroupFactory(schema).newGroup()
-      .append("tpep_pickup_datetime", 1680307200000000000L)
-      .append("PULocationID", 132))
-    finally writer.close()
+    MultiFormatSpec.writeNanosTrip(spark, nanos)
 
     val (ok, skipped) = Normalize.detectDialects(spark, Seq(corrupt, noPickup, nanos))
     assert(ok.isEmpty)
@@ -119,5 +101,35 @@ class MultiFormatSpec extends AnyFunSuite {
     assert(back.count() > 0)
     assert(back.queryExecution.executedPlan.toString
       .contains("PartitionFilters: [isnotnull(status"))
+  }
+}
+
+object MultiFormatSpec {
+  /** Garbage bytes under a `.parquet` name. */
+  def writeCorrupt(path: String): Unit =
+    Files.write(java.nio.file.Paths.get(path), "not a parquet file at all".getBytes)
+
+  /** One yellow trip whose pickup is a TIMESTAMP(NANOS) column. Spark
+    * writes no nanosecond timestamps; parquet-hadoop's example writer
+    * does, the way pyarrow-written TLC files carry them.
+    */
+  def writeNanosTrip(spark: SparkSession, path: String): Unit = {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val schema = MessageTypeParser.parseMessageType(
+      """message trip {
+        |  required int64 tpep_pickup_datetime (TIMESTAMP(NANOS,false));
+        |  required int32 PULocationID;
+        |}""".stripMargin)
+    val writer = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(path))
+      .withType(schema)
+      .withConf(spark.sessionState.newHadoopConf())
+      .build()
+    try writer.write(new SimpleGroupFactory(schema).newGroup()
+      .append("tpep_pickup_datetime", 1680307200000000000L)
+      .append("PULocationID", 132))
+    finally writer.close()
   }
 }

@@ -1,12 +1,14 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.text.{Dedup, TextFunctions => TF}
 
-class TextDedupSpec extends AnyFunSuite {
+class TextDedupSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark: SparkSession = Session.builder("text-test", "4").getOrCreate()
   import spark.implicits._
 
@@ -44,20 +46,28 @@ class TextDedupSpec extends AnyFunSuite {
     // 13 tokens → 11 shingles each; the changed word sits in 3 windows,
     // so 8 shingles are shared: jaccard = 8 / (11 + 11 - 8)
     assert(j === 8.0 / 14.0)
-    // r16: the narrow banding shape (signature pin + broadcast
-    // re-attach, taken for any table under 1 GiB) must be invisible in
-    // the results — run the wide shape over the same shingle frame and
-    // compare the full output including est_jaccard
-    val narrow = Dedup.minhashNearDups(df, "doc_id", "text",
+  }
+
+  test("minhash LSH: signatures re-attach by broadcast; shuffled re-attach gives the same output") {
+    val df = Seq((1L, docA), (2L, docANear), (3L, docB), (4L, docA))
+      .toDF("doc_id", "text")
+    def run() = Dedup.minhashNearDups(df, "doc_id", "text",
       threshold = 0.3, numHashes = 32, bands = 16)
       .collect().map(_.toString).toSet
-    val ex = Dedup.shingleHashFrame(df, "doc_id", "text", 3,
-      distinctShingles = false)
-    val wide = Dedup.minhashNearDupsFromFrame(ex, threshold = 0.3,
-        numHashes = 32, bands = 16, estThreshold = math.max(0.3, 2.0 / 32),
-        narrowBanding = false)
-      .collect().map(_.toString).toSet
-    assert(wide == narrow, "narrow vs wide banding shape diverged")
+    val ran = PlanCapture(spark)(run())
+    // the pinned signature frame is small, so the planner broadcasts
+    // it into both re-attach joins (one per pair side)
+    Seq("a_mh_0", "b_mh_0").foreach { sig =>
+      val reattach = ran.plans.flatMap(p => collect(p) {
+        case j: BroadcastHashJoinExec if j.output.exists(_.name == sig) => j
+      })
+      assert(reattach.nonEmpty, s"$sig\n${ran.planText}")
+    }
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val shuffled = try run()
+      finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    assert(ran.value.size == 3, ran.value)
+    assert(shuffled == ran.value, "broadcast vs shuffled re-attach diverged")
   }
 
   test("prefix-filtered exact join equals brute-force jaccard, no misses") {

@@ -106,13 +106,28 @@ class WideTablePipelineSpec extends AnyFunSuite {
 
   test("min-rides filter honors threshold and empty input writes canonical schema") {
     val in = tmpDir(); val out = tmpDir()
-    // only the undetectable file
+    // no usable file: one without a pickup column, one TIMESTAMP(NANOS)
+    // file and one corrupt file
     import spark.implicits._
     Seq((1, "x")).toDF("a", "b")
       .coalesce(1).write.parquet(s"$in/odd_tripdata_2021-01.parquet")
+    MultiFormatSpec.writeNanosTrip(spark, s"$in/yellow_tripdata_2021-02.parquet")
+    MultiFormatSpec.writeCorrupt(s"$in/green_tripdata_2021-03.parquet")
     val report = WideTablePipeline.run(spark,
       WideTablePipeline.Config(in, out, minRides = 50L))
     assert(report.inputRowCount == 0 && report.outputRowCount == 0)
+    // the report keeps each file's own skip reason from detection
+    // (Spark writes the odd file as a directory of part files)
+    val names = Seq("odd_tripdata_2021-01.parquet",
+      "yellow_tripdata_2021-02.parquet", "green_tripdata_2021-03.parquet")
+    assert(report.skippedFiles.size == 3, report.skippedFiles)
+    val why = names.map(n => n ->
+      report.skippedFiles.collectFirst { case (f, r) if f.contains(n) => r }
+        .getOrElse(fail(s"$n not skipped: ${report.skippedFiles}"))).toMap
+    assert(why(names(0)).startsWith("missing pickup datetime"), why)
+    assert(why(names(1)).startsWith("unreadable: ") &&
+      why(names(1)).contains("TIMESTAMP(NANOS"), why)
+    assert(why(names(2)).startsWith("unreadable: "), why)
     val wide = spark.read.parquet(s"$out/wide_table.parquet")
     assert(wide.columns.toSeq ==
       Seq("taxi_type", "date", "pickup_place") ++ graft.ops.HourPivot.hourCols)
