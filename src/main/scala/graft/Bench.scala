@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.util.Json.quote
+
 /** Benchmark main: runs every declared query on
   * `SPARK_GRAFT_SF_DIR` (default sf0.1), writes one JSON row per query
   * to stderr ([[queryRow]]) and prints ONE JSON line to stdout
@@ -171,13 +173,6 @@ object Bench {
   private def f3(v: Double): String =
     String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
 
-  private def quoted(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => String.format("\\u%04x", Int.box(c.toInt))
-    case c => c.toString
-  } + "\""
-
   /** One query's stderr row. It keeps the keys of the older median
     * records (`query`, `median_sec`, `draws`, `sf`, `headline`), so they
     * stay comparable. `draws` lists every attempt in run order, -1.0
@@ -198,14 +193,14 @@ object Bench {
       b.exec.topStages(3).map { st =>
         s"""{"id":${st.id},"tasks":${st.tasks},"task_s":${f3(st.taskMs / 1e3)},""" +
           s""""shuffle_read_bytes":${st.shuffleRead},"shuffle_write_bytes":${st.shuffleWrite},""" +
-          s""""name":${quoted(st.name)}}"""
+          s""""name":${quote(st.name)}}"""
       }.mkString("[", ",", "]")
     }
     Seq(
-      s""""query":${quoted(query)}""",
+      s""""query":${quote(query)}""",
       s""""median_sec":${f3(median)}""",
       s""""draws":${attempts.map(a => f3(a.wallSec)).mkString("[", ",", "]")}""",
-      s""""sf":${quoted(sf)}""",
+      s""""sf":${quote(sf)}""",
       s""""headline":$headline""",
       s""""best_sec":${f3(best.fold(-1.0)(_.wallSec))}""",
       s""""cpus":$cpus""",

@@ -38,7 +38,9 @@ object Session {
       // documents/embeddings rows are wide (long text, 64-float vectors):
       // keep broadcast threshold at default 10 MB; dims (region/nation) are tiny.
 
-  def defaultCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+  /** `SPARK_GRAFT_CPUS`, else every core of this machine. */
+  def defaultCpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
 
   def get(appName: String = "graft"): SparkSession = {
     val s = builder(appName).getOrCreate()

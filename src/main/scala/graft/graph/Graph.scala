@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 import graft.util.Pin
@@ -319,13 +319,13 @@ object Graph {
       val rawA = e.join(hubs, Seq("src"))
         .groupBy(col("dst")).agg(sum(col("h")).as("ra"))
       val maxA = rawA.agg(max(col("ra")).as("__ma"))
-      auths = Pin(rawA.crossJoin(broadcast(maxA))
+      auths = Pin(rawA.crossJoin(maxA)
         .select(col("dst"), expr(s"(cast(ra as decimal(38,0)) * ${base}L) div __ma")
           .cast("long").as("a")))
       val rawH = e.join(auths, Seq("dst"))
         .groupBy(col("src")).agg(sum(col("a")).as("rh"))
       val maxH = rawH.agg(max(col("rh")).as("__mh"))
-      hubs = Pin(rawH.crossJoin(broadcast(maxH))
+      hubs = Pin(rawH.crossJoin(maxH)
         .select(col("src"), expr(s"(cast(rh as decimal(38,0)) * ${base}L) div __mh")
           .cast("long").as("h")))
     }
@@ -464,6 +464,7 @@ object Graph {
     // broadcast map makes every one of the 49M wedge probes a cache
     // miss — and locally the exchange is memory-local and cheap. On a
     // real cluster the 542 MB crosses the network and the trade flips.
+    // hint kept: without it the wedge join sorts the wedge side (above)
     val edgeSide = oriented.hint("shuffle_hash")
     // r16 MEASURED AND REJECTED (TriangleWidthProbe, interleaved ×7
     // alternating order, identity-asserted): pinning the wedge join's
@@ -544,11 +545,11 @@ object Graph {
   /** [[kCore]] plus its exit state: (membership, rounds executed,
     * converged). `converged = true` means the LAST executed round
     * removed no node — the membership is the EXACT k-core, not the
-    * bounded over-approximation. The convergence test is the same
-    * bounded existence probe connectedComponents uses (limit-1 anti
-    * join, never a full count); with `runToFixpoint = false` rounds
-    * always run to `iters` and converged stays false (the fixed-round
-    * contract an unrolled oracle replays). The gate-scale GraphSpec
+    * bounded over-approximation. The convergence test compares the
+    * round's pinned row count with the survivors' (no extra job); with
+    * `runToFixpoint = false` rounds always run to `iters` and
+    * converged stays false (the fixed-round contract an unrolled
+    * oracle replays). The gate-scale GraphSpec
     * probe uses this to assert q_kcore_membership's declared iters=3
     * actually reaches fixpoint on gate data — the hash against the
     * 3-round-unrolled oracle proves implementation-matches-spec; this
@@ -570,9 +571,8 @@ object Graph {
         .groupBy(col("src").as("id")).agg(count(lit(1)).as("__deg"))
       val next = Pin(survivors
         .join(deg.where(col("__deg") >= k), Seq("id"), "left_semi"))
-      if (runToFixpoint)
-        converged = survivors.join(next, Seq("id"), "left_anti")
-          .limit(1).count() == 0L
+      // next ⊆ survivors: equal pinned counts mean no node was dropped
+      converged = runToFixpoint && Pin.rows(next) == Pin.rows(survivors)
       survivors = next
       round += 1
     }
@@ -585,9 +585,8 @@ object Graph {
 
   /** Min-label HashMin with the convergence state SURFACED (the
     * kCoreWithRounds convention): returns (labels, rounds executed,
-    * converged). With `runToFixpoint = false` the convergence probe
-    * never runs, so `converged` stays false and rounds == iters — the
-    * fixed-round unrolled-oracle contract.
+    * converged). With `runToFixpoint = false` `converged` stays false
+    * and rounds == iters — the fixed-round unrolled-oracle contract.
     */
   def connectedComponentsWithRounds(edges: DataFrame, nodes: DataFrame,
       idCol: String, iters: Int,
@@ -602,16 +601,17 @@ object Graph {
       val msgs = e
         .join(labels.select(col("id").as("src"), col("label")), Seq("src"))
         .groupBy(col("dst").as("id")).agg(min(col("label")).as("nbr"))
-      val next = Pin(labels.join(msgs, Seq("id"), "left")
+      val joined = labels.join(msgs, Seq("id"), "left")
+      // the changed-label count rides the round's pin job
+      val changed = new Observation()
+      val next = Pin((if (runToFixpoint) joined.observe(changed,
+          sum(when(col("nbr") < col("label"), 1L).otherwise(0L)).as("n"))
+        else joined)
         .select(col("id"),
           least(col("label"), coalesce(col("nbr"), col("label")))
             .as("label")))
-      if (runToFixpoint)
-        converged = next
-          .join(labels.select(col("id"), col("label").as("__old")),
-            Seq("id"))
-          .where(col("label") =!= col("__old"))
-          .limit(1).count() == 0L
+      converged = runToFixpoint &&
+        Option(changed.get("n")).forall(_.asInstanceOf[Long] == 0L)
       labels = next
       round += 1
     }
@@ -624,9 +624,8 @@ object Graph {
     * takes the min over itself and its neighbors' labels. After
     * diameter rounds every node carries its component's minimum id —
     * the canonical component label. `runToFixpoint` stops early when a
-    * round changes nothing (the convergence test is a bounded
-    * existence probe — limit 1 — not a full count), with `iters` as
-    * the hard cap.
+    * round changes nothing (the round's pin counts the changed labels
+    * as it materializes — no extra job), with `iters` as the hard cap.
     *
     * Shape at scale: one (dst ← min label) keyed shuffle per round
     * over the edge list, the label frame is node-sized (two longs),

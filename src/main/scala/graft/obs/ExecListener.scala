@@ -6,8 +6,10 @@ import org.apache.spark.{GraftTestBus, SparkContext}
 import org.apache.spark.scheduler._
 
 /** One stage of a measured block: its task count, summed executor run
-  * time, shuffle bytes and the first 90 characters of its name (the
-  * call site that started it).
+  * time, shuffle bytes and the first 90 characters of its name: the
+  * operators whose RDDs it runs, last first (e.g. `Exchange,
+  * WholeStageCodegen (1), Scan parquet`), or its call site when its
+  * RDDs carry no operator scope.
   */
 final case class StageTotals(id: Int, tasks: Long, taskMs: Long,
     shuffleRead: Long, shuffleWrite: Long, name: String)
@@ -67,9 +69,17 @@ final class ExecListener private (sc: SparkContext) extends SparkListener {
     synchronized {
       val si = e.stageInfo
       current.stages += 1
-      val name = si.name.linesIterator.nextOption().getOrElse("").take(90)
-      current.stageTasks(si.stageId) = stage(si.stageId).copy(name = name)
+      current.stageTasks(si.stageId) = stage(si.stageId).copy(name = nameOf(si))
     }
+
+  // AQE submits stages from a thread pool, so the call site of most SQL
+  // stages is `CompletableFuture.java:…`; the RDDs' operator scopes say
+  // what the stage computes
+  private def nameOf(si: StageInfo): String = {
+    val ops = si.rddInfos.sortBy(-_.id).flatMap(_.scope.map(_.name)).distinct
+    (if (ops.nonEmpty) ops.mkString(", ")
+     else si.name.linesIterator.nextOption().getOrElse("")).take(90)
+  }
 
   override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
     val c = current

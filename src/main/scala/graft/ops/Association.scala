@@ -61,7 +61,7 @@ object Association {
       .agg(count(lit(1)).as("n_ab"))
       .where(col("n_ab") >= minPairCount)
     val n = g.agg(countDistinct(col("g")).as("__n"))
-    pairs.crossJoin(broadcast(n))
+    pairs.crossJoin(n)
       .select(col("a").as("item_a"), col("b").as("item_b"),
         col("n_ab"), col("n_a"), col("n_b"),
         ((col("n_ab").cast("double") * col("__n")) /

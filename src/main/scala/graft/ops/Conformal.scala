@@ -59,6 +59,7 @@ object Conformal {
     */
   def coverage(test: DataFrame, thresholds: DataFrame,
       groupCols: Seq[String], scoreCol: String): DataFrame =
+    // hint kept: thresholds is priced at its input's size (else test builds)
     test.join(broadcast(thresholds), groupCols)
       .groupBy(groupCols.map(col) :+ col("n_cal") :+ col("qhat"): _*)
       .agg(count(lit(1)).as("n_test"),

@@ -109,7 +109,7 @@ object Eval {
           (col("__p") - col("__y") * 1000000L)).as("__se"))
       .withColumn("__pbar", expr("__sp div __nk"))
       .withColumn("__ybar", expr("__sy * 1000000 div __nk"))
-    bins.crossJoin(broadcast(tot))
+    bins.crossJoin(tot)
       .groupBy(col("n"), col("base_rate_ppm"))
       .agg(sum(col("__se")).as("__se"),
         // nk·(Δppm)² is ~1e12 per bin-weighted row — a LONG sum wraps

@@ -153,8 +153,7 @@ object Experiment {
         lit(1.0) - (col("cov_xy") * col("cov_xy")) /
           (col("var_x") * col("var_y")))
       .withColumn("mean_x", col("sx") / col("nD"))
-    val th = broadcast(stats.select(col("theta"), col("mean_x"),
-      col("var_ratio")))
+    val th = stats.select(col("theta"), col("mean_x"), col("var_ratio"))
     // adjusted mean from EXACT per-arm sums — never a row-wise double
     // sum (order-dependent): Σ(y−θ(x−x̄))/n = ȳ_arm − θ·(x̄_arm − x̄)
     df.select(armCol.as("arm"), y.as("__y"), x.as("__x"))
@@ -190,9 +189,10 @@ object Experiment {
     val colT = cells.groupBy(col(bCol)).agg(sum(col("observed")).as("__ct"))
     val grand = cells.agg(sum(col("observed")).as("__g"))
     val e = col("__rt").cast("double") * col("__ct") / col("__g")
+    // hint kept: the margins are grouped aggregates, priced at df's size
     cells.join(broadcast(rowT), Seq(aCol))
       .join(broadcast(colT), Seq(bCol))
-      .crossJoin(broadcast(grand))
+      .crossJoin(grand)
       .select(col(aCol), col(bCol), col("observed"),
         e.as("expected"),
         ((col("observed") - e) * (col("observed") - e) / e)
@@ -232,7 +232,7 @@ object Experiment {
         col("__c").cast("decimal(19,0)")), lit(0).cast("decimal(38,0)"))
         .as("__pe"))
     val n38 = col("__n").cast("decimal(38,0)")
-    totals.crossJoin(broadcast(pe))
+    totals.crossJoin(pe)
       .select(
         col("__n").as("n"),
         coalesce(col("__agree"), lit(0L)).as("n_agree"),

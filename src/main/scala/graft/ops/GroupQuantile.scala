@@ -90,7 +90,7 @@ object GroupQuantile {
       .where(col("__gq_cum") >= lit(p) * col("__gq_tot"))
       .groupBy(gNames.map(col): _*)
       .agg(min(col("__gq_v")).as("__gq_thr"))
-    // thresholds: one row per group — always broadcast-sized
+    // hint kept: thr (one row per group) is priced at its input's size
     df.join(broadcast(thr),
         groupCols.zip(gNames).map { case (c, n) => c === thr(n) }
           .reduce(_ && _))
@@ -132,6 +132,7 @@ object GroupQuantile {
           min(when(col("__gq_cum") >= lit(p) * col("__gq_tot"),
             col("__gq_v"))).as(s"__gq_t${i + 1}")
         }: _*)
+    // hint kept: thr is priced at its input's size (else a sort-merge join)
     df.join(broadcast(thr),
         groupCols.zip(gNames).map { case (c, n) => c === thr(n) }
           .reduce(_ && _))
@@ -175,6 +176,7 @@ object GroupQuantile {
           .as("__tlo"),
         min(when(col("__cum") >= lit(pHi) * col("__tot"), col("__v")))
           .as("__thi"))
+    // hint kept: thr is priced at its input's size (else the fact side builds)
     keyed.join(broadcast(thr), groupCols)
       .select(groupCols.map(col) ++ Seq(col("__tlo"), col("__thi"),
         least(greatest(col("__v"), col("__tlo")), col("__thi"))
@@ -233,6 +235,7 @@ object GroupQuantile {
       .groupBy(groupCols.map(col): _*)
       .agg(min(when(col("__cum") * 2 >= col("__tot"), col("__v"))).as(out))
     val med = median(dist, "median")
+    // hint kept: med and mad are grouped aggregates, priced at dist's size
     val devDist = dist.join(broadcast(med), groupCols)
       .select(groupCols.map(col) :+
         abs(col("__v") - col("median")).as("__v") :+ col("__n"): _*)
@@ -240,11 +243,13 @@ object GroupQuantile {
       .agg(sum(col("__n")).as("__n"))
     val mad = median(devDist, "mad")
     devDist.withColumnRenamed("__v", "__dev")
+      // hint kept: mad, as med above
       .join(broadcast(mad), groupCols)
       .groupBy(groupCols.map(col) :+ col("mad"): _*)
       .agg(sum(col("__n")).as("n"),
         sum(when(col("__dev") > col("mad") * k, col("__n"))
           .otherwise(0L)).as("n_outliers"))
+      // hint kept: med, as above
       .join(broadcast(med), groupCols)
       .select(groupCols.map(col) ++
         Seq(col("n"), col("median"), col("mad"), col("n_outliers")): _*)

@@ -10,8 +10,7 @@ import org.apache.spark.sql.functions._
   * on any engine and at any parallelism (no RNG stream — draws are
   * md5(anchor:candidate), the repo-standard portable hash).
   *
-  * Shape at 100 TB — two rungs, auto-selected (the NgramLm
-  * broadcast→shuffle pattern):
+  * Shape at 100 TB — two rungs, auto-selected by a measured pool size:
   *  - pool within broadcast reach (approx-counted, default cap 4M
   *    ids = ~32 MB of longs): broadcast it; anchors scan once; the
   *    per-anchor draw ranking is the PairTopKAggregator partial
@@ -69,6 +68,7 @@ object NegativeSampling {
         pool.agg(approx_count_distinct(col("neg_id"))).head().getLong(0)
       poolN <= maxBroadcastPool
     }
+    // hint kept: the approx count sized pool; the planner prices it at df's size
     val joined =
       if (broadcastable)
         anchors.crossJoin(broadcast(pool))
@@ -154,6 +154,7 @@ object NegativeSampling {
     val indexed = poolB
       .withColumn("__rn", row_number().over(
         Window.partitionBy(col("__b")).orderBy(col("neg_id"))) - 1)
+      // hint kept: offsets is a grouped aggregate, priced at the pool's size
       .join(broadcast(offsets.select(col("__b"), col("__off"))), Seq("__b"))
       .select((col("__off") + col("__rn")).cast("long").as("__idx"),
         col("neg_id"))
@@ -240,6 +241,7 @@ object NegativeSampling {
         coalesce(sum(col("__w")).over(
           Window.partitionBy(col("__b")).orderBy(col("neg_id"))
             .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+      // hint kept: offsets is a grouped aggregate, priced at the pool's size
       .join(broadcast(offsets.select(col("__b"), col("__off"))), Seq("__b"))
       .select(col("neg_id"),
         (col("__off") + col("__run")).as("__lo"),

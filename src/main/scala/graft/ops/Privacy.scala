@@ -89,6 +89,7 @@ object Privacy {
       .agg(sum(col("__c")).as("n"))
     val wCoh = Window.partitionBy(qidCols.map(col): _*).orderBy(col("__b"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    // hint kept: bands is a grouped aggregate, priced at base's size
     val grid = cohorts.crossJoin(broadcast(bands))
       .join(cohortBand, qidCols :+ "__b", "left")
       .na.fill(0L, Seq("__c"))

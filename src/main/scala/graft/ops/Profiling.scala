@@ -114,7 +114,7 @@ object Profiling {
         col("__c").cast("decimal(19,0)")).as("__s1"))
     val dec = org.apache.spark.sql.functions.floor(
       (col("__n") + lit(9)) / lit(10.0)).cast("long")
-    ranked.crossJoin(broadcast(totals))
+    ranked.crossJoin(totals)
       .agg(
         max(col("__n")).as("__nk"),
         max(col("__t")).as("__tt"),
@@ -614,7 +614,7 @@ object Profiling {
       .filter(col("__day").isNotNull)
       .agg(min(col("__day")).as("__mind"))
     val evalDays = df.select(dayCol.as("eval_day")).distinct()
-      .crossJoin(broadcast(minDay))
+      .crossJoin(minDay)
       .filter(col("eval_day") >= date_add(col("__mind"), span - 1))
       .select(col("eval_day"))
     ksTimeseriesFold(dayCounts, evalDays, groupCols, refDays, curDays,
@@ -632,6 +632,7 @@ object Profiling {
       domainCap: Long = DefaultKsDomainCap): DataFrame = {
     val span = refDays + curDays
     val g = groupCols.map(col)
+    // hint kept: evalDays is priced above dayCounts (else dayCounts builds)
     val joined = dayCounts.join(broadcast(evalDays),
       col("__day").between(date_sub(col("eval_day"), span - 1),
         col("eval_day")))

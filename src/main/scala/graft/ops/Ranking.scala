@@ -55,6 +55,7 @@ object Ranking {
             .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
       .drop("__n")
     val w = Window.partitionBy(col("__pid")).orderBy(sort: _*)
+    // hint kept: offsets are priced above ranged (else ranged builds)
     ranged.join(broadcast(offsets), Seq("__pid"))
       .withColumn(out, (col("__offset") + row_number().over(w)).cast("long"))
       .drop("__pid", "__offset")

@@ -200,6 +200,7 @@ object Resample {
   def rollingQuantileFromDaily(daily: DataFrame, keyCols: Seq[String],
       windowDays: Int, num: Long, den: Long): DataFrame = {
     val spine = daily.select(col("__day").as("win_day")).distinct()
+    // hint kept: spine is a distinct of daily, priced at daily's size
     val merged = daily
       .join(broadcast(spine),
         (col("win_day") - col("__day")).between(0, windowDays - 1))

@@ -135,6 +135,7 @@ object Sampling {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("__bucket")).orderBy(col("__sk"), key)
     val pos = keyed
+      // hint kept: offsets is a grouped aggregate, priced at keyed's size
       .join(broadcast(offsets), Seq("__bucket"))
       .withColumn("shuffle_pos",
         (col("__offset") + row_number().over(w)).cast("long"))
@@ -190,6 +191,7 @@ object Sampling {
       .partitionBy(col("__src"), col("__b")).orderBy(col("__dg"), key)
       .rowsBetween(
         org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
+    // hint kept: offsets is a grouped aggregate, priced at keyed's size
     keyed.join(broadcast(offsets.drop("__bt")), Seq("__src", "__b"))
       .withColumn("__cum", coalesce(sum(col("__n")).over(wIn), lit(0L)))
       .where(col("__before") + col("__cum") < budget)
@@ -283,13 +285,14 @@ object Sampling {
       .agg(count(lit(1)).as("__n"))
       .select(col("__src"), floor(sqrt(col("__n"))).as("__w"))
     val wmax = counts.agg(max(col("__w")).as("__wmax"))
-    val thresholds = counts.crossJoin(broadcast(wmax))
+    val thresholds = counts.crossJoin(wmax)
       .select(col("__src"),
         when(col("__w") >= col("__wmax"), lit("g"))
           .otherwise(format_string("%08x",
             floor((col("__w").cast("double") / col("__wmax").cast("double"))
               * lit(4294967296.0)).cast("long")))
           .as("__thr"))
+    // hint kept: thresholds are priced above df (else df builds)
     df.join(broadcast(thresholds), sourceCol === col("__src"))
       .where(md5(key.cast("string")) < col("__thr"))
       .drop("__src", "__thr")
@@ -311,7 +314,7 @@ object Sampling {
     val n = df.agg(count(lit(1)).as("__n"))
     val banded = Ranking.globalRank(df,
         Seq(col(scoreCol).desc, col(idCol)), "__r")
-      .crossJoin(broadcast(n))
+      .crossJoin(n)
       .withColumn("band",
         Ranking.equiDepthScore(col("__r"), col("__n"), bands))
       .drop("__r", "__n")
@@ -355,7 +358,7 @@ object Sampling {
       .select(col("fold").cast("int").as("fold"),
         (lit(lo) + col("fold") * width).as("__bs"),
         (lit(lo) + (col("fold") + 1) * width - 1).as("__be"))
-    base.crossJoin(broadcast(folds))
+    base.crossJoin(folds)
       .select(col("fold"), col("id"),
         when(col("__ts") >= col("__bs") && col("__ts") <= col("__be"),
           "test")
@@ -422,6 +425,7 @@ object Sampling {
             .partitionBy(col("__b")).orderBy(col("id"))
             .rowsBetween(org.apache.spark.sql.expressions.Window
               .unboundedPreceding, -1)), lit(0L)))
+      // hint kept: offsets is a grouped aggregate, priced at the pool's size
       .join(broadcast(offsets.select(col("__b"), col("__off"))),
         Seq("__b"))
       .select(col("id"), col("__w"),
@@ -483,7 +487,7 @@ object Sampling {
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("__rem").desc +: strataCols.map(col): _*)
     val total = counts.agg(sum(col("n_rows")).as("__tot"))
-    counts.crossJoin(broadcast(total))
+    counts.crossJoin(total)
       .withColumn("base",
         expr(s"(cast($budget as decimal(38,0)) * n_rows) div __tot"))
       .withColumn("__rem",

@@ -63,7 +63,7 @@ object Segmentation {
       .join(mRn, Seq(userCol))
     def score(rn: String) =
       Ranking.equiDepthScore(col(rn), col("__nu"), buckets)
-    ranked.crossJoin(broadcast(n))
+    ranked.crossJoin(n)
       .select(col(userCol), col("freq"),
         col("__mon").cast("double").as("monetary"),
         score("r_rn").as("r_score"),

@@ -57,7 +57,7 @@ object SequentialPatterns {
       .groupBy(col("antecedent"), col("consequent"))
       .agg(count(lit(1)).as("n_sessions"))
       .where(col("n_sessions") >= minSessions)
-    pairs.crossJoin(broadcast(total))
+    pairs.crossJoin(total)
       .withColumn("support_ppm",
         expr("(cast(n_sessions as decimal(38,0)) * 1000000) div __n_total"))
       .drop("__n_total")

@@ -119,16 +119,17 @@ object Sketches {
     // default spine passes the register day column through UNCAST so
     // the output day keeps the caller's type; only an explicit
     // daySpine (arbitrary caller frame) is normalized to date
-    val spine = broadcast(daySpine match {
+    val spine = daySpine match {
       case Some(sp) =>
         require(sp.columns.length == 1,
           s"daySpine must have exactly one date column, got ${sp.columns.mkString(",")}")
         sp.toDF("win_day").select(col("win_day").cast("date")).distinct()
       case None =>
         registers.select(col(dayCol).as("win_day")).distinct()
-    })
+    }
+    // hint kept: spine is a distinct, priced at its input's size
     val merged = registers
-      .join(spine, datediff(col("win_day"), col(dayCol))
+      .join(broadcast(spine), datediff(col("win_day"), col(dayCol))
         .between(0, windowDays - 1))
       .groupBy(col("win_day").as(dayCol), col("bucket"))
       .agg(max(col("m_reg")).as("m_reg"))
@@ -146,6 +147,7 @@ object Sketches {
     items.select(col(keyCol).as("key")).distinct()
       .select(col("key"), posexplode(array((0 until d).map(j =>
         bucket(col("key"), j)): _*)).as(Seq("j", "bucket")))
+      // hint kept: sketch is priced at its input's size (else the keys build)
       .join(broadcast(sketch), Seq("j", "bucket"))
       .groupBy(col("key"))
       .agg(min(col("n")).as("cms_estimate"))

@@ -63,6 +63,7 @@ object Skyline {
     val bounds = df.groupBy(keys: _*)
       .agg(min(col(costCol)).as("__lo"), max(col(costCol)).as("__hi"))
     val bucketed = perCost
+      // hint kept: bounds is priced at its input's size (else perCost builds)
       .join(broadcast(bounds), keyCols, if (keyCols.isEmpty) "cross" else "inner")
       .withColumn("__bkt",
         when(col("__hi") === col("__lo"), lit(0))
@@ -136,7 +137,8 @@ object Skyline {
     val g = Pin(df.groupBy(col(levelCol).as("__lvl"), col(costCol).as("__cost"))
       .agg(max(col(benefitCol)).as("__bmax"))) // feeds levels, contributors, subjects
     val levels = g.select(col("__lvl").as("__tgt")).distinct()
-    // bounded × bounded broadcast inequality join: |levels|² pairs
+    // hint kept: levels is a distinct of g, priced at g's size (an
+    // inequality join, |levels|² pairs)
     val contribs = g.join(broadcast(levels), col("__tgt") > col("__lvl"))
       .select(col("__tgt"), col("__cost"), col("__bmax"), lit(0).as("__tag"))
     val subjects = g.select(col("__lvl").as("__tgt"), col("__cost"),
@@ -144,7 +146,7 @@ object Skyline {
     val frame = contribs.unionByName(subjects)
     val bounds = df.groupBy()
       .agg(min(col(costCol)).as("__lo"), max(col(costCol)).as("__hi"))
-    val bucketed = frame.crossJoin(broadcast(bounds))
+    val bucketed = frame.crossJoin(bounds)
       .withColumn("__bkt",
         when(col("__hi") === col("__lo"), lit(0))
           .otherwise(least(lit(buckets - 1),

@@ -53,6 +53,7 @@ object SplitFinder {
       .rowsBetween(Window.unboundedPreceding, 0)
     val perValue = grid
       .withColumn("__cum", sum(col("__n")).over(wc))
+      // hint kept: classTotals is a grouped aggregate, priced at cnt's size
       .join(broadcast(classTotals), Seq("__c"))
       .groupBy(col("__v"))
       .agg(

@@ -34,6 +34,7 @@ object Transitions {
       .agg(count(lit(1)).as("n"))
     val totals = counts.groupBy(col("from_type"))
       .agg(sum(col("n")).as("total_from"))
+    // hint kept: totals is a grouped aggregate, priced at counts' size
     counts.join(broadcast(totals), Seq("from_type"))
       .select(col("from_type"), col("to_type"), col("n"),
         col("total_from"),

@@ -2,6 +2,8 @@ package graft.pipeline
 
 import java.nio.file.{Files, Paths}
 
+import graft.util.Json.quote
+
 /** Metrics report sink: JSON by default, LaTeX itemize when the target
   * ends in `.tex` — same surface as the reference
   * (/root/reference/pivot_and_boostrap/pivot_all_files.py:511-539),
@@ -23,17 +25,11 @@ object ReportSink {
   }
 
   def toJson(r: WideTablePipeline.Report): String = {
-    def esc(s: String) = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
     val skipped = r.skippedFiles
-      .map { case (f, why) => s"""{"file": "${esc(f)}", "reason": "${esc(why)}"}""" }
+      .map { case (f, why) => s"""{"file": ${quote(f)}, "reason": ${quote(why)}}""" }
       .mkString("[", ", ", "]")
     val phases = r.phaseSeconds
-      .map { case (name, secs) => s""""${esc(name)}": $secs""" }
+      .map { case (name, secs) => s"""${quote(name)}: $secs""" }
       .mkString("{", ", ", "}")
     s"""{
   "input_row_count": ${r.inputRowCount},

@@ -104,6 +104,7 @@ object AdvancedQueries {
       val natAvg = c.groupBy(col("c_nationkey").as("nk"))
         .agg((sum(col("c_acctbal").cast(DecimalType(12, 2))).cast("double") /
           count(lit(1))).as("avg_bal"))
+      // hint kept: natAvg is a grouped aggregate, priced at c's size
       c.join(broadcast(natAvg), col("c_nationkey") === col("nk"))
         .where(col("c_acctbal") > col("avg_bal"))
         .groupBy(col("c_nationkey"))
@@ -980,7 +981,7 @@ object AdvancedQueries {
       }
       val li = graft.ops.Bucketing.readBucketed(s, s"graft_li_b_$tag")
       val ord = graft.ops.Bucketing.readBucketed(s, s"graft_ord_b_$tag")
-      // merge hint: without it AQE broadcasts the small side at test SF
+      // hint kept: without it AQE broadcasts the small side at test SF
       // and the exhibit would not exercise the co-located SMJ path
       li.hint("merge").join(ord, Seq("l_orderkey"))
         .groupBy(col("o_orderpriority"))

@@ -653,7 +653,7 @@ object PipelineQueries {
       val bounds = ev.agg(
         ((min(col("ts_us")) + max(col("ts_us"))) / 2)
           .cast("long").as("__cut"))
-      val withCut = ev.crossJoin(broadcast(bounds))
+      val withCut = ev.crossJoin(bounds)
       val base = withCut.where(col("ts_us") < col("__cut")).drop("__cut")
       val delta = withCut.where(col("ts_us") >= col("__cut")).drop("__cut")
       val h = graft.ops.Scd2.historyFromChangeLog(
@@ -829,7 +829,7 @@ object PipelineQueries {
         .agg(coalesce(sum(col("__ca").cast("decimal(19,0)") *
           col("__cb").cast("decimal(19,0)")), lit(0).cast("decimal(38,0)"))
           .cast("long").as("true_join"))
-      est.crossJoin(broadcast(truth))
+      est.crossJoin(truth)
         .withColumn("overestimate_ratio",
           when(col("true_join") > 0,
             col("est_join").cast("double") / col("true_join").cast("double")))
@@ -2146,7 +2146,7 @@ object PipelineQueries {
       // join) instead of a driver head() that paid an extra full scan
       // + barrier per query — same cut date, same oracle
       val ev0 = Tables.events(s, d)
-      val ev = ev0.crossJoin(broadcast(ev0.agg(min(col("ts")).as("__mints"))))
+      val ev = ev0.crossJoin(ev0.agg(min(col("ts")).as("__mints")))
       graft.ops.Profiling.ksDrift(ev, Seq("event_type"), col("value"),
         to_date(col("ts")) < date_add(to_date(col("__mints")), 15))
     },
@@ -2204,7 +2204,7 @@ object PipelineQueries {
       // join) instead of a driver head() that paid an extra full scan
       // + barrier per query — same cut date, same oracle
       val ev0 = Tables.events(s, d)
-      val ev = ev0.crossJoin(broadcast(ev0.agg(min(col("ts")).as("__mints"))))
+      val ev = ev0.crossJoin(ev0.agg(min(col("ts")).as("__mints")))
       graft.ops.Profiling.mannWhitneyU(ev, Seq("event_type"),
         col("value"),
         to_date(col("ts")) < date_add(to_date(col("__mints")), 15))
@@ -2264,7 +2264,7 @@ object PipelineQueries {
       // eliminated" (measured net win stands). If the double scan ever
       // shows at scale, compute the min on the counts frame instead.
       val ev0 = Tables.events(s, d)
-      val ev = ev0.crossJoin(broadcast(ev0.agg(min(col("ts")).as("__mints"))))
+      val ev = ev0.crossJoin(ev0.agg(min(col("ts")).as("__mints")))
       graft.ops.Profiling.cvmDrift(ev, Seq("event_type"), col("value"),
           to_date(col("ts")) < date_add(to_date(col("__mints")), 15))
         .select(col("event_type"), col("n_a"), col("n_b"), col("cvm"))
@@ -2333,7 +2333,7 @@ object PipelineQueries {
       // join) instead of a driver head() that paid an extra full scan
       // + barrier per query — same cut date, same oracle
       val ev0 = Tables.events(s, d)
-      val ev = ev0.crossJoin(broadcast(ev0.agg(min(col("ts")).as("__mints"))))
+      val ev = ev0.crossJoin(ev0.agg(min(col("ts")).as("__mints")))
       graft.ops.Profiling.wassersteinDrift(ev, Seq("event_type"),
           round(col("value") * 100).cast("long"),
           to_date(col("ts")) < date_add(to_date(col("__mints")), 15),
@@ -2412,7 +2412,7 @@ object PipelineQueries {
       // join) instead of a driver head() that paid an extra full scan
       // + barrier per query — same cut date, same oracle
       val ev0 = Tables.events(s, d)
-      val ev = ev0.crossJoin(broadcast(ev0.agg(min(col("ts")).as("__mints"))))
+      val ev = ev0.crossJoin(ev0.agg(min(col("ts")).as("__mints")))
       // signed % on BOTH sides (not pmod): Spark's Remainder and
       // DuckDB's % agree for every sign of user_id; pmod would
       // silently diverge on a negative id (the null-order lesson
@@ -2480,7 +2480,7 @@ object PipelineQueries {
       // join) instead of a driver head() that paid an extra full scan
       // + barrier per query — same cut date, same oracle
       val ev0 = Tables.events(s, d)
-      val ev = ev0.crossJoin(broadcast(ev0.agg(min(col("ts")).as("__mints"))))
+      val ev = ev0.crossJoin(ev0.agg(min(col("ts")).as("__mints")))
       graft.ops.Profiling.kuiperDrift(ev, Seq("event_type"),
         hour(col("ts")),
         to_date(col("ts")) < date_add(to_date(col("__mints")), 15))
@@ -2667,7 +2667,7 @@ object PipelineQueries {
       // join) instead of a driver head() that paid an extra full scan
       // + barrier per query — same cut date, same oracle
       val ev0 = Tables.events(s, d)
-      val ev = ev0.crossJoin(broadcast(ev0.agg(min(col("ts")).as("__mints"))))
+      val ev = ev0.crossJoin(ev0.agg(min(col("ts")).as("__mints")))
       graft.ops.Profiling.ksDriftBucketed(ev, Seq("event_type"),
         col("value"),
         to_date(col("ts")) < date_add(to_date(col("__mints")), 15),

@@ -11,7 +11,8 @@ import graft.sources.Tables
   *
   * Scale notes (100 TB design):
   *  - Dimension tables (region/nation/supplier, and customer at typical
-  *    star-schema ratios) are broadcast — no shuffle on the fact side.
+  *    star-schema ratios) broadcast on their files' sizes, the planner's
+  *    call — no shuffle on the fact side while they fit its threshold.
   *  - Fact-fact joins (orders⋈lineitem) shuffle on the join key once;
   *    AQE handles skew splitting at runtime.
   *  - All aggregations are hash-based with map-side partial aggregation
@@ -135,9 +136,9 @@ object RelationalQueries {
       val c = Tables.customer(s, d).where(col("c_mktsegment") === "BUILDING")
       val o = Tables.orders(s, d).where(col("o_orderdate") < ts("1998-06-01"))
       val l = Tables.lineitem(s, d).where(col("l_shipdate") > ts("1998-06-01"))
-      // customer is the small side → broadcast; orders⋈lineitem shuffles
-      // once on the order key.
+      // orders⋈lineitem shuffles once on the order key.
       l.join(o, col("l_orderkey") === col("o_orderkey"))
+        // hint kept: c is a filter, priced at the customer scan's size
         .join(broadcast(c), col("o_custkey") === col("c_custkey"))
         .groupBy(col("l_orderkey"), col("o_orderdate"))
         .agg(sum(m(col("l_extendedprice")) * (oneR - r(col("l_discount"))))
@@ -170,14 +171,15 @@ object RelationalQueries {
         .where(col("o_orderdate") >= ts("1996-01-01") &&
                col("o_orderdate") < ts("1998-01-01"))
       val li = Tables.lineitem(s, d)
-      // dims (region→nation→supplier/customer) are broadcast; the single
-      // shuffle is lineitem⋈orders on the order key.
+      // dims (region→nation→supplier/customer) are base-table scans,
+      // sized by their files, so the planner broadcasts them while they
+      // fit; the single shuffle is lineitem⋈orders on the order key.
       li.join(ord, col("l_orderkey") === col("o_orderkey"))
-        .join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(supp), col("l_suppkey") === col("s_suppkey") &&
+        .join(cust, col("o_custkey") === col("c_custkey"))
+        .join(supp, col("l_suppkey") === col("s_suppkey") &&
           col("c_nationkey") === col("s_nationkey"))
-        .join(broadcast(nation), col("s_nationkey") === col("n_nationkey"))
-        .join(broadcast(region), col("n_regionkey") === col("r_regionkey"))
+        .join(nation, col("s_nationkey") === col("n_nationkey"))
+        .join(region, col("n_regionkey") === col("r_regionkey"))
         .groupBy(col("n_name"))
         .agg(sum(m(col("l_extendedprice")) * (oneR - r(col("l_discount"))))
           .cast("double").as("revenue"))
@@ -195,7 +197,7 @@ object RelationalQueries {
       GROUP BY n_name"""),
     headline = true)
 
-  // ------------------------------------------------- broadcast dim chain
+  // ------------------------------------------------------ dim chain
   private val qDim = QueryDef(
     "q_region_order_stats",
     (s, d) => {
@@ -203,9 +205,9 @@ object RelationalQueries {
       val c = Tables.customer(s, d)
       val n = Tables.nation(s, d)
       val rg = Tables.region(s, d)
-      o.join(broadcast(c), col("o_custkey") === col("c_custkey"))
-        .join(broadcast(n), col("c_nationkey") === col("n_nationkey"))
-        .join(broadcast(rg), col("n_regionkey") === col("r_regionkey"))
+      o.join(c, col("o_custkey") === col("c_custkey"))
+        .join(n, col("c_nationkey") === col("n_nationkey"))
+        .join(rg, col("n_regionkey") === col("r_regionkey"))
         .groupBy(col("r_name"))
         .agg(
           count(lit(1)).as("n_orders"),

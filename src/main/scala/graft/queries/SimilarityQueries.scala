@@ -1171,11 +1171,12 @@ object SimilarityQueries {
       val cent = flat.where(col("label") === 0)
         .groupBy(col("pos")).agg(sum(col("qv")).as("sq"))
       val nrmC = cent.agg(sum(col("sq") * col("sq")).as("nrm_c"))
+      // hint kept: cent is a grouped aggregate, priced at flat's size
       val scored = flat.join(broadcast(cent), Seq("pos"))
         .groupBy(col("vec_id"), col("label"))
         .agg(sum(col("qv") * col("sq")).as("qdot"),
           sum(col("qv") * col("qv")).as("nrm_v"))
-        .crossJoin(broadcast(nrmC))
+        .crossJoin(nrmC)
         .select(col("vec_id"),
           (col("label") === 0).cast("long").as("y"),
           (col("qdot") / (sqrt(col("nrm_v")) * sqrt(col("nrm_c"))))
@@ -1376,6 +1377,7 @@ object SimilarityQueries {
         .agg(sum(col("__hit")).as("n_hits"),
           sum(when(col("__hit") === 1, expr("60 * __cum div rank"))
             .otherwise(0L)).as("sum_prec60"))
+        // hint kept: cnt is a grouped aggregate, priced at emb's size
         .join(broadcast(cnt.withColumnRenamed("label", "__ql")),
           Seq("__ql"))
         .withColumn("denom_k",
@@ -1466,6 +1468,7 @@ object SimilarityQueries {
       val lc = lab.groupBy(col("label")).agg(count(lit(1)).as("__c"))
       val idcg = emb.where(col("vec_id") % 10 === 0)
         .select(col("vec_id").as("query_id"), col("label"))
+        // hint kept: lc is a grouped aggregate, priced at lab's size
         .join(broadcast(lc), Seq("label"))
         .select(col("query_id"),
           when(col("__c") - 1 <= 0, lit(0L))

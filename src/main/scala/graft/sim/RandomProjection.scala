@@ -79,6 +79,7 @@ object RandomProjection {
       project(col(vecCol), nProj, dim).as("__proj"))
     val q = proj.where(col(idCol) === queryId)
       .select(col(vecCol).as("__qvec"), col("__proj").as("__qproj"))
+    // hint kept: q is a filter, priced at df's size
     proj.where(col(idCol) =!= queryId)
       .crossJoin(broadcast(q))
       .select(col(idCol), col(vecCol), col("__qvec"),

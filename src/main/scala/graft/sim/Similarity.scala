@@ -56,6 +56,7 @@ object Similarity {
       scoreFn: (Column, Column) => Column): DataFrame = {
     val query = df.where(col(idCol) === queryId)
       .select(col(vecCol).as("__qvec"))
+    // hint kept: query is a filter, priced at df's size
     df.crossJoin(broadcast(query))
       .where(col(idCol) =!= queryId)
       .select(col(idCol), scoreFn(col(vecCol), col("__qvec")).as("score"))
@@ -219,6 +220,7 @@ object Similarity {
       .groupBy(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .agg(sum(col("a.qv") * col("b.qv")).as("qdot"))
     dots
+      // hint kept: norms is a grouped aggregate, priced at flat's size
       .join(broadcast(norms.toDF("id_a", "nrm_a")), Seq("id_a"))
       .join(broadcast(norms.toDF("id_b", "nrm_b")), Seq("id_b"))
       .select(col("id_a"), col("id_b"),
@@ -581,10 +583,12 @@ object Similarity {
       .agg(sum(col("qv")).as("sq"))
     val nrmC = cent.groupBy(col("label"))
       .agg(sum(col("sq") * col("sq")).as("nrm_c"))
+    // hint kept: cent and nrmC are grouped aggregates, priced at flat's size
     val scored = flat.join(broadcast(cent), Seq("label", "pos"))
       .groupBy(col("vec_id"), col("label"))
       .agg(sum(col("qv") * col("sq")).as("qdot"),
         sum(col("qv") * col("qv")).as("nrm_v"))
+      // hint kept: nrmC, as cent above
       .join(broadcast(nrmC), Seq("label"))
       .withColumn("cos_centroid",
         col("qdot") / (sqrt(col("nrm_v")) * sqrt(col("nrm_c"))))
@@ -614,6 +618,7 @@ object Similarity {
       scoreFn: (Column, Column) => Column =
         graft.functions.VectorFunctions.q_vec_cosine): DataFrame = {
     graft.functions.VectorFunctions.register(corpus.sparkSession)
+    // hint kept: queries is typically a filter, priced at the corpus's size
     val q = broadcast(queries.select(col(qIdCol).as("query_id"),
       col(qVecCol).as("__qv")))
     // r15: fanOut — the corpus is the stream side of the broadcast
@@ -675,6 +680,7 @@ object Similarity {
           .otherwise(l("i") - r("i"))), 1, probe))
       .select(col("query_id"), col("__qv"),
         explode(col("__probe")("i")).as("__cell"))
+    // hint kept: probes is priced above the cells (else the cells build)
     index.cells.join(broadcast(probes), col("cell") === col("__cell"))
       .where(col(idCol) =!= col("query_id"))
       .select(col("query_id"),
@@ -740,6 +746,7 @@ object Similarity {
   def hardNegatives(corpus: DataFrame, idCol: String, vecCol: String,
       labelCol: String, anchors: DataFrame, k: Int): DataFrame = {
     graft.functions.VectorFunctions.register(corpus.sparkSession)
+    // hint kept: anchors is typically a filter, priced at the corpus's size
     val a = broadcast(anchors.select(col(idCol).as("anchor_id"),
       col(vecCol).as("__av"), col(labelCol).as("__al")))
     corpus.crossJoin(a)
@@ -863,6 +870,7 @@ object Similarity {
       maxFactor: Int = 1 << 20, minSpread: Double = 4.0,
       index: Option[DataFrame] = None): (DataFrame, Int, Long, String) = {
     require(k >= 1 && initialFactor >= 1 && maxFactor >= initialFactor)
+    // hint kept: qFrame is a filter, priced at df's size
     val qFrame = broadcast(
       df.where(col(idCol) === queryId).select(col(vecCol).as("__qv")))
     val qn2 = BigInt(df.where(col(idCol) === queryId)

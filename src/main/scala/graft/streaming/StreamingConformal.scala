@@ -43,7 +43,7 @@ object StreamingConformal {
         .where(pmod(col("user_id"), lit(5)) =!= 0)
         .select(col("event_type"),
           col("value").cast(DecimalType(12, 2)).as("score"))
-        .join(broadcast(thr), Seq("event_type"))
+        .join(thr, Seq("event_type"))
         .groupBy(col("event_type"), col("n_cal"), col("qhat"))
         .agg(count(lit(1)).as("n_test"),
           sum(when(col("score") <= col("qhat"), 1L).otherwise(0L))

@@ -59,9 +59,10 @@ object Bm25 {
       .agg(count(lit(1)).as("tf"))
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val w = tf
+      // hint kept: dfreq is a grouped aggregate, priced at tf's size
       .join(broadcast(dfreq), Seq("term"))
       .join(dl, Seq("doc_id"))
-      .crossJoin(broadcast(stats))
+      .crossJoin(stats)
       .withColumn("w", weight(col("tf"), col("df"), col("dl"),
         col("avgdl"), col("n"), k1, b))
     // one column per query term, then a FIXED-ORDER sum: double addition

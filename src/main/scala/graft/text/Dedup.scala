@@ -201,6 +201,9 @@ object Dedup {
     }
     val banded = sigCk.select(col("id"), posexplode(array(bandCols: _*)))
       .withColumnsRenamed(Map("pos" -> "band", "col" -> "band_hash"))
+    // hint kept: without it the banding self-join plans as a sort-merge join.
+    // The hash build (~20 B band rows) cannot spill: size
+    // spark.sql.shuffle.partitions so one partition of banded rows fits.
     val rawPairs = banded.as("a").join(banded.as("b").hint("shuffle_hash"),
         col("a.band") === col("b.band") &&
         col("a.band_hash") === col("b.band_hash") &&
@@ -277,9 +280,8 @@ object Dedup {
     val est = (0 until numHashes).map(i =>
       when(col(s"a.mh_$i") === col(s"b.mh_$i"), 1).otherwise(0))
       .reduce(_ + _) / numHashes.toDouble
-    // index side streams; banded batch broadcasts (a day's batch is
-    // small next to the accumulated corpus — the defining asymmetry
-    // of this operator)
+    // hint kept: the batch's band explode is priced above the index scan
+    // (else the index builds); a day's batch is small next to the corpus
     val cand = banded(idx).as("a")
       .join(broadcast(banded(minhashSignaturesFrom(exB, numHashes))).as("b"),
         col("a.band") === col("b.band") &&
@@ -680,8 +682,9 @@ object Dedup {
     * every node takes the min rep among itself and its neighbours;
     * converged when no rep changes. Rounds needed = graph diameter —
     * near-dup components are tiny (chains of a few docs), so this
-    * terminates in a handful of shuffles; `maxIters` bounds pathological
-    * chains. Deterministic: min-id is order-independent.
+    * terminates in a handful of shuffles. A run that exhausts
+    * `maxIters` before a round changes nothing throws instead of
+    * returning split clusters. Deterministic: min-id is order-independent.
     *
     * @param pairs (id_a, id_b) undirected near-dup edges
     * @param ids   all document ids (isolated docs are their own rep)
@@ -739,12 +742,14 @@ object Dedup {
         case null => 0L
         case x => x.asInstanceOf[Long]
       }
-      if (sys.env.contains("GRAFT_CLUSTER_DEBUG"))
-        System.err.println(s"[cluster] iter=$i changed=$changed")
       labels = next
       converged = changed == 0
       i += 1
     }
+    if (!converged)
+      throw new IllegalStateException(
+        s"nearDupClusters: labels still changed after maxIters=$maxIters " +
+          "rounds — the clusters would be split; raise maxIters")
     labels.withColumn("is_keeper", (col("id") === col("rep")).cast("boolean"))
   }
 
@@ -841,6 +846,7 @@ object Dedup {
     val probeSh = shingleHashFrame(probes, idCol, textCol, shingleN)
       .select(col("s")).distinct()
     corpusSh
+      // hint kept: probeSh is a distinct, priced at the probes' size
       .join(broadcast(probeSh.withColumn("__hit", lit(1))), Seq("s"), "left")
       .groupBy(col("id").as(idCol))
       .agg(count(lit(1)).as("n_shingles"),
@@ -892,11 +898,11 @@ object Dedup {
       textCol: String, shingleN: Int,
       fpp: Double): (DataFrame, Array[Byte]) = {
     // Probe side is bounded by contract (benchmarks/blocklists) and
-    // feeds three consumers (count, sketch build, exact verify) →
-    // pinned, the no-unpersist-hook pattern.
+    // feeds two consumers (sketch build, exact verify) → pinned, the
+    // no-unpersist-hook pattern; the pin's row count sizes the sketch.
     val probeSh = Pin(shingleHashFrame(probes, idCol, textCol, shingleN)
       .select(col("s")).distinct(), MEMORY_AND_DISK_SER)
-    val nProbe = math.max(probeSh.count(), 1L)
+    val nProbe = math.max(Pin.rows(probeSh), 1L)
     val bf = probeSh.stat.bloomFilter("s", nProbe, fpp)
     val sketch = {
       val bos = new java.io.ByteArrayOutputStream()

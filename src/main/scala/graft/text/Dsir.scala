@@ -90,6 +90,7 @@ object Dsir {
       .select(col(idCol),
         explode(TextFunctions.tokens(col(textCol))).as("__t"))
       .select(col(idCol), bucketOf(col("__t"), buckets).as("bucket"))
+      // hint kept: model (≤ buckets rows) is priced at its input's size
       .join(broadcast(model), Seq("bucket"))
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_tokens"),

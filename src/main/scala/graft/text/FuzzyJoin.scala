@@ -101,7 +101,7 @@ object FuzzyJoin {
       } else assign
     val spark = df.sparkSession
     import spark.implicits._
-    val sup = broadcast(fixed.toSeq.toDF("__bkt", "__r"))
+    val sup = fixed.toSeq.toDF("__bkt", "__r")
     val tagged = base.join(sup, Seq("__bkt"))
     val wTail = Window.partitionBy(col("__r"))
       .orderBy(col("key").desc, col("id").desc)
@@ -371,7 +371,7 @@ object FuzzyJoin {
 
     // Two exact verification strategies — same result, opposite memory
     // shapes; `auto` picks by measured gram volume (exL/exR are pinned,
-    // so the deciding counts are cheap checkpoint-block scans):
+    // so the deciding counts are the pins' own row counts):
     //
     //  - "arrays" (small catalogs): the candidate occurrence stream
     //    passes through two joins against catalog-sized set tables (one
@@ -399,10 +399,7 @@ object FuzzyJoin {
       case "arrays" => false
       // ~16M gram rows ≈ 2×50k entities at ~150 grams each: well under
       // the measured 150M-row OOM cliff, well over every sf catalog.
-      // (r16: the two block-scan counts overlap — independent jobs)
-      case _ =>
-        val (nl, nr) = Dedup.inParallel(exL.count(), exR.count())
-        nl + nr > 16_000_000L
+      case _ => Pin.rows(exL) + Pin.rows(exR) > 16_000_000L
     }
     val verified = if (useCount) {
       candidates.distinct()

@@ -25,8 +25,8 @@ import graft.util.Pin
   *
   * Scale shape: training is two token-explode aggregates whose
   * exchanges carry (term, long) — vocabulary-sized outputs; the
-  * trained model broadcasts (bigram vocabulary of a trusted slice,
-  * bounded by contract). Scoring is map-side bigram explode + two
+  * pinned model broadcasts while its measured size fits the planner's
+  * threshold. Scoring is map-side bigram explode + two
   * broadcast joins + one per-doc partial-agg shuffle carrying
   * (id, count, sum). No UDFs; bigram assembly is a codegen'd HOF.
   */
@@ -54,12 +54,10 @@ object NgramLm {
   def train(trusted: DataFrame, textCol: String): Model = {
     val tok = trusted.where(length(trim(col(textCol))) > 0)
       .select(TextFunctions.tokens(col(textCol)).as("t"))
-    // Pinned (eager localCheckpoint): the unigram table feeds three
-    // consumers (vocab count, bigram smoothing join, backoff) and the
-    // finished model frames feed ≥ 2 consumers each in score() (the
-    // broadcast-reach count job + the join) — without pinning, every
-    // consumer would replay the training aggregates from the corpus.
-    // All three frames are vocabulary-sized, the pinning contract.
+    // Pinned: the unigram table feeds three consumers (vocab count,
+    // bigram smoothing join, backoff), and the model frames' measured
+    // sizes let the planner broadcast them into score()'s joins while
+    // they fit. All three are vocabulary-sized, the pinning contract.
     val uni = Pin(tok.select(explode(col("t")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("c1")))
     val vocab = Pin(uni.agg(count(lit(1)).as("v")))
@@ -68,23 +66,13 @@ object NgramLm {
       .groupBy(col("pair")).agg(count(lit(1)).as("c12"))
     val bigram = Pin(big
       .join(uni, substring_index(col("pair"), " ", 1) === col("w"))
-      .crossJoin(broadcast(vocab))
+      .crossJoin(vocab)
       .select(col("pair"),
         expr(s"$Scale * (c12 + 1) div (c1 + v)").as("cond_ppm")))
-    val backoff = Pin(uni.crossJoin(broadcast(vocab))
+    val backoff = Pin(uni.crossJoin(vocab)
       .select(col("w"), expr(s"$Scale div (c1 + v)").as("bo_ppm")))
     Model(bigram, backoff, vocab)
   }
-
-  /** Past this many observed bigrams the model stops being
-    * broadcast-cheap (~40 B/row → ~80 MB) and scoring auto-switches to
-    * a shuffle join — the FuzzyJoin verify-side pattern. Natural
-    * language obeys Heaps' law (bigram vocabulary grows ~n^0.8 of the
-    * TRUSTED slice, not the corpus), so real models stay under this;
-    * the LmProbe synthetic uniform corpus is the adversarial case that
-    * crosses it.
-    */
-  val BroadcastMaxBigrams = 2000000L
 
   /** Score docs: mean bigram conditional likelihood in ppm. Docs with
     * < 2 tokens have no bigrams and are absent from the output (they
@@ -93,11 +81,6 @@ object NgramLm {
     */
   def score(docs: DataFrame, idCol: String, textCol: String,
       model: Model): DataFrame = {
-    // vocabulary-sized count job — decides broadcast vs shuffle join
-    val bigSide =
-      if (model.bigram.count() <= BroadcastMaxBigrams)
-        broadcast(model.bigram)
-      else model.bigram
     // fanOut: the bigram explode + model lookups are the per-row-
     // expensive stage; a single-split file would run it on one core
     // (AmplificationAudit caught 5.7 s/1-task at sf0.1)
@@ -111,11 +94,11 @@ object NgramLm {
         TextFunctions.tokens(col(textCol)).as("__toks"))
       .select(col("id"),
         explode(wordBigrams(col("__toks"))).as("pair"))
-      .join(bigSide, Seq("pair"), "left")
+      .join(model.bigram, Seq("pair"), "left")
       .withColumn("w1", substring_index(col("pair"), " ", 1))
-      .join(broadcast(model.backoff.withColumnRenamed("w", "w1")),
+      .join(model.backoff.withColumnRenamed("w", "w1"),
         Seq("w1"), "left")
-      .crossJoin(broadcast(model.vocab))
+      .crossJoin(model.vocab)
       .withColumn("w_ppm",
         coalesce(col("cond_ppm"), col("bo_ppm"), expr(s"$Scale div v")))
       .groupBy(col("id"))
@@ -181,7 +164,7 @@ object NgramLm {
       .select(col("pair"),
         expr(s"2 * $Scale * c12 div (5 * c1)").as("l2_ppm")))
     // L3: α²-scaled unigram relative frequency
-    val unigramCond = Pin(uni.crossJoin(broadcast(totals))
+    val unigramCond = Pin(uni.crossJoin(totals)
       .select(col("w"), expr(s"4 * $Scale * c1 div (25 * n)").as("l3_ppm")))
     SbModel(trigram, bigramCond, unigramCond, totals)
   }
@@ -192,8 +175,6 @@ object NgramLm {
     */
   def scoreStupidBackoff(docs: DataFrame, idCol: String, textCol: String,
       model: SbModel): DataFrame = {
-    def side(df: DataFrame): DataFrame =
-      if (df.count() <= BroadcastMaxBigrams) broadcast(df) else df
     graft.ops.Partitioning.fanOut(
         docs.where(length(trim(col(textCol))) > 0))
       .select(col(idCol).as("id"),
@@ -206,12 +187,12 @@ object NgramLm {
         lit(" "), element_at(col("__parts"), 3)))
       .withColumn("__w3", element_at(col("__parts"), 3))
       .drop("__parts")
-      .join(side(model.trigram), Seq("tri"), "left")
-      .join(side(model.bigramCond.withColumnRenamed("pair", "__suffix")),
+      .join(model.trigram, Seq("tri"), "left")
+      .join(model.bigramCond.withColumnRenamed("pair", "__suffix"),
         Seq("__suffix"), "left")
-      .join(side(model.unigramCond.withColumnRenamed("w", "__w3")),
+      .join(model.unigramCond.withColumnRenamed("w", "__w3"),
         Seq("__w3"), "left")
-      .crossJoin(broadcast(model.vocab))
+      .crossJoin(model.vocab)
       .withColumn("w_ppm", coalesce(col("l1_ppm"), col("l2_ppm"),
         col("l3_ppm"), expr(s"4 * $Scale div (25 * v)")))
       .groupBy(col("id"))

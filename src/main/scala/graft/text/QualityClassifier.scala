@@ -50,6 +50,7 @@ object QualityClassifier {
     */
   def scoreDocs(docs: DataFrame, idCol: String, textCol: String,
       weights: DataFrame): DataFrame = {
+    // hint kept: weights is a grouped aggregate, priced at its input's size
     val model = broadcast(weights.select(col("term"), col("w_ppm")))
     docs.where(length(trim(col(textCol))) > 0)
       .select(col(idCol).as("id"),

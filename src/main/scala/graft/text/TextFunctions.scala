@@ -282,7 +282,7 @@ object TextFunctions {
     val total = counts.agg(sum(col("n_occurrences")).as("__tot"))
     val top = counts.orderBy(col("n_occurrences").desc, col("token")).limit(k)
     val w = Window.orderBy(col("n_occurrences").desc, col("token"))
-    top.crossJoin(broadcast(total))
+    top.crossJoin(total)
       .withColumn("rank", row_number().over(w))
       .withColumn("cum_share",
         sum(col("n_occurrences"))
@@ -341,7 +341,7 @@ object TextFunctions {
       .withColumn("token_id", row_number()
         .over(Window.orderBy(col("__n").desc, col("token"))).cast("int"))
       .select(col("token"), col("token_id"))
-    tok.join(broadcast(vocab), Seq("token"), "left")
+    tok.join(vocab, Seq("token"), "left")
       .select(col(idCol), col("pos"), col("token"), col("token_id"))
   }
 
@@ -697,6 +697,7 @@ object TextFunctions {
     val d18 = "decimal(18,0)"
     val totals = counts.groupBy(col("src"))
       .agg(sum(col("n")).cast(d18).as("tot"))
+    // hint kept: totals is a grouped aggregate, priced at counts' size
     val ct = counts.join(broadcast(totals), Seq("src"))
       .select(col("src"), col("t"), col("n").cast(d18).as("n"), col("tot"))
     val inner = ct.as("a").join(ct.as("b"),

@@ -202,7 +202,7 @@ object TfIdf {
       .agg(count(lit(1)).as("__n"))
       .where(col("__n") >= k)
       .agg(min(col("doc_id")).as("doc_id"))
-    p.join(broadcast(anchor), Seq("doc_id"))
+    p.join(anchor, Seq("doc_id"))
       .orderBy(col("tf").desc, col("term").asc)
       .limit(k)
       .select(col("term"))

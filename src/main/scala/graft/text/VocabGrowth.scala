@@ -35,7 +35,7 @@ object VocabGrowth {
     require(buckets >= 2, s"buckets must be >= 2, got $buckets")
     val spark = df.sparkSession
     val bounds = df.agg(min(col(idCol)).as("__lo"), max(col(idCol)).as("__hi"))
-    val d = df.crossJoin(broadcast(bounds))
+    val d = df.crossJoin(bounds)
       .withColumn("__bucket",
         (expr(s"(($idCol - __lo) * $buckets) div (__hi - __lo + 1)") + 1)
           .cast("int"))
@@ -91,6 +91,7 @@ object VocabGrowth {
       .groupBy(col("source_a"), col("source_b"))
       .agg(count(lit(1)).as("common"))
     common
+      // hint kept: sizes is a grouped aggregate, priced at st's size
       .join(broadcast(sizes.select(col("__g").as("source_a"),
         col("__n").as("n_a"))), Seq("source_a"))
       .join(broadcast(sizes.select(col("__g").as("source_b"),

@@ -57,4 +57,13 @@ object Pin {
           s"Pin: localCheckpoint returned ${other.nodeName}, not a LogicalRDD")
     }
   }
+
+  /** The row count [[apply]] measured for `pinned`, one of its returned
+    * frames, read from the frame's statistics: no job runs. */
+  def rows(pinned: DataFrame): Long = pinned.queryExecution.analyzed match {
+    case lr: LogicalRDD if lr.stats.rowCount.isDefined => lr.stats.rowCount.get.toLong
+    case other =>
+      throw new IllegalArgumentException(
+        s"Pin.rows: ${other.nodeName} is not a frame returned by Pin")
+  }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.obs.ExecListener
+import graft.obs.{ExecListener, PlanCapture}
 import graft.util.Pin
 
 /** `graft.obs.ExecListener` is the one listener graft measures with:
@@ -34,6 +34,11 @@ class ExecListenerSpec extends AnyFunSuite {
       assert(totals.stageTotals.map(_.tasks).sum == totals.tasks, totals)
       assert(totals.topStages(3).map(_.taskMs) ==
         totals.stageTotals.map(_.taskMs).sorted.reverse.take(3), totals)
+      // a stage is named by the operators it runs, not by the AQE
+      // thread-pool call site that submitted it
+      val top = totals.topStages(1).head.name
+      assert("Exchange|WholeStageCodegen|HashAggregate".r.findFirstIn(top).isDefined &&
+        !top.contains(".java:"), top)
     } finally listener.detach()
   }
 

@@ -9,6 +9,7 @@ import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.graph.Graph
+import graft.obs.PlanCapture
 
 class GraphSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
   lazy val spark: SparkSession = Session.builder("graph-test", "4").getOrCreate()

@@ -11,6 +11,7 @@ import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.obs.PlanCapture
 import graft.util.Pin
 
 /** `Pin` is the one way graft pins a frame: an eager local checkpoint
@@ -66,6 +67,14 @@ class PinSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     assert(sJoins == Seq("shuffled"), sJoins)
     assert(sRows == bRows && bRows.nonEmpty)
+  }
+
+  test("Pin.rows: the measured row count, read without a job") {
+    val pinned = Pin(supplierAgg())
+    val ran = PlanCapture(spark)(Pin.rows(pinned))
+    assert(ran.jobs == 0, s"Pin.rows started ${ran.jobs} jobs")
+    assert(ran.value == pinned.count() && ran.value > 0)
+    intercept[IllegalArgumentException](Pin.rows(supplierAgg()))
   }
 
   test("Pin: starts no more jobs than a bare eager localCheckpoint") {

@@ -1,8 +1,14 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.obs.PlanCapture
 
 /** Physical-plan assertions: the properties that matter at 100 TB are
   * visible in the plan at any scale factor — filters reach the parquet
@@ -21,6 +27,58 @@ class PlanSpec extends AnyFunSuite {
 
   private def planString(name: String): String =
     executedPlan(name).toString
+
+  test("join hints: only the audited sites carry one, each with its reason") {
+    // every other join shape is the planner's call from a size that is
+    // exact or measured (a global aggregate, a pin, a local, range or
+    // limit frame, a table scan). These sites keep theirs: a side priced at
+    // its input's size (a filter, distinct or grouped aggregate), or a
+    // shape the planner does not pick. A new hint needs an edit here
+    // and a "hint kept:" reason above it.
+    val kept = Map(
+      "graph/Graph.scala" -> 1,
+      "ops/Conformal.scala" -> 1,
+      "ops/Experiment.scala" -> 2,
+      "ops/GroupQuantile.scala" -> 6,
+      "ops/NegativeSampling.scala" -> 3,
+      "ops/Privacy.scala" -> 1,
+      "ops/Profiling.scala" -> 1,
+      "ops/Ranking.scala" -> 1,
+      "ops/Resample.scala" -> 1,
+      "ops/Sampling.scala" -> 4,
+      "ops/Sketches.scala" -> 2,
+      "ops/Skyline.scala" -> 2,
+      "ops/SplitFinder.scala" -> 1,
+      "ops/Transitions.scala" -> 1,
+      "queries/AdvancedQueries.scala" -> 2,
+      "queries/RelationalQueries.scala" -> 1,
+      "queries/SimilarityQueries.scala" -> 3,
+      "sim/RandomProjection.scala" -> 1,
+      "sim/Similarity.scala" -> 9,
+      "text/Bm25.scala" -> 1,
+      "text/Dedup.scala" -> 3,
+      "text/Dsir.scala" -> 1,
+      "text/QualityClassifier.scala" -> 1,
+      "text/TextFunctions.scala" -> 1,
+      "text/VocabGrowth.scala" -> 2)
+    val hint = "\\bbroadcast\\(|\\.hint\\(".r
+    val root = Paths.get("src/main/scala/graft")
+    val sites = Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap { f =>
+        val lines = Files.readAllLines(f).asScala.toIndexedSeq
+        lines.indices.collect {
+          case i if !lines(i).trim.startsWith("*") &&
+              hint.findFirstIn(lines(i).split("//", 2)(0)).isDefined =>
+            (root.relativize(f).toString, i,
+              lines.slice(i - 3, i).exists(_.toLowerCase.contains("hint kept:")))
+        }
+      }
+    val perFile = sites.groupBy(_._1).view.mapValues(_.size).toMap
+    assert(perFile == kept, perFile)
+    val unexplained = sites.filterNot(_._3).map { case (f, i, _) => s"$f:${i + 1}" }
+    assert(unexplained.isEmpty, unexplained)
+  }
 
   test("q3: filters are pushed into the parquet scans") {
     val p = planString("q3_top_orders")

@@ -6,6 +6,7 @@ import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.obs.PlanCapture
 import graft.text.{Dedup, TextFunctions => TF}
 
 class TextDedupSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
@@ -242,6 +243,18 @@ class TextDedupSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         .toMap
       assert(shuffled == out, "broadcast vs shuffled label joins diverged")
     } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+  }
+
+  test("near-dup clustering throws when maxIters runs out before convergence") {
+    val ids = Seq(1L, 2L, 3L, 4L).toDF("doc_id")
+    val chain = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("id_a", "id_b")
+    val e = intercept[IllegalStateException](
+      Dedup.nearDupClusters(ids, "doc_id", chain, maxIters = 1))
+    assert(e.getMessage.contains("maxIters=1"), e.getMessage)
+    // the same chain with rounds to spare collapses to one cluster
+    val reps = Dedup.nearDupClusters(ids, "doc_id", chain, maxIters = 4)
+      .select("rep").distinct().collect().map(_.getLong(0))
+    assert(reps.toSeq == Seq(1L))
   }
 
   test("priority keepers: highest priority wins, ties to smaller id, one per cluster") {
