@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Pin
+
 /** Deterministic negative sampling — the contrastive-training data
   * primitive (in-batch negatives' offline twin): every anchor draws k
   * pseudo-random negatives from a shared candidate pool, reproducibly
@@ -11,8 +13,8 @@ import org.apache.spark.sql.functions._
   * md5(anchor:candidate), the repo-standard portable hash).
   *
   * Shape at 100 TB — two rungs, auto-selected by a measured pool size:
-  *  - pool within broadcast reach (approx-counted, default cap 4M
-  *    ids = ~32 MB of longs): broadcast it; anchors scan once; the
+  *  - pool within broadcast reach (pinned and row-counted, default
+  *    cap 4M ids = ~32 MB of longs): broadcast it; anchors scan once; the
   *    per-anchor draw ranking is the PairTopKAggregator partial
   *    top-k, so the anchor-side shuffle carries k (draw, id) pairs
   *    per anchor per mapper, never the N×|pool| draw matrix.
@@ -61,17 +63,15 @@ object NegativeSampling {
     // single-split anchor file serializes it (AmplificationAudit)
     val anchors = Partitioning.fanOut(
       df.select(col(idCol).cast("long").as("anchor_id")))
-    // rung decision: skip the corpus-sized approx-count job entirely
-    // when the caller forces the sharded rung (maxBroadcastPool <= 0)
-    val broadcastable = maxBroadcastPool > 0L && {
-      val poolN =
-        pool.agg(approx_count_distinct(col("neg_id"))).head().getLong(0)
-      poolN <= maxBroadcastPool
-    }
-    // hint kept: the approx count sized pool; the planner prices it at df's size
+    // rung decision from the pinned pool's measured row count; a caller
+    // forcing the sharded rung (maxBroadcastPool <= 0) skips the pin
+    val forced = maxBroadcastPool <= 0L
+    val poolP = if (forced) pool else Pin(pool)
     val joined =
-      if (broadcastable)
-        anchors.crossJoin(broadcast(pool))
+      if (!forced && Pin.rows(poolP) <= maxBroadcastPool)
+        // hint kept: a cross join past the broadcast threshold plans a
+        // CartesianProduct; the pin's measured count sized the pool
+        anchors.crossJoin(broadcast(poolP))
       else {
         // past broadcast reach: hash-shard the pool, replicate each
         // 8-byte anchor id across the shards, meet on the shard key.
@@ -81,7 +81,7 @@ object NegativeSampling {
         // anchors×pool digest stage as ONE task (measured 3.2 s of the
         // query's 3.9 s wall; the anchors fanOut alone was defeated).
         // No-op at real scale where the pool already has many splits.
-        val poolS = Partitioning.fanOut(pool).withColumn("__shard",
+        val poolS = Partitioning.fanOut(poolP).withColumn("__shard",
           pmod(xxhash64(col("neg_id")), lit(shards.toLong)).cast("int"))
         val anchorsS = anchors.select(col("anchor_id"),
           explode(sequence(lit(0), lit(shards - 1))).as("__shard"))

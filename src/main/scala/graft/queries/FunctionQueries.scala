@@ -115,13 +115,6 @@ object FunctionQueries {
         CAST(COUNT(json_extract_string(props, '$.k')) AS BIGINT) AS n_parsed
       FROM events GROUP BY event_type"""))
 
-  /** Build-once memo for the ORC layout (the bucketed-join contract):
-    * keyed on a content fingerprint so regenerated testdata forces a
-    * rewrite and repeat invocations serve the existing files.
-    */
-  private val builtOrc =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   /** ORC round-trip as a DATA-PLANE exhibit (MultiFormatSpec covers
     * the unit level): orders written once to an ORC layout, the
     * declared query reads it back and aggregates — the oracle runs on
@@ -134,14 +127,9 @@ object FunctionQueries {
   private val qOrcRoundtrip = QueryDef(
     "q_orc_roundtrip_totals",
     (s, d) => {
-      val tag = d.replaceAll("[^A-Za-z0-9]", "_") + "_" +
-        graft.util.DataFingerprint.of(s, s"$d/orders.parquet")
-      val base = System.getProperty("java.io.tmpdir") + s"/graft_orc_$tag"
-      if (builtOrc.add(base) &&
-          !new java.io.File(s"$base/_SUCCESS").exists()) {
-        graft.sources.MultiFormat.write(
-          Tables.orders(s, d), base, "orc")
-      }
+      // written once (util.BuildDir); repeat invocations serve the files
+      val base = graft.util.BuildDir(s, d, "graft_orc", "orders")(
+        graft.sources.MultiFormat.write(Tables.orders(s, d), _, "orc"))
       graft.sources.MultiFormat.read(s, base, format = Some("orc"))
         .groupBy(col("o_orderstatus"))
         .agg(count(lit(1)).as("n_orders"),
@@ -155,9 +143,6 @@ object FunctionQueries {
         CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price,
         CAST(COUNT(DISTINCT o_custkey) AS BIGINT) AS n_customers
       FROM orders GROUP BY o_orderstatus"""))
-
-  private val builtZorder =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** Z-ordered layout as a DATA-PLANE exhibit (LayoutSpec covers the
     * rectangle-bounds property): orders compacted into a
@@ -173,15 +158,10 @@ object FunctionQueries {
   private val qZorderScan = QueryDef(
     "q_zorder_scan_totals",
     (s, d) => {
-      val tag = d.replaceAll("[^A-Za-z0-9]", "_") + "_" +
-        graft.util.DataFingerprint.of(s, s"$d/orders.parquet")
-      val base = System.getProperty("java.io.tmpdir") + s"/graft_zord_$tag"
-      if (builtZorder.add(base) &&
-          !new java.io.File(s"$base/_SUCCESS").exists()) {
-        graft.ops.Compaction.compactZOrder(s, s"$d/orders.parquet", base,
+      val base = graft.util.BuildDir(s, d, "graft_zord", "orders")(
+        graft.ops.Compaction.compactZOrder(s, s"$d/orders.parquet", _,
           zCols = Seq("o_custkey", "o_totalprice"),
-          targetFileBytes = 256L * 1024)
-      }
+          targetFileBytes = 256L * 1024))
       s.read.parquet(base)
         .where(col("o_custkey") < 500 && col("o_totalprice") > 150000.0)
         .groupBy(col("o_orderstatus"))

@@ -461,27 +461,16 @@ object TextQueries {
     * as q_minhash_lsh_neardup, whose recall argument covers this
     * subset pair population → exact batch×corpus Jaccard oracle.
     */
-  private val builtNearDupIndexes =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Build-once memo for the served near-dup index (corpus =
-    * doc_id % 5 ≠ 0), shared by the batch and streaming exhibits —
+  /** The served near-dup index (corpus = doc_id % 5 ≠ 0), built once
+    * (util.BuildDir) and shared by the batch and streaming exhibits —
     * whichever runs first builds; both serve the same layout.
     */
   private def ensureNearDupIndex(s: org.apache.spark.sql.SparkSession,
-      d: String): String = {
-    // dir embeds a content fingerprint of the source parquet — a
-    // testdata regeneration mints a new dir and forces a rebuild
-    // instead of serving a stale index (util.DataFingerprint)
-    val dir = System.getProperty("java.io.tmpdir") +
-      "/graft_neardup_index_" + d.replaceAll("[^A-Za-z0-9]", "_") + "_" +
-      graft.util.DataFingerprint.of(s, s"$d/documents.parquet")
-    if (builtNearDupIndexes.add(dir))
+      d: String): String =
+    graft.util.BuildDir(s, d, "graft_neardup_index", "documents")(
       Dedup.buildAndWriteNearDupIndex(
         Tables.documents(s, d).where(col("doc_id") % 5 =!= 0),
-        "doc_id", "text", dir)
-    dir
-  }
+        "doc_id", "text", _))
 
   private val sqlServedNearDups = """
       WITH""" + sqlShingleCtes("documents") + """,
@@ -1307,18 +1296,17 @@ object TextQueries {
     (s, d) => graft.streaming.StreamingContamination.runBatchEquivalent(s, d),
     Some(sqlContamination))
 
-  /** The streaming filter's BLOOM rung, forced (maxLiteralShingles=0,
-    * the q_negative_samples_sharded forcing pattern): probe sketch
-    * built once, `foreachBatch` applies the batch Bloom prefilter +
-    * exact verify per micro-batch into a parquet sink. Per-document
-    * flags make per-batch application exactly the batch semantics, so
-    * the SAME oracle hash-checks the rung a production-sized probe set
-    * (past literal/broadcast reach) actually needs.
+  /** The streaming filter's BLOOM rung: probe sketch built once,
+    * `foreachBatch` applies the batch Bloom prefilter + exact verify
+    * per micro-batch into a parquet sink. Per-document flags make
+    * per-batch application exactly the batch semantics, so the SAME
+    * oracle hash-checks the rung a production-sized probe set (past
+    * literal/broadcast reach) actually needs.
     */
   private val qStreamContaminationBloom = QueryDef(
     "q_stream_contamination_bloom",
     (s, d) => graft.streaming.StreamingContamination
-      .runBatchEquivalentAuto(s, d, maxLiteralShingles = 0L),
+      .runBatchEquivalentBloom(s, d),
     Some(sqlContamination))
 
   /** Fuzzy entity-resolution join (FuzzyJoin.fuzzyJoinTop1): the part
@@ -1566,21 +1554,13 @@ object TextQueries {
       WHERE df.df BETWEEN 2 AND 50
       GROUP BY tf.term, df.df"""))
 
-  /** Build-once memo for the served inverted index (term-sharded
-    * parquet layout of q_inverted_index's banded bigram index). */
-  private val builtPhraseIndexes =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
+  /** The served inverted index (term-sharded parquet layout of
+    * q_inverted_index's banded bigram index), built once (util.BuildDir). */
   private def ensurePhraseIndex(s: org.apache.spark.sql.SparkSession,
-      d: String): String = {
-    val dir = System.getProperty("java.io.tmpdir") +
-      "/graft_phrase_index_" + d.replaceAll("[^A-Za-z0-9]", "_") + "_" +
-      graft.util.DataFingerprint.of(s, s"$d/documents.parquet")
-    if (builtPhraseIndexes.add(dir))
+      d: String): String =
+    graft.util.BuildDir(s, d, "graft_phrase_index", "documents")(
       graft.text.TfIdf.buildAndWriteIndex(Tables.documents(s, d),
-        "doc_id", "text", n = 2, minDf = 2L, maxDf = 50L, dir)
-    dir
-  }
+        "doc_id", "text", n = 2, minDf = 2L, maxDf = 50L, _))
 
   /** The inverted index's SERVE path (TfIdf.conjunctiveLookup): a
     * conjunctive two-phrase query answered from the term-sharded index

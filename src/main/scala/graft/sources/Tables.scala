@@ -75,14 +75,21 @@ object Tables {
     *    identically to how the DuckDB oracle reads the same file.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
-    import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
     // nanosAsLong is set at session bootstrap (Session.builder); the
     // belt-and-braces set here covers sessions built elsewhere, scoped
     // check-then-set so an already-configured session is never mutated
     if (!s.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true"))
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = apply(s, d, "events")
+    eventsTs(apply(s, d, "events"))
+  }
+
+  /** The `ts` dispatch of [[events]], shared with the streaming source
+    * (`StreamingRun.tableStream`): `events` read as a batch or as a
+    * stream must land the same session-UTC TimestampType.
+    */
+  def eventsTs(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
+    import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
     df.schema("ts").dataType match {
       case LongType =>
         df.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
@@ -95,7 +102,7 @@ object Tables {
         // run, not feed half-coerced timestamps to 24 queries
         throw new IllegalStateException(
           s"events.ts arrived as unrecognized physical type $other — " +
-            "extend the Tables.events dispatch for this layout")
+            "extend the Tables.eventsTs dispatch for this layout")
     }
   }
   def documents(s: SparkSession, d: String): DataFrame = apply(s, d, "documents")

@@ -130,27 +130,17 @@ object Sessionize {
     val snapshot = StreamingRun.withStatePartitions(spark, 4) { s =>
       import s.implicits._
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val fileEvents = StreamingHourPivot.eventsStream(s, sfDir)
+      val fileEvents = StreamingRun.tableStream(s, sfDir, "events")
         .select(col("user_id").cast("long").as("user_id"),
           col("event_id").cast("long").as("event_id"),
           col("ts").cast("timestamp").as("ts"))
         .as[Event]
       val sentinel =
         org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Event]
-      val name = "stream_sessions_snap"
-      val q = sessionizeStream(fileEvents.union(sentinel.toDS()), gapSeconds)
-        .writeStream.outputMode("append").format("memory").queryName(name)
-        .start()
-      try {
-        q.processAllAvailable()
-        sentinel.addData(Event(-1L, -1L,
-          new Timestamp((maxTsS + 2 * gapSeconds + 10) * 1000)))
-        q.processAllAvailable()
-      } finally q.stop()
-      val snap = s.createDataFrame(
-        s.table(name).collectAsList(), s.table(name).schema)
-      s.catalog.dropTempView(name)
-      snap
+      StreamingRun.drain(
+        sessionizeStream(fileEvents.union(sentinel.toDS()), gapSeconds).toDF(),
+        feeds = Seq(() => sentinel.addData(Event(-1L, -1L,
+          new Timestamp((maxTsS + 2 * gapSeconds + 10) * 1000)))))
     }
     val byStart = Window.partitionBy(col("user_id")).orderBy(col("start_s"))
     snapshot.where(col("user_id") >= 0L)

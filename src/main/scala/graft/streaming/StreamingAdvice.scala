@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -19,30 +17,17 @@ import org.apache.spark.sql.functions._
   */
 object StreamingAdvice {
 
-  private val nameCounter = new AtomicInteger(0)
-
   def runBatchEquivalent(spark: SparkSession, sfDir: String): DataFrame = {
     val candidates = Seq("user_id" -> "user_id",
       "event_type" -> "event_type")
-    candidates.map { case (name, c) =>
-      val sink = s"stream_advice_${nameCounter.incrementAndGet()}"
-      StreamingRun.withStatePartitions(spark, 4) { s =>
-        val counts = StreamingHourPivot.eventsStream(s, sfDir)
+    StreamingRun.withStatePartitions(spark, 4) { s =>
+      candidates.map { case (name, c) =>
+        val counts = StreamingRun.tableStream(s, sfDir, "events")
           .groupBy(col(c).as("__k"))
           .agg(count(lit(1)).as("__c"))
-        val q = counts.writeStream
-          .outputMode("complete")
-          .format("memory")
-          .queryName(sink)
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-        val snapshot = s.createDataFrame(
-          s.table(sink).collectAsList(), s.table(sink).schema)
-        s.catalog.dropTempView(sink)
-        graft.ops.Profiling.aggKeyAdviceFromCounts(snapshot, name,
-          parallelism = 32)
-      }
-    }.reduce(_ unionByName _)
+        graft.ops.Profiling.aggKeyAdviceFromCounts(
+          StreamingRun.drain(counts, "complete"), name, parallelism = 32)
+      }.reduce(_ unionByName _)
+    }
   }
 }

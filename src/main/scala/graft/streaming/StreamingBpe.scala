@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -22,26 +20,16 @@ import org.apache.spark.sql.functions._
   */
 object StreamingBpe {
 
-  private val nameCounter = new AtomicInteger(0)
-
   def runBatchEquivalent(spark: SparkSession, sfDir: String): DataFrame = {
     val docs = graft.sources.Tables.documents(spark, sfDir)
     val merges = graft.text.TextFunctions.bpeTrainMerges(docs, "text", rounds = 3)
       .orderBy("round")
       .collect().map(r => (r.getString(1), r.getString(2))).toSeq
-    val name = s"stream_bpe_${nameCounter.incrementAndGet()}"
     val snapshot = StreamingRun.withStatePartitions(spark, 4) { s =>
-      val stream = StreamingContamination.documentsStream(s, sfDir)
-      val counts = graft.text.TextFunctions
-        .bpeEncodeSymbols(stream, "text", merges)
-        .groupBy(col("symbol")).agg(count(lit(1)).as("n"))
-      val q = counts.writeStream
-        .outputMode("complete").format("memory").queryName(name).start()
-      try q.processAllAvailable() finally q.stop()
-      val snap = s.createDataFrame(
-        s.table(name).collectAsList(), s.table(name).schema)
-      s.catalog.dropTempView(name)
-      snap
+      StreamingRun.drain(graft.text.TextFunctions
+        .bpeEncodeSymbols(StreamingRun.tableStream(s, sfDir, "documents"),
+          "text", merges)
+        .groupBy(col("symbol")).agg(count(lit(1)).as("n")), "complete")
     }
     // ranking on the driver-resident snapshot — complete-mode sorts
     // don't belong in the continuous query

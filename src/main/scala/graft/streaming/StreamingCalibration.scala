@@ -27,28 +27,16 @@ object StreamingCalibration {
     // frozen model: never recomputed per batch
     val weights = Pin(QualityClassifier.trainTokenWeights(
       docs.where(col("doc_id") % 3 === 0), "text", col("lang") === "en"))
-    val buf = java.util.Collections.synchronizedList(
-      new java.util.ArrayList[org.apache.spark.sql.Row]())
-    def binPartials(batch: DataFrame): DataFrame =
-      QualityClassifier.scoreDocs(batch, "doc_id", "text", weights)
-        .join(batch.select(col("doc_id"), col("lang")), Seq("doc_id"))
-        .groupBy(expr("score_ppm div 2000").as("bin"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum((col("lang") === "en").cast("long")).as("n_pos"))
     StreamingRun.withStatePartitions(spark, 4) { s =>
-      val stream = StreamingContamination.documentsStream(s, sfDir)
-      val q = stream.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          buf.addAll(binPartials(batch).collectAsList())
-          (): Unit
-        }
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
+      val partials = StreamingRun.collectBatches(
+          StreamingRun.tableStream(s, sfDir, "documents")) { (batch, _) =>
+        QualityClassifier.scoreDocs(batch, "doc_id", "text", weights)
+          .join(batch.select(col("doc_id"), col("lang")), Seq("doc_id"))
+          .groupBy(expr("score_ppm div 2000").as("bin"))
+          .agg(count(lit(1)).as("n_docs"),
+            sum((col("lang") === "en").cast("long")).as("n_pos"))
+      }
+      graft.ops.Calibration.isotonicFromBins(partials)
     }
-    val partials = spark.createDataFrame(buf,
-      binPartials(docs.limit(0)).schema)
-    graft.ops.Calibration.isotonicFromBins(partials)
   }
 }

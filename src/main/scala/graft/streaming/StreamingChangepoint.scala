@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -23,29 +21,16 @@ import org.apache.spark.sql.functions._
   */
 object StreamingChangepoint {
 
-  private val nameCounter = new AtomicInteger(0)
-
-  def runBatchEquivalent(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = s"stream_changepoint_${nameCounter.incrementAndGet()}"
+  def runBatchEquivalent(spark: SparkSession, sfDir: String): DataFrame =
     StreamingRun.withStatePartitions(spark, 4) { s =>
-      val daily = StreamingHourPivot.eventsStream(s, sfDir)
+      val daily = StreamingRun.tableStream(s, sfDir, "events")
         .groupBy(col("event_type").as("__k"),
           to_date(col("ts")).as("__d"))
         .agg(count(lit(1)).as("__v"))
-      val q = daily.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-      val snapshot = s.createDataFrame(
-        s.table(name).collectAsList(), s.table(name).schema)
-      s.catalog.dropTempView(name)
-      graft.ops.Changepoint.bestSplitFromDaily(snapshot)
+      graft.ops.Changepoint.bestSplitFromDaily(
+        StreamingRun.drain(daily, "complete"))
         .withColumnRenamed("key", "event_type")
     }
-  }
 
   /** The CUSUM control chart on the same continuously-maintained
     * day-grain counts — "which day would the chart have alarmed",
@@ -53,24 +38,8 @@ object StreamingChangepoint {
     * through the identical batch code path (cusumFromDaily).
     */
   def runCusumBatchEquivalent(spark: SparkSession,
-      sfDir: String): DataFrame = {
-    val name = s"stream_cusum_${nameCounter.incrementAndGet()}"
-    StreamingRun.withStatePartitions(spark, 4) { s =>
-      val daily = StreamingHourPivot.eventsStream(s, sfDir)
-        .groupBy(col("event_type").as("k"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("c"))
-      val q = daily.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-      val snapshot = s.createDataFrame(
-        s.table(name).collectAsList(), s.table(name).schema)
-      s.catalog.dropTempView(name)
-      graft.ops.Changepoint.cusumFromDaily(snapshot, "event_type",
-        refDays = 7, slackPpm = 100000L, hPpm = 2000000L)
-    }
-  }
+      sfDir: String): DataFrame =
+    StreamingForecast.dailySnapshot(spark, sfDir,
+      graft.ops.Changepoint.cusumFromDaily(_, "event_type",
+        refDays = 7, slackPpm = 100000L, hPpm = 2000000L))
 }

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -28,8 +26,6 @@ import graft.util.Pin
   */
 object StreamingConformal {
 
-  private val nameCounter = new AtomicInteger(0)
-
   def runBatchEquivalent(spark: SparkSession, sfDir: String): DataFrame = {
     val eb = Tables.events(spark, sfDir).select(col("event_type"),
       col("user_id"), col("value").cast(DecimalType(12, 2)).as("score"))
@@ -37,9 +33,8 @@ object StreamingConformal {
     val thr = Pin(Conformal.threshold(
       eb.where(pmod(col("user_id"), lit(5)) === 0),
       Seq("event_type"), "score", covNum = 9, covDen = 10))
-    val name = s"stream_conformal_${nameCounter.incrementAndGet()}"
     StreamingRun.withStatePartitions(spark, 4) { s =>
-      val tallies = StreamingHourPivot.eventsStream(s, sfDir)
+      val tallies = StreamingRun.tableStream(s, sfDir, "events")
         .where(pmod(col("user_id"), lit(5)) =!= 0)
         .select(col("event_type"),
           col("value").cast(DecimalType(12, 2)).as("score"))
@@ -48,18 +43,8 @@ object StreamingConformal {
         .agg(count(lit(1)).as("n_test"),
           sum(when(col("score") <= col("qhat"), 1L).otherwise(0L))
             .as("n_covered"))
-      val q = tallies.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-      val snapshot = s.createDataFrame(
-        s.table(name).collectAsList(), s.table(name).schema)
-      s.catalog.dropTempView(name)
-      snapshot.select(col("event_type"), col("n_cal"),
-        col("qhat").cast("double").as("qhat"),
+      StreamingRun.drain(tallies, "complete").select(col("event_type"),
+        col("n_cal"), col("qhat").cast("double").as("qhat"),
         col("n_test"), col("n_covered"),
         (col("n_covered").cast("double") / col("n_test").cast("double"))
           .as("coverage"))

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -32,9 +30,7 @@ import graft.text.{Dedup, TextFunctions}
   * micro-batch runs the batch `applyBloomFlags` (map-side sketch
   * prefilter → exact semi-join verify → per-doc rollup). Flags are
   * per-document, so per-batch application IS the batch semantics —
-  * no cross-batch state. [[runBatchEquivalentAuto]] picks the rung by
-  * counting the probe's distinct shingles, the NgramLm
-  * broadcast→shuffle auto-switch pattern.
+  * no cross-batch state.
   *
   * The per-row HOF (`transform`) evaluates interpreted, ~6× the CPU of
   * the batch path's codegen'd explode (measured for the batch shapes,
@@ -42,31 +38,6 @@ import graft.text.{Dedup, TextFunctions}
   * the bulk-backfill tool.
   */
 object StreamingContamination {
-
-  private val nameCounter = new AtomicInteger(0)
-
-  /** Documents-shaped streaming source from the testdata layout. */
-  def documentsStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val path = s"$sfDir/documents.parquet"
-    // direct footer read — a readStream schema-inference job costs ~1 s
-    val schema = graft.ingest.Footers.schemaOf(
-      spark.sparkContext.hadoopConfiguration, path, nanosAsLong = false)
-    // Dispatch on the table's physical layout: the old unconditional
-    // pathGlobFilter-on-parent form matched leaf FILE names, so a
-    // documents.parquet written as a DIRECTORY (part-*.parquet inside)
-    // would silently discover zero files and emit an empty-but-
-    // "successful" result. A directory streams directly; a single file
-    // still needs the glob-on-parent form (FileStreamSource requires a
-    // directory basePath — a bare file path throws at getBatch).
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.getFileStatus(p).isDirectory)
-      spark.readStream.schema(schema).parquet(path)
-    else
-      spark.readStream.schema(schema)
-        .option("pathGlobFilter", p.getName)
-        .parquet(p.getParent.toString)
-  }
 
   /** Per-row DISTINCT shingle-hash array — the map-side twin of
     * `Dedup.shingleHashFrame`'s exploded rows: same tokenization, same
@@ -113,55 +84,17 @@ object StreamingContamination {
     * shared DuckDB oracle hash-checks.
     */
   def runBatchEquivalent(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = s"stream_contamination_${nameCounter.incrementAndGet()}"
     val docs = Tables.documents(spark, sfDir)
     val probeShingles = Dedup.shingleHashFrame(
         docs.where(col("doc_id") % 97 === 0), "doc_id", "text", 3)
       .select(col("s")).distinct()
       .collect().map(_.getLong(0)).sorted
     StreamingRun.withStatePartitions(spark, 4) { s =>
-      val stream = documentsStream(s, sfDir)
+      val stream = StreamingRun.tableStream(s, sfDir, "documents")
         .where(col("doc_id") % 97 =!= 0)
-      val flagged = flagStream(stream, "doc_id", "text", probeShingles)
-      val q = flagged.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-      // The memory sink holds the whole flagged corpus on the driver;
-      // without dropping the view, repeated invocations (bench min-of-N)
-      // accumulate driver memory ∝ result × iterations. Snapshot the
-      // bounded result into a local frame, then release the sink.
-      val snapshot = s.createDataFrame(
-        s.table(name).collectAsList(), s.table(name).schema)
-      s.catalog.dropTempView(name)
-      snapshot
+      StreamingRun.drain(
+        flagStream(stream, "doc_id", "text", probeShingles))
     }
-  }
-
-  /** Probe sets past this many distinct shingles stop being literal-
-    * array-cheap in the stream's plan (8 B/hash plus per-task literal
-    * deserialization) and the driver auto-switches to the Bloom rung.
-    */
-  val MaxLiteralProbeShingles = 4000000L
-
-  /** Rung dispatch: one bounded count job over the probe's distinct
-    * shingles decides literal-array (map-side, zero shuffle) vs
-    * foreachBatch Bloom (sketch prefilter + exact verify). Both rungs
-    * emit identical rows — the shared batch oracle hash-checks either.
-    */
-  def runBatchEquivalentAuto(spark: SparkSession, sfDir: String,
-      maxLiteralShingles: Long = MaxLiteralProbeShingles): DataFrame = {
-    val docs = Tables.documents(spark, sfDir)
-    val nProbeShingles =
-      if (maxLiteralShingles <= 0L) Long.MaxValue // rung forced: skip the job
-      else Dedup.shingleHashFrame(
-          docs.where(col("doc_id") % 97 === 0), "doc_id", "text", 3)
-        .agg(approx_count_distinct(col("s"))).head().getLong(0)
-    if (nProbeShingles <= maxLiteralShingles) runBatchEquivalent(spark, sfDir)
-    else runBatchEquivalentBloom(spark, sfDir)
   }
 
   /** The Bloom rung driven batch-equivalently: build the probe sketch
@@ -181,20 +114,13 @@ object StreamingContamination {
     StreamingRun.withStatePartitions(spark, 4) { s =>
       val outDir = java.nio.file.Files.createTempDirectory("graft_stream_bloom")
       try {
-        val stream = documentsStream(s, sfDir)
+        val stream = StreamingRun.tableStream(s, sfDir, "documents")
           .where(col("doc_id") % 97 =!= 0)
-        val q = stream.writeStream
-          .outputMode("append")
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-              org.apache.spark.sql.Row], _: Long) =>
-            Dedup.applyBloomFlags(batch.toDF(), probeSh, sketch,
-                "doc_id", "text", shingleN = 3, minOverlap = 1)
-              .write.mode("append").parquet(outDir.toString)
-            ()
-          }
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
+        StreamingRun.eachBatch(stream) { (batch, _) =>
+          Dedup.applyBloomFlags(batch, probeSh, sketch,
+              "doc_id", "text", shingleN = 3, minOverlap = 1)
+            .write.mode("append").parquet(outDir.toString)
+        }
         // snapshot to the driver (bounded: per-doc flags) BEFORE the
         // finally deletes the backing files
         val res = s.read.parquet(outDir.toString)

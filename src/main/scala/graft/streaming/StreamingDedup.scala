@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -21,8 +19,6 @@ import org.apache.spark.sql.functions._
   */
 object StreamingDedup {
 
-  private val nameCounter = new AtomicInteger(0)
-
   /** Unbounded transform: first row per key within the watermark. */
   def dedupStream(df: DataFrame, keyCols: Seq[String], tsCol: String,
       watermarkDelay: String = "1 hour"): DataFrame =
@@ -33,19 +29,11 @@ object StreamingDedup {
     * the distinct (user_id, event_type) key set for the oracle compare.
     */
   def runBatchEquivalent(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = s"stream_dedup_${nameCounter.incrementAndGet()}"
     StreamingRun.withStatePartitions(spark, 4) { s =>
-      val stream = StreamingHourPivot.eventsStream(s, sfDir)
-      val deduped = dedupStream(stream, Seq("user_id", "event_type"), "ts")
-        .select(col("user_id"), col("event_type"))
-      val q = deduped.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-      s.table(name)
+      StreamingRun.drain(dedupStream(
+        StreamingRun.tableStream(s, sfDir, "events"),
+        Seq("user_id", "event_type"), "ts")
+        .select(col("user_id"), col("event_type")))
     }
   }
 }

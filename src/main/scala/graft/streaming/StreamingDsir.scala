@@ -25,23 +25,11 @@ object StreamingDsir {
     val docs = Tables.documents(spark, sfDir)
     val model = Dsir.importanceModel(
       docs.where(col("lang") === "en"), docs, "text", 1024)
-    val buf = java.util.Collections.synchronizedList(
-      new java.util.ArrayList[org.apache.spark.sql.Row]())
-    def score(batch: DataFrame) =
-      Dsir.weights(batch, "doc_id", "text", model, 1024)
     StreamingRun.withStatePartitions(spark, 4) { s =>
-      val stream = StreamingContamination.documentsStream(s, sfDir)
-      val q = stream.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          buf.addAll(score(batch).collectAsList())
-          (): Unit
-        }
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
+      StreamingRun.collectBatches(
+          StreamingRun.tableStream(s, sfDir, "documents")) { (batch, _) =>
+        Dsir.weights(batch, "doc_id", "text", model, 1024)
+      }
     }
-    val schema = score(docs.limit(0)).schema
-    spark.createDataFrame(buf, schema)
   }
 }

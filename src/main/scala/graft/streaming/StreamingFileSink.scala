@@ -29,7 +29,8 @@ object StreamingFileSink {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .start()
-    q.awaitTermination()
+    try q.awaitTermination()
+    finally q.stop()
   }
 
   /** Read back ONLY the committed output of a file-sink directory
@@ -66,8 +67,7 @@ object StreamingFileSink {
       // negative odd id would fall out of BOTH halves — silent loss
       val half = pmod(col("event_id"), lit(2L))
       ev.where(half === 0L).write.mode("append").parquet(src)
-      val schema = spark.read.parquet(src).schema
-      def stream = spark.readStream.schema(schema).parquet(src)
+      def stream = spark.readStream.schema(ev.schema).parquet(src)
       drainToParquet(stream, out, cp)
       // restart, same checkpoint, nothing new: must be a no-op
       drainToParquet(stream, out, cp)

@@ -1,8 +1,6 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BooleanType, DoubleType, StringType,
   StructField, StructType}
@@ -19,52 +17,30 @@ import org.apache.spark.sql.types.{BooleanType, DoubleType, StringType,
   */
 object StreamingForecast {
 
-  private val nameCounter = new AtomicInteger(0)
-
-  def runBatchEquivalent(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = s"stream_mase_${nameCounter.incrementAndGet()}"
+  /** Per-(event_type, day) event counts maintained as ONE complete-mode
+    * streaming aggregation, drained and folded by `fold` on the
+    * snapshot — the shared state of the day-count monitor twins.
+    */
+  private[streaming] def dailySnapshot(spark: SparkSession, sfDir: String,
+      fold: DataFrame => DataFrame): DataFrame =
     StreamingRun.withStatePartitions(spark, 4) { s =>
-      val daily = StreamingHourPivot.eventsStream(s, sfDir)
+      fold(StreamingRun.drain(StreamingRun.tableStream(s, sfDir, "events")
         .groupBy(col("event_type").as("k"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("c"))
-      val q = daily.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-      val snapshot = s.createDataFrame(
-        s.table(name).collectAsList(), s.table(name).schema)
-      s.catalog.dropTempView(name)
-      graft.ops.Forecast.maseFromDaily(snapshot, "event_type", season = 7)
+        .agg(count(lit(1)).as("c")), "complete"))
     }
-  }
+
+  def runBatchEquivalent(spark: SparkSession, sfDir: String): DataFrame =
+    dailySnapshot(spark, sfDir,
+      graft.ops.Forecast.maseFromDaily(_, "event_type", season = 7))
 
   /** Theil–Sen trend on the same continuously-maintained day counts —
     * the robust "is volume trending" monitor, refreshed per
     * micro-batch; identical batch fold on the snapshot.
     */
   def runTheilSenBatchEquivalent(spark: SparkSession,
-      sfDir: String): DataFrame = {
-    val name = s"stream_theilsen_${nameCounter.incrementAndGet()}"
-    StreamingRun.withStatePartitions(spark, 4) { s =>
-      val daily = StreamingHourPivot.eventsStream(s, sfDir)
-        .groupBy(col("event_type").as("k"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("c"))
-      val q = daily.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-      val snapshot = s.createDataFrame(
-        s.table(name).collectAsList(), s.table(name).schema)
-      s.catalog.dropTempView(name)
-      graft.ops.Forecast.theilSenFromDaily(snapshot, "event_type")
-    }
-  }
+      sfDir: String): DataFrame =
+    dailySnapshot(spark, sfDir,
+      graft.ops.Forecast.theilSenFromDaily(_, "event_type"))
 
   /** EWMA forecast-band monitor on the same continuously-maintained
     * day counts — "is today's volume inside the exponentially-
@@ -72,25 +48,9 @@ object StreamingForecast {
     * identical batch fold (`ewmaFromDaily`) on the snapshot.
     */
   def runEwmaBatchEquivalent(spark: SparkSession,
-      sfDir: String): DataFrame = {
-    val name = s"stream_ewma_${nameCounter.incrementAndGet()}"
-    StreamingRun.withStatePartitions(spark, 4) { s =>
-      val daily = StreamingHourPivot.eventsStream(s, sfDir)
-        .groupBy(col("event_type").as("k"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("c"))
-      val q = daily.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-      val snapshot = s.createDataFrame(
-        s.table(name).collectAsList(), s.table(name).schema)
-      s.catalog.dropTempView(name)
-      graft.ops.Forecast.ewmaFromDaily(snapshot, "event_type")
-    }
-  }
+      sfDir: String): DataFrame =
+    dailySnapshot(spark, sfDir,
+      graft.ops.Forecast.ewmaFromDaily(_, "event_type"))
 
   /** Robust MAD outlier audit on a continuously-maintained VALUE
     * DISTRIBUTION: state = (type, value_cents, count) — bounded by
@@ -98,54 +58,26 @@ object StreamingForecast {
     * GroupQuantile.madFromDistribution per snapshot.
     */
   def runMadBatchEquivalent(spark: SparkSession,
-      sfDir: String): DataFrame = {
-    val name = s"stream_mad_${nameCounter.incrementAndGet()}"
+      sfDir: String): DataFrame =
     StreamingRun.withStatePartitions(spark, 4) { s =>
-      val dist = StreamingHourPivot.eventsStream(s, sfDir)
+      val dist = StreamingRun.tableStream(s, sfDir, "events")
         .groupBy(col("event_type"),
           (col("value").cast(
             org.apache.spark.sql.types.DataTypes.createDecimalType(12, 2))
             * 100).cast("long").as("__v"))
         .agg(count(lit(1)).as("__n"))
-      val q = dist.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-      val snapshot = s.createDataFrame(
-        s.table(name).collectAsList(), s.table(name).schema)
-      s.catalog.dropTempView(name)
       graft.ops.GroupQuantile.madFromDistribution(
-        snapshot, Seq("event_type"), k = 3L)
+        StreamingRun.drain(dist, "complete"), Seq("event_type"), k = 3L)
     }
-  }
 
   /** Day-of-week profile on the same continuously-maintained day
     * counts — "what does the weekly shape look like as of NOW";
     * identical batch fold (`dowProfileFromDaily`) on the snapshot.
     */
   def runDowProfileBatchEquivalent(spark: SparkSession,
-      sfDir: String): DataFrame = {
-    val name = s"stream_dow_${nameCounter.incrementAndGet()}"
-    StreamingRun.withStatePartitions(spark, 4) { s =>
-      val daily = StreamingHourPivot.eventsStream(s, sfDir)
-        .groupBy(col("event_type").as("k"), to_date(col("ts")).as("day"))
-        .agg(count(lit(1)).as("c"))
-      val q = daily.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-      val snapshot = s.createDataFrame(
-        s.table(name).collectAsList(), s.table(name).schema)
-      s.catalog.dropTempView(name)
-      graft.ops.Forecast.dowProfileFromDaily(snapshot, "event_type")
-    }
-  }
+      sfDir: String): DataFrame =
+    dailySnapshot(spark, sfDir,
+      graft.ops.Forecast.dowProfileFromDaily(_, "event_type"))
 
   /** Rolling HLL reach on continuously-maintained SKETCH state: the
     * per-(day, bucket) max-rho registers are a streaming MAX
@@ -158,52 +90,29 @@ object StreamingForecast {
     * cross-engine because every 2^-M term is dyadic).
     */
   def runHllRollingBatchEquivalent(spark: SparkSession,
-      sfDir: String): DataFrame = {
-    val name = s"stream_hll_roll_${nameCounter.incrementAndGet()}"
+      sfDir: String): DataFrame =
     StreamingRun.withStatePartitions(spark, 4) { s =>
-      val ev = StreamingHourPivot.eventsStream(s, sfDir)
+      val ev = StreamingRun.tableStream(s, sfDir, "events")
         .select(to_date(col("ts")).as("day"), col("user_id"))
       val regs = graft.ops.Sketches.hllRegisters(ev, "user_id", Seq("day"))
-      val q = regs.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-      val snapshot = s.createDataFrame(
-        s.table(name).collectAsList(), s.table(name).schema)
-      s.catalog.dropTempView(name)
-      graft.ops.Sketches.hllRollingEstimate(snapshot, "day",
-        windowDays = 3)
+      graft.ops.Sketches.hllRollingEstimate(
+        StreamingRun.drain(regs, "complete"), "day", windowDays = 3)
     }
-  }
 
   /** Hamilton budget allocation on continuously-maintained stratum
     * counts — "how many rows does tonight's eval set take from each
     * type, as of NOW"; state = |strata| rows, fold per snapshot.
     */
   def runAllocationBatchEquivalent(spark: SparkSession,
-      sfDir: String): DataFrame = {
-    val name = s"stream_alloc_${nameCounter.incrementAndGet()}"
+      sfDir: String): DataFrame =
     StreamingRun.withStatePartitions(spark, 4) { s =>
-      val counts = StreamingHourPivot.eventsStream(s, sfDir)
+      val counts = StreamingRun.tableStream(s, sfDir, "events")
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_rows"))
-      val q = counts.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-      val snapshot = s.createDataFrame(
-        s.table(name).collectAsList(), s.table(name).schema)
-      s.catalog.dropTempView(name)
       graft.ops.Sampling.allocationFromCounts(
-        snapshot, Seq("event_type"), budget = 1000L)
+        StreamingRun.drain(counts, "complete"), Seq("event_type"),
+        budget = 1000L)
     }
-  }
 
   /** Streaming twin of q_ks_value_drift: the per-(type, value, pop)
     * distribution counts are ONE streaming aggregation (state =
@@ -275,23 +184,13 @@ object StreamingForecast {
       .distinct()
       .filter(col("eval_day") >= date_add(lit(minDay), 13))
       .collect().map(_.getDate(0))
-    val name = s"stream_ks_ts_${nameCounter.incrementAndGet()}"
     StreamingRun.withStatePartitions(spark, 4) { s =>
-      val dist = StreamingHourPivot.eventsStream(s, sfDir)
+      val dist = StreamingRun.tableStream(s, sfDir, "events")
         .filter(col("value").isNotNull && to_date(col("ts")).isNotNull)
         .groupBy(col("event_type"), col("value").as("__v"),
           to_date(col("ts")).as("__day"))
         .agg(count(lit(1)).as("__n"))
-      val q = dist.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-      val snapshot = s.createDataFrame(
-        s.table(name).collectAsList(), s.table(name).schema)
-      s.catalog.dropTempView(name)
+      val snapshot = StreamingRun.drain(dist, "complete")
       import scala.jdk.CollectionConverters._
       val evalFrame = s.createDataFrame(
         evalDays.toSeq.map(org.apache.spark.sql.Row(_)).asJava,
@@ -347,9 +246,8 @@ object StreamingForecast {
       groupExpr: org.apache.spark.sql.Column = col("event_type")): DataFrame = {
     val minTs = graft.sources.Tables.events(spark, sfDir)
       .agg(min(col("ts"))).head().getTimestamp(0)
-    val name = s"${prefix}_${nameCounter.incrementAndGet()}"
     StreamingRun.withStatePartitions(spark, 4) { s =>
-      val dist = StreamingHourPivot.eventsStream(s, sfDir)
+      val dist = StreamingRun.tableStream(s, sfDir, "events")
         // same null discipline as Profiling.driftCounts: a NULL value
         // has no CDF position and would also bloat state with a dead key
         .filter(valueExpr.isNotNull)
@@ -357,16 +255,7 @@ object StreamingForecast {
           (to_date(col("ts")) < date_add(to_date(lit(minTs)), 15))
             .as("__p"))
         .agg(count(lit(1)).as("__n"))
-      val q = dist.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-      val snapshot = s.createDataFrame(
-        s.table(name).collectAsList(), s.table(name).schema)
-      s.catalog.dropTempView(name)
+      val snapshot = StreamingRun.drain(dist, "complete")
       val counts = snapshot.groupBy(col(groupName), col("__v"))
         .agg(
           sum(when(col("__p"), col("__n")).otherwise(0L)).as("__na"),
@@ -421,48 +310,33 @@ object StreamingForecast {
     val arrivals = Seq(
       base.filter(col("__day") < date_add(d0, 23)).drop("__day"),
       base.filter(col("__day") >= date_add(d0, 23)).drop("__day"))
-    val snapshots =
-      scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Row])]
-    StreamingRun.withArrivalDir(arrivals) { srcDir =>
+    val schema = StructType(Seq(
+      StructField("event_type", StringType),
+      StructField("__v", DoubleType),
+      StructField("__p", BooleanType)))
+    val waves = StreamingRun.withArrivalDir(arrivals) { srcDir =>
       StreamingRun.withStatePartitions(spark, 4) { s =>
-        val schema = StructType(Seq(
-          StructField("event_type", StringType),
-          StructField("__v", DoubleType),
-          StructField("__p", BooleanType)))
-        val dist = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .option("latestFirst", "false")
-          .parquet(srcDir)
+        val dist = StreamingRun.arrivalStream(s, srcDir, schema)
           .groupBy(col("event_type"), col("__v"), col("__p"))
           .agg(count(lit(1)).as("__n"))
-        val q = dist.writeStream
-          .outputMode("complete")
-          .foreachBatch { (batchDf: Dataset[Row], batchId: Long) =>
-            val folded = graft.ops.Profiling.ksFromCounts(
-              batchDf.groupBy(col("event_type"), col("__v"))
-                .agg(
-                  sum(when(col("__p"), col("__n")).otherwise(0L))
-                    .as("__na"),
-                  sum(when(col("__p"), lit(0L)).otherwise(col("__n")))
-                    .as("__nb")),
-              Seq("event_type")).collect().toSeq
-            snapshots.synchronized { snapshots += ((batchId, folded)) }
-            ()
-          }
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
+        StreamingRun.collectBatches(dist, "complete") { (batch, batchId) =>
+          graft.ops.Profiling.ksFromCounts(
+            batch.groupBy(col("event_type"), col("__v"))
+              .agg(
+                sum(when(col("__p"), col("__n")).otherwise(0L))
+                  .as("__na"),
+                sum(when(col("__p"), lit(0L)).otherwise(col("__n")))
+                  .as("__nb")),
+            Seq("event_type"))
+            .select(lit(batchId + 1L).as("wave"), col("event_type"),
+              col("n_a"), col("n_b"), col("ks_num"), col("ks"))
+        }
       }
     }
-    require(snapshots.map(_._1).sorted == Seq(0L, 1L),
-      s"runKsAppended: expected exactly micro-batches 0 and 1, got " +
-        snapshots.map(_._1).sorted.mkString("[", ",", "]"))
-    import spark.implicits._
-    snapshots.toSeq
-      .flatMap { case (id, rows) =>
-        rows.map(r => (id + 1L, r.getString(0), r.getLong(1),
-          r.getLong(2), r.getLong(3), r.getDouble(4)))
-      }
-      .toDF("wave", "event_type", "n_a", "n_b", "ks_num", "ks")
+    val seen = waves.collect().map(_.getLong(0)).distinct.sorted.toSeq
+    require(seen == Seq(1L, 2L),
+      s"runKsAppended: expected exactly waves 1 and 2, got " +
+        seen.mkString("[", ",", "]"))
+    waves
   }
 }

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -28,41 +26,6 @@ import graft.ops.HourPivot
   *    streaming operator against the batch semantics.
   */
 object StreamingHourPivot {
-
-  private val nameCounter = new AtomicInteger(0)
-
-  /** Events-shaped streaming source from the testdata parquet layout.
-    * `ts` dispatches on the footer schema exactly like Tables.events:
-    * legacy int64-nanos layouts get the exact `DIV 1000` rebuild; the
-    * timestamp[us] layout converts to TimestampType directly (the
-    * Footers converter runs with NTZ inference off, mirroring how the
-    * session-UTC batch reader lands the same wall clock).
-    */
-  def eventsStream(spark: SparkSession, sfDir: String): DataFrame = {
-    // nanosAsLong is set at session bootstrap (Session.builder) — the
-    // old per-call conf.set here leaked session-wide
-    val path = s"$sfDir/events.parquet"
-    // direct footer read (~10 ms) — a spark.read.parquet().schema
-    // schema-inference job costs ~1 s and was a third of this query
-    val schema = graft.ingest.Footers.schemaOf(
-      spark.sparkContext.hadoopConfiguration, path, nanosAsLong = true)
-    // the file source requires a directory basePath; select the events
-    // file from the sf dir via glob filter
-    val raw = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir)
-    schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
-      case org.apache.spark.sql.types.TimestampType => raw
-      case other =>
-        // mirror Tables.events: an unrecognized third layout must fail
-        // loudly, not stream half-coerced timestamps
-        throw new IllegalStateException(
-          s"events.ts arrived as unrecognized physical type $other — " +
-            "extend the eventsStream dispatch for this layout")
-    }
-  }
 
   /** Unbounded hour-pivot transform with a watermark for state
     * eviction. Late rows beyond `watermarkDelay` are dropped in
@@ -99,19 +62,10 @@ object StreamingHourPivot {
     * return the final table (complete output mode, memory sink,
     * processAllAvailable → deterministic batch-equivalent result).
     */
-  def runBatchEquivalent(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = s"stream_hour_pivot_${nameCounter.incrementAndGet()}"
+  def runBatchEquivalent(spark: SparkSession, sfDir: String): DataFrame =
     StreamingRun.withStatePartitions(spark, 4) { s =>
-      val stream = eventsStream(s, sfDir)
-      val pivoted = pivotStream(stream, col("ts"), Seq("event_type"))
-      val q = pivoted.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-      s.table(name)
+      StreamingRun.drain(pivotStream(
+        StreamingRun.tableStream(s, sfDir, "events"), col("ts"),
+        Seq("event_type")), "complete")
     }
-  }
 }

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -22,8 +20,6 @@ import org.apache.spark.sql.functions._
   * continuous-query family to joins.
   */
 object StreamingJoin {
-
-  private val nameCounter = new AtomicInteger(0)
 
   /** (user_id, purchase_id, click_id, dt_us) for clicks within
     * `toleranceSec` of each purchase by the same user. Inner join →
@@ -57,21 +53,12 @@ object StreamingJoin {
       toleranceSec: Long = 600L, sliceMod: Option[Long] = None): DataFrame = {
     def slice(df: DataFrame): DataFrame =
       sliceMod.fold(df)(m => df.where(col("user_id") % m === 0))
-    val name = s"stream_join_${nameCounter.incrementAndGet()}"
     StreamingRun.withStatePartitions(spark, 4) { s =>
-      val purchases = slice(StreamingHourPivot.eventsStream(s, sfDir)
+      val purchases = slice(StreamingRun.tableStream(s, sfDir, "events")
         .where(col("event_type") === "purchase"))
-      val clicks = slice(StreamingHourPivot.eventsStream(s, sfDir)
+      val clicks = slice(StreamingRun.tableStream(s, sfDir, "events")
         .where(col("event_type") === "click"))
-      val joined = purchaseClickJoin(purchases, clicks, toleranceSec)
-      val q = joined.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-      s.table(name)
+      StreamingRun.drain(purchaseClickJoin(purchases, clicks, toleranceSec))
     }
   }
 }

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -26,25 +24,6 @@ import graft.sources.Tables
   */
 object StreamingKMeans {
 
-  private val nameCounter = new AtomicInteger(0)
-
-  /** Embeddings-shaped streaming source from the testdata layout
-    * (same file-vs-directory dispatch as the documents stream).
-    */
-  def embeddingsStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val path = s"$sfDir/embeddings.parquet"
-    val schema = graft.ingest.Footers.schemaOf(
-      spark.sparkContext.hadoopConfiguration, path, nanosAsLong = false)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.getFileStatus(p).isDirectory)
-      spark.readStream.schema(schema).parquet(path)
-    else
-      spark.readStream.schema(schema)
-        .option("pathGlobFilter", p.getName)
-        .parquet(p.getParent.toString)
-  }
-
   /** Unbounded transform: assign each arriving vector to its nearest
     * frozen centroid. Output matches `KMeans.fit`'s final assignment
     * row-for-row: (idCol, cluster, qdist).
@@ -64,26 +43,12 @@ object StreamingKMeans {
     */
   def runBatchEquivalent(spark: SparkSession, sfDir: String, k: Int,
       iters: Int): DataFrame = {
-    val name = s"stream_kmeans_${nameCounter.incrementAndGet()}"
     val cents = KMeans.fitCentroids(
       Tables.embeddings(spark, sfDir), "vec_id", "embedding", k, iters)
     StreamingRun.withStatePartitions(spark, 4) { s =>
-      val stream = embeddingsStream(s, sfDir)
-      val assigned = assignStream(stream, "vec_id", "embedding", cents)
-      val q = assigned.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-      // snapshot + drop: the memory sink otherwise accumulates across
-      // bench min-of-N invocations (same rationale as the
-      // contamination stream)
-      val snapshot = s.createDataFrame(
-        s.table(name).collectAsList(), s.table(name).schema)
-      s.catalog.dropTempView(name)
-      snapshot
+      StreamingRun.drain(assignStream(
+        StreamingRun.tableStream(s, sfDir, "embeddings"),
+        "vec_id", "embedding", cents))
     }
   }
 }

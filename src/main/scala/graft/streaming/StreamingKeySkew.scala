@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -24,25 +22,13 @@ import org.apache.spark.sql.functions._
   */
 object StreamingKeySkew {
 
-  private val nameCounter = new AtomicInteger(0)
-
   def runBatchEquivalent(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = s"stream_key_skew_${nameCounter.incrementAndGet()}"
     StreamingRun.withStatePartitions(spark, 4) { s =>
-      val counts = StreamingHourPivot.eventsStream(s, sfDir)
+      val counts = StreamingRun.tableStream(s, sfDir, "events")
         .groupBy(col("user_id").as("__key"))
         .agg(count(lit(1)).as("__c"))
-      val q = counts.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-      val snapshot = s.createDataFrame(
-        s.table(name).collectAsList(), s.table(name).schema)
-      s.catalog.dropTempView(name)
-      graft.ops.Profiling.keySkewAuditFromCounts(snapshot)
+      graft.ops.Profiling.keySkewAuditFromCounts(
+        StreamingRun.drain(counts, "complete"))
     }
   }
 }

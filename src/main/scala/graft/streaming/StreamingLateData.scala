@@ -1,14 +1,11 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType,
   TimestampType}
 
 import graft.sources.Tables
-import graft.util.Pin
 
 /** Watermarked LATE-DATA semantics, exercised for real (SURVEY §7.4
   * risk 5). The 31 streaming twins prove arrival-order independence by
@@ -65,8 +62,6 @@ import graft.util.Pin
   */
 object StreamingLateData {
 
-  private val nameCounter = new AtomicInteger(0)
-
   /** Replay `(ts, event_type)` batches in the given arrival order —
     * one micro-batch each (`StreamingRun.withArrivalDir`, the shared
     * modification-time-stamped harness) — through the watermarked hour
@@ -79,28 +74,14 @@ object StreamingLateData {
   def lateReplayPivot(spark: SparkSession, batches: Seq[DataFrame],
       watermarkDelay: String = "1 hour",
       outputMode: String = "append"): DataFrame = {
-    val name = s"stream_late_pivot_${nameCounter.incrementAndGet()}"
+    val schema = StructType(Seq(StructField("ts", TimestampType),
+      StructField("event_type", StringType)))
     StreamingRun.withArrivalDir(
       batches.map(_.select(col("ts"), col("event_type")))) { srcDir =>
       StreamingRun.withStatePartitions(spark, 4) { s =>
-        val schema = StructType(Seq(StructField("ts", TimestampType),
-          StructField("event_type", StringType)))
-        val stream = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .option("latestFirst", "false")
-          .parquet(srcDir)
-        val pivoted = StreamingHourPivot.pivotStream(
-          stream, col("ts"), Seq("event_type"),
-          watermarkDelay = watermarkDelay)
-        val q = pivoted.writeStream
-          .outputMode(outputMode)
-          .format("memory")
-          .queryName(name)
-          .start()
-        try q.processAllAvailable()
-        finally q.stop()
-        // materialize before the fixture directory is deleted
-        Pin(s.table(name))
+        StreamingRun.drain(StreamingHourPivot.pivotStream(
+          StreamingRun.arrivalStream(s, srcDir, schema), col("ts"),
+          Seq("event_type"), watermarkDelay = watermarkDelay), outputMode)
       }
     }
   }
@@ -111,7 +92,17 @@ object StreamingLateData {
     * kept-click set is a pure function of the data and the 3-day
     * delay.
     */
-  def runLateHourPivot(spark: SparkSession, sfDir: String): DataFrame = {
+  def runLateHourPivot(spark: SparkSession, sfDir: String): DataFrame =
+    lateClickReplay(spark, sfDir, Seq(_), "append")
+
+  /** The schedule the sf exhibits share: `nonClicks` splits the
+    * non-click events into their leading batches; then final-day
+    * clicks on time, every earlier click one epoch late and two
+    * far-future sentinels, replayed at a 3-day delay.
+    */
+  private def lateClickReplay(spark: SparkSession, sfDir: String,
+      nonClicks: DataFrame => Seq[DataFrame],
+      outputMode: String): DataFrame = {
     val ev = Tables.events(spark, sfDir)
       .select(col("ts"), col("event_type"))
     val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
@@ -121,13 +112,14 @@ object StreamingLateData {
     val sentinel = spark.range(1)
       .select(lit(sentinelTs).as("ts"),
         lit("__wm_sentinel").as("event_type"))
-    lateReplayPivot(spark, Seq(
-      ev.where(col("event_type") =!= "click"),
-      ev.where(col("event_type") === "click" &&
-        to_date(col("ts")) === lastDay),
-      ev.where(col("event_type") === "click" &&
-        to_date(col("ts")) =!= lastDay),
-      sentinel, sentinel), watermarkDelay = "3 days")
+    lateReplayPivot(spark,
+      nonClicks(ev.where(col("event_type") =!= "click")) ++ Seq(
+        ev.where(col("event_type") === "click" &&
+          to_date(col("ts")) === lastDay),
+        ev.where(col("event_type") === "click" &&
+          to_date(col("ts")) =!= lastDay),
+        sentinel, sentinel),
+      watermarkDelay = "3 days", outputMode = outputMode)
   }
 
   /** The SAME arrival replay in UPDATE output mode — the other half
@@ -148,25 +140,8 @@ object StreamingLateData {
     *    re-emits. The oracle reproduces both waves in SQL.
     */
   def runLateHourPivotUpdate(spark: SparkSession,
-      sfDir: String): DataFrame = {
-    val ev = Tables.events(spark, sfDir)
-      .select(col("ts"), col("event_type"))
-    val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
-    val lastDay = to_date(lit(maxTs))
-    val sentinelTs =
-      new java.sql.Timestamp(maxTs.getTime + 10L * 24 * 3600 * 1000)
-    val sentinel = spark.range(1)
-      .select(lit(sentinelTs).as("ts"),
-        lit("__wm_sentinel").as("event_type"))
-    lateReplayPivot(spark, Seq(
-      ev.where(col("event_type") =!= "click"),
-      ev.where(col("event_type") === "click" &&
-        to_date(col("ts")) === lastDay),
-      ev.where(col("event_type") === "click" &&
-        to_date(col("ts")) =!= lastDay),
-      sentinel, sentinel), watermarkDelay = "3 days",
-      outputMode = "update")
-  }
+      sfDir: String): DataFrame =
+    lateClickReplay(spark, sfDir, Seq(_), "update")
 
   /** Update mode where REAL business keys amend (r13 verdict #8 — in
     * [[runLateHourPivotUpdate]] every real group arrives in one batch,
@@ -189,25 +164,8 @@ object StreamingLateData {
     * split is byte-identical to the append exhibit's).
     */
   def runLateHourPivotUpdateSplit(spark: SparkSession,
-      sfDir: String): DataFrame = {
-    val ev = Tables.events(spark, sfDir)
-      .select(col("ts"), col("event_type"))
-    val maxTs = ev.agg(max(col("ts"))).head().getTimestamp(0)
-    val lastDay = to_date(lit(maxTs))
-    val sentinelTs =
-      new java.sql.Timestamp(maxTs.getTime + 10L * 24 * 3600 * 1000)
-    val sentinel = spark.range(1)
-      .select(lit(sentinelTs).as("ts"),
-        lit("__wm_sentinel").as("event_type"))
-    val nc = ev.where(col("event_type") =!= "click")
-    lateReplayPivot(spark, Seq(
-      nc.where(hour(col("ts")) < 12),
-      nc.where(hour(col("ts")) >= 12),
-      ev.where(col("event_type") === "click" &&
-        to_date(col("ts")) === lastDay),
-      ev.where(col("event_type") === "click" &&
-        to_date(col("ts")) =!= lastDay),
-      sentinel, sentinel), watermarkDelay = "3 days",
-      outputMode = "update")
-  }
+      sfDir: String): DataFrame =
+    lateClickReplay(spark, sfDir,
+      nc => Seq(nc.where(hour(col("ts")) < 12), nc.where(hour(col("ts")) >= 12)),
+      "update")
 }

@@ -29,25 +29,13 @@ object StreamingLm {
     * it. Returns the union of all micro-batch outputs.
     */
   def runBatchEquivalent(spark: SparkSession, sfDir: String): DataFrame = {
-    val docs = Tables.documents(spark, sfDir)
-    val model = NgramLm.train(docs.where(col("lang") === "en"), "text")
-    val buf = java.util.Collections.synchronizedList(
-      new java.util.ArrayList[org.apache.spark.sql.Row]())
-    def score(batch: DataFrame) =
-      NgramLm.score(batch, "doc_id", "text", model)
+    val model = NgramLm.train(
+      Tables.documents(spark, sfDir).where(col("lang") === "en"), "text")
     StreamingRun.withStatePartitions(spark, 4) { s =>
-      val stream = StreamingContamination.documentsStream(s, sfDir)
-      val q = stream.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          buf.addAll(score(batch).collectAsList())
-          (): Unit
-        }
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
+      StreamingRun.collectBatches(
+          StreamingRun.tableStream(s, sfDir, "documents")) { (batch, _) =>
+        NgramLm.score(batch, "doc_id", "text", model)
+      }
     }
-    val schema = score(docs.limit(0)).schema
-    spark.createDataFrame(buf, schema)
   }
 }

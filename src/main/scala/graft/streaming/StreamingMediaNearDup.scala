@@ -57,28 +57,15 @@ object StreamingMediaNearDup {
       Multimodal.mediaTable(
         mediaOf(Tables.documents(spark, sfDir))
           .where(pmod(col("media_id"), lit(5)) =!= 0))))
-    val buf = java.util.Collections.synchronizedList(
-      new java.util.ArrayList[org.apache.spark.sql.Row]())
-    def screened(batchDocs: DataFrame): DataFrame =
-      Dedup.hammingNearDupsAcross(
-        Multimodal.perceptualHashTable(
-          Multimodal.mediaTable(mediaOf(batchDocs)
-            .where(pmod(col("media_id"), lit(5)) === 0))),
-        corpusPhash, "media_id", "phash", maxHamming = 3, chunks = 4)
     StreamingRun.withStatePartitions(spark, 4) { s =>
-      val stream = StreamingContamination.documentsStream(s, sfDir)
-      val q = stream.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          buf.addAll(screened(batch).collectAsList())
-          (): Unit
-        }
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
+      StreamingRun.collectBatches(
+          StreamingRun.tableStream(s, sfDir, "documents")) { (batch, _) =>
+        Dedup.hammingNearDupsAcross(
+          Multimodal.perceptualHashTable(
+            Multimodal.mediaTable(mediaOf(batch)
+              .where(pmod(col("media_id"), lit(5)) === 0))),
+          corpusPhash, "media_id", "phash", maxHamming = 3, chunks = 4)
+      }
     }
-    val schema = screened(
-      Tables.documents(spark, sfDir).limit(0)).schema
-    spark.createDataFrame(buf, schema)
   }
 }

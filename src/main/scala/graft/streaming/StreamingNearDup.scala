@@ -42,30 +42,16 @@ object StreamingNearDup {
   def runBatchEquivalent(spark: SparkSession, sfDir: String,
       indexDir: String): DataFrame = {
     val corpus = Tables.documents(spark, sfDir).where(col("doc_id") % 5 =!= 0)
-    val buf = java.util.Collections.synchronizedList(
-      new java.util.ArrayList[org.apache.spark.sql.Row]())
-    def served(batch: DataFrame) =
-      Dedup.servedNearDups(batch.sparkSession, batch, corpus,
-        "doc_id", "text", indexDir, threshold = 0.5,
-        numHashes = 32, bands = 16, estThresholdOpt = Some(0.35))
     StreamingRun.withStatePartitions(spark, 4) { s =>
-      val stream = StreamingContamination.documentsStream(s, sfDir)
+      val stream = StreamingRun.tableStream(s, sfDir, "documents")
         .where(col("doc_id") % 5 === 0)
-      val q = stream.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          // collect is the memory-sink equivalent for the bounded
-          // exhibit; a deployment writes `served(batch)` to its sink
-          buf.addAll(served(batch).collectAsList())
-          (): Unit
-        }
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
+      // collecting is the memory-sink equivalent for the bounded
+      // exhibit; a deployment writes each batch's pairs to its sink
+      StreamingRun.collectBatches(stream) { (batch, _) =>
+        Dedup.servedNearDups(batch.sparkSession, batch, corpus,
+          "doc_id", "text", indexDir, threshold = 0.5,
+          numHashes = 32, bands = 16, estThresholdOpt = Some(0.35))
+      }
     }
-    // schema from the operator itself (empty-input plan), so a run that
-    // happened to see zero micro-batches still returns the right shape
-    val schema = served(corpus.limit(0)).schema
-    spark.createDataFrame(buf, schema)
   }
 }

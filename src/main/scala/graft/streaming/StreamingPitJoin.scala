@@ -30,31 +30,20 @@ object StreamingPitJoin {
     val history = Pin(graft.ops.Scd2.historyFromChangeLog(
       changelog, Seq("user_id"), "ts_us", "event_id", Seq("event_type")))
     StreamingRun.withStatePartitions(spark, 4) { s =>
-      val facts = StreamingHourPivot.eventsStream(s, sfDir)
+      val facts = StreamingRun.tableStream(s, sfDir, "events")
         .select(col("user_id").cast("long").as("user_id"),
           col("event_id").cast("long").as("event_id"),
           unix_micros(col("ts")).as("ts_us"))
       val h = history
         .select(col("user_id").as("h_user_id"), col("event_type"),
           col("valid_from"), col("valid_to"))
-      val enriched = facts.join(h,
+      StreamingRun.drain(facts.join(h,
         facts("user_id") === col("h_user_id") &&
           facts("ts_us") >= col("valid_from") &&
           (col("valid_to").isNull || facts("ts_us") < col("valid_to")),
         "left")
         .select(col("user_id"), col("event_id"), col("ts_us"),
-          col("event_type"), col("valid_from"))
-      val name = "stream_pit_snap"
-      val q = enriched.writeStream
-        .outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      val snap = s.createDataFrame(
-        s.table(name).collectAsList(), s.table(name).schema)
-      s.catalog.dropTempView(name)
-      snap
+          col("event_type"), col("valid_from")))
     }
   }
 }

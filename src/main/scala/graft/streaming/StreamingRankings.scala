@@ -33,10 +33,6 @@ object StreamingRankings {
     */
   def runRboBatchEquivalent(spark: SparkSession,
       sfDir: String): DataFrame = {
-    val bufA = java.util.Collections.synchronizedList(
-      new java.util.ArrayList[org.apache.spark.sql.Row]())
-    val bufB = java.util.Collections.synchronizedList(
-      new java.util.ArrayList[org.apache.spark.sql.Row]())
     def scored(batch: DataFrame): DataFrame =
       TF.withReadability(
         batch.select(col("doc_id"), col("source"), col("n_chars"),
@@ -52,32 +48,23 @@ object StreamingRankings {
       s.withColumn("__rn", row_number().over(w))
         .where(col("__rn") <= 10).drop("__rn")
     }
-    StreamingRun.withStatePartitions(spark, 4) { s =>
-      val stream = StreamingContamination.documentsStream(s, sfDir)
-      val q = stream.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val sc = Pin(scored(batch))
-          bufA.addAll(topPartial(sc, "flesch_milli").collectAsList())
-          bufB.addAll(topPartial(sc, "n_chars").collectAsList())
-          (): Unit
-        }
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
+    // both rankings' partials in one frame, tagged by ranking
+    val partials = StreamingRun.withStatePartitions(spark, 4) { s =>
+      StreamingRun.collectBatches(
+          StreamingRun.tableStream(s, sfDir, "documents")) { (batch, _) =>
+        val sc = Pin(scored(batch))
+        topPartial(sc, "flesch_milli").withColumn("__by", lit("a"))
+          .unionByName(topPartial(sc, "n_chars").withColumn("__by", lit("b")))
+      }
     }
-    val schema = scored(Tables.documents(spark, sfDir).limit(0)).schema
-    val ra = topPartial(spark.createDataFrame(bufA, schema), "flesch_milli")
-      .withColumn("pa", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("source"))
-          .orderBy(col("flesch_milli").desc, col("doc_id"))))
-    val rb = topPartial(spark.createDataFrame(bufB, schema), "n_chars")
-      .withColumn("pb", row_number().over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("source"))
-          .orderBy(col("n_chars").desc, col("doc_id"))))
+    def ranked(by: String, score: String, pos: String): DataFrame =
+      topPartial(partials.where(col("__by") === by).drop("__by"), score)
+        .withColumn(pos, row_number().over(
+          org.apache.spark.sql.expressions.Window.partitionBy(col("source"))
+            .orderBy(col(score).desc, col("doc_id"))))
+        .select(col("source"), col("doc_id"), col(pos))
     graft.ops.Eval.rboFromRankings(
-      ra.select(col("source"), col("doc_id"), col("pa")),
-      rb.select(col("source"), col("doc_id"), col("pb")),
+      ranked("a", "flesch_milli", "pa"), ranked("b", "n_chars", "pb"),
       Seq("source"), "doc_id", "pa", "pb", depth = 10)
   }
 
@@ -90,26 +77,13 @@ object StreamingRankings {
     * dictionary ids).
     */
   def runFeatureHashBatchEquivalent(spark: SparkSession,
-      sfDir: String): DataFrame = {
-    val buf = java.util.Collections.synchronizedList(
-      new java.util.ArrayList[org.apache.spark.sql.Row]())
-    def feats(batch: DataFrame): DataFrame =
-      graft.text.TfIdf.featureHash(batch, "doc_id", "text", dim = 64)
+      sfDir: String): DataFrame =
     StreamingRun.withStatePartitions(spark, 4) { s =>
-      val stream = StreamingContamination.documentsStream(s, sfDir)
-      val q = stream.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          buf.addAll(feats(batch).collectAsList())
-          (): Unit
-        }
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
+      StreamingRun.collectBatches(
+          StreamingRun.tableStream(s, sfDir, "documents")) { (batch, _) =>
+        graft.text.TfIdf.featureHash(batch, "doc_id", "text", dim = 64)
+      }
     }
-    spark.createDataFrame(buf,
-      feats(Tables.documents(spark, sfDir).limit(0)).schema)
-  }
 
   /** Ingest-time ratio decontamination: the frozen probe slice
     * (doc_id % 11 = 0) checks every arriving corpus micro-batch via
@@ -117,27 +91,16 @@ object StreamingRankings {
     */
   def runContainmentBatchEquivalent(spark: SparkSession,
       sfDir: String): DataFrame = {
-    val docs = Tables.documents(spark, sfDir)
-    val probes = Pin(docs.where(col("doc_id") % 11 === 0)
+    val probes = Pin(Tables.documents(spark, sfDir)
+      .where(col("doc_id") % 11 === 0)
       .select(col("doc_id"), col("text")))
-    val buf = java.util.Collections.synchronizedList(
-      new java.util.ArrayList[org.apache.spark.sql.Row]())
-    def score(batch: DataFrame): DataFrame =
-      graft.text.Dedup.containmentJoin(
-        batch.where(col("doc_id") % 11 =!= 0), probes,
-        "doc_id", "text", tNum = 1, tDen = 2)
     StreamingRun.withStatePartitions(spark, 4) { s =>
-      val stream = StreamingContamination.documentsStream(s, sfDir)
-      val q = stream.writeStream
-        .outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          buf.addAll(score(batch).collectAsList())
-          (): Unit
-        }
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
+      StreamingRun.collectBatches(
+          StreamingRun.tableStream(s, sfDir, "documents")) { (batch, _) =>
+        graft.text.Dedup.containmentJoin(
+          batch.where(col("doc_id") % 11 =!= 0), probes,
+          "doc_id", "text", tNum = 1, tDen = 2)
+      }
     }
-    spark.createDataFrame(buf, score(docs.limit(0)).schema)
   }
 }

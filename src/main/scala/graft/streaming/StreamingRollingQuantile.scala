@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -23,8 +21,6 @@ import org.apache.spark.sql.types.DecimalType
   */
 object StreamingRollingQuantile {
 
-  private val nameCounter = new AtomicInteger(0)
-
   def runBatchEquivalent(spark: SparkSession, sfDir: String): DataFrame = {
     import java.nio.file.Files
     val rows = graft.sources.Tables.events(spark, sfDir)
@@ -35,30 +31,18 @@ object StreamingRollingQuantile {
     val srcRoot = Files.createTempDirectory("graft_rollq_src")
     try {
       val src = srcRoot.toString
-      rows.where(col("event_id") % 2 === 0).drop("event_id")
-        .write.mode("append").parquet(src)
-      val schema = spark.read.parquet(src).schema
-      val name = s"stream_rollq_${nameCounter.incrementAndGet()}"
+      val even = rows.where(col("event_id") % 2 === 0).drop("event_id")
+      even.write.mode("append").parquet(src)
       val snapshot = StreamingRun.withStatePartitions(spark, 4) { s =>
-        val flows = s.readStream.schema(schema).parquet(src)
-        val q = flows
-          .groupBy(col("event_type"), col("__day"), col("__v"))
-          .agg(count(lit(1)).as("__n"))
-          .writeStream
-          .outputMode("complete")
-          .format("memory")
-          .queryName(name)
-          .start()
-        try {
-          q.processAllAvailable() // drain 1: even event_ids
-          rows.where(col("event_id") % 2 =!= 0).drop("event_id")
-            .write.mode("append").parquet(src)
-          q.processAllAvailable() // drain 2: odd ids fold INTO state
-        } finally q.stop()
-        val snap = s.createDataFrame(
-          s.table(name).collectAsList(), s.table(name).schema)
-        s.catalog.dropTempView(name)
-        snap
+        StreamingRun.drain(
+          s.readStream.schema(even.schema).parquet(src)
+            .groupBy(col("event_type"), col("__day"), col("__v"))
+            .agg(count(lit(1)).as("__n")),
+          "complete",
+          // drain 1 folds the even event_ids; the odd ones land after
+          // it and drain 2 must fold them INTO the existing state
+          feeds = Seq(() => rows.where(col("event_id") % 2 =!= 0)
+            .drop("event_id").write.mode("append").parquet(src)))
       }
       graft.ops.Resample.rollingQuantileFromDaily(
           snapshot, Seq("event_type"), windowDays = 7, num = 1L, den = 2L)

@@ -1,11 +1,106 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.util.concurrent.atomic.AtomicInteger
 
-/** Helpers for driving bounded batch-equivalence runs of streaming
-  * plans.
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
+
+import graft.sources.Tables
+
+/** The bounded-stream harness every batch-equivalence exhibit runs
+  * through: one table-stream source, one memory-sink drain and one
+  * per-batch collector, each query stopped in a `finally`. The drain
+  * and the collector return a driver-resident snapshot (a
+  * `LocalRelation`), so callers fold, self-join and return it like any
+  * batch frame after the query has stopped.
   */
 object StreamingRun {
+
+  private val sinkIds = new AtomicInteger(0)
+
+  /** Streaming source over `<sfDir>/<table>.parquet`. The schema comes
+    * from the footer (~10 ms; a readStream schema inference costs a
+    * ~1 s job). A directory streams directly; a single file streams
+    * through a glob on its parent, because FileStreamSource requires a
+    * directory basePath (a bare file path throws at getBatch). `events`
+    * gets `Tables.eventsTs`, the batch reader's `ts` dispatch.
+    */
+  def tableStream(spark: SparkSession, sfDir: String, table: String): DataFrame = {
+    val path = new org.apache.hadoop.fs.Path(s"$sfDir/$table.parquet")
+    val conf = spark.sparkContext.hadoopConfiguration
+    // nanosAsLong as set at session bootstrap (Session.builder)
+    val schema = graft.ingest.Footers.schemaOf(conf, path.toString,
+      nanosAsLong = true)
+    val raw =
+      if (path.getFileSystem(conf).getFileStatus(path).isDirectory)
+        spark.readStream.schema(schema).parquet(path.toString)
+      else spark.readStream.schema(schema)
+        .option("pathGlobFilter", path.getName)
+        .parquet(path.getParent.toString)
+    if (table == "events") Tables.eventsTs(raw) else raw
+  }
+
+  /** Run `stream` into a memory sink until it has processed all
+    * available input, then (for each of `feeds`, in order) feed more
+    * input and drain again. Returns the sink's final table as a driver
+    * snapshot and drops the sink's view. The snapshot must stay a
+    * local relation: the raw memory-sink frame cannot be self-joined
+    * (analysis fails resolving the conflicting `MemoryPlan` references).
+    */
+  def drain(stream: DataFrame, outputMode: String = "append",
+      feeds: Seq[() => Unit] = Nil): DataFrame = {
+    val s = stream.sparkSession
+    val name = s"graft_stream_${sinkIds.incrementAndGet()}"
+    try {
+      val q = stream.writeStream
+        .outputMode(outputMode)
+        .format("memory")
+        .queryName(name)
+        .start()
+      try {
+        q.processAllAvailable()
+        feeds.foreach { feed => feed(); q.processAllAvailable() }
+      } finally q.stop()
+      val table = s.table(name)
+      s.createDataFrame(table.collectAsList(), table.schema)
+    } finally s.catalog.dropTempView(name)
+  }
+
+  /** Run `f(batch, batchId)` on every micro-batch of `stream` until it
+    * has processed all available input. */
+  def eachBatch(stream: DataFrame, outputMode: String = "append")(
+      f: (DataFrame, Long) => Unit): Unit = {
+    val q = stream.writeStream
+      .outputMode(outputMode)
+      .foreachBatch { (batch: DataFrame, batchId: Long) => f(batch, batchId) }
+      .start()
+    try q.processAllAvailable()
+    finally q.stop()
+  }
+
+  /** Run `f(batch, batchId)` on every micro-batch of `stream` and
+    * return the union of its outputs as a driver snapshot. The schema
+    * is the first batch's output schema; only when no batch arrived is
+    * `f` planned over an empty frame of the stream's schema for it.
+    */
+  def collectBatches(stream: DataFrame, outputMode: String = "append")(
+      f: (DataFrame, Long) => DataFrame): DataFrame = {
+    val rows = new java.util.ArrayList[Row]()
+    var schema: Option[StructType] = None
+    eachBatch(stream, outputMode) { (batch, batchId) =>
+      val out = f(batch, batchId)
+      val got = out.collectAsList()
+      rows.synchronized {
+        if (schema.isEmpty) schema = Some(out.schema)
+        rows.addAll(got)
+      }
+    }
+    val s = stream.sparkSession
+    val outSchema = rows.synchronized(schema).getOrElse(
+      f(s.createDataFrame(java.util.Collections.emptyList[Row](),
+        stream.schema), -1L).schema)
+    s.createDataFrame(rows, outSchema)
+  }
 
   /** Recursive temp-dir delete for the batch-equivalence drivers —
     * closes the `Files.walk` stream (its javadoc requires it) and
@@ -38,7 +133,7 @@ object StreamingRun {
     * so a query running concurrently on the parent session (parallel
     * tests, ad-hoc work) never silently executes with the lowered
     * partition count. Callers build their streaming frames against the
-    * session passed to `f`.
+    * session passed to `f`, once per run.
     */
   def withStatePartitions[T](spark: SparkSession, n: Int)(f: SparkSession => T): T = {
     val s = spark.newSession()
@@ -48,12 +143,12 @@ object StreamingRun {
 
   /** Stage `batches` as one parquet file each with strictly increasing
     * modification times under a temp directory, run `f` with that
-    * directory's path, and delete everything afterwards. With
-    * `maxFilesPerTrigger=1` the file source then replays batch i as
-    * micro-batch i — the deterministic multi-arrival harness the
-    * late-data and appended-state exhibits drive their streams with.
-    * Fixed epoch + minute steps stamp the order deterministically
-    * however fast the writes ran.
+    * directory's path, and delete everything afterwards. Read through
+    * [[arrivalStream]] (`maxFilesPerTrigger=1`), the file source then
+    * replays batch i as micro-batch i — the deterministic multi-arrival
+    * harness the late-data and appended-state exhibits drive their
+    * streams with. Fixed epoch + minute steps stamp the order
+    * deterministically however fast the writes ran.
     */
   def withArrivalDir[T](batches: Seq[DataFrame])(f: String => T): T = {
     require(batches.nonEmpty, "withArrivalDir: no arrival batches")
@@ -79,4 +174,13 @@ object StreamingRun {
       f(srcDir.getAbsolutePath)
     } finally deleteRecursively(base.toPath)
   }
+
+  /** The stream over a [[withArrivalDir]] directory: one file, in
+    * modification-time order, per micro-batch. */
+  def arrivalStream(spark: SparkSession, srcDir: String,
+      schema: StructType): DataFrame =
+    spark.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1")
+      .option("latestFirst", "false")
+      .parquet(srcDir)
 }

@@ -96,7 +96,7 @@ object StreamingScd2 {
     val snapshot = StreamingRun.withStatePartitions(spark, 4) { s =>
       import s.implicits._
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
-      val fileChanges = StreamingHourPivot.eventsStream(s, sfDir)
+      val fileChanges = StreamingRun.tableStream(s, sfDir, "events")
         .select(col("user_id").cast("long").as("user_id"),
           col("event_id").cast("long").as("event_id"),
           col("ts").cast("timestamp").as("ts"),
@@ -105,21 +105,11 @@ object StreamingScd2 {
         .as[Change]
       val sentinel =
         org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Change]
-      val name = "stream_scd2_snap"
-      val q = scd2Stream(fileChanges.union(sentinel.toDS()), horizonSec)
-        .writeStream.outputMode("append").format("memory").queryName(name)
-        .start()
-      try {
-        q.processAllAvailable()
-        val flushS = maxTsS + 2L * horizonSec + 10L
-        sentinel.addData(Change(-1L, -1L, new Timestamp(flushS * 1000L),
-          flushS * 1000000L, "__sentinel"))
-        q.processAllAvailable()
-      } finally q.stop()
-      val snap = s.createDataFrame(
-        s.table(name).collectAsList(), s.table(name).schema)
-      s.catalog.dropTempView(name)
-      snap
+      val flushS = maxTsS + 2L * horizonSec + 10L
+      StreamingRun.drain(
+        scd2Stream(fileChanges.union(sentinel.toDS()), horizonSec).toDF(),
+        feeds = Seq(() => sentinel.addData(Change(-1L, -1L,
+          new Timestamp(flushS * 1000L), flushS * 1000000L, "__sentinel"))))
     }
     snapshot.where(col("user_id") >= 0L)
       .select(col("user_id"), col("event_type"), col("valid_from"),

@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -20,8 +18,6 @@ import org.apache.spark.sql.functions._
   * batch `cmsHeavyHitters` estimate join consumes exactly this table.
   */
 object StreamingSketch {
-
-  private val nameCounter = new AtomicInteger(0)
 
   /** Unbounded transform: the (j, bucket, n) counter stream (same
     * bucket derivation as Sketches — md5-portable).
@@ -49,25 +45,14 @@ object StreamingSketch {
     * served sketch, not part of ingest).
     */
   def runHllBatchEquivalent(spark: SparkSession, sfDir: String): DataFrame = {
-    val name = s"stream_hll_${nameCounter.incrementAndGet()}"
     val snapshot = StreamingRun.withStatePartitions(spark, 4) { s =>
-      val stream = StreamingContamination.documentsStream(s, sfDir)
-      val items = stream
+      val items = StreamingRun.tableStream(s, sfDir, "documents")
         .where(length(trim(col("text"))) > 0)
         .select(col("source"),
           explode(graft.text.TextFunctions.tokens(col("text"))).as("term"))
-      val q = graft.ops.Sketches.hllRegisters(items, "term", Seq("source"))
-        .writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-      val snap = s.createDataFrame(
-        s.table(name).collectAsList(), s.table(name).schema)
-      s.catalog.dropTempView(name)
-      snap
+      StreamingRun.drain(
+        graft.ops.Sketches.hllRegisters(items, "term", Seq("source")),
+        "complete")
     }
     graft.ops.Sketches.hllEstimate(snapshot, Seq("source"))
   }
@@ -76,21 +61,10 @@ object StreamingSketch {
     * return the final counter table (complete mode, memory sink).
     */
   def runBatchEquivalent(spark: SparkSession, sfDir: String,
-      d: Int = 4): DataFrame = {
-    val name = s"stream_cms_${nameCounter.incrementAndGet()}"
+      d: Int = 4): DataFrame =
     StreamingRun.withStatePartitions(spark, 4) { s =>
-      val stream = StreamingContamination.documentsStream(s, sfDir)
-      val q = sketchStream(stream, "text", d).writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try q.processAllAvailable()
-      finally q.stop()
-      val snapshot = s.createDataFrame(
-        s.table(name).collectAsList(), s.table(name).schema)
-      s.catalog.dropTempView(name)
-      snapshot
+      StreamingRun.drain(sketchStream(
+        StreamingRun.tableStream(s, sfDir, "documents"), "text", d),
+        "complete")
     }
-  }
 }

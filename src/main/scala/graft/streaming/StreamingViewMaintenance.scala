@@ -1,7 +1,5 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
@@ -26,8 +24,6 @@ import org.apache.spark.sql.types.DecimalType
   */
 object StreamingViewMaintenance {
 
-  private val nameCounter = new AtomicInteger(0)
-
   def runBatchEquivalent(spark: SparkSession, sfDir: String): DataFrame = {
     import java.nio.file.Files
     // q_incremental_agg's exact batch derivation
@@ -50,27 +46,15 @@ object StreamingViewMaintenance {
     try {
     val src = srcRoot.toString
     seedFlows.write.mode("append").parquet(src)
-    val schema = spark.read.parquet(src).schema
-    val name = s"stream_view_${nameCounter.incrementAndGet()}"
     val snapshot = StreamingRun.withStatePartitions(spark, 4) { s =>
-      val flows = s.readStream.schema(schema).parquet(src)
-      val q = flows
-        .groupBy(col("o_orderpriority"))
-        .agg(sum(col("n")).as("n"), sum(col("s")).as("s"))
-        .writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-      try {
-        q.processAllAvailable() // drain 1: the seed view materializes
-        changeFlows.write.mode("append").parquet(src)
-        q.processAllAvailable() // drain 2: the changeset folds in
-      } finally q.stop()
-      val snap = s.createDataFrame(
-        s.table(name).collectAsList(), s.table(name).schema)
-      s.catalog.dropTempView(name)
-      snap
+      StreamingRun.drain(
+        s.readStream.schema(seedFlows.schema).parquet(src)
+          .groupBy(col("o_orderpriority"))
+          .agg(sum(col("n")).as("n"), sum(col("s")).as("s")),
+        "complete",
+        // drain 1 materializes the seed view; the changeset lands after
+        // it and drain 2 folds it in
+        feeds = Seq(() => changeFlows.write.mode("append").parquet(src)))
     }
     // the snapshot is driver-resident, so the temp flow source can go
     // (repeated invocations — bench min-of-N, multi-SF sweeps — must

@@ -650,10 +650,12 @@ object Dedup {
       .where(col("__pos") <= col("__szq") - col("__alpha") + 1)
       .select(col("s"), col("id").as("query_id"), col("__szq"),
         col("__alpha"))
-    val cand = prefix
+    // pinned: the final join and dSets' semi-join both read it, which
+    // would otherwise plan (and run) the prefix ⋈ exC join twice
+    val cand = Pin(prefix
       .join(exC.withColumnsRenamed(Map("id" -> "doc_id")), Seq("s"))
       .select(col("query_id"), col("doc_id"), col("__szq"), col("__alpha"))
-      .distinct()
+      .distinct())
     // verify: full-overlap count over candidate docs only
     val qSets = exQ.groupBy(col("id").as("query_id"))
       .agg(collect_set(col("s")).as("__shq"))

@@ -11,8 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * (src/test/resources/events_layouts, pyarrow-written, identical rows)
   * must coerce to the SAME session-UTC TimestampType rows through BOTH
   * read paths — `Tables.events` (batch) and
-  * `StreamingHourPivot.eventsStream` (file-source stream) — and an
-  * unrecognized third layout must fail loudly, not pass through.
+  * `StreamingRun.tableStream` (file-source stream), which share the
+  * `Tables.eventsTs` dispatch — and an unrecognized third layout must
+  * fail loudly, not pass through.
   */
 class EventsLayoutSpec extends AnyFunSuite {
   lazy val spark: SparkSession =
@@ -54,7 +55,7 @@ class EventsLayoutSpec extends AnyFunSuite {
     }
     assert(eBatch.getMessage.contains("unrecognized physical type"))
     val eStream = intercept[IllegalStateException] {
-      graft.streaming.StreamingHourPivot.eventsStream(spark, bogusDir)
+      graft.streaming.StreamingRun.tableStream(spark, bogusDir, "events")
     }
     assert(eStream.getMessage.contains("unrecognized physical type"))
   }

@@ -630,7 +630,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("stream-stream join plans StreamingSymmetricHashJoin with watermarks") {
     import org.apache.spark.sql.functions.col
-    val ev = graft.streaming.StreamingHourPivot.eventsStream(spark, sf)
+    val ev = graft.streaming.StreamingRun.tableStream(spark, sf, "events")
     val joined = graft.streaming.StreamingJoin.purchaseClickJoin(
       ev.where(col("event_type") === "purchase"),
       ev.where(col("event_type") === "click"), 600L)

@@ -292,7 +292,7 @@ class StreamingSpec extends AnyFunSuite {
     // the routing plan must be stateless: no aggregates, no state store
     val cents = KMeans.fitCentroids(emb, "vec_id", "embedding", 4, 2)
     val plan = graft.streaming.StreamingKMeans.assignStream(
-      graft.streaming.StreamingKMeans.embeddingsStream(spark, sf),
+      graft.streaming.StreamingRun.tableStream(spark, sf, "embeddings"),
       "vec_id", "embedding", cents).queryExecution.analyzed.toString
     assert(!plan.contains("Aggregate"), plan)
   }
@@ -359,5 +359,54 @@ class StreamingSpec extends AnyFunSuite {
     assert(u1.length == 1)
     assert(u1(0).n_events == 2L)
     assert(u1(0).end_s - u1(0).start_s == 300L)
+  }
+
+  test("bounded-stream harness: only StreamingRun and the file sink start queries") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val allowed = Set("StreamingRun.scala", "StreamingFileSink.scala")
+    val banned = Seq("writeStream", "nameCounter", "synchronizedList",
+      ".limit(0)).schema")
+    val hits = Files.walk(Paths.get("src/main")).iterator.asScala
+      .filter(f => f.toString.endsWith(".scala") &&
+        !allowed(f.getFileName.toString))
+      .flatMap { f =>
+        val text = new String(Files.readAllBytes(f), "UTF-8")
+        banned.filter(text.contains).map(b => s"$f: $b")
+      }.toSeq
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("collectBatches: zero batches give an empty frame with the operator's schema") {
+    import graft.streaming.StreamingRun
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[Long]
+    var batches = 0
+    val out = StreamingRun.collectBatches(input.toDF()) { (batch, _) =>
+      batches += 1
+      batch.select((col("value") * 2).as("doubled"), lit("x").as("tag"))
+    }
+    assert(batches == 1, "only the schema fallback plans f")
+    assert(out.schema.fieldNames.toSeq == Seq("doubled", "tag"))
+    assert(out.schema("doubled").dataType ==
+      org.apache.spark.sql.types.LongType)
+    assert(out.collect().isEmpty)
+  }
+
+  test("drain: the snapshot is a local relation that self-joins") {
+    import graft.streaming.StreamingRun
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[Long]
+    input.addData(1L, 2L, 3L)
+    val snap = StreamingRun.drain(input.toDF().select(col("value").as("k")))
+    assert(snap.queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    val joined = snap.as("a")
+      .join(snap.as("b"), col("a.k") === col("b.k") + 1)
+      .select(col("a.k"), col("b.k"))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(joined == Set((2L, 1L), (3L, 2L)))
   }
 }
