@@ -20,7 +20,8 @@ object StreamingRun {
 
   /** Streaming source over `<sfDir>/<table>.parquet`. The schema comes
     * from the footer (~10 ms; a readStream schema inference costs a
-    * ~1 s job). A directory streams directly; a single file streams
+    * ~1 s job). A directory streams directly (a glob on its parent
+    * would match no leaf file and stream nothing); a single file streams
     * through a glob on its parent, because FileStreamSource requires a
     * directory basePath (a bare file path throws at getBatch). `events`
     * gets `Tables.eventsTs`, the batch reader's `ts` dispatch.
