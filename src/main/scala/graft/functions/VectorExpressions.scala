@@ -1,7 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.{classic, Column, GraftColumn}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression,
+  BloomFilterMightContain, Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
@@ -563,46 +564,16 @@ object QVecNearestL2Blocked {
   }
 }
 
+/** Column API over graft's native kernels. Each function builds its
+  * Catalyst expression directly, so it needs nothing registered on the
+  * session it runs on.
+  */
 object VectorFunctions {
-  /** Register `vec_dot` in the session's function registry — the
-    * public seam for exposing a custom Expression as a Column function
-    * in Spark 4 (Column↔Expression converters went private[sql]).
-    * Idempotent; call before using vec_dot/vec_cosine.
-    */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot", exprs => FloatVecDot(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "q_vec_dot", exprs => QuantizedVecDot(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_mat_score",
-      exprs => FloatMatVecScore(exprs(0), exprs(1), exprs(2)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "q_vec_nearest_l2",
-      exprs => QVecNearestL2(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "q_vec_nearest_l2_blocked",
-      exprs => QVecNearestL2Blocked(exprs(0), exprs(1), exprs(2)), "built-in")
-    // Spark ships BloomFilterMightContain for its runtime row-group
-    // filters but does not register it as a SQL function; graft's bloom
-    // prefilter (Dedup.contaminationFlagsBloom) evaluates it against a
-    // literal serialized sketch.
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bloom_might_contain",
-      exprs => org.apache.spark.sql.catalyst.expressions
-        .BloomFilterMightContain(exprs(0), exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "bpe_encode",
-      exprs => BpeEncode(exprs(0), exprs(1), exprs(2)), "built-in")
-  }
+  private def arg(c: Column): Expression = classic.ColumnConversions.expression(c)
 
-  /** Column API: codegen'd dot product of two array<float> columns.
-    * Requires register(spark) on the current session.
-    */
-  def vec_dot(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.functions.call_function
-    call_function("vec_dot", a, b)
-  }
+  /** Codegen'd dot product of two array<float> columns. */
+  def vec_dot(a: Column, b: Column): Column =
+    GraftColumn(FloatVecDot(arg(a), arg(b)))
 
   /** Codegen'd cosine from the native dot (3 tight loops, no HOFs). */
   def vec_cosine(a: Column, b: Column): Column = {
@@ -610,39 +581,26 @@ object VectorFunctions {
     vec_dot(a, b) / (sqrt(vec_dot(a, a)) * sqrt(vec_dot(b, b)))
   }
 
-  /** Batched constant-matrix scoring: array of `vec·row_j + bias_j`.
-    * Requires register(spark).
-    */
-  def vec_mat_score(vec: Column, flatMat: Column, bias: Column): Column = {
-    import org.apache.spark.sql.functions.call_function
-    call_function("vec_mat_score", vec, flatMat, bias)
-  }
+  /** Batched constant-matrix scoring: array of `vec·row_j + bias_j`. */
+  def vec_mat_score(vec: Column, flatMat: Column, bias: Column): Column =
+    GraftColumn(FloatMatVecScore(arg(vec), arg(flatMat), arg(bias)))
 
   /** Codegen'd k-means assignment kernel: [argmin_index, min_sq_l2]
     * of a quantized vector against a flat k×dim quantized matrix.
-    * Requires register(spark).
     */
-  def q_vec_nearest_l2(vec: Column, flatMat: Column): Column = {
-    import org.apache.spark.sql.functions.call_function
-    call_function("q_vec_nearest_l2", vec, flatMat)
-  }
+  def q_vec_nearest_l2(vec: Column, flatMat: Column): Column =
+    GraftColumn(QVecNearestL2(arg(vec), arg(flatMat)))
 
   /** Blocked exact variant for large k (triangle-inequality group
     * pruning + early abandon — see QVecNearestL2Blocked). flatMat must
-    * be a literal; k the row count. Requires register(spark).
+    * be a literal; k the row count.
     */
-  def q_vec_nearest_l2_blocked(vec: Column, flatMat: Column, k: Int): Column = {
-    import org.apache.spark.sql.functions.{call_function, lit}
-    call_function("q_vec_nearest_l2_blocked", vec, flatMat, lit(k))
-  }
+  def q_vec_nearest_l2_blocked(vec: Column, flatMat: Column, k: Int): Column =
+    GraftColumn(QVecNearestL2Blocked(arg(vec), arg(flatMat), Literal(k)))
 
-  /** Codegen'd quantized dot (exact integer sum on the 1e-4 grid).
-    * Requires register(spark).
-    */
-  def q_vec_dot(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.functions.call_function
-    call_function("q_vec_dot", a, b)
-  }
+  /** Codegen'd quantized dot (exact integer sum on the 1e-4 grid). */
+  def q_vec_dot(a: Column, b: Column): Column =
+    GraftColumn(QuantizedVecDot(arg(a), arg(b)))
 
   /** Codegen'd deterministic cosine — bit-identical to
     * `Similarity.quantizedCosine`'s HOF form, minus the interpreted
@@ -652,4 +610,17 @@ object VectorFunctions {
     import org.apache.spark.sql.functions.sqrt
     q_vec_dot(a, b) / (sqrt(q_vec_dot(a, a)) * sqrt(q_vec_dot(b, b)))
   }
+
+  /** Spark's own Bloom-filter membership test (the expression behind its
+    * runtime row-group filters, which it does not expose as a function)
+    * of `value` against a literal serialized sketch.
+    */
+  def bloom_might_contain(sketch: Column, value: Column): Column =
+    GraftColumn(BloomFilterMightContain(arg(sketch), arg(value)))
+
+  /** Trained-BPE encoding of one token (see [[BpeEncode]]); the merge
+    * table arrives as two literal array<string> columns.
+    */
+  def bpe_encode(tok: Column, lefts: Column, rights: Column): Column =
+    GraftColumn(BpeEncode(arg(tok), arg(lefts), arg(rights)))
 }

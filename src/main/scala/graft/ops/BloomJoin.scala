@@ -41,8 +41,6 @@ object BloomJoin {
   def bloomPrunedJoin(fact: DataFrame, build: DataFrame, factKey: String,
       buildKey: String, fpp: Double = 0.01,
       maxBuildKeys: Long = 100000000L): DataFrame = {
-    val spark = fact.sparkSession
-    graft.functions.VectorFunctions.register(spark)
     def join(f: DataFrame): DataFrame =
       if (factKey == buildKey) f.join(build, Seq(factKey))
       else f.join(build, f.col(factKey) === build.col(buildKey))
@@ -64,7 +62,8 @@ object BloomJoin {
         bos.toByteArray
       }
       join(fact.where(
-        call_function("bloom_might_contain", lit(bytes), col(factKey))))
+        graft.functions.VectorFunctions.bloom_might_contain(
+          lit(bytes), col(factKey))))
     }
   }
 }

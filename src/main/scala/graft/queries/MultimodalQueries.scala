@@ -79,7 +79,6 @@ object MultimodalQueries {
         lit(0).as("sampleRate"), lit(0L).as("durationMs"))
       val feats = Multimodal.featuresTable(media, dim = 32,
         decoder = Multimodal.PortableMd5Decoder)
-      graft.functions.VectorFunctions.register(s)
       graft.sim.Similarity.topKByQueryId(feats, "media_id", "features",
         queryId = 0L, k = 20,
         scoreFn = graft.functions.VectorFunctions.q_vec_cosine)

@@ -348,12 +348,10 @@ object SimilarityQueries {
   // ------------------------------------------------ brute-force top-k
   private val qTopKQuant = QueryDef(
     "q_ann_topk_quantized",
-    (s, d) => {
-      graft.functions.VectorFunctions.register(s)
+    (s, d) =>
       Similarity.topKByQueryId(Tables.embeddings(s, d), "vec_id", "embedding",
         queryId = 0L, k = 20,
-        scoreFn = graft.functions.VectorFunctions.q_vec_cosine)
-    },
+        scoreFn = graft.functions.VectorFunctions.q_vec_cosine),
     Some(sqlExactTop20),
     headline = true)
 
@@ -367,14 +365,12 @@ object SimilarityQueries {
     */
   private val qTopKFloat = QueryDef(
     "q_ann_topk_cosine",
-    (s, d) => {
-      // float path on the native codegen'd expression (FloatVecDot)
-      graft.functions.VectorFunctions.register(s)
+    // float path on the native codegen'd expression (FloatVecDot)
+    (s, d) =>
       Similarity.topKByQueryId(Tables.embeddings(s, d), "vec_id", "embedding",
         queryId = 0L, k = 20,
         scoreFn = graft.functions.VectorFunctions.vec_cosine)
-        .select(col("vec_id"))
-    },
+        .select(col("vec_id")),
     Some(s"""
       WITH flat AS ($sqlQuantFlat),
       qf AS (SELECT i, qv AS qqv FROM flat WHERE vec_id = 0),
@@ -455,12 +451,10 @@ object SimilarityQueries {
     */
   private val qIvf = QueryDef(
     "q_ann_ivf_topk",
-    (s, d) => {
-      graft.functions.VectorFunctions.register(s)
+    (s, d) =>
       Similarity.ivfTopK(Tables.embeddings(s, d), "vec_id", "embedding",
         queryId = 0L, k = 20, nCells = 16, nProbe = 13,
-        scoreFn = graft.functions.VectorFunctions.q_vec_cosine)
-    },
+        scoreFn = graft.functions.VectorFunctions.q_vec_cosine),
     Some(sqlExactTop20))
 
   /** Build-once layouts for the served indexes (util.BuildDir): the
@@ -486,7 +480,6 @@ object SimilarityQueries {
   private val qIvfServed = QueryDef(
     "q_ann_ivf_served",
     (s, d) => {
-      graft.functions.VectorFunctions.register(s)
       val emb = Tables.embeddings(s, d)
       val dir = graft.util.BuildDir(s, d, "graft_ivf_index", "embeddings")(
         Similarity.buildAndWriteIvfIndex(emb, "embedding", _, nCells = 16))
@@ -518,7 +511,6 @@ object SimilarityQueries {
   private val qIvfAppended = QueryDef(
     "q_ann_ivf_appended",
     (s, d) => {
-      graft.functions.VectorFunctions.register(s)
       val emb = Tables.embeddings(s, d)
       val dir = graft.util.BuildDir(s, d, "graft_ivf_append", "embeddings") {
         out =>
@@ -578,11 +570,9 @@ object SimilarityQueries {
     */
   private val qSemanticDedup = QueryDef(
     "q_semantic_dedup_keepers",
-    (s, d) => {
-      graft.functions.VectorFunctions.register(s)
+    (s, d) =>
       SemanticDedup.semanticDedupKeepers(Tables.embeddings(s, d),
-        "vec_id", "embedding", threshold = 0.35, bits = 4)
-    },
+        "vec_id", "embedding", threshold = 0.35, bits = 4),
     Some("""
       WITH flat AS (
         SELECT vec_id,
@@ -917,7 +907,6 @@ object SimilarityQueries {
     */
   private def ivfPqServe(s: org.apache.spark.sql.SparkSession, d: String,
       qid: Long): org.apache.spark.sql.DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val emb = Tables.embeddings(s, d)
     val index = ProductQuantizer.readIvfPqIndex(s, ivfPqIndex(s, d, emb))
     val query = emb.where(col("vec_id") === qid)
@@ -942,7 +931,6 @@ object SimilarityQueries {
   private val qIvfPqRefined = QueryDef(
     "q_ann_ivfpq_refined",
     (s, d) => {
-      graft.functions.VectorFunctions.register(s)
       val emb = Tables.embeddings(s, d)
       val index = ProductQuantizer.readIvfPqIndex(s, ivfPqIndex(s, d, emb))
       val qid = 2L
@@ -1001,7 +989,6 @@ object SimilarityQueries {
   private val qIvfPqAdaptive = QueryDef(
     "q_ann_ivfpq_adaptive",
     (s, d) => {
-      graft.functions.VectorFunctions.register(s)
       val emb = Tables.embeddings(s, d)
       val index = ProductQuantizer.readIvfPqIndex(s, ivfPqIndex(s, d, emb))
       val qid = 3L

@@ -1901,12 +1901,11 @@ object TextQueries {
       val merges = TF.bpeTrainMerges(docs, "text", rounds = 3)
         .orderBy("round")
         .collect().map(r => (r.getString(1), r.getString(2))).toSeq
-      graft.functions.VectorFunctions.register(s)
       val toks = docs
         .select(col("source"), explode(TF.tokens(col("text"))).as("tok"))
         .where(length(col("tok")) >= 1)
         .select(col("source"),
-          size(call_function("bpe_encode", col("tok"),
+          size(graft.functions.VectorFunctions.bpe_encode(col("tok"),
             typedlit(merges.map(_._1)), typedlit(merges.map(_._2))))
             .cast("long").as("__nsym"))
         .groupBy(col("source"))
@@ -2270,7 +2269,6 @@ object TextQueries {
   private val qHybrid = QueryDef(
     "q_hybrid_retrieval",
     (s, d) => {
-      graft.functions.VectorFunctions.register(s)
       val wKw = org.apache.spark.sql.expressions.Window
         .orderBy(col("bm25").desc, col("doc_id"))
       val kw = graft.text.Bm25.search(Tables.documents(s, d), "doc_id",

@@ -89,7 +89,6 @@ object KMeans {
     * first-index tie-break is identical).
     */
   def assign(df: DataFrame, cents: Centroids): DataFrame = {
-    graft.functions.VectorFunctions.register(df.sparkSession)
     val flatMat = typedLit(cents.cells.flatten.toSeq)
     val idArr = array(cents.ids.map(lit(_)): _*)
     // kernel choice by k: the flat scan wins below a few hundred rows

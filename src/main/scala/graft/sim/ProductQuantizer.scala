@@ -45,7 +45,6 @@ object ProductQuantizer {
 
   /** One projection computing every subspace's [argmin, dist] pair. */
   private def withCodes(base: DataFrame, model: PqModel): DataFrame = {
-    graft.functions.VectorFunctions.register(base.sparkSession)
     val cols = (0 until model.m).map { j =>
       graft.functions.VectorFunctions.q_vec_nearest_l2(
         subCol(col("__qv"), j, model.subDim), flatLit(model.codebooks(j)))
@@ -309,7 +308,6 @@ object ProductQuantizer {
       vecCol: String, query: Array[Long], nProbe: Int, k: Int,
       refine: Int = 10, excludeId: Option[Long] = None): DataFrame = {
     require(refine >= 1, "refine must be >= 1")
-    graft.functions.VectorFunctions.register(base.sparkSession)
     val shortlist = ivfPqSearch(index, idCol, query, nProbe, k * refine,
       excludeId).select(col(idCol)).collect().map(_.getLong(0)).toSeq
     exactRerank(base, idCol, vecCol, query, shortlist, k)
@@ -363,7 +361,6 @@ object ProductQuantizer {
       excludeId: Option[Long] = None): DataFrame = {
     require(initialRefine >= 1 && maxRefine >= initialRefine,
       "need 1 <= initialRefine <= maxRefine")
-    graft.functions.VectorFunctions.register(base.sparkSession)
     var refine = initialRefine
     while (true) {
       // ONE ADC pass fetches the doubled shortlist (bounded id rows —

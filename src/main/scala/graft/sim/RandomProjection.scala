@@ -74,7 +74,6 @@ object RandomProjection {
   def rpTopK(df: DataFrame, idCol: String, vecCol: String, queryId: Long,
       k: Int, nProj: Int = 16, nCandidates: Int = 200,
       dim: Int = 64): DataFrame = {
-    VectorFunctions.register(df.sparkSession)
     val proj = df.select(col(idCol), col(vecCol),
       project(col(vecCol), nProj, dim).as("__proj"))
     val q = proj.where(col(idCol) === queryId)

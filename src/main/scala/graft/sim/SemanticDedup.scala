@@ -76,7 +76,7 @@ object SemanticDedup {
 
   /** Keepers after semantic dedup: (vec_id, cell) for every vector NOT
     * dominated by a smaller-id same-cell neighbor at cosine ≥
-    * `threshold`. Requires `VectorFunctions.register` on the session.
+    * `threshold`.
     */
   def semanticDedupKeepers(df: DataFrame, idCol: String, vecCol: String,
       threshold: Double, bits: Int = 4): DataFrame = {

@@ -3,6 +3,8 @@ package graft.sim
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.functions.VectorFunctions
+
 /** Vector-similarity operators over an `ArrayType(FloatType)` embedding
   * column: brute-force cosine top-k (the exactness baseline), a
   * random-hyperplane LSH bucketed variant (the scale path), pairwise
@@ -75,9 +77,8 @@ object Similarity {
 
   /** Sign-random-projection band buckets: `bands` buckets per vector,
     * each from `planesPerBand` hyperplane sign bits. Static plane
-    * literals scored through the codegen'd vec_dot (callers must
-    * VectorFunctions.register the session) — the HOF dot here was
-    * 32 interpreted array traversals per row.
+    * literals scored through the codegen'd vec_dot — the HOF dot here
+    * was 32 interpreted array traversals per row.
     *
     * Band buckets from per-plane sign bits, each plane scored by its
     * own small FloatVecDot.
@@ -95,7 +96,7 @@ object Similarity {
     val perBand = planes.size / bands
     val bits: Seq[Column] = planes.map { p =>
       val planeCol = typedLit(p)
-      when(graft.functions.VectorFunctions.vec_dot(vec, planeCol) > 0,
+      when(VectorFunctions.vec_dot(vec, planeCol) > 0,
         lit(1)).otherwise(lit(0))
     }
     array((0 until bands).map { b =>
@@ -151,9 +152,8 @@ object Similarity {
   def lshTopK(df: DataFrame, idCol: String, vecCol: String, queryId: Long,
       k: Int, numPlanes: Int = 32, bands: Int = 0, dim: Int = 64,
       scoreFn: (Column, Column) => Column =
-        graft.functions.VectorFunctions.q_vec_cosine,
+        VectorFunctions.q_vec_cosine,
       corpusCountEstimate: Long = 0L): DataFrame = {
-    graft.functions.VectorFunctions.register(df.sparkSession)
     // bands = 0 → auto-size from corpus count (one cheap count job —
     // parquet answers it from footer stats; callers on hot paths pass
     // corpusCountEstimate or an explicit band count)
@@ -183,7 +183,7 @@ object Similarity {
     // corpus-side sign bits exactly as lshBuckets builds them; each
     // band's fold compares against the query's literal bucket
     val bits: Seq[Column] = planes.map { p =>
-      when(graft.functions.VectorFunctions.vec_dot(col(vecCol), typedLit(p)) > 0,
+      when(VectorFunctions.vec_dot(col(vecCol), typedLit(p)) > 0,
         lit(1)).otherwise(lit(0))
     }
     val collides = (0 until b).map { bb =>
@@ -250,10 +250,9 @@ object Similarity {
       threshold: Double, numPlanes: Int = 32, bands: Int = 0,
       dim: Int = 64,
       scoreFn: (Column, Column) => Column =
-        graft.functions.VectorFunctions.vec_cosine,
+        VectorFunctions.vec_cosine,
       scoreCol: String = "cos",
       corpusCountEstimate: Long = 0L): DataFrame = {
-    graft.functions.VectorFunctions.register(df.sparkSession)
     val b = if (bands == 0) autoLshBands(numPlanes,
       if (corpusCountEstimate > 0) corpusCountEstimate else df.count())
     else bands
@@ -375,7 +374,6 @@ object Similarity {
     */
   def assignCells(df: DataFrame, vecCol: String,
       centroids: Array[Array[Float]]): DataFrame = {
-    graft.functions.VectorFunctions.register(df.sparkSession)
     // ONE FloatMatVecScore expression, not k FloatVecDots: k inlined
     // dots exceed the JIT bytecode threshold around k≈16 and the whole
     // stage drops to interpreted bytecode (measured 35 s vs 0.5 s for
@@ -384,7 +382,7 @@ object Similarity {
     val bias = typedLit(centroids.map(c =>
       -c.map(x => x.toDouble * x).sum / 2.0).toSeq)
     df.withColumn("__scores",
-        graft.functions.VectorFunctions.vec_mat_score(col(vecCol), flat, bias))
+        VectorFunctions.vec_mat_score(col(vecCol), flat, bias))
       .withColumn("cell",
         (array_position(col("__scores"), array_max(col("__scores"))) - 1)
           .cast("int"))
@@ -483,8 +481,7 @@ object Similarity {
       qvec: Array[Float], k: Int, nProbe: Int = 4,
       excludeId: Option[Long] = None,
       scoreFn: (Column, Column) => Column =
-        graft.functions.VectorFunctions.q_vec_cosine): DataFrame = {
-    graft.functions.VectorFunctions.register(index.cells.sparkSession)
+        VectorFunctions.q_vec_cosine): DataFrame = {
     val probeCells = rankProbeCells(index.centroids, qvec, nProbe)
     val qlit = typedLit(qvec.toSeq)
     val probed = index.cells.where(col("cell").isin(probeCells: _*))
@@ -500,7 +497,7 @@ object Similarity {
   def ivfSearch(index: IvfIndex, idCol: String, vecCol: String,
       queryId: Long, k: Int, nProbe: Int = 4,
       scoreFn: (Column, Column) => Column =
-        graft.functions.VectorFunctions.q_vec_cosine): DataFrame = {
+        VectorFunctions.q_vec_cosine): DataFrame = {
     val qvec = index.cells.where(col(idCol) === queryId)
       .select(col(vecCol)).head().getSeq[Float](0).toArray
     ivfSearchVec(index, idCol, vecCol, qvec, k, nProbe, Some(queryId), scoreFn)
@@ -517,9 +514,8 @@ object Similarity {
   def ivfTopK(df: DataFrame, idCol: String, vecCol: String, queryId: Long,
       k: Int, nCells: Int = 16, nProbe: Int = 4,
       scoreFn: (Column, Column) => Column =
-        graft.functions.VectorFunctions.q_vec_cosine,
+        VectorFunctions.q_vec_cosine,
       sampleN: Int = 2048, seed: Long = 42L): DataFrame = {
-    graft.functions.VectorFunctions.register(df.sparkSession)
     // one collect serves both training sample and (usually) the query
     // vector lookup
     val sampleRows = df.select(col(idCol), col(vecCol)).limit(sampleN)
@@ -616,8 +612,7 @@ object Similarity {
   def knnJoin(corpus: DataFrame, idCol: String, vecCol: String,
       queries: DataFrame, qIdCol: String, qVecCol: String, k: Int,
       scoreFn: (Column, Column) => Column =
-        graft.functions.VectorFunctions.q_vec_cosine): DataFrame = {
-    graft.functions.VectorFunctions.register(corpus.sparkSession)
+        VectorFunctions.q_vec_cosine): DataFrame = {
     // hint kept: queries is typically a filter, priced at the corpus's size
     val q = broadcast(queries.select(col(qIdCol).as("query_id"),
       col(qVecCol).as("__qv")))
@@ -661,8 +656,7 @@ object Similarity {
       queries: DataFrame, qIdCol: String, qVecCol: String, k: Int,
       nProbe: Int = 4,
       scoreFn: (Column, Column) => Column =
-        graft.functions.VectorFunctions.q_vec_cosine): DataFrame = {
-    graft.functions.VectorFunctions.register(queries.sparkSession)
+        VectorFunctions.q_vec_cosine): DataFrame = {
     val nCells = index.centroids.length
     val probe = math.min(nProbe, nCells)
     val flat = typedLit(index.centroids.flatten.toSeq)
@@ -670,7 +664,7 @@ object Similarity {
       -c.map(x => x.toDouble * x).sum / 2.0).toSeq)
     val probes = queries
       .select(col(qIdCol).as("query_id"), col(qVecCol).as("__qv"))
-      .withColumn("__scores", graft.functions.VectorFunctions
+      .withColumn("__scores", VectorFunctions
         .vec_mat_score(col("__qv"), flat, bias))
       .withColumn("__probe", slice(array_sort(
         zip_with(col("__scores"), sequence(lit(0), lit(nCells - 1)),
@@ -745,7 +739,6 @@ object Similarity {
     */
   def hardNegatives(corpus: DataFrame, idCol: String, vecCol: String,
       labelCol: String, anchors: DataFrame, k: Int): DataFrame = {
-    graft.functions.VectorFunctions.register(corpus.sparkSession)
     // hint kept: anchors is typically a filter, priced at the corpus's size
     val a = broadcast(anchors.select(col(idCol).as("anchor_id"),
       col(vecCol).as("__av"), col(labelCol).as("__al")))
@@ -753,7 +746,7 @@ object Similarity {
       .where(col(idCol) =!= col("anchor_id") &&
         col(labelCol) =!= col("__al"))
       .select(col("anchor_id"),
-        graft.functions.VectorFunctions.q_vec_cosine(
+        VectorFunctions.q_vec_cosine(
           col(vecCol), col("__av")).as("__s"),
         col(idCol).cast("long").as("__id"))
       .groupBy(col("anchor_id"))
@@ -849,7 +842,7 @@ object Similarity {
   def mipsNormIndex(df: DataFrame, idCol: String,
       vecCol: String): DataFrame =
     df.select(col(idCol).cast("long").as("__id"),
-      quantizedNormSq(col(vecCol)).as("__n2"))
+      VectorFunctions.q_vec_dot(col(vecCol), col(vecCol)).as("__n2"))
 
   /** [[mipsTopKNormPruned]] plus the ladder's exit state for probes:
     * (result, final factor, candidates scanned, stop reason).
@@ -874,14 +867,15 @@ object Similarity {
     val qFrame = broadcast(
       df.where(col(idCol) === queryId).select(col(vecCol).as("__qv")))
     val qn2 = BigInt(df.where(col(idCol) === queryId)
-      .select(quantizedNormSq(col(vecCol))).head().getLong(0))
+      .select(VectorFunctions.q_vec_dot(col(vecCol), col(vecCol)))
+      .head().getLong(0))
     val norms = index.getOrElse(mipsNormIndex(df, idCol, vecCol))
       .where(col("__id") =!= queryId)
     def dotsOf(ids: Seq[Long]): DataFrame = df
       .where(col(idCol).isin(ids: _*)) // pushed-In point read
       .crossJoin(qFrame)
       .select(col(idCol).as("vec_id"),
-        quantizedDot(col(vecCol), col("__qv")).as("dot_q"))
+        VectorFunctions.q_vec_dot(col(vecCol), col("__qv")).as("dot_q"))
       .orderBy(col("dot_q").desc, col("vec_id"))
     // semi-join variant for WIDE rungs: an In filter with k·factor
     // literals (maxFactor defaults to 2^20 → up to ~21M) blows up the
@@ -895,7 +889,7 @@ object Similarity {
         col(idCol) === col("__sid"), "left_semi")
       .crossJoin(qFrame)
       .select(col(idCol).as("vec_id"),
-        quantizedDot(col(vecCol), col("__qv")).as("dot_q"))
+        VectorFunctions.q_vec_dot(col(vecCol), col("__qv")).as("dot_q"))
       .orderBy(col("dot_q").desc, col("vec_id"))
     val spread = norms.agg(max(col("__n2")).cast("double").as("mx"),
         expr("approx_percentile(__n2, 0.5)").cast("double").as("md"))
@@ -907,7 +901,7 @@ object Similarity {
       val out = df.where(col(idCol) =!= queryId)
         .crossJoin(qFrame)
         .select(col(idCol).as("vec_id"),
-          quantizedDot(col(vecCol), col("__qv")).as("dot_q"))
+          VectorFunctions.q_vec_dot(col(vecCol), col("__qv")).as("dot_q"))
         .orderBy(col("dot_q").desc, col("vec_id"))
         .limit(k)
       return (out, 0, n, "concentrated_norms")

@@ -127,7 +127,7 @@ object Sessionize {
       s"events at $sfDir has negative user_id ${bounds.getLong(1)}; " +
         "the streaming flush sentinel reserves user_id -1")
     val maxTsS = bounds.getLong(0)
-    val snapshot = StreamingRun.withStatePartitions(spark, 4) { s =>
+    val snapshot = StreamingRun.withStatePartitions(spark) { s =>
       import s.implicits._
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val fileEvents = StreamingRun.tableStream(s, sfDir, "events")

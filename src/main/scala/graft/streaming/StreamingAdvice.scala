@@ -20,7 +20,7 @@ object StreamingAdvice {
   def runBatchEquivalent(spark: SparkSession, sfDir: String): DataFrame = {
     val candidates = Seq("user_id" -> "user_id",
       "event_type" -> "event_type")
-    StreamingRun.withStatePartitions(spark, 4) { s =>
+    StreamingRun.withStatePartitions(spark) { s =>
       candidates.map { case (name, c) =>
         val counts = StreamingRun.tableStream(s, sfDir, "events")
           .groupBy(col(c).as("__k"))

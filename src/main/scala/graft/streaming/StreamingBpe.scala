@@ -25,7 +25,7 @@ object StreamingBpe {
     val merges = graft.text.TextFunctions.bpeTrainMerges(docs, "text", rounds = 3)
       .orderBy("round")
       .collect().map(r => (r.getString(1), r.getString(2))).toSeq
-    val snapshot = StreamingRun.withStatePartitions(spark, 4) { s =>
+    val snapshot = StreamingRun.withStatePartitions(spark) { s =>
       StreamingRun.drain(graft.text.TextFunctions
         .bpeEncodeSymbols(StreamingRun.tableStream(s, sfDir, "documents"),
           "text", merges)

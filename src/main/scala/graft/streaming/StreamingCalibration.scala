@@ -27,7 +27,7 @@ object StreamingCalibration {
     // frozen model: never recomputed per batch
     val weights = Pin(QualityClassifier.trainTokenWeights(
       docs.where(col("doc_id") % 3 === 0), "text", col("lang") === "en"))
-    StreamingRun.withStatePartitions(spark, 4) { s =>
+    StreamingRun.withStatePartitions(spark) { s =>
       val partials = StreamingRun.collectBatches(
           StreamingRun.tableStream(s, sfDir, "documents")) { (batch, _) =>
         QualityClassifier.scoreDocs(batch, "doc_id", "text", weights)

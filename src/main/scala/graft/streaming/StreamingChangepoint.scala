@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
 object StreamingChangepoint {
 
   def runBatchEquivalent(spark: SparkSession, sfDir: String): DataFrame =
-    StreamingRun.withStatePartitions(spark, 4) { s =>
+    StreamingRun.withStatePartitions(spark) { s =>
       val daily = StreamingRun.tableStream(s, sfDir, "events")
         .groupBy(col("event_type").as("__k"),
           to_date(col("ts")).as("__d"))

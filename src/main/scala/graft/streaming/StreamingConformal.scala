@@ -33,7 +33,7 @@ object StreamingConformal {
     val thr = Pin(Conformal.threshold(
       eb.where(pmod(col("user_id"), lit(5)) === 0),
       Seq("event_type"), "score", covNum = 9, covDen = 10))
-    StreamingRun.withStatePartitions(spark, 4) { s =>
+    StreamingRun.withStatePartitions(spark) { s =>
       val tallies = StreamingRun.tableStream(s, sfDir, "events")
         .where(pmod(col("user_id"), lit(5)) =!= 0)
         .select(col("event_type"),

@@ -89,7 +89,7 @@ object StreamingContamination {
         docs.where(col("doc_id") % 97 === 0), "doc_id", "text", 3)
       .select(col("s")).distinct()
       .collect().map(_.getLong(0)).sorted
-    StreamingRun.withStatePartitions(spark, 4) { s =>
+    StreamingRun.withStatePartitions(spark) { s =>
       val stream = StreamingRun.tableStream(s, sfDir, "documents")
         .where(col("doc_id") % 97 =!= 0)
       StreamingRun.drain(
@@ -111,7 +111,7 @@ object StreamingContamination {
     val (probeSh, sketch) = Dedup.bloomProbeBuild(
       docs.where(col("doc_id") % 97 === 0), "doc_id", "text",
       shingleN = 3, fpp = 0.03)
-    StreamingRun.withStatePartitions(spark, 4) { s =>
+    StreamingRun.withStatePartitions(spark) { s =>
       val outDir = java.nio.file.Files.createTempDirectory("graft_stream_bloom")
       try {
         val stream = StreamingRun.tableStream(s, sfDir, "documents")

@@ -29,7 +29,7 @@ object StreamingDedup {
     * the distinct (user_id, event_type) key set for the oracle compare.
     */
   def runBatchEquivalent(spark: SparkSession, sfDir: String): DataFrame = {
-    StreamingRun.withStatePartitions(spark, 4) { s =>
+    StreamingRun.withStatePartitions(spark) { s =>
       StreamingRun.drain(dedupStream(
         StreamingRun.tableStream(s, sfDir, "events"),
         Seq("user_id", "event_type"), "ts")

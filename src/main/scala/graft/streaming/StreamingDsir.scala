@@ -25,7 +25,7 @@ object StreamingDsir {
     val docs = Tables.documents(spark, sfDir)
     val model = Dsir.importanceModel(
       docs.where(col("lang") === "en"), docs, "text", 1024)
-    StreamingRun.withStatePartitions(spark, 4) { s =>
+    StreamingRun.withStatePartitions(spark) { s =>
       StreamingRun.collectBatches(
           StreamingRun.tableStream(s, sfDir, "documents")) { (batch, _) =>
         Dsir.weights(batch, "doc_id", "text", model, 1024)

@@ -23,7 +23,7 @@ object StreamingForecast {
     */
   private[streaming] def dailySnapshot(spark: SparkSession, sfDir: String,
       fold: DataFrame => DataFrame): DataFrame =
-    StreamingRun.withStatePartitions(spark, 4) { s =>
+    StreamingRun.withStatePartitions(spark) { s =>
       fold(StreamingRun.drain(StreamingRun.tableStream(s, sfDir, "events")
         .groupBy(col("event_type").as("k"), to_date(col("ts")).as("day"))
         .agg(count(lit(1)).as("c")), "complete"))
@@ -59,7 +59,7 @@ object StreamingForecast {
     */
   def runMadBatchEquivalent(spark: SparkSession,
       sfDir: String): DataFrame =
-    StreamingRun.withStatePartitions(spark, 4) { s =>
+    StreamingRun.withStatePartitions(spark) { s =>
       val dist = StreamingRun.tableStream(s, sfDir, "events")
         .groupBy(col("event_type"),
           (col("value").cast(
@@ -91,7 +91,7 @@ object StreamingForecast {
     */
   def runHllRollingBatchEquivalent(spark: SparkSession,
       sfDir: String): DataFrame =
-    StreamingRun.withStatePartitions(spark, 4) { s =>
+    StreamingRun.withStatePartitions(spark) { s =>
       val ev = StreamingRun.tableStream(s, sfDir, "events")
         .select(to_date(col("ts")).as("day"), col("user_id"))
       val regs = graft.ops.Sketches.hllRegisters(ev, "user_id", Seq("day"))
@@ -105,7 +105,7 @@ object StreamingForecast {
     */
   def runAllocationBatchEquivalent(spark: SparkSession,
       sfDir: String): DataFrame =
-    StreamingRun.withStatePartitions(spark, 4) { s =>
+    StreamingRun.withStatePartitions(spark) { s =>
       val counts = StreamingRun.tableStream(s, sfDir, "events")
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_rows"))
@@ -184,7 +184,7 @@ object StreamingForecast {
       .distinct()
       .filter(col("eval_day") >= date_add(lit(minDay), 13))
       .collect().map(_.getDate(0))
-    StreamingRun.withStatePartitions(spark, 4) { s =>
+    StreamingRun.withStatePartitions(spark) { s =>
       val dist = StreamingRun.tableStream(s, sfDir, "events")
         .filter(col("value").isNotNull && to_date(col("ts")).isNotNull)
         .groupBy(col("event_type"), col("value").as("__v"),
@@ -246,7 +246,7 @@ object StreamingForecast {
       groupExpr: org.apache.spark.sql.Column = col("event_type")): DataFrame = {
     val minTs = graft.sources.Tables.events(spark, sfDir)
       .agg(min(col("ts"))).head().getTimestamp(0)
-    StreamingRun.withStatePartitions(spark, 4) { s =>
+    StreamingRun.withStatePartitions(spark) { s =>
       val dist = StreamingRun.tableStream(s, sfDir, "events")
         // same null discipline as Profiling.driftCounts: a NULL value
         // has no CDF position and would also bloat state with a dead key
@@ -315,7 +315,7 @@ object StreamingForecast {
       StructField("__v", DoubleType),
       StructField("__p", BooleanType)))
     val waves = StreamingRun.withArrivalDir(arrivals) { srcDir =>
-      StreamingRun.withStatePartitions(spark, 4) { s =>
+      StreamingRun.withStatePartitions(spark) { s =>
         val dist = StreamingRun.arrivalStream(s, srcDir, schema)
           .groupBy(col("event_type"), col("__v"), col("__p"))
           .agg(count(lit(1)).as("__n"))

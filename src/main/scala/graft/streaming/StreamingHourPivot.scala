@@ -63,7 +63,7 @@ object StreamingHourPivot {
     * processAllAvailable → deterministic batch-equivalent result).
     */
   def runBatchEquivalent(spark: SparkSession, sfDir: String): DataFrame =
-    StreamingRun.withStatePartitions(spark, 4) { s =>
+    StreamingRun.withStatePartitions(spark) { s =>
       StreamingRun.drain(pivotStream(
         StreamingRun.tableStream(s, sfDir, "events"), col("ts"),
         Seq("event_type")), "complete")

@@ -53,7 +53,7 @@ object StreamingJoin {
       toleranceSec: Long = 600L, sliceMod: Option[Long] = None): DataFrame = {
     def slice(df: DataFrame): DataFrame =
       sliceMod.fold(df)(m => df.where(col("user_id") % m === 0))
-    StreamingRun.withStatePartitions(spark, 4) { s =>
+    StreamingRun.withStatePartitions(spark) { s =>
       val purchases = slice(StreamingRun.tableStream(s, sfDir, "events")
         .where(col("event_type") === "purchase"))
       val clicks = slice(StreamingRun.tableStream(s, sfDir, "events")

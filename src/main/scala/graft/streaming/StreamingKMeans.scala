@@ -45,7 +45,7 @@ object StreamingKMeans {
       iters: Int): DataFrame = {
     val cents = KMeans.fitCentroids(
       Tables.embeddings(spark, sfDir), "vec_id", "embedding", k, iters)
-    StreamingRun.withStatePartitions(spark, 4) { s =>
+    StreamingRun.withStatePartitions(spark) { s =>
       StreamingRun.drain(assignStream(
         StreamingRun.tableStream(s, sfDir, "embeddings"),
         "vec_id", "embedding", cents))

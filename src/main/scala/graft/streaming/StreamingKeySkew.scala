@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
 object StreamingKeySkew {
 
   def runBatchEquivalent(spark: SparkSession, sfDir: String): DataFrame = {
-    StreamingRun.withStatePartitions(spark, 4) { s =>
+    StreamingRun.withStatePartitions(spark) { s =>
       val counts = StreamingRun.tableStream(s, sfDir, "events")
         .groupBy(col("user_id").as("__key"))
         .agg(count(lit(1)).as("__c"))

@@ -78,7 +78,7 @@ object StreamingLateData {
       StructField("event_type", StringType)))
     StreamingRun.withArrivalDir(
       batches.map(_.select(col("ts"), col("event_type")))) { srcDir =>
-      StreamingRun.withStatePartitions(spark, 4) { s =>
+      StreamingRun.withStatePartitions(spark) { s =>
         StreamingRun.drain(StreamingHourPivot.pivotStream(
           StreamingRun.arrivalStream(s, srcDir, schema), col("ts"),
           Seq("event_type"), watermarkDelay = watermarkDelay), outputMode)

@@ -31,7 +31,7 @@ object StreamingLm {
   def runBatchEquivalent(spark: SparkSession, sfDir: String): DataFrame = {
     val model = NgramLm.train(
       Tables.documents(spark, sfDir).where(col("lang") === "en"), "text")
-    StreamingRun.withStatePartitions(spark, 4) { s =>
+    StreamingRun.withStatePartitions(spark) { s =>
       StreamingRun.collectBatches(
           StreamingRun.tableStream(s, sfDir, "documents")) { (batch, _) =>
         NgramLm.score(batch, "doc_id", "text", model)

@@ -57,7 +57,7 @@ object StreamingMediaNearDup {
       Multimodal.mediaTable(
         mediaOf(Tables.documents(spark, sfDir))
           .where(pmod(col("media_id"), lit(5)) =!= 0))))
-    StreamingRun.withStatePartitions(spark, 4) { s =>
+    StreamingRun.withStatePartitions(spark) { s =>
       StreamingRun.collectBatches(
           StreamingRun.tableStream(s, sfDir, "documents")) { (batch, _) =>
         Dedup.hammingNearDupsAcross(

@@ -42,7 +42,7 @@ object StreamingNearDup {
   def runBatchEquivalent(spark: SparkSession, sfDir: String,
       indexDir: String): DataFrame = {
     val corpus = Tables.documents(spark, sfDir).where(col("doc_id") % 5 =!= 0)
-    StreamingRun.withStatePartitions(spark, 4) { s =>
+    StreamingRun.withStatePartitions(spark) { s =>
       val stream = StreamingRun.tableStream(s, sfDir, "documents")
         .where(col("doc_id") % 5 === 0)
       // collecting is the memory-sink equivalent for the bounded

@@ -29,7 +29,7 @@ object StreamingPitJoin {
     // static side: materialized once, the nightly-snapshot contract
     val history = Pin(graft.ops.Scd2.historyFromChangeLog(
       changelog, Seq("user_id"), "ts_us", "event_id", Seq("event_type")))
-    StreamingRun.withStatePartitions(spark, 4) { s =>
+    StreamingRun.withStatePartitions(spark) { s =>
       val facts = StreamingRun.tableStream(s, sfDir, "events")
         .select(col("user_id").cast("long").as("user_id"),
           col("event_id").cast("long").as("event_id"),

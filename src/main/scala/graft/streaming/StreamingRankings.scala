@@ -49,7 +49,7 @@ object StreamingRankings {
         .where(col("__rn") <= 10).drop("__rn")
     }
     // both rankings' partials in one frame, tagged by ranking
-    val partials = StreamingRun.withStatePartitions(spark, 4) { s =>
+    val partials = StreamingRun.withStatePartitions(spark) { s =>
       StreamingRun.collectBatches(
           StreamingRun.tableStream(s, sfDir, "documents")) { (batch, _) =>
         val sc = Pin(scored(batch))
@@ -78,7 +78,7 @@ object StreamingRankings {
     */
   def runFeatureHashBatchEquivalent(spark: SparkSession,
       sfDir: String): DataFrame =
-    StreamingRun.withStatePartitions(spark, 4) { s =>
+    StreamingRun.withStatePartitions(spark) { s =>
       StreamingRun.collectBatches(
           StreamingRun.tableStream(s, sfDir, "documents")) { (batch, _) =>
         graft.text.TfIdf.featureHash(batch, "doc_id", "text", dim = 64)
@@ -94,7 +94,7 @@ object StreamingRankings {
     val probes = Pin(Tables.documents(spark, sfDir)
       .where(col("doc_id") % 11 === 0)
       .select(col("doc_id"), col("text")))
-    StreamingRun.withStatePartitions(spark, 4) { s =>
+    StreamingRun.withStatePartitions(spark) { s =>
       StreamingRun.collectBatches(
           StreamingRun.tableStream(s, sfDir, "documents")) { (batch, _) =>
         graft.text.Dedup.containmentJoin(

@@ -33,7 +33,7 @@ object StreamingRollingQuantile {
       val src = srcRoot.toString
       val even = rows.where(col("event_id") % 2 === 0).drop("event_id")
       even.write.mode("append").parquet(src)
-      val snapshot = StreamingRun.withStatePartitions(spark, 4) { s =>
+      val snapshot = StreamingRun.withStatePartitions(spark) { s =>
         StreamingRun.drain(
           s.readStream.schema(even.schema).parquet(src)
             .groupBy(col("event_type"), col("__day"), col("__v"))

@@ -119,7 +119,7 @@ object StreamingRun {
     }
   }
 
-  /** Run `f` with `spark.sql.shuffle.partitions` temporarily lowered:
+  /** `spark.sql.shuffle.partitions` of every bounded exhibit's stream:
     * a streaming query fixes its STATE partition count from this conf
     * at start, and every state partition owns store instances that
     * checkpoint on every micro-batch (a stream-stream join keeps 4 per
@@ -128,19 +128,29 @@ object StreamingRun {
     * is sized to stateful-key volume, not scan width — the bounded
     * exhibits carry a few thousand keys. At deployment scale this knob
     * is exactly what you tune upward again.
-    *
-    * The conf is scoped to a CLONED session (`spark.newSession`): the
-    * clone shares the SparkContext and cached data but owns its SQLConf,
-    * so a query running concurrently on the parent session (parallel
-    * tests, ad-hoc work) never silently executes with the lowered
-    * partition count. Callers build their streaming frames against the
-    * session passed to `f`, once per run.
     */
-  def withStatePartitions[T](spark: SparkSession, n: Int)(f: SparkSession => T): T = {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    f(s)
-  }
+  val StatePartitions = 4
+
+  private val stateSessions = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, SparkSession]())
+
+  /** Run `f` on a session whose shuffle partitions are
+    * [[StatePartitions]]. The conf is scoped to a CLONED session
+    * (`spark.newSession`): the clone shares the SparkContext and cached
+    * data but owns its SQLConf, so a query running concurrently on the
+    * parent session (parallel tests, ad-hoc work) never silently
+    * executes with the lowered partition count. One clone serves every
+    * run on a parent: each session that starts a stream adds a listener
+    * bus to the shared context that is never removed, so a clone per
+    * run would grow them for the life of the JVM. Callers build their
+    * streaming frames against the session passed to `f`.
+    */
+  def withStatePartitions[T](spark: SparkSession)(f: SparkSession => T): T =
+    f(stateSessions.computeIfAbsent(spark, { parent =>
+      val s = parent.newSession()
+      s.conf.set("spark.sql.shuffle.partitions", StatePartitions.toString)
+      s
+    }))
 
   /** Stage `batches` as one parquet file each with strictly increasing
     * modification times under a temp directory, run `f` with that

@@ -93,7 +93,7 @@ object StreamingScd2 {
       s"events at $sfDir has negative/NULL user_id; " +
         "the streaming flush sentinel reserves user_id -1")
     val maxTsS = bounds.getLong(0)
-    val snapshot = StreamingRun.withStatePartitions(spark, 4) { s =>
+    val snapshot = StreamingRun.withStatePartitions(spark) { s =>
       import s.implicits._
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       val fileChanges = StreamingRun.tableStream(s, sfDir, "events")

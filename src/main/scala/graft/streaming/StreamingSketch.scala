@@ -45,7 +45,7 @@ object StreamingSketch {
     * served sketch, not part of ingest).
     */
   def runHllBatchEquivalent(spark: SparkSession, sfDir: String): DataFrame = {
-    val snapshot = StreamingRun.withStatePartitions(spark, 4) { s =>
+    val snapshot = StreamingRun.withStatePartitions(spark) { s =>
       val items = StreamingRun.tableStream(s, sfDir, "documents")
         .where(length(trim(col("text"))) > 0)
         .select(col("source"),
@@ -62,7 +62,7 @@ object StreamingSketch {
     */
   def runBatchEquivalent(spark: SparkSession, sfDir: String,
       d: Int = 4): DataFrame =
-    StreamingRun.withStatePartitions(spark, 4) { s =>
+    StreamingRun.withStatePartitions(spark) { s =>
       StreamingRun.drain(sketchStream(
         StreamingRun.tableStream(s, sfDir, "documents"), "text", d),
         "complete")

@@ -46,7 +46,7 @@ object StreamingViewMaintenance {
     try {
     val src = srcRoot.toString
     seedFlows.write.mode("append").parquet(src)
-    val snapshot = StreamingRun.withStatePartitions(spark, 4) { s =>
+    val snapshot = StreamingRun.withStatePartitions(spark) { s =>
       StreamingRun.drain(
         s.readStream.schema(seedFlows.schema).parquet(src)
           .groupBy(col("o_orderpriority"))

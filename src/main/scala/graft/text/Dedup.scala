@@ -923,9 +923,8 @@ object Dedup {
   private[graft] def applyBloomFlags(corpus: DataFrame, probeSh: DataFrame,
       sketch: Array[Byte], idCol: String, textCol: String,
       shingleN: Int, minOverlap: Int): DataFrame = {
-    graft.functions.VectorFunctions.register(corpus.sparkSession)
-    val mightHit = org.apache.spark.sql.functions
-      .call_function("bloom_might_contain", lit(sketch), col("s"))
+    val mightHit = graft.functions.VectorFunctions
+      .bloom_might_contain(lit(sketch), col("s"))
     val corpusSh = Pin(shingleHashFrame(corpus, idCol, textCol, shingleN),
       MEMORY_AND_DISK_SER)
     val totals = corpusSh.groupBy(col("id"))

@@ -643,11 +643,10 @@ object TextFunctions {
     // pass) -- pinned by the randomized reference tests and the
     // q_bpe_encode_vocab oracle. No fence-char contract on encode:
     // symbols are array elements, nothing to corrupt.
-    graft.functions.VectorFunctions.register(df.sparkSession)
     graft.ops.Partitioning.fanOut(
       df.select(explode(tokens(col(textCol))).as("tok"))
         .where(length(col("tok")) >= 1))
-      .select(explode(call_function("bpe_encode", col("tok"),
+      .select(explode(graft.functions.VectorFunctions.bpe_encode(col("tok"),
         typedlit(merges.map(_._1)), typedlit(merges.map(_._2))))
         .as("symbol"))
   }

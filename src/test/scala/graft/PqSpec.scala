@@ -146,7 +146,6 @@ class PqSpec extends AnyFunSuite {
 
   test("adaptive refine recovers exact top-k where a fixed shortlist truncates ADC ties") {
     import spark.implicits._
-    graft.functions.VectorFunctions.register(spark)
     // One tight 100-member cluster spread only along component 0
     // (5 quantized units apart — far below PQ code resolution, so ADC
     // ties in bands much wider than k×refine) plus 5 far outliers.
@@ -189,7 +188,6 @@ class PqSpec extends AnyFunSuite {
 
   test("adaptive refine stabilizes in one round when ADC is exact, matching the fixed rung") {
     import spark.implicits._
-    graft.functions.VectorFunctions.register(spark)
     // kCodes = corpus size: after training every subvector is its own
     // code centroid, so ADC == exact d2, the doubled fetch cannot
     // reorder the prefix top-k, and the rule stops at round one —

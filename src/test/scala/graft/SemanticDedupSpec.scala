@@ -22,7 +22,6 @@ class SemanticDedupSpec extends AnyFunSuite {
   }
 
   test("keepers match the brute-force keeper rule on real embeddings") {
-    VectorFunctions.register(spark)
     val emb = sources.Tables.embeddings(spark, sf)
     val dim = emb.select(size(col("embedding"))).head().getInt(0)
     val cells = emb.select(col("vec_id"), col("embedding"))
@@ -48,7 +47,6 @@ class SemanticDedupSpec extends AnyFunSuite {
   }
 
   test("higher bits only split cells (bit prefix property)") {
-    VectorFunctions.register(spark)
     val emb = sources.Tables.embeddings(spark, sf).limit(40)
     val dim = emb.select(size(col("embedding"))).head().getInt(0)
     val both = emb.select(col("vec_id"),

@@ -24,6 +24,25 @@ class StreamingSpec extends AnyFunSuite {
     assert(streamed.nonEmpty)
   }
 
+  test("withStatePartitions: one clone per parent, so repeated runs add no session's listener bus") {
+    import graft.streaming.StreamingRun
+    import org.apache.spark.GraftTestBus
+    val sc = spark.sparkContext
+    StreamingHourPivot.runBatchEquivalent(spark, sf)
+    val before = GraftTestBus.streamingListenerBuses(sc)
+    StreamingHourPivot.runBatchEquivalent(spark, sf)
+    StreamingHourPivot.runBatchEquivalent(spark, sf)
+    // Spark runs each query on its own copy of the session, and a
+    // stateful query's copy registers a bus that stays: one per run.
+    // A clone per run added a second one, its own.
+    assert(GraftTestBus.streamingListenerBuses(sc) - before <= 2)
+    val (s1, s2) = (StreamingRun.withStatePartitions(spark)(identity),
+      StreamingRun.withStatePartitions(spark)(identity))
+    assert((s1 eq s2) && !(s1 eq spark))
+    assert(s1.conf.get("spark.sql.shuffle.partitions") ==
+      StreamingRun.StatePartitions.toString)
+  }
+
   test("file sink: exactly-once across restart, new files picked up incrementally") {
     import graft.streaming.StreamingFileSink
     import java.nio.file.Files

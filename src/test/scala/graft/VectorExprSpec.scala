@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -17,7 +21,6 @@ class VectorExprSpec extends AnyFunSuite {
     .toDF("id", "a", "b")
 
   test("vec_dot matches hand computation and HOF dot exactly") {
-    VectorFunctions.register(spark)
     val rows = df.select(col("id"),
       VectorFunctions.vec_dot(col("a"), col("b")).as("native"),
       Similarity.dot(col("a"), col("b")).as("hof"))
@@ -30,7 +33,6 @@ class VectorExprSpec extends AnyFunSuite {
   }
 
   test("vec_dot nulls propagate") {
-    VectorFunctions.register(spark)
     val withNull = df.select(col("id"),
       VectorFunctions.vec_dot(col("a"),
         when(col("id") === 1L, col("b"))).as("d"))
@@ -39,7 +41,6 @@ class VectorExprSpec extends AnyFunSuite {
   }
 
   test("vec_dot participates in whole-stage codegen (HOF dot does not)") {
-    VectorFunctions.register(spark)
     // parquet-backed (a local Seq constant-folds to LocalTableScan)
     val emb = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.001")
     // "*(n) Project" is the WholeStageCodegen marker in simple mode
@@ -54,7 +55,6 @@ class VectorExprSpec extends AnyFunSuite {
   }
 
   test("q_vec_dot is bit-identical to the HOF quantizedDot on real embeddings") {
-    VectorFunctions.register(spark)
     val emb = graft.sources.Tables.embeddings(spark, "/root/testdata/sf0.001")
       .limit(100)
     val q = emb.crossJoin(
@@ -75,7 +75,6 @@ class VectorExprSpec extends AnyFunSuite {
   }
 
   test("vec_mat_score equals per-row FloatVecDot + bias") {
-    VectorFunctions.register(spark)
     val planes = graft.sim.Similarity.hyperplanes(8, 3, seed = 1L)
     val flat = typedLit(planes.flatten)
     val bias = typedLit((1 to 8).map(_.toDouble))
@@ -95,7 +94,6 @@ class VectorExprSpec extends AnyFunSuite {
   }
 
   test("q_vec_nearest_l2: argmin + exact distance, first index wins ties") {
-    VectorFunctions.register(spark)
     // centroids (flat 3×2): (0,0), (10,10), (0,0) — duplicate of row 0
     val flat = typedLit(Seq(0L, 0L, 10L, 10L, 0L, 0L))
     val rows = Seq(
@@ -126,7 +124,6 @@ class VectorExprSpec extends AnyFunSuite {
       .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toLongArray()
     assert(interp.toSeq == Seq(1L, 0L)) // exact match at row 1
     // end-to-end through codegen via the DataFrame path
-    VectorFunctions.register(spark)
     val viaDf = Seq(Tuple1(vec.toSeq)).toDF("qv")
       .select(VectorFunctions.q_vec_nearest_l2(col("qv"),
         typedLit(mat.toSeq)))
@@ -135,7 +132,6 @@ class VectorExprSpec extends AnyFunSuite {
   }
 
   test("q_vec_nearest_l2_blocked equals the flat kernel on random matrices (ties included)") {
-    VectorFunctions.register(spark)
     val rnd = new scala.util.Random(7)
     // several shapes, including k below/above the √k grouping and a
     // duplicate-row matrix that forces distance ties
@@ -161,9 +157,60 @@ class VectorExprSpec extends AnyFunSuite {
   }
 
   test("vec_cosine of a vector with itself is 1") {
-    VectorFunctions.register(spark)
     val c = df.select(VectorFunctions.vec_cosine(col("a"), col("a")))
       .as[Double].collect()
     c.foreach(v => assert(math.abs(v - 1.0) < 1e-12))
+  }
+
+  test("every kernel Column works on a new session with nothing registered") {
+    val sketch = {
+      val bf = org.apache.spark.util.sketch.BloomFilter.create(100, 0.01)
+      bf.putLong(1L)
+      val bos = new java.io.ByteArrayOutputStream()
+      bf.writeTo(bos)
+      bos.toByteArray
+    }
+    val mat = typedLit(Seq(0L, 0L, 3L, -4L, 1L, 1L))
+    def kernels(s: SparkSession): Seq[Row] = {
+      import s.implicits._
+      Seq((1L, Array(1.0f, 2.0f, 3.0f), Array(4.0f, 5.0f, 6.0f),
+          Seq(3L, -4L), "abab"),
+        (2L, Array(0.5f, -0.5f, 0.0f), Array(2.0f, 2.0f, 2.0f),
+          Seq(1L, 2L), "ba"))
+        .toDF("id", "a", "b", "qv", "tok")
+        .select(col("id"),
+          VectorFunctions.vec_dot(col("a"), col("b")),
+          VectorFunctions.vec_mat_score(col("a"),
+            typedLit(Seq(1.0f, 0.0f, 0.0f, 0.0f, 1.0f, 0.0f)),
+            typedLit(Seq(0.5, 1.5))),
+          VectorFunctions.q_vec_nearest_l2(col("qv"), mat),
+          VectorFunctions.q_vec_nearest_l2_blocked(col("qv"), mat, 3),
+          VectorFunctions.q_vec_dot(col("a"), col("b")),
+          VectorFunctions.bloom_might_contain(lit(sketch), col("id")),
+          VectorFunctions.bpe_encode(col("tok"), typedLit(Seq("a")),
+            typedLit(Seq("b"))))
+        .orderBy("id").collect().toSeq
+    }
+    val fresh = kernels(spark.newSession())
+    assert(fresh == kernels(spark))
+    assert(fresh.head == Row(1L, 32.0, Seq(1.5, 3.5), Seq(1L, 0L),
+      Seq(1L, 0L), 3200000000L, true, Seq("ab", "ab")), fresh.head)
+  }
+
+  test("src/main reaches kernels as Columns: no function registry, one ExpressionUtils shim") {
+    val kernels = Seq("vec_dot", "q_vec_dot", "vec_mat_score",
+      "q_vec_nearest_l2", "q_vec_nearest_l2_blocked", "bloom_might_contain",
+      "bpe_encode")
+    val banned = ("createOrReplaceTempFunction|VectorFunctions\\.register|" +
+      kernels.mkString("call_function\\(\\s*\"(?:", "|", ")\"")).r
+    val sources = Files.walk(Paths.get("src/main")).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    val hits = sources.flatMap { f =>
+      banned.findAllIn(Files.readString(f)).map(b => s"$f: $b")
+    }
+    assert(hits.isEmpty, hits.mkString("\n"))
+    val shim = sources.filter(f => Files.readString(f).contains("ExpressionUtils"))
+      .map(_.getFileName.toString).toSet
+    assert(shim == Set("GraftColumn.scala"), shim)
   }
 }
