@@ -201,7 +201,9 @@ class VectorExprSpec extends AnyFunSuite {
     val kernels = Seq("vec_dot", "q_vec_dot", "vec_mat_score",
       "q_vec_nearest_l2", "q_vec_nearest_l2_blocked", "bloom_might_contain",
       "bpe_encode")
-    val banned = ("createOrReplaceTempFunction|VectorFunctions\\.register|" +
+    // a temp function or a session extension reaches the registry only
+    // through `functionRegistry` or `injectFunction`
+    val banned = ("functionRegistry|injectFunction|VectorFunctions\\.register|" +
       kernels.mkString("call_function\\(\\s*\"(?:", "|", ")\"")).r
     val sources = Files.walk(Paths.get("src/main")).iterator.asScala
       .filter(_.toString.endsWith(".scala")).toSeq
