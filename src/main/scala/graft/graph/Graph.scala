@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.util.Pin
@@ -116,12 +116,22 @@ object Graph {
     */
   def pageRank(edges: DataFrame, nodes: DataFrame, idCol: String,
       iters: Int = 3, base: Long = 1000000L,
-      dampNum: Long = 85L, dampDen: Long = 100L): DataFrame = {
+      dampNum: Long = 85L, dampDen: Long = 100L): DataFrame =
+    rankRounds(edges, nodes.select(col(idCol).as("id"), lit(base).as("rank")),
+      idCol, iters, base, dampNum, dampDen,
+      lit(base * (dampDen - dampNum) / dampDen))
+
+  /** The round loop [[pageRank]] and [[pageRankPersonalized]] share.
+    * `init` is the initial rank frame (id, …, rank); every column but
+    * `rank` rides each round unchanged, and `teleport` is the per-node
+    * teleport term over those columns. Emits (idCol, rank, rank_units).
+    */
+  private def rankRounds(edges: DataFrame, init: DataFrame, idCol: String,
+      iters: Int, base: Long, dampNum: Long, dampDen: Long,
+      teleport: Column): DataFrame = {
     require(iters >= 1 && dampNum > 0 && dampNum < dampDen)
     val e = Pin(edges.select(col("src"), col("dst")))
     val outDeg = Pin(e.groupBy(col("src")).agg(count(lit(1)).as("outdeg")))
-    val teleport = base * (dampDen - dampNum) / dampDen
-    var ranks = Pin(nodes.select(col(idCol).as("id"), lit(base).as("rank")))
     // r16 (guide §2.3/§2.4): fold outdeg INTO the rank frame once, so
     // each round (a) probes ONE broadcast per edge instead of two and
     // (b) computes `rank div outdeg` once per NODE (in the node-sized
@@ -130,9 +140,10 @@ object Graph {
     // contribution is bit-identical. Nodes without out-edges carry a
     // NULL outdeg and are filtered before the edge join — exactly the
     // rows the old inner join against outDeg dropped.
-    ranks = Pin(ranks
+    var ranks = Pin(Pin(init)
       .join(outDeg.select(col("src").as("id"), col("outdeg")),
         Seq("id"), "left"))
+    val carried = ranks.columns.filter(_ != "rank").map(col)
     for (_ <- 1 to iters) {
       // `div` (not `/`): BIGINT floor division on both engines — the
       // fixed-point contract. `/` would round through DOUBLE.
@@ -142,11 +153,11 @@ object Graph {
             expr("rank div outdeg").as("c")), Seq("src"))
         .select(col("dst").as("id"), col("c"))
         .groupBy(col("id")).agg(sum(col("c")).as("in_sum"))
-      ranks = Pin(ranks.select(col("id"), col("outdeg"))
+      ranks = Pin(ranks.select(carried: _*)
         .join(contribs, Seq("id"), "left")
         .withColumn("in2", coalesce(col("in_sum"), lit(0L)))
-        .select(col("id"), col("outdeg"),
-          (lit(teleport) + expr(s"in2 * $dampNum div $dampDen")).as("rank")))
+        .select(carried :+
+          (teleport + expr(s"in2 * $dampNum div $dampDen")).as("rank"): _*))
     }
     ranks.select(col("id").as(idCol), col("rank"),
       (col("rank") / lit(base.toDouble)).as("rank_units"))
@@ -251,38 +262,16 @@ object Graph {
       seeds: DataFrame, idCol: String, iters: Int = 3,
       base: Long = 1000000L, dampNum: Long = 85L,
       dampDen: Long = 100L): DataFrame = {
-    require(iters >= 1 && dampNum > 0 && dampNum < dampDen)
-    val e = Pin(edges.select(col("src"), col("dst")))
-    val outDeg = Pin(e.groupBy(col("src")).agg(count(lit(1)).as("outdeg")))
-    val teleport = base * (dampDen - dampNum) / dampDen
     val seedSet = seeds.select(col(idCol).as("id")).distinct()
       .withColumn("__seed", lit(1))
-    var ranks = Pin(nodes.select(col(idCol).as("id"))
+    val init = nodes.select(col(idCol).as("id"))
       .join(seedSet, Seq("id"), "left")
       .select(col("id"), coalesce(col("__seed"), lit(0)).as("__seed"),
         when(col("__seed").isNotNull, lit(base)).otherwise(lit(0L))
-          .as("rank")))
-    // r16: outdeg folded into the rank frame — one broadcast probe per
-    // edge per round, division per NODE not per edge (see pageRank)
-    ranks = Pin(ranks
-      .join(outDeg.select(col("src").as("id"), col("outdeg")),
-        Seq("id"), "left"))
-    for (_ <- 1 to iters) {
-      val contribs = e
-        .join(ranks.where(col("outdeg").isNotNull)
-          .select(col("id").as("src"),
-            expr("rank div outdeg").as("c")), Seq("src"))
-        .select(col("dst").as("id"), col("c"))
-        .groupBy(col("id")).agg(sum(col("c")).as("in_sum"))
-      ranks = Pin(ranks.select(col("id"), col("__seed"), col("outdeg"))
-        .join(contribs, Seq("id"), "left")
-        .withColumn("in2", coalesce(col("in_sum"), lit(0L)))
-        .select(col("id"), col("__seed"), col("outdeg"),
-          (when(col("__seed") === 1, lit(teleport)).otherwise(lit(0L)) +
-            expr(s"in2 * $dampNum div $dampDen")).as("rank")))
-    }
-    ranks.select(col("id").as(idCol), col("rank"),
-      (col("rank") / lit(base.toDouble)).as("rank_units"))
+          .as("rank"))
+    rankRounds(edges, init, idCol, iters, base, dampNum, dampDen,
+      when(col("__seed") === 1, lit(base * (dampDen - dampNum) / dampDen))
+        .otherwise(lit(0L)))
   }
 
   /** HITS hubs & authorities (Kleinberg, JACM'99) over a DIRECTED
@@ -502,27 +491,29 @@ object Graph {
     * Scale shape per hop (the pageRank discipline): one equi-join of
     * edges against the CURRENT frontier (ids only cross the exchange —
     * never adjacency lists), one distinct, one anti-join against the
-    * reached set, lineage cut by a Pin each hop. Frontiers shrink as
-    * the reached set saturates; a 10⁹-edge graph pays ~3 id-keyed
+    * union of the hops pinned so far, lineage cut by ONE Pin per hop
+    * (the hop's new nodes — the reached set is never re-copied; the
+    * output unions the per-hop pins once). Frontiers shrink as the
+    * reached set saturates; a 10⁹-edge graph pays ~3 id-keyed
     * shuffles per hop regardless of hub degree.
     */
   def bfsLevels(edges: DataFrame, seeds: DataFrame, idCol: String,
       maxHops: Int): DataFrame = {
     require(maxHops >= 1, "bfsLevels needs maxHops >= 1")
     val e = Pin(edges.select(col("src"), col("dst")))
-    var reached = Pin(seeds.select(col(idCol).cast("long").as("id")).distinct()
-      .withColumn("hop", lit(0)))
-    var frontier = reached.select(col("id"))
+    // one pin per hop: (id, hop) of the nodes first reached at that hop
+    var hops = Vector(Pin(seeds.select(col(idCol).cast("long").as("id"))
+      .distinct().withColumn("hop", lit(0))))
     for (i <- 1 to maxHops) {
       val next = Pin(e
-        .join(frontier.select(col("id").as("src")), Seq("src"))
+        .join(hops.last.select(col("id").as("src")), Seq("src"))
         .select(col("dst").as("id")).distinct()
-        .join(reached.select(col("id")), Seq("id"), "left_anti")
+        .join(hops.map(_.select(col("id"))).reduce(_ unionByName _),
+          Seq("id"), "left_anti")
         .withColumn("hop", lit(i)))
-      reached = Pin(reached.unionByName(next))
-      frontier = next.select(col("id"))
+      hops :+= next
     }
-    reached.select(col("id").as(idCol), col("hop"))
+    hops.reduce(_ unionByName _).select(col("id").as(idCol), col("hop"))
   }
 
   /** k-core membership by bounded synchronous peeling: each round
@@ -532,6 +523,8 @@ object Graph {
     * like [[connectedComponents]] — deterministic, so an oracle can
     * unroll the rounds; callers size `iters` to the expected peeling
     * depth (degeneracy cascades are shallow on heavy-tailed graphs).
+    * Running one round more and comparing shows whether `iters`
+    * reached the exact core (GraphSpec does this on gate data).
     *
     * Shape at scale: per round, two survivor semi-joins over the edge
     * list (survivor frame is node-sized ids — broadcasts while it
@@ -539,119 +532,56 @@ object Graph {
     * (idCol, in_core 0/1) for EVERY input node.
     */
   def kCore(edges: DataFrame, nodes: DataFrame, idCol: String,
-      k: Int, iters: Int, runToFixpoint: Boolean = false): DataFrame =
-    kCoreWithRounds(edges, nodes, idCol, k, iters, runToFixpoint)._1
-
-  /** [[kCore]] plus its exit state: (membership, rounds executed,
-    * converged). `converged = true` means the LAST executed round
-    * removed no node — the membership is the EXACT k-core, not the
-    * bounded over-approximation. The convergence test compares the
-    * round's pinned row count with the survivors' (no extra job); with
-    * `runToFixpoint = false` rounds always run to `iters` and
-    * converged stays false (the fixed-round contract an unrolled
-    * oracle replays). The gate-scale GraphSpec
-    * probe uses this to assert q_kcore_membership's declared iters=3
-    * actually reaches fixpoint on gate data — the hash against the
-    * 3-round-unrolled oracle proves implementation-matches-spec; this
-    * proves spec-matches-true-k-core.
-    */
-  def kCoreWithRounds(edges: DataFrame, nodes: DataFrame, idCol: String,
-      k: Int, iters: Int, runToFixpoint: Boolean = false)
-      : (DataFrame, Int, Boolean) = {
+      k: Int, iters: Int): DataFrame = {
     require(k >= 1 && iters >= 1, "kCore needs k >= 1, iters >= 1")
     val e = Pin(edges.select(col("src"), col("dst")))
     val all = Pin(nodes.select(col(idCol).cast("long").as("id")).distinct())
     var survivors = all
-    var round = 0
-    var converged = false
-    while (round < iters && !converged) {
+    for (_ <- 1 to iters) {
       val deg = e
         .join(survivors.select(col("id").as("src")), Seq("src"), "left_semi")
         .join(survivors.select(col("id").as("dst")), Seq("dst"), "left_semi")
         .groupBy(col("src").as("id")).agg(count(lit(1)).as("__deg"))
-      val next = Pin(survivors
+      survivors = Pin(survivors
         .join(deg.where(col("__deg") >= k), Seq("id"), "left_semi"))
-      // next ⊆ survivors: equal pinned counts mean no node was dropped
-      converged = runToFixpoint && Pin.rows(next) == Pin.rows(survivors)
-      survivors = next
-      round += 1
     }
-    val out = all
+    all
       .join(survivors.select(col("id"), lit(1).as("__in")), Seq("id"), "left")
       .select(col("id").as(idCol),
         coalesce(col("__in"), lit(0)).cast("int").as("in_core"))
-    (out, round, converged)
-  }
-
-  /** Min-label HashMin with the convergence state SURFACED (the
-    * kCoreWithRounds convention): returns (labels, rounds executed,
-    * converged). With `runToFixpoint = false` `converged` stays false
-    * and rounds == iters — the fixed-round unrolled-oracle contract.
-    */
-  def connectedComponentsWithRounds(edges: DataFrame, nodes: DataFrame,
-      idCol: String, iters: Int,
-      runToFixpoint: Boolean = false): (DataFrame, Int, Boolean) = {
-    require(iters >= 1, "connectedComponents needs iters >= 1")
-    val e = Pin(edges.select(col("src"), col("dst")))
-    var labels = Pin(nodes.select(col(idCol).cast("long").as("id")).distinct()
-      .withColumn("label", col("id")))
-    var round = 0
-    var converged = false
-    while (round < iters && !converged) {
-      val msgs = e
-        .join(labels.select(col("id").as("src"), col("label")), Seq("src"))
-        .groupBy(col("dst").as("id")).agg(min(col("label")).as("nbr"))
-      val joined = labels.join(msgs, Seq("id"), "left")
-      // the changed-label count rides the round's pin job
-      val changed = new Observation()
-      val next = Pin((if (runToFixpoint) joined.observe(changed,
-          sum(when(col("nbr") < col("label"), 1L).otherwise(0L)).as("n"))
-        else joined)
-        .select(col("id"),
-          least(col("label"), coalesce(col("nbr"), col("label")))
-            .as("label")))
-      converged = runToFixpoint &&
-        Option(changed.get("n")).forall(_.asInstanceOf[Long] == 0L)
-      labels = next
-      round += 1
-    }
-    (labels.select(col("id").as(idCol), col("label").as("component")),
-      round, converged)
   }
 
   /** Connected components by synchronous min-label propagation
     * (HashMin): every node starts labeled with its own id; each round
     * takes the min over itself and its neighbors' labels. After
     * diameter rounds every node carries its component's minimum id —
-    * the canonical component label. `runToFixpoint` stops early when a
-    * round changes nothing (the round's pin counts the changed labels
-    * as it materializes — no extra job), with `iters` as the hard cap.
+    * the canonical component label. Fixed-round contract: exactly
+    * `iters` rounds, so an oracle can unroll them; a component whose
+    * label-propagation diameter exceeds `iters` reports as several.
+    * Exact components with a loud cap are [[graft.text.Dedup]]'s
+    * `nearDupClusters` (pointer jumping, O(log diameter) rounds).
     *
     * Shape at scale: one (dst ← min label) keyed shuffle per round
     * over the edge list, the label frame is node-sized (two longs),
     * lineage cut per round (a Pin — the BFS/PageRank
     * pattern). O(diameter) rounds; co-purchase-style graphs with a
     * giant dense component have tiny diameters, the favorable case.
-    *
-    * `runToFixpoint = true` PROMISES exact component semantics, so a
-    * run that exhausts `iters` still unconverged throws instead of
-    * silently returning split clusters (r13 ADVICE) — raise `iters`
-    * past the graph's label-propagation diameter, or call
-    * [[connectedComponentsWithRounds]] to inspect the flag yourself.
-    * With `runToFixpoint = false` this is the documented fixed-round
-    * operator and never throws.
     */
   def connectedComponents(edges: DataFrame, nodes: DataFrame,
-      idCol: String, iters: Int,
-      runToFixpoint: Boolean = false): DataFrame = {
-    val (labels, rounds, converged) = connectedComponentsWithRounds(
-      edges, nodes, idCol, iters, runToFixpoint)
-    if (runToFixpoint && !converged)
-      throw new IllegalStateException(
-        s"connectedComponents: runToFixpoint=true but the iteration cap " +
-          s"($iters rounds) was exhausted before fixpoint — the labels " +
-          "would be split clusters; raise iters or use " +
-          "connectedComponentsWithRounds to handle partial convergence")
-    labels
+      idCol: String, iters: Int): DataFrame = {
+    require(iters >= 1, "connectedComponents needs iters >= 1")
+    val e = Pin(edges.select(col("src"), col("dst")))
+    var labels = Pin(nodes.select(col(idCol).cast("long").as("id")).distinct()
+      .withColumn("label", col("id")))
+    for (_ <- 1 to iters) {
+      val msgs = e
+        .join(labels.select(col("id").as("src"), col("label")), Seq("src"))
+        .groupBy(col("dst").as("id")).agg(min(col("label")).as("nbr"))
+      labels = Pin(labels.join(msgs, Seq("id"), "left")
+        .select(col("id"),
+          least(col("label"), coalesce(col("nbr"), col("label")))
+            .as("label")))
+    }
+    labels.select(col("id").as(idCol), col("label").as("component"))
   }
 }

@@ -42,15 +42,14 @@ object GeoJoin {
     * operator cannot be).
     *
     * Cluster identity is exact only up to `iters` hops of min-label
-    * propagation: a dense region whose core-cell adjacency diameter
-    * exceeds `iters` reports as several clusters. Pass
-    * `runToFixpoint = true` for the exact one-cluster-per-connected-
-    * dense-region DBSCAN semantics — `iters` then acts as the round
-    * CAP (the kCore convention), so size it ≥ the expected core-cell
-    * diameter (each extra round costs one
-    * cell-frame join + an emptiness probe, bounded by the adjacency
-    * diameter — at 100 TB that is the diameter of the densest
-    * contiguous region in CELLS, typically tens, not data-sized).
+    * propagation (the fixed-round contract of
+    * [[graft.graph.Graph.connectedComponents]]): a dense region whose
+    * core-cell adjacency diameter exceeds `iters` reports as several
+    * clusters. Size `iters` ≥ the expected core-cell diameter for the
+    * one-cluster-per-connected-dense-region DBSCAN semantics — each
+    * round costs one cell-frame join, and at 100 TB the diameter is
+    * that of the densest contiguous region in CELLS, typically tens,
+    * not data-sized.
     *
     * Scale shape: one cell-count aggregate (the only corpus-sized
     * shuffle), then EVERYTHING — adjacency (9× explode of the core-
@@ -64,7 +63,7 @@ object GeoJoin {
     */
   def gridDensityClusters(df: DataFrame, idCol: String, xCol: String,
       yCol: String, cellSize: Long, minPts: Long,
-      iters: Int = 3, runToFixpoint: Boolean = false): DataFrame = {
+      iters: Int = 3): DataFrame = {
     require(cellSize > 0 && minPts >= 1 && iters >= 1)
     val pts = df.select(col(idCol).cast("long").as("id"),
         col(xCol).cast("long").as("x"), col(yCol).cast("long").as("y"))
@@ -99,7 +98,7 @@ object GeoJoin {
         Seq("cx", "cy"))
       .select(col("src"), col("dst"))
     val comps = graft.graph.Graph.connectedComponents(
-      edges, core.select(col("cell")), "cell", iters, runToFixpoint)
+      edges, core.select(col("cell")), "cell", iters)
     pts
       .join(core.select(col("cx"), col("cy"), col("cell")),
         Seq("cx", "cy"), "left")

@@ -253,7 +253,7 @@ object Profiling {
     * domain is bounded — a caller passing raw 64-bit doubles on a
     * 100 TB corpus would get a corpus-sized single-task sort per
     * group. The scaladoc warned; this probe makes the hazard binding
-    * (the connectedComponents convention: a measured cliff THROWS with
+    * (the nearDupClusters convention: a measured cliff THROWS with
     * the remediation named, it does not degrade silently).
     *
     * Cost shape: one limit-bounded count over the counts aggregation.

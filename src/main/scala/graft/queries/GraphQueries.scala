@@ -228,9 +228,9 @@ object GraphQueries {
     * keyed shuffle per round): the declared query pins the label state
     * after 3 rounds (the unrolled-trajectory oracle, same pattern as
     * PageRank/labelprop/BFS; a full-convergence oracle would need an
-    * all-pairs closure DuckDB 1.0 can't express at sf0.1). The
-    * operator's `runToFixpoint` mode — true components — is
-    * GraphSpec-pinned on multi-component fixtures.
+    * all-pairs closure DuckDB 1.0 can't express at sf0.1). GraphSpec
+    * pins that 3 rounds give the true components on its path fixture,
+    * against Dedup.nearDupClusters (exact, pointer jumping).
     */
   private val qComponents = QueryDef(
     "q_copurchase_components",

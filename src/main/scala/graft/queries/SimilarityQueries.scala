@@ -408,7 +408,7 @@ object SimilarityQueries {
   /** Full-corpus embedding near-dup (LSH candidates + exact quantized
     * verify), DECLARED on the vec_id%5 slice where the exact all-pairs
     * oracle is affordable — so LSH recall is hash-measured against
-    * ground truth (VERDICT r1 task 3), while the Spark side still runs
+    * ground truth, while the Spark side still runs
     * the full-corpus banding pipeline. 16 × 2-bit banding: recall
     * complete at every SF (missed = 0 measured; ~5e-4/pair predicted at
     * cos 0.35).

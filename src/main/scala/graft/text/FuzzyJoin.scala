@@ -280,11 +280,19 @@ object FuzzyJoin {
     *    (|y| = t·|x| exactly) always survive to verification.
     */
   def fuzzyJoinTop1(left: DataFrame, right: DataFrame, idCol: String,
-      textCol: String, threshold: Double, q: Int = 5,
-      verifyMode: String = "auto"): DataFrame = {
+      textCol: String, threshold: Double, q: Int = 5): DataFrame =
+    fuzzyJoinTop1(left, right, idCol, textCol, threshold, q, None)
+
+  /** [[fuzzyJoinTop1]] with its verification strategy forced:
+    * `countVerify = Some(true)` counts common grams, `Some(false)`
+    * intersects gram arrays, `None` picks by measured gram volume. The
+    * two strategies give the same result; tests use each as the
+    * other's reference.
+    */
+  private[graft] def fuzzyJoinTop1(left: DataFrame, right: DataFrame,
+      idCol: String, textCol: String, threshold: Double, q: Int,
+      countVerify: Option[Boolean]): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0, "threshold in (0, 1]")
-    require(Set("auto", "arrays", "count")(verifyMode),
-      "verifyMode in {auto, arrays, count}")
     // Each side's gram frame feeds three consumers (frequency table,
     // prefix build, verify) → pinned once per side, SERIALIZED: gram
     // frames grow as entities × grams-per-entity and are re-read only
@@ -370,10 +378,10 @@ object FuzzyJoin {
       .select(col("left_id"), col("right_id"), col("n_l"), col("n_r"))
 
     // Two exact verification strategies — same result, opposite memory
-    // shapes; `auto` picks by measured gram volume (exL/exR are pinned,
-    // so the deciding counts are the pins' own row counts):
+    // shapes, picked by measured gram volume (exL/exR are pinned, so
+    // the deciding counts are the pins' own row counts):
     //
-    //  - "arrays" (small catalogs): the candidate occurrence stream
+    //  - arrays (small catalogs): the candidate occurrence stream
     //    passes through two joins against catalog-sized set tables (one
     //    gram array per id) whose PINNED true stats let AQE broadcast
     //    them — gram arrays never cross an exchange, duplicates in the
@@ -384,7 +392,7 @@ object FuzzyJoin {
     //    at 2×500k entities (~150M gram rows) the set-table build alone
     //    OOMs an 8 g executor heap (measured: UNABLE_TO_ACQUIRE_MEMORY
     //    inside ObjectHashAggregateExec's fallback sorter).
-    //  - "count" (large catalogs): deduplicate candidate pairs (one
+    //  - count (large catalogs): deduplicate candidate pairs (one
     //    shuffle on the pair key — the cost the arrays path avoids, paid
     //    here because each pair is about to be amplified by ~n grams),
     //    then count common grams with two narrow equijoins:
@@ -394,13 +402,10 @@ object FuzzyJoin {
     //    distinct per (id, gram) by construction). Every exchange
     //    carries only 8-byte longs + two ints; sorts and aggregates all
     //    spill. Unbounded-catalog safe — this is the 100 TB path.
-    val useCount = verifyMode match {
-      case "count" => true
-      case "arrays" => false
-      // ~16M gram rows ≈ 2×50k entities at ~150 grams each: well under
-      // the measured 150M-row OOM cliff, well over every sf catalog.
-      case _ => Pin.rows(exL) + Pin.rows(exR) > 16_000_000L
-    }
+    // ~16M gram rows ≈ 2×50k entities at ~150 grams each: well under
+    // the measured 150M-row OOM cliff, well over every sf catalog.
+    val useCount = countVerify.getOrElse(
+      Pin.rows(exL) + Pin.rows(exR) > 16_000_000L)
     val verified = if (useCount) {
       candidates.distinct()
         .join(exL.withColumnRenamed("id", "left_id"), Seq("left_id"))

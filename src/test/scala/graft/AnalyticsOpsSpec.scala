@@ -259,19 +259,18 @@ class AnalyticsOpsSpec extends AnyFunSuite {
     assert(ex.getMessage != null)
   }
 
-  test("grid dbscan: runToFixpoint merges a chain longer than iters") {
-    // 6 core cells in a row: adjacency diameter 5 > iters 1; fixed
-    // iters=1 leaves multiple labels, runToFixpoint (iters as the
-    // round cap, the kCore convention) converges to the single label
+  test("grid dbscan: fixed rounds merge a chain once iters covers its diameter") {
+    // 6 core cells in a row: adjacency diameter 5; iters=1 leaves
+    // multiple labels, iters=5 (the diameter) reaches the single label
     val pts = (0 until 6).flatMap(c =>
       Seq((c * 2L, c * 10L + 1L, 1L), (c * 2L + 1L, c * 10L + 2L, 2L)))
       .toDF("id", "x", "y")
-    def clusters(iters: Int, fix: Boolean) =
+    def clusters(iters: Int) =
       graft.ops.GeoJoin.gridDensityClusters(pts, "id", "x", "y",
-          cellSize = 10L, minPts = 2L, iters = iters, runToFixpoint = fix)
+          cellSize = 10L, minPts = 2L, iters = iters)
         .collect().map(_.getLong(3)).toSet
-    assert(clusters(1, fix = false).size > 1)
-    assert(clusters(20, fix = true) == Set(0L))
+    assert(clusters(1).size > 1)
+    assert(clusters(5) == Set(0L))
   }
 
   test("rolling distinct: window coverage, dedup within window, zero days") {

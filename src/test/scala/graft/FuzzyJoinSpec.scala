@@ -116,12 +116,12 @@ class FuzzyJoinSpec extends AnyFunSuite {
     }
     val left = (0 until 60).map(i => (i * 2L, name(i))).toDF("id", "name")
     val right = (0 until 60).map(i => (i * 2L + 1, name(i + 5))).toDF("id", "name")
-    def run(mode: String) =
-      FuzzyJoin.fuzzyJoinTop1(left, right, "id", "name", 0.7, verifyMode = mode)
+    def run(countVerify: Boolean) =
+      FuzzyJoin.fuzzyJoinTop1(left, right, "id", "name", 0.7, 5, Some(countVerify))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val arrays = run("arrays")
+    val arrays = run(countVerify = false)
     assert(arrays.nonEmpty) // the comparison must exercise real matches
-    assert(run("count") == arrays)
+    assert(run(countVerify = true) == arrays)
   }
 
   test("prefix filter is exact: matches brute force on a random-ish catalog") {

@@ -57,13 +57,8 @@ class GraphSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(core(1) == Map(1L -> 1, 2L -> 1, 3L -> 1, 4L -> 1, 5L -> 0))
     // two rounds: 4's degree drops to 1 once 5 is gone
     assert(core(2) == Map(1L -> 1, 2L -> 1, 3L -> 1, 4L -> 0, 5L -> 0))
-    // fixpoint: triangle is the 2-core
+    // fixpoint: round 3 removes nothing, the triangle is the 2-core
     assert(core(3) == core(2))
-    // the fixpoint variant stops itself and reports convergence: round 3
-    // removes nothing (round 1 peels 5, round 2 peels 4, round 3 idle)
-    val (_, rounds, converged) = Graph.kCoreWithRounds(
-      edges, nodes, "id", k = 2, iters = 10, runToFixpoint = true)
-    assert(converged && rounds == 3, s"rounds=$rounds converged=$converged")
   }
 
   test("kCore: q_kcore_membership's declared iters=3 is a fixpoint on gate data") {
@@ -79,11 +74,15 @@ class GraphSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val e = Graph.coOccurrenceEdges(li, "l_orderkey", "l_partkey")
       .localCheckpoint(true)
     val nodes = li.select(col("l_partkey")).distinct()
-    val (_, rounds, converged) = Graph.kCoreWithRounds(
-      e, nodes, "l_partkey", k = 60, iters = 4, runToFixpoint = true)
-    assert(converged && rounds <= 4,
-      s"iters=3 no longer converges on gate data: rounds=$rounds " +
-        s"converged=$converged — raise q_kcore_membership's round count")
+    def core(iters: Int) = Graph.kCore(e, nodes, "l_partkey", k = 60, iters)
+      .collect().map(r => (r.getLong(0), r.getInt(1))).toMap
+    val three = core(3)
+    // non-vacuous: the peel keeps some nodes and drops others
+    assert(three.values.toSet == Set(0, 1), three.values.groupBy(identity)
+      .map { case (v, vs) => v -> vs.size })
+    assert(core(4) == three,
+      "iters=3 no longer converges on gate data: a 4th peeling round " +
+        "removes nodes — raise q_kcore_membership's round count")
   }
 
   test("co-occurrence edges: within-group pairs, symmetric, simple") {
@@ -200,37 +199,22 @@ class GraphSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val und = Seq((1L, 2L), (2L, 3L), (3L, 4L), (5L, 6L), (6L, 7L), (5L, 7L))
     val edges = (und ++ und.map(_.swap)).toDF("src", "dst")
     val nodes = (1L to 8L).toDF("id")
-    val got = Graph.connectedComponents(edges, nodes, "id",
-        iters = 20, runToFixpoint = true)
+    // fixed-round HashMin at iters = the path's diameter is the fixpoint
+    val got = Graph.connectedComponents(edges, nodes, "id", iters = 3)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L,
       5L -> 5L, 6L -> 5L, 7L -> 5L, 8L -> 8L))
+    // … the same labels the exact operator (pointer jumping, run to
+    // convergence) gives on the same pairs
+    val exact = graft.text.Dedup.nearDupClusters(nodes, "id",
+        und.toDF("id_a", "id_b"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(exact == got)
     // a capped run is the k-round HashMin state, not yet converged:
     // node 4 has only seen labels within 1 hop after round 1
     val capped = Graph.connectedComponents(edges, nodes, "id", iters = 1)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(capped(4L) == 3L && capped(2L) == 1L && capped(8L) == 8L)
-  }
-
-  test("connected components: exhausting iters under runToFixpoint throws") {
-    // the path graph needs >1 HashMin round; runToFixpoint PROMISES
-    // exact components, so a binding cap must be loud, never a silent
-    // split-cluster labeling (r13 ADVICE)
-    val und = Seq((1L, 2L), (2L, 3L), (3L, 4L))
-    val edges = (und ++ und.map(_.swap)).toDF("src", "dst")
-    val nodes = (1L to 4L).toDF("id")
-    val e = intercept[IllegalStateException] {
-      Graph.connectedComponents(edges, nodes, "id", iters = 1,
-        runToFixpoint = true).collect()
-    }
-    assert(e.getMessage.contains("before fixpoint"))
-    // the WithRounds variant surfaces the state instead of throwing
-    val (_, rounds, converged) = Graph.connectedComponentsWithRounds(
-      edges, nodes, "id", iters = 1, runToFixpoint = true)
-    assert(rounds == 1 && !converged)
-    // and the fixed-round mode (the oracle contract) still never throws
-    assert(Graph.connectedComponents(edges, nodes, "id", iters = 1)
-      .count() == 4L)
   }
 
   test("node-frame broadcast rung: both rungs produce identical output") {

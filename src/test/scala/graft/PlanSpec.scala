@@ -359,6 +359,17 @@ class PlanSpec extends AnyFunSuite {
       s"cell probe fell out of partition pruning into a row filter:\n$p")
   }
 
+  /** Whether a plan calls a corpus-assignment kernel. Plans print a
+    * kernel under its expression class's name, lower-cased. */
+  private def assignsCorpus(plan: String): Boolean =
+    plan.contains("qvecnearestl2") || plan.contains("floatmatvecscore")
+
+  test("corpus-assignment predicate holds on a plan that assigns") {
+    // positive control for the serve-plan tests below: PQ encoding
+    // assigns every vector to its nearest code in each subspace
+    assert(assignsCorpus(planString("q_pq_codes")))
+  }
+
   test("served IVF+PQ: codes scan prunes cluster partitions; no re-assignment, no vectors") {
     val p = planString("q_ann_ivfpq_served")
     val partFilters = "PartitionFilters: \\[([^\\]]*)\\]".r
@@ -369,8 +380,7 @@ class PlanSpec extends AnyFunSuite {
     assert(!"Filter .*cluster#".r.findFirstIn(p).isDefined,
       s"cluster probe fell out of partition pruning into a row filter:\n$p")
     // serve plan must not re-assign the corpus (no kernel calls) …
-    assert(!p.contains("q_vec_nearest_l2") && !p.contains("vec_mat_score"),
-      s"serve plan re-assigns the corpus:\n$p")
+    assert(!assignsCorpus(p), s"serve plan re-assigns the corpus:\n$p")
     // … and must read CODES only — the embedding column never appears
     // (match to end-of-line: long schemas truncate before the closing >)
     val readSchemas = "ReadSchema: ([^\\n]*)".r
@@ -392,8 +402,7 @@ class PlanSpec extends AnyFunSuite {
       s"expected the nProbe cluster set to land in PartitionFilters:\n$p")
     assert(!"Filter .*cluster#".r.findFirstIn(p).isDefined,
       s"cluster probe fell out of partition pruning into a row filter:\n$p")
-    assert(!p.contains("q_vec_nearest_l2") && !p.contains("vec_mat_score"),
-      s"serve plan re-assigns the corpus:\n$p")
+    assert(!assignsCorpus(p), s"serve plan re-assigns the corpus:\n$p")
     val readSchemas = "ReadSchema: ([^\\n]*)".r
       .findAllMatchIn(p).map(_.group(1)).toSeq
     assert(readSchemas.nonEmpty && readSchemas.forall(!_.contains("embedding")),
@@ -511,7 +520,7 @@ class PlanSpec extends AnyFunSuite {
     val right = (0 until 50).map(i => (i.toLong, s"entity number $i padXed"))
       .toDF("id", "name")
     val df = graft.text.FuzzyJoin.fuzzyJoinTop1(
-      left, right, "id", "name", 0.8, verifyMode = "count")
+      left, right, "id", "name", 0.8, 5, Some(true))
     val p = df.queryExecution.executedPlan.toString
     // the large-catalog path must never build heap gram arrays: that is
     // the arrays path's measured OOM cliff (ObjectHashAggregate over
